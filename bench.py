@@ -260,9 +260,9 @@ def main() -> None:
     # (measured: a 72.7 s run — 25 % over quiet — averaged 2.67 % steal
     # over its region), but a min-pass that itself saw heavy steal
     # means the reported number is contaminated, not just other passes.
+    # (on a tie the pass with the lower steal is the one credited)
     min_pass_steal = {
-        n: steal_by_query[n][runs_by_query[n].index(timings[n])]
-        for n in names
+        n: min(zip(runs_by_query[n], steal_by_query[n]))[1] for n in names
     }
     worst_min_pass_steal = max(min_pass_steal.values())
 

@@ -29,27 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.agg import hourly_rollup
-from .streaming.pipeline import run_pipeline
-from .streaming.sinks import ParquetUpsertSink
-
-RAW_PK = ("user_id", "ts", "event_id")
-AGG_PK = ("device_id", "hour_bucket")
+from .streaming.pipeline import ingest_sinks, run_pipeline
 
 
 class IoTEngine:
     def __init__(self, spark: SparkSession, warehouse_dir: str) -> None:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
-        self.raw_sink = ParquetUpsertSink(
-            os.path.join(warehouse_dir, "sensor_events"),
-            pk=RAW_PK,
-            sink_options={"consistency_level": "ONE"},
-        )
-        self.agg_sink = ParquetUpsertSink(
-            os.path.join(warehouse_dir, "hourly_aggregates"),
-            pk=AGG_PK,
-            sink_options={"consistency_level": "QUORUM"},
-        )
+        self.raw_sink, self.agg_sink = ingest_sinks(warehouse_dir)
 
     # --- ingest ---------------------------------------------------------
     def ingest_stream(

@@ -49,18 +49,26 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     footer per file, read driver-side). Used to size data-bearing-width
     exchange pins (e.g. embedding_near_dups' block exchange); exactness
     never affects results, only stage width, so ``None`` on any failure
-    is always a safe answer (callers fall back to AQE's sizing)."""
+    is always a safe answer (callers fall back to AQE's sizing). A
+    directory dataset counts every part file under it, ``key=value``
+    partition directories included; like Spark, names starting with
+    ``_`` or ``.`` are skipped."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
+    hidden = ("_", ".")
     try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
+        if not os.path.isdir(path):
+            return pq.ParquetFile(path).metadata.num_rows
+        rows = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+            rows += sum(
+                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                for f in files
+                if f.endswith(".parquet") and not f.startswith(hidden)
             )
-        return pq.ParquetFile(path).metadata.num_rows
+        return rows
     except Exception:
         return None
 

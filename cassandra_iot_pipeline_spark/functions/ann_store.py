@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore
 from .similarity import (
     _centroid_ranked,
     _coarse_centroids,
@@ -98,16 +98,29 @@ class AnnDedupBatch(NamedTuple):
     pairs: DataFrame
 
 
-class AnnIndexStore:
-    """Build / incrementally extend / query a persisted IVFADC index."""
+class AnnIndexStore(MergeableStore):
+    """Build / incrementally extend / query a persisted IVFADC index.
+    Its own store directory is the codes (base partitioned by ``lst``);
+    the optional vector side table is a second store. As a
+    foreachBatch sink it lands stream epoch e as store epoch e + 1
+    (store epoch 0 is the bootstrap :meth:`build`), a fixed mapping,
+    so replayed stream epochs stay idempotent."""
 
     def __init__(self, base_dir: str) -> None:
+        super().__init__(f"{base_dir}/codes", CODES_SCHEMA, partition_by="lst")
         self.base_dir = base_dir
         self.meta_dir = f"{base_dir}/meta"
         self.codebook_dir = f"{base_dir}/codebook"
         self.centroids_dir = f"{base_dir}/centroids"
-        self.codes_dir = f"{base_dir}/codes"
+        self.codes_dir = self.path
         self.vectors_dir = f"{base_dir}/vectors"
+
+    def _vector_store(self, mode: str) -> MergeableStore:
+        """The verification side table's store for ``vector_mode``."""
+        return MergeableStore(
+            self.vectors_dir,
+            VECTORS_INT8_SCHEMA if mode == "int8" else VECTORS_SCHEMA,
+        )
 
     # -- artifacts ------------------------------------------------------
     def meta(self, spark: SparkSession) -> dict[str, int]:
@@ -127,17 +140,13 @@ class AnnIndexStore:
         return spark.read.parquet(self.centroids_dir)
 
     def codes(self, spark: SparkSession) -> DataFrame:
-        empty = spark.createDataFrame([], CODES_SCHEMA)
-        return read_store(spark, self.codes_dir, empty)
+        return self.raw(spark)
 
     def vectors(self, spark: SparkSession) -> DataFrame:
         """The stored verification side table in its at-rest form —
         (vec_id, embedding) for ``vector_mode='full'``, (vec_id, q8)
         for ``'int8'``."""
-        mode = self.meta(spark)["vector_mode"]
-        schema = VECTORS_INT8_SCHEMA if mode == "int8" else VECTORS_SCHEMA
-        empty = spark.createDataFrame([], schema)
-        return read_store(spark, self.vectors_dir, empty)
+        return self._vector_store(self.meta(spark)["vector_mode"]).raw(spark)
 
     # -- build / ingest --------------------------------------------------
     def build(
@@ -227,27 +236,33 @@ class AnnIndexStore:
         codes = pq_encode(
             embeddings, meta["m"], meta["ks"], meta["dims"], codebook=cb
         )
-        (
-            codes.join(lists, "vec_id")
-            .select("vec_id", "lst", "codes")
-            .write.mode("overwrite")
-            .parquet(f"{self.codes_dir}/epoch={epoch_id}")
+        self.write(
+            codes.join(lists, "vec_id").select("vec_id", "lst", "codes"),
+            epoch_id,
         )
+        vectors = self._vector_store(meta["vector_mode"])
         if meta["vector_mode"] == "full":
-            (
+            vectors.write(
                 embeddings.select(
                     "vec_id",
                     F.col("embedding").cast("array<double>").alias("embedding"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{self.vectors_dir}/epoch={epoch_id}")
+                ),
+                epoch_id,
             )
         elif meta["vector_mode"] == "int8":
-            (
-                embeddings.select("vec_id", _int8(F.col("embedding")).alias("q8"))
-                .write.mode("overwrite")
-                .parquet(f"{self.vectors_dir}/epoch={epoch_id}")
+            vectors.write(
+                embeddings.select(
+                    "vec_id", _int8(F.col("embedding")).alias("q8")
+                ),
+                epoch_id,
             )
+
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        # stream epoch e -> store epoch e + 1 (epoch 0 is the build);
+        # meta() fails loudly on an index that was never built, rather
+        # than deriving a codebook from an arbitrary first micro-batch
+        self.meta(batch_df.sparkSession)
+        self.add_batch(batch_df, epoch_id=epoch_id + 1)
 
     def compact_tail(
         self, spark: SparkSession, keep_recent: int = 0
@@ -258,21 +273,8 @@ class AnnIndexStore:
         land flat, exactly like the epochs they replace)."""
         mode = self.meta(spark)["vector_mode"]
         if mode != "none":
-            compact_epochs(
-                spark,
-                self.vectors_dir,
-                spark.createDataFrame(
-                    [],
-                    VECTORS_INT8_SCHEMA if mode == "int8" else VECTORS_SCHEMA,
-                ),
-                keep_recent=keep_recent,
-            )
-        return compact_epochs(
-            spark,
-            self.codes_dir,
-            spark.createDataFrame([], CODES_SCHEMA),
-            keep_recent=keep_recent,
-        )
+            self._vector_store(mode).compact_tail(spark, keep_recent)
+        return super().compact_tail(spark, keep_recent)
 
     def compact(self, spark: SparkSession) -> int | None:
         """Fold code deltas into a ``base_upto=K`` partitioned by
@@ -281,18 +283,8 @@ class AnnIndexStore:
         vector side table (when kept) folds plain."""
         mode = self.meta(spark)["vector_mode"]
         if mode != "none":
-            compact_store(
-                spark,
-                self.vectors_dir,
-                spark.createDataFrame(
-                    [],
-                    VECTORS_INT8_SCHEMA if mode == "int8" else VECTORS_SCHEMA,
-                ),
-            )
-        empty = spark.createDataFrame([], CODES_SCHEMA)
-        return compact_store(
-            spark, self.codes_dir, empty, partition_by="lst"
-        )
+            self._vector_store(mode).compact(spark)
+        return super().compact(spark)
 
     # -- query ------------------------------------------------------------
     def _adc_shortlist(

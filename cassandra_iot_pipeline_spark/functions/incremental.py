@@ -342,13 +342,17 @@ def incremental_near_dedup(
     # pool) AND session tags, so job-group cancellation reaches it and no
     # paired JVM thread leaks under pinned-thread mode (ADVICE r12; the
     # bare-callable form warns and skips tag inheritance).
+    # Without pinned threads (PYSPARK_PIN_THREAD=false) the call is a
+    # no-op that returns its argument — the session, not a wrapper —
+    # and the bare callable is the right target.
     from pyspark.util import inheritable_thread_target
 
+    wrap = inheritable_thread_target(documents.sparkSession)
+    if not callable(wrap):
+        wrap = lambda fn: fn  # noqa: E731
     with ThreadPoolExecutor(max_workers=1) as pool:
         max_id_fut = pool.submit(
-            inheritable_thread_target(documents.sparkSession)(
-                lambda: documents.agg(F.max("doc_id")).first()[0]
-            )
+            wrap(lambda: documents.agg(F.max("doc_id")).first()[0])
         )
         head = pairs.limit(bound + 1).collect()
         max_id = max_id_fut.result()

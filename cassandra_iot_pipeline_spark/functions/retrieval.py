@@ -51,6 +51,8 @@ from cassandra_iot_pipeline_spark.functions.text import (
     tokens,
 )
 
+from ..store import MergeableStore
+
 
 def tokenize_query(query: str) -> list[str]:
     """The same lower/split-non-alnum tokenizer the corpus side uses
@@ -468,7 +470,7 @@ def bm25_oracle(
     """
 
 
-class PostingsStore:
+class PostingsStore(MergeableStore):
     """Persisted, continuously-ingestible inverted index — the
     build-once/query-many form of :func:`postings`, with the repo's
     shared delta+base store lifecycle (store.py; the AnnIndexStore
@@ -507,38 +509,32 @@ class PostingsStore:
         n_groups: int = N_GROUPS,
         compact_every: int | None = None,
     ) -> None:
+        super().__init__(
+            f"{base_dir}/postings",
+            "term STRING, doc_id BIGINT, tf BIGINT, dl INT, grp INT",
+            compact_every,
+            fold=_distinct,
+            partition_by="grp",
+        )
         self.base_dir = base_dir
         self.id_col = id_col
         self.text_col = text_col
         self.n_groups = n_groups
-        self.compact_every = compact_every
-        self.postings_dir = f"{base_dir}/postings"
+        self.postings_dir = self.path
         self.stats_dir = f"{base_dir}/stats"
-        self._postings_schema = (
-            "term STRING, doc_id BIGINT, tf BIGINT, dl INT, grp INT"
+        self.stats_store = MergeableStore(
+            self.stats_dir,
+            "epoch BIGINT, n_docs BIGINT, total_tokens BIGINT",
+            fold=_distinct,
         )
-        self._stats_schema = "epoch BIGINT, n_docs BIGINT, total_tokens BIGINT"
 
     # -- reads ----------------------------------------------------------
     def postings_frame(self, spark: SparkSession) -> DataFrame:
-        from ..store import read_store
-
-        return read_store(
-            spark,
-            self.postings_dir,
-            spark.createDataFrame([], self._postings_schema),
-        ).distinct()
+        return self.read(spark)
 
     def stats(self, spark: SparkSession) -> tuple[int, int]:
-        from ..store import read_store
-
         row = (
-            read_store(
-                spark,
-                self.stats_dir,
-                spark.createDataFrame([], self._stats_schema),
-            )
-            .distinct()
+            self.stats_store.read(spark)
             .agg(
                 F.sum("n_docs").alias("n"),
                 F.sum("total_tokens").alias("total"),
@@ -587,32 +583,26 @@ class PostingsStore:
         return _score_topk(p, terms, n_docs, avgdl, k, k1, b, self.id_col)
 
     # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        p = postings(batch_df, self.id_col, self.text_col).select(
-            "term",
-            "doc_id",
-            "tf",
-            F.col("dl").cast("int").alias("dl"),
-            F.pmod(F.xxhash64("term"), F.lit(self.n_groups))
-            .cast("int")
-            .alias("grp"),
-        )
-        p.write.mode("overwrite").parquet(
-            f"{self.postings_dir}/epoch={epoch_id}"
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self.write(
+            postings(batch_df, self.id_col, self.text_col).select(
+                "term",
+                "doc_id",
+                "tf",
+                F.col("dl").cast("int").alias("dl"),
+                F.pmod(F.xxhash64("term"), F.lit(self.n_groups))
+                .cast("int")
+                .alias("grp"),
+            ),
+            epoch_id,
         )
         n, total = corpus_stats(batch_df, self.text_col)
-        batch_df.sparkSession.createDataFrame(
-            [(int(epoch_id), n, total)], self._stats_schema
-        ).write.mode("overwrite").parquet(
-            f"{self.stats_dir}/epoch={epoch_id}"
+        self.stats_store.write(
+            batch_df.sparkSession.createDataFrame(
+                [(int(epoch_id), n, total)], self.stats_store.schema
+            ),
+            epoch_id,
         )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
     # -- maintenance ------------------------------------------------------
     def compact_tail(
@@ -621,39 +611,13 @@ class PostingsStore:
         """Tail compaction (store.compact_epochs): postings and stats
         are distinct folds — associative, scores unchanged; the
         ``grp``-partitioned base stays byte-untouched."""
-        from ..store import compact_epochs
-
-        compact_epochs(
-            spark,
-            self.stats_dir,
-            spark.createDataFrame([], self._stats_schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-        return compact_epochs(
-            spark,
-            self.postings_dir,
-            spark.createDataFrame([], self._postings_schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
+        self.stats_store.compact_tail(spark, keep_recent)
+        return super().compact_tail(spark, keep_recent)
 
     def compact(self, spark: SparkSession) -> int | None:
-        from ..store import compact_store
+        self.stats_store.compact(spark)
+        return super().compact(spark)
 
-        compact_store(
-            spark,
-            self.stats_dir,
-            spark.createDataFrame([], self._stats_schema),
-            fold=lambda df: df.distinct(),
-        )
-        return compact_store(
-            spark,
-            self.postings_dir,
-            spark.createDataFrame([], self._postings_schema),
-            fold=lambda df: df.distinct(),
-            partition_by="grp",
-        )
 
-    def foreach_batch(self):
-        return self.write_batch
+def _distinct(df: DataFrame) -> DataFrame:
+    return df.distinct()

@@ -19,6 +19,12 @@ with a single rename, and only then deletes the folded inputs.
 delta TAIL into one epoch dir, leaving the base byte-untouched (O(tail)
 work instead of O(store); for the associative fold families only).
 
+:class:`MergeableStore` is the one write/fold/compact skeleton over
+such a directory: every streaming store family subclasses it (or holds
+one per directory) and supplies only a schema, a per-batch projection
+and a fold; :func:`run_foreach_batch` is the one place a stream is
+wired into such a store (or any other foreachBatch sink).
+
 All filesystem operations go through the Hadoop FileSystem API, so the
 stores work on any Hadoop filesystem (file://, hdfs://, s3a://) —
 an os.path listing would silently misreport on remote stores. NOTE:
@@ -28,9 +34,10 @@ copy+delete — quiesce writers for the compaction there.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -146,17 +153,26 @@ def read_store(spark: SparkSession, path: str, empty: DataFrame) -> DataFrame:
     directories (partition inference types them int, while the declared
     schema may say bigint; without the cast a base-only read would leak
     the narrower type to callers)."""
+    base_path, _, epochs = store_parts(spark, path)
+    return _read_parts(spark, base_path, [p for _, p in epochs], empty)
+
+
+def _read_parts(
+    spark: SparkSession,
+    base_path: str | None,
+    epoch_paths: list[str],
+    empty: DataFrame,
+) -> DataFrame:
     from pyspark.sql import functions as F
 
     cols = [
         F.col(f.name).cast(f.dataType).alias(f.name) for f in empty.schema
     ]
-    base_path, _, epochs = store_parts(spark, path)
     parts = []
     if base_path is not None:
         parts.append(spark.read.parquet(base_path).select(*cols))
-    if epochs:
-        parts.append(spark.read.parquet(*[p for _, p in epochs]).select(*cols))
+    if epoch_paths:
+        parts.append(spark.read.parquet(*epoch_paths).select(*cols))
     if not parts:
         return empty
     out = parts[0]
@@ -497,6 +513,194 @@ def compact_epochs(
     return _commit_tail_fold(spark, path, m, _tail_tmp_name(m))
 
 
+# --- the mergeable store ----------------------------------------------------
+
+
+class MergeableStore:
+    """One delta+base store directory with its whole lifecycle — the
+    foreachBatch sink every incremental store family shares.
+
+    - **write**: :meth:`write_batch` (the foreachBatch callable) skips
+      an empty batch, lands :meth:`write_epoch` — by default the
+      batch's :meth:`project` OVERWRITING ``epoch=N``, so a replayed
+      epoch rewrites its own directory instead of appending twice (the
+      idempotent half of exactly-once under a replayable source) —
+      then runs every :meth:`cadence` task due at this epoch
+      (``compact_every`` epochs: :meth:`compact`);
+    - **read**: :meth:`raw` (base + visible deltas, cast to ``schema``;
+      ``before=N`` keeps only deltas strictly below epoch N — what a
+      replay of epoch N must see) and :meth:`read` (``raw`` folded);
+    - **maintain**: :meth:`compact` (:func:`compact_store`) and
+      :meth:`compact_tail` (:func:`compact_epochs`), both with the
+      store's own :meth:`fold`, so compaction is reader-invisible for
+      every associative fold.
+
+    A family supplies ``schema``, :meth:`project` and :meth:`fold` by
+    subclassing; a sub-store of a multi-directory family passes
+    ``fold`` to the constructor instead. Families whose write path
+    reads strictly-older epochs by number set ``tail_foldable = False``
+    (a tail fold relabels epochs under its max, which would change
+    what a replayed old epoch sees)."""
+
+    tail_foldable = True
+
+    def __init__(
+        self,
+        path: str,
+        schema: str,
+        compact_every: int | None = None,
+        fold: Callable[[DataFrame], DataFrame] | None = None,
+        partition_by: str | None = None,
+    ) -> None:
+        self.path = path
+        self.schema = schema
+        self.compact_every = compact_every
+        self.partition_by = partition_by
+        if fold is not None:
+            self.fold = fold
+
+    # -- the family's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        """The rows one batch lands as its epoch delta."""
+        return batch_df
+
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Merge rows of several epochs (default: plain union)."""
+        return df
+
+    # -- reads --------------------------------------------------------------
+    def empty(self, spark: SparkSession) -> DataFrame:
+        return spark.createDataFrame([], self.schema)
+
+    def raw(self, spark: SparkSession, before: int | None = None) -> DataFrame:
+        """Base + visible epoch deltas, unfolded (empty-safe)."""
+        base_path, _, epochs = store_parts(spark, self.path)
+        return _read_parts(
+            spark,
+            base_path,
+            [p for e, p in epochs if before is None or e < before],
+            self.empty(spark),
+        )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return self.fold(self.raw(spark))
+
+    def exists(self, spark: SparkSession) -> bool:
+        base_path, _, epochs = store_parts(spark, self.path)
+        return base_path is not None or bool(epochs)
+
+    # -- writes -------------------------------------------------------------
+    def write(self, df: DataFrame, epoch_id: int) -> None:
+        df.write.mode("overwrite").parquet(f"{self.path}/epoch={epoch_id}")
+
+    def append(self, df: DataFrame) -> None:
+        """Land ``df`` as the epoch after everything on disk (for
+        stores written outside the stream's epoch numbering)."""
+        _, upto, epochs = store_parts(df.sparkSession, self.path)
+        self.write(df, max([upto] + [e for e, _ in epochs]) + 1)
+
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self.write(self.project(batch_df, epoch_id), epoch_id)
+
+    def cadence(
+        self,
+    ) -> Iterable[tuple[int | None, Callable[[SparkSession], object]]]:
+        """(every, task) pairs run after epoch N lands when
+        ``(N + 1) % every == 0``, in order."""
+        return [(self.compact_every, self.compact)]
+
+    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        self.write_epoch(batch_df, epoch_id)
+        for every, task in self.cadence():
+            if every is not None and (epoch_id + 1) % every == 0:
+                task(batch_df.sparkSession)
+
+    def foreach_batch(self):
+        return self.write_batch
+
+    # -- maintenance --------------------------------------------------------
+    def compact(self, spark: SparkSession) -> int | None:
+        return compact_store(
+            spark,
+            self.path,
+            self.empty(spark),
+            fold=self.fold,
+            partition_by=self.partition_by,
+        )
+
+    def compact_tail(
+        self, spark: SparkSession, keep_recent: int = 0
+    ) -> int | None:
+        if not self.tail_foldable:
+            raise ValueError(
+                f"{type(self).__name__} reads strictly-older epochs by "
+                "number in its write path: a tail fold would change what "
+                "a replayed epoch sees — use compact()"
+            )
+        return compact_epochs(
+            spark,
+            self.path,
+            self.empty(spark),
+            fold=self.fold,
+            keep_recent=keep_recent,
+        )
+
+
+def declared_types(
+    updates_schema: str | StructType | None,
+    defaults: dict[str, str],
+    what: str,
+    source: str = "events",
+) -> dict[str, str]:
+    """SQL type of each column named in ``defaults``: read from
+    ``updates_schema`` (the DDL the stream reader uses) when given,
+    else the defaults. A column absent from a given schema raises —
+    a store's column types are part of its on-disk contract."""
+    if updates_schema is None:
+        return dict(defaults)
+    st = (
+        updates_schema
+        if isinstance(updates_schema, StructType)
+        else StructType.fromDDL(updates_schema)
+    )
+    types = {f.name: f.dataType.simpleString() for f in st.fields}
+    missing = [c for c in defaults if c not in types]
+    if missing:
+        raise ValueError(
+            f"{what}: columns {missing} absent from {source} schema "
+            f"{sorted(types)}"
+        )
+    return {c: types[c] for c in defaults}
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger: dict | None = None,
+    output_mode: str | None = None,
+):
+    """Start ``stream`` into the foreachBatch callable ``write_batch``
+    — the one wiring point of every streaming store and sink. The
+    checkpoint makes the source replayable and the sink (epoch-dir
+    overwrite, or PK reconcile on read) makes a replayed epoch land
+    once. ``trigger`` defaults to draining what is available and
+    stopping (``availableNow``, the bounded replays); the reference's
+    wall-clock cadence (5-second micro-batches, spark_consumer.py:210)
+    is ``{"processingTime": "5 seconds"}``. Returns the started
+    StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(write_batch)
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
 # --- quarantine side-store ----------------------------------------------------
 
 
@@ -540,6 +744,10 @@ class Quarantine:
         self.q_dir = q_dir
         self.total_dir = f"{q_dir}_total"
         self.schema = f"qwm BIGINT, {row_schema}"
+        self.detail = MergeableStore(
+            q_dir, self.schema, fold=lambda df: df.distinct()
+        )
+        self.total = MergeableStore(self.total_dir, QUARANTINE_TOTAL_SCHEMA)
 
     # -- write path -------------------------------------------------------
     def write_batch(self, late: DataFrame, epoch_id: int, wm: int) -> None:
@@ -548,47 +756,33 @@ class Quarantine:
         a legitimately advanced watermark, see class docstring)."""
         from pyspark.sql import functions as F
 
-        late.select(F.lit(int(wm)).cast("long").alias("qwm"), "*").write.mode(
-            "overwrite"
-        ).parquet(f"{self.q_dir}/epoch={epoch_id}")
+        self.detail.write(
+            late.select(F.lit(int(wm)).cast("long").alias("qwm"), "*"),
+            epoch_id,
+        )
 
     # -- reads ------------------------------------------------------------
     def _covered(self, spark: SparkSession) -> int:
         """Highest epoch whose rows were folded into the total store
         (-1 before the first prune)."""
-        empty = spark.createDataFrame([], QUARANTINE_TOTAL_SCHEMA)
-        row = (
-            read_store(spark, self.total_dir, empty)
-            .agg({"upto": "max"})
-            .first()[0]
-        )
+        row = self.total.raw(spark).agg({"upto": "max"}).first()[0]
         return -1 if row is None else int(row)
 
     def pruned_total(self, spark: SparkSession) -> int:
-        empty = spark.createDataFrame([], QUARANTINE_TOTAL_SCHEMA)
-        row = (
-            read_store(spark, self.total_dir, empty)
-            .agg({"n": "sum"})
-            .first()[0]
-        )
+        row = self.total.raw(spark).agg({"n": "sum"}).first()[0]
         return 0 if row is None else int(row)
 
     def rows(self, spark: SparkSession) -> DataFrame:
         """The detailed violation rows still on disk (epochs above the
         pruned bound; pruned epochs live on only as counts)."""
-        from pyspark.sql import functions as F
-
-        empty = spark.createDataFrame([], self.schema)
         covered = self._covered(spark)
         _, _, epochs = store_parts(spark, self.q_dir)
-        live = [p for e, p in epochs if e > covered]
-        if not live:
-            return empty
-        cols = [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in empty.schema
-        ]
-        return spark.read.parquet(*live).select(*cols)
+        return _read_parts(
+            spark,
+            None,
+            [p for e, p in epochs if e > covered],
+            self.detail.empty(spark),
+        )
 
     def count(self, spark: SparkSession) -> int:
         """Total violations ever quarantined: pruned counts + live
@@ -606,15 +800,8 @@ class Quarantine:
         """Fold the detailed-row epoch tail (distinct fold — the rows
         carry their judging watermark, so the fold is associative and
         reader-invisible)."""
-        covered = self._covered(spark)
-        self._sweep_covered(spark, covered)
-        return compact_epochs(
-            spark,
-            self.q_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
+        self._sweep_covered(spark, self._covered(spark))
+        return self.detail.compact_tail(spark, keep_recent)
 
     def prune(self, spark: SparkSession, keep_recent: int = 4) -> dict:
         """Retention: fold the count of every detailed epoch but the
@@ -638,11 +825,11 @@ class Quarantine:
             }
         n = spark.read.parquet(*[p for _, p in prunable]).count()
         upto = prunable[-1][0]
-        _, t_upto, t_epochs = store_parts(spark, self.total_dir)
-        nxt = max([t_upto] + [e for e, _ in t_epochs]) + 1
-        spark.createDataFrame(
-            [(int(upto), int(n))], QUARANTINE_TOTAL_SCHEMA
-        ).write.mode("overwrite").parquet(f"{self.total_dir}/epoch={nxt}")
+        self.total.append(
+            spark.createDataFrame(
+                [(int(upto), int(n))], QUARANTINE_TOTAL_SCHEMA
+            )
+        )
         # total committed — the detailed rows are now invisible to
         # readers whatever happens below
         self._sweep_covered(spark, upto)

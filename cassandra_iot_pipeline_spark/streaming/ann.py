@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ann_store import AnnIndexStore
-from ..store import IngestWatermark
+from ..store import IngestWatermark, MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 #: embeddings fixture schema for the file-source stand-in (embedding is
 #: float32 at rest; the quantizer casts to double itself)
@@ -30,12 +31,14 @@ EMBEDDINGS_STREAM_SCHEMA = (
 )
 
 
-class AnnIngestPipeline:
+class AnnIngestPipeline(AnnIndexStore):
     """foreachBatch sink landing embedding batches into a PRE-BUILT
     :class:`AnnIndexStore` (raises on an unbuilt index rather than
     silently deriving a codebook from an arbitrary first micro-batch).
     ``compact_every`` folds code deltas into the lst-partitioned base
-    on that epoch cadence.
+    on that epoch cadence. Stage only NEW vectors — re-streaming the
+    bootstrap corpus would store duplicate code rows (harmless for
+    topk, which dedups candidates, but wasted bytes).
 
     No monotone-id watermark guard here, deliberately: pure index
     ingestion has no keep-first survivorship to invert — topk answers
@@ -47,31 +50,11 @@ class AnnIngestPipeline:
     def __init__(
         self, index_dir: str, compact_every: int | None = None
     ) -> None:
-        self.store = AnnIndexStore(index_dir)
+        super().__init__(index_dir)
         self.compact_every = compact_every
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        self.store.meta(spark)  # fails loudly if the index was never built
-        # store epoch 0 belongs to the bootstrap build; stream epoch e
-        # lands as store epoch e+1 (a fixed mapping, so replayed stream
-        # epochs stay idempotent). Stage only NEW vectors — re-streaming
-        # the bootstrap corpus would store duplicate code rows (harmless
-        # for topk, which dedups candidates, but wasted bytes).
-        self.store.add_batch(batch_df, epoch_id=epoch_id + 1)
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.store.compact(spark)
 
-    def foreach_batch(self):
-        return self.write_batch
-
-
-class EmbeddingDedupPipeline:
+class EmbeddingDedupPipeline(MergeableStore):
     """Continuous embedding-level curation: each micro-batch is deduped
     against the persisted ANN index (``AnnIndexStore.near_dup_batch`` —
     exact-cosine-verified, keep-first) before the FULL batch lands in
@@ -102,10 +85,10 @@ class EmbeddingDedupPipeline:
         threshold: float = 0.9,
         compact_every: int | None = None,
     ) -> None:
+        super().__init__(curated_dir, EMBEDDINGS_STREAM_SCHEMA, compact_every)
         self.store = AnnIndexStore(index_dir)
         self.curated_dir = curated_dir
         self.threshold = threshold
-        self.compact_every = compact_every
         # sibling of curated/, not inside it (curated/ is epoch-partitioned)
         stripped = curated_dir.rstrip("/")
         base = stripped.rsplit("/", 1)[0] if "/" in stripped else "."
@@ -141,9 +124,7 @@ class EmbeddingDedupPipeline:
             index_dir, curated_dir, threshold, compact_every=compact_every
         )
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.localCheckpoint(eager=True)
         bounds = batch.agg(
@@ -151,9 +132,7 @@ class EmbeddingDedupPipeline:
         ).first()
         wm = self._wm.guard(spark, epoch_id, bounds["lo"])
         step = self.store.near_dup_batch(batch, self.threshold)
-        step.survivors.write.mode("overwrite").parquet(
-            f"{self.curated_dir}/epoch={epoch_id}"
-        )
+        self.write(step.survivors, epoch_id)
         # land ALL batch vectors, duplicates included — transitive
         # suppression across batches needs their codes and vectors
         self.store.add_batch(batch, epoch_id=epoch_id + 1)
@@ -165,38 +144,21 @@ class EmbeddingDedupPipeline:
         from ..blocks import release_local_checkpoint
 
         release_local_checkpoint(batch)
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
     def compact(self, spark: SparkSession) -> None:
         """Fold the index's code/vector deltas AND the curated output
         into their ``base_upto=N`` bases (shared store.py lifecycle —
         the curated dir would otherwise grow one directory per
         micro-batch forever), then prune the watermark history."""
-        from ..store import compact_store
-
         self.store.compact(spark)
-        compact_store(
-            spark,
-            self.curated_dir,
-            spark.createDataFrame([], EMBEDDINGS_STREAM_SCHEMA),
-        )
+        super().compact(spark)
         self._wm.prune(spark)
 
     def curated(self, spark: SparkSession) -> DataFrame:
         """The admitted embeddings so far (empty-safe, delta+base
         reader — epochs at or under the compacted base's upto are
         ignored, so post-compaction replays cannot resurrect rows)."""
-        from ..store import read_store
-
-        empty = spark.createDataFrame([], EMBEDDINGS_STREAM_SCHEMA)
-        return read_store(spark, self.curated_dir, empty)
-
-    def foreach_batch(self):
-        return self.write_batch
+        return self.read(spark)
 
 
 def streaming_embedding_dedup(
@@ -220,17 +182,13 @@ def streaming_embedding_dedup(
     pipe = EmbeddingDedupPipeline(
         index_dir, curated_dir, threshold, compact_every=compact_every
     )
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_embeddings_dir)
+    stream = read_staged(
+        spark,
+        EMBEDDINGS_STREAM_SCHEMA,
+        staged_embeddings_dir,
+        max_files_per_trigger,
     )
-    writer = (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)
 
 
 def streaming_ann_ingest(
@@ -247,14 +205,10 @@ def streaming_ann_ingest(
     ``AnnIndexStore(index_dir).topk(...)``. The index must already be
     built (see module docstring)."""
     pipe = AnnIngestPipeline(index_dir, compact_every=compact_every)
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_embeddings_dir)
+    stream = read_staged(
+        spark,
+        EMBEDDINGS_STREAM_SCHEMA,
+        staged_embeddings_dir,
+        max_files_per_trigger,
     )
-    writer = (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

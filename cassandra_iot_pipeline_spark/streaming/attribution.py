@@ -63,32 +63,17 @@ from ..operators.attribution import (
     position_attribution,
     time_decay_attribution,
 )
-from ..store import Quarantine, compact_store, read_store, store_parts
+from ..store import (
+    MergeableStore,
+    Quarantine,
+    compact_store,
+    declared_types,
+    run_foreach_batch,
+)
+from .staging import read_staged
 
 
-def _pts_schema(
-    key: str, tie_col: str, updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        ktype, ttype = "BIGINT", "BIGINT"
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in (key, tie_col) if c not in types]
-        if missing:
-            raise ValueError(
-                f"attribution: columns {missing} absent from events "
-                f"schema {sorted(types)}"
-            )
-        ktype, ttype = types[key], types[tie_col]
-    return f"k {ktype}, us BIGINT, t STRING, tie {ttype}"
-
-
-class AttributionPipeline:
+class AttributionPipeline(MergeableStore):
     """foreachBatch-shaped attribution maintainer; see module
     docstring. ``write_batch`` per epoch, then :meth:`report` for the
     live per-channel credit table (bit-identical to the batch operator
@@ -121,6 +106,16 @@ class AttributionPipeline:
             from ..operators.attribution import _decay_buckets
 
             _decay_buckets(lookback_seconds, decay_half_life_seconds)
+        types = declared_types(
+            updates_schema,
+            {key: "BIGINT", tie_col: "BIGINT"},
+            "attribution",
+        )
+        super().__init__(
+            f"{base_dir}/pts",
+            f"k {types[key]}, us BIGINT, t STRING, tie {types[tie_col]}",
+            compact_every,
+        )
         self.base_dir = base_dir
         self.conversion_type = conversion_type
         self.touch_types = list(touch_types)
@@ -129,16 +124,14 @@ class AttributionPipeline:
         self.ts_col = ts_col
         self.type_col = type_col
         self.tie_col = tie_col
-        self.compact_every = compact_every
         self.finalize_every = finalize_every
         self.finalize_lateness_seconds = finalize_lateness_seconds
         self.quarantine_prune_every = quarantine_prune_every
         self.position_weights = tuple(position_weights)
         self.decay_half_life_seconds = decay_half_life_seconds
-        self.pts_dir = f"{base_dir}/pts"
+        self.pts_dir = self.path
         self.fin_dir = f"{base_dir}/fin"
         self.q_dir = f"{base_dir}/quarantine"
-        self.schema = _pts_schema(key, tie_col, updates_schema)
         self.quarantine_store = Quarantine(self.q_dir, self.schema)
         # fin rows carry EVERY additive credit model (linear,
         # position/U-shaped with this pipeline's position_weights
@@ -150,14 +143,14 @@ class AttributionPipeline:
             " last_touch BIGINT, linear_units BIGINT,"
             " position_units BIGINT, decay_units BIGINT"
         )
+        self.fin = MergeableStore(
+            self.fin_dir, self.fin_schema, fold=_fin_fold
+        )
 
     # -- reads ----------------------------------------------------------
     def points(self, spark: SparkSession) -> DataFrame:
         """The folded distinct point store (empty-safe)."""
-        raw = read_store(
-            spark, self.pts_dir, spark.createDataFrame([], self.schema)
-        )
-        return raw.distinct()
+        return self.read(spark)
 
     def _events(self, pts: DataFrame) -> DataFrame:
         return pts.select(
@@ -251,31 +244,17 @@ class AttributionPipeline:
             F.coalesce("decay_units", F.lit(0)).alias("decay_units"),
         )
 
-    def _has_fin(self, spark: SparkSession) -> bool:
-        base_path, _, epochs = store_parts(spark, self.fin_dir)
-        return base_path is not None or bool(epochs)
-
     def _fin(self, spark: SparkSession) -> DataFrame:
         """The finalized report increments (wm, touch_type, counts),
         folded by channel (empty-safe; sum fold — every column is
         additive, wm folds by max)."""
-        raw = read_store(
-            spark, self.fin_dir, spark.createDataFrame([], self.fin_schema)
-        )
-        return raw.groupBy("touch_type").agg(
-            F.max("wm").alias("wm"),
-            F.sum("first_touch").alias("first_touch"),
-            F.sum("last_touch").alias("last_touch"),
-            F.sum("linear_units").alias("linear_units"),
-            F.sum("position_units").alias("position_units"),
-            F.sum("decay_units").alias("decay_units"),
-        )
+        return self.fin.read(spark)
 
     def fin_watermark(self, spark: SparkSession) -> int | None:
         """The latest finalization cutoff (microseconds), or None —
         the live read's conversion boundary and the quarantine
         boundary."""
-        if not self._has_fin(spark):
+        if not self.fin.exists(spark):
             return None
         wm = self._fin(spark).agg(F.max("wm")).first()[0]
         return None if wm is None else int(wm)
@@ -441,9 +420,7 @@ class AttributionPipeline:
             "position_units",
             "decay_units",
         )
-        _, upto, epochs = store_parts(spark, self.fin_dir)
-        nxt = max([upto] + [e for e, _ in epochs]) + 1
-        inc.write.mode("overwrite").parquet(f"{self.fin_dir}/epoch={nxt}")
+        self.fin.append(inc)
         # GC — reads already exclude everything this drops; the kept
         # set mirrors the live read exactly: conversions at the
         # watermark are live (>=), and their windows reach touches
@@ -455,15 +432,19 @@ class AttributionPipeline:
         compact_store(
             spark,
             self.pts_dir,
-            spark.createDataFrame([], self.schema),
+            self.empty(spark),
             fold=lambda df: df.distinct().filter(keep),
         )
         return {"finalized_conversions": int(n), "watermark": cutoff}
 
+    # -- the store's algebra ----------------------------------------------
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Distinct — the reader's own fold, so compaction is
+        invisible (pinned in tests)."""
+        return df.distinct()
+
     # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         wanted = [self.conversion_type, *self.touch_types]
         pts = (
             batch_df.filter(F.col(self.type_col).isin(wanted))
@@ -489,55 +470,22 @@ class AttributionPipeline:
             late = pts.filter(F.col("us") < wm)
             if not late.isEmpty():
                 self.quarantine_store.write_batch(late, epoch_id, wm)
-        pts.write.mode("overwrite").parquet(
-            f"{self.pts_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
-        if (
-            self.finalize_every is not None
-            and (epoch_id + 1) % self.finalize_every == 0
-        ):
-            self.finalize(
-                batch_df.sparkSession, self.finalize_lateness_seconds
-            )
-        if (
-            self.quarantine_prune_every is not None
-            and (epoch_id + 1) % self.quarantine_prune_every == 0
-        ):
-            # retention cadence for the alarm channel: detail rows
-            # age out, the violation COUNT survives forever
-            # (store.Quarantine.prune's invariant)
-            self.prune_quarantine(batch_df.sparkSession)
+        self.write(pts, epoch_id)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative (distinct/union), so reads are unchanged (pinned
-        in tests/test_tail_compaction.py for this fold class)."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-        )
+    def cadence(self):
+        # after compaction: finalize, then the alarm channel's
+        # retention (detail rows age out, the violation COUNT survives
+        # forever — store.Quarantine.prune's invariant)
+        return [
+            *super().cadence(),
+            (
+                self.finalize_every,
+                lambda spark: self.finalize(
+                    spark, self.finalize_lateness_seconds
+                ),
+            ),
+            (self.quarantine_prune_every, self.prune_quarantine),
+        ]
 
     def compact_fin_tail(
         self, spark: SparkSession, keep_recent: int = 0
@@ -548,35 +496,31 @@ class AttributionPipeline:
         max, so the regroup fold is associative and reader-invisible
         (pinned in tests); it also contracts the store to one row per
         channel, doubling as the deep clean."""
-        from ..store import compact_epochs
+        return self.fin.compact_tail(spark, keep_recent)
 
-        return compact_epochs(
-            spark,
-            self.fin_dir,
-            spark.createDataFrame([], self.fin_schema),
-            fold=lambda df: df.groupBy("touch_type")
-            .agg(
-                F.max("wm").alias("wm"),
-                F.sum("first_touch").alias("first_touch"),
-                F.sum("last_touch").alias("last_touch"),
-                F.sum("linear_units").alias("linear_units"),
-                F.sum("position_units").alias("position_units"),
-                F.sum("decay_units").alias("decay_units"),
-            )
-            .select(
-                "wm",
-                "touch_type",
-                "first_touch",
-                "last_touch",
-                "linear_units",
-                "position_units",
-                "decay_units",
-            ),
-            keep_recent=keep_recent,
+
+def _fin_fold(df: DataFrame) -> DataFrame:
+    """The fin store's fold: per-channel sums, the watermark by max."""
+    return (
+        df.groupBy("touch_type")
+        .agg(
+            F.max("wm").alias("wm"),
+            F.sum("first_touch").alias("first_touch"),
+            F.sum("last_touch").alias("last_touch"),
+            F.sum("linear_units").alias("linear_units"),
+            F.sum("position_units").alias("position_units"),
+            F.sum("decay_units").alias("decay_units"),
         )
-
-    def foreach_batch(self):
-        return self.write_batch
+        .select(
+            "wm",
+            "touch_type",
+            "first_touch",
+            "last_touch",
+            "linear_units",
+            "position_units",
+            "decay_units",
+        )
+    )
 
 
 def streaming_attribution(
@@ -608,12 +552,7 @@ def streaming_attribution(
         finalize_every=finalize_every,
         finalize_lateness_seconds=finalize_lateness_seconds,
     )
-    reader = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    writer = reader.writeStream.foreachBatch(pipe.foreach_batch()).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.expectations import Check, expectations_report
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 _SCHEMA = (
     "epoch BIGINT, check_name STRING, target STRING, metric DOUBLE,"
@@ -41,7 +42,7 @@ _SCHEMA = (
 )
 
 
-class AuditPipeline:
+class AuditPipeline(MergeableStore):
     """foreachBatch-shaped quality monitor; see module docstring.
     ``write_batch`` per epoch, then :meth:`history` for the metric
     time series or :meth:`failures` for the alert view."""
@@ -54,20 +55,16 @@ class AuditPipeline:
     ) -> None:
         if not checks:
             raise ValueError("need at least one check")
+        super().__init__(f"{base_dir}/reports", _SCHEMA, compact_every)
         self.base_dir = base_dir
         self.checks = list(checks)
-        self.compact_every = compact_every
-        self.reports_dir = f"{base_dir}/reports"
+        self.reports_dir = self.path
 
     # -- reads ----------------------------------------------------------
     def history(self, spark: SparkSession) -> DataFrame:
         """(epoch, check_name, target, metric, threshold, passed):
         the per-epoch metric series (empty-safe)."""
-        return read_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-        ).distinct()
+        return self.read(spark)
 
     def failures(self, spark: SparkSession) -> DataFrame:
         """Epochs/checks that failed (passed false or NULL-metric
@@ -76,11 +73,9 @@ class AuditPipeline:
             ~F.coalesce(F.col("passed"), F.lit(False))
         )
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        report = expectations_report(batch_df, self.checks).select(
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return expectations_report(batch_df, self.checks).select(
             F.lit(int(epoch_id)).alias("epoch"),
             "check_name",
             "target",
@@ -88,41 +83,9 @@ class AuditPipeline:
             "threshold",
             "passed",
         )
-        report.write.mode("overwrite").parquet(
-            f"{self.reports_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.distinct()
 
 
 def streaming_audit(
@@ -141,14 +104,7 @@ def streaming_audit(
     started StreamingQuery; read the series with
     ``AuditPipeline(base_dir, checks).history(spark)``."""
     pipe = AuditPipeline(base_dir, checks, compact_every=compact_every)
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.exactmath import units
 from ..operators.stats import median_from_counts
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore
 
 # widening within this ladder is value-preserving; anything else must
 # be declared via key_type or the store would silently null the key on
@@ -50,7 +50,7 @@ def _hod(ts_col: str) -> F.Column:
     ).cast("int")
 
 
-class BaselinePipeline:
+class BaselinePipeline(MergeableStore):
     """foreachBatch-shaped seasonal-baseline maintainer; see module
     docstring. ``write_batch`` per epoch; :meth:`baselines` for the
     live (k, hod, season_median, season_mad) table; :meth:`flag` to
@@ -66,15 +66,18 @@ class BaselinePipeline:
         key_type: str = "BIGINT",
         compact_every: int | None = None,
     ) -> None:
+        super().__init__(
+            f"{base_dir}/counts",
+            f"k {key_type}, hod INT, u BIGINT, cnt BIGINT",
+            compact_every,
+        )
         self.base_dir = base_dir
         self.key = key
         self.ts_col = ts_col
         self.value_col = value_col
         self.scale = scale
         self.key_type = key_type
-        self._schema = f"k {key_type}, hod INT, u BIGINT, cnt BIGINT"
-        self.compact_every = compact_every
-        self.counts_dir = f"{base_dir}/counts"
+        self.counts_dir = self.path
 
     def _check_key(self, batch_df: DataFrame) -> str:
         """The store's key dtype is part of its on-disk contract
@@ -84,7 +87,7 @@ class BaselinePipeline:
         at write time instead; integer widening is allowed."""
         got = batch_df.schema[self.key].dataType.simpleString()
         want = (
-            batch_df.sparkSession.createDataFrame([], self._schema)
+            self.empty(batch_df.sparkSession)
             .schema["k"]
             .dataType.simpleString()
         )
@@ -101,8 +104,8 @@ class BaselinePipeline:
             )
         return want
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def _batch_counts(self, batch_df: DataFrame) -> DataFrame:
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         want = self._check_key(batch_df)
         u = units(F.col(self.value_col), self.scale)
         return (
@@ -116,26 +119,12 @@ class BaselinePipeline:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        self._batch_counts(batch_df).write.mode("overwrite").parquet(
-            f"{self.counts_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.groupBy("k", "hod", "u").agg(F.sum("cnt").alias("cnt"))
 
     # -- reads ------------------------------------------------------------
     def counts(self, spark: SparkSession) -> DataFrame:
-        raw = read_store(
-            spark, self.counts_dir, spark.createDataFrame([], self._schema)
-        )
-        return raw.groupBy("k", "hod", "u").agg(
-            F.sum("cnt").alias("cnt")
-        )
+        return self.read(spark)
 
     def baselines(self, spark: SparkSession) -> DataFrame:
         """(k, hod, season_median, season_mad) from the folded counts —
@@ -229,38 +218,5 @@ class BaselinePipeline:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         replace_store_dir(spark, self.counts_dir, counts, epoch_col)
-        raw = read_store(
-            spark, self.counts_dir, spark.createDataFrame([], self._schema)
-        )
         _, _, epochs = store_parts(spark, self.counts_dir)
-        return {"epochs": len(epochs), "rows": raw.count()}
-
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.counts_dir,
-            spark.createDataFrame([], self._schema),
-            fold=lambda df: df.groupBy("k", "hod", "u").agg(
-                F.sum("cnt").alias("cnt")
-            ),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.counts_dir,
-            spark.createDataFrame([], self._schema),
-            fold=lambda df: df.groupBy("k", "hod", "u").agg(
-                F.sum("cnt").alias("cnt")
-            ),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+        return {"epochs": len(epochs), "rows": self.raw(spark).count()}

@@ -42,7 +42,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..store import compact_store, read_store, store_parts
+from ..store import (
+    MergeableStore,
+    declared_types,
+    run_foreach_batch,
+    store_parts,
+)
+from .staging import read_staged
 
 DAY_SECONDS = 86_400
 LG_K = 12  # 4 KiB per sketch; rsd ~= 1.04 / sqrt(2^12) ~= 1.6 %
@@ -92,31 +98,7 @@ def distinct_counts(
     )
 
 
-def _sk_schema(
-    group_cols: Sequence[str], updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        types = {c: "STRING" for c in group_cols}
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in group_cols if c not in types and c != "pi"]
-        if missing:
-            raise ValueError(
-                f"cardinality: columns {missing} absent from events schema "
-                f"{sorted(types)}"
-            )
-    fields = ", ".join(
-        f"{c} {'BIGINT' if c == 'pi' else types[c]}" for c in group_cols
-    )
-    return f"{fields}, sk BINARY"
-
-
-class CardinalityPipeline:
+class CardinalityPipeline(MergeableStore):
     """foreachBatch-shaped distinct-count maintainer; see module
     docstring. Groups each batch by ``group_cols`` plus the derived
     period index ``pi`` (when ``period_seconds`` is set), sketches
@@ -134,29 +116,31 @@ class CardinalityPipeline:
         compact_every: int | None = None,
         updates_schema: str | StructType | None = None,
     ) -> None:
-        self.base_dir = base_dir
         self.group_cols = list(group_cols)
+        self.out_cols = self.group_cols + (
+            ["pi"] if period_seconds is not None else []
+        )
+        types = declared_types(
+            updates_schema,
+            {c: "STRING" for c in self.group_cols if c != "pi"},
+            "cardinality",
+        ) | {"pi": "BIGINT"}
+        fields = ", ".join(f"{c} {types[c]}" for c in self.out_cols)
+        super().__init__(
+            f"{base_dir}/sk", f"{fields}, sk BINARY", compact_every
+        )
+        self.base_dir = base_dir
         self.value_col = value_col
         self.ts_col = ts_col
         self.period_seconds = period_seconds
         self.lg_k = lg_k
-        self.compact_every = compact_every
-        self.sk_dir = f"{base_dir}/sk"
-        self.out_cols = self.group_cols + (
-            ["pi"] if period_seconds is not None else []
-        )
-        self.schema = _sk_schema(self.out_cols, updates_schema)
+        self.sk_dir = self.path
 
     # -- reads ----------------------------------------------------------
     def sketches(self, spark: SparkSession) -> DataFrame:
         """The folded per-group sketch store (empty-safe): one merged
         sketch per group."""
-        raw = read_store(
-            spark, self.sk_dir, spark.createDataFrame([], self.schema)
-        )
-        return raw.groupBy(*self.out_cols).agg(
-            F.hll_union_agg("sk").alias("sk")
-        )
+        return self.read(spark)
 
     def estimates(self, spark: SparkSession) -> DataFrame:
         """(group..., pi?, n_approx): live distinct-count estimates —
@@ -210,8 +194,10 @@ class CardinalityPipeline:
             )
         )
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def _grouped(self, batch_df: DataFrame) -> DataFrame:
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        """One sketch row per group the batch touched (a stateless
+        projection: a replayed epoch rewrites identical content)."""
         df = batch_df
         if self.period_seconds is not None:
             df = df.withColumn(
@@ -219,19 +205,12 @@ class CardinalityPipeline:
             )
         return grouped_sketches(df, self.out_cols, self.value_col, self.lg_k)
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # epoch-dir overwrite + stateless projection => a replayed epoch
-        # rewrites identical content (idempotent by content)
-        self._grouped(batch_df).write.mode("overwrite").parquet(
-            f"{self.sk_dir}/epoch={epoch_id}"
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Group-and-union — HLL union is associative and commutative,
+        so compaction is estimate-invisible (pinned in tests)."""
+        return df.groupBy(*self.out_cols).agg(
+            F.hll_union_agg("sk").alias("sk")
         )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
     # -- maintenance ------------------------------------------------------
     def rebuild_from_source(
@@ -261,45 +240,8 @@ class CardinalityPipeline:
             F.col(epoch_col).cast("long").alias(epoch_col), *self.out_cols
         ).agg(F.hll_sketch_agg(self.value_col, F.lit(self.lg_k)).alias("sk"))
         replace_store_dir(spark, self.sk_dir, grouped, epoch_col)
-        raw = read_store(
-            spark, self.sk_dir, spark.createDataFrame([], self.schema)
-        )
         _, _, epochs = store_parts(spark, self.sk_dir)
-        return {"epochs": len(epochs), "rows": raw.count()}
-
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): group-and-union only
-        the delta tail, base byte-untouched — O(tail) maintenance,
-        estimate-invisible by the same associativity as
-        :meth:`compact` (pinned in tests/test_tail_compaction.py)."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.sk_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.groupBy(*self.out_cols).agg(
-                F.hll_union_agg("sk").alias("sk")
-            ),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold base + deltas with the reader's own group-and-union —
-        estimate-invisible by associativity (pinned in tests)."""
-        return compact_store(
-            spark,
-            self.sk_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.groupBy(*self.out_cols).agg(
-                F.hll_union_agg("sk").alias("sk")
-            ),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+        return {"epochs": len(epochs), "rows": self.raw(spark).count()}
 
 
 def streaming_cardinality(
@@ -331,14 +273,7 @@ def streaming_cardinality(
         compact_every=compact_every,
         updates_schema=events_schema,
     )
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

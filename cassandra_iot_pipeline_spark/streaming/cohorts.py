@@ -36,7 +36,6 @@ the store to one row per (user, period) forever.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.cohorts import (
@@ -44,31 +43,11 @@ from ..operators.cohorts import (
     period_points,
     retention_matrix_from_pts,
 )
-from ..store import compact_store, read_store
+from ..store import MergeableStore, declared_types, run_foreach_batch
+from .staging import read_staged
 
 
-def _pts_schema(
-    key: str, updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        ktype = "BIGINT"
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        if key not in types:
-            raise ValueError(
-                f"cohorts: key {key!r} absent from events schema "
-                f"{sorted(types)}"
-            )
-        ktype = types[key]
-    return f"k {ktype}, pi BIGINT"
-
-
-class CohortPipeline:
+class CohortPipeline(MergeableStore):
     """foreachBatch-shaped retention maintainer; see module docstring.
     ``write_batch`` per epoch, then :meth:`matrix` for the live
     retention matrix (bit-identical to the batch operator over the
@@ -83,21 +62,20 @@ class CohortPipeline:
         compact_every: int | None = None,
         updates_schema: str | StructType | None = None,
     ) -> None:
+        ktype = declared_types(updates_schema, {key: "BIGINT"}, "cohorts")[key]
+        super().__init__(
+            f"{base_dir}/pts", f"k {ktype}, pi BIGINT", compact_every
+        )
         self.base_dir = base_dir
         self.key = key
         self.ts_col = ts_col
         self.period_seconds = period_seconds
-        self.compact_every = compact_every
-        self.pts_dir = f"{base_dir}/pts"
-        self.schema = _pts_schema(key, updates_schema)
+        self.pts_dir = self.path
 
     # -- reads ----------------------------------------------------------
     def points(self, spark: SparkSession) -> DataFrame:
         """The folded distinct (k, pi) store (empty-safe)."""
-        raw = read_store(
-            spark, self.pts_dir, spark.createDataFrame([], self.schema)
-        )
-        return raw.distinct()
+        return self.read(spark)
 
     def matrix(self, spark: SparkSession) -> DataFrame:
         """The live retention matrix — the batch operator's pinned
@@ -126,55 +104,19 @@ class CohortPipeline:
 
         return growth_accounting_from_pts(self.points(spark))
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        pts = period_points(
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        """The batch's distinct (k, pi) points — a stateless projection,
+        so a replayed epoch rewrites identical content (idempotent by
+        content, not just by bookkeeping)."""
+        return period_points(
             batch_df, self.key, self.ts_col, self.period_seconds
         ).distinct()
-        # epoch-dir overwrite + stateless projection => replaying an
-        # epoch rewrites identical content (idempotent by content, not
-        # just by bookkeeping)
-        pts.write.mode("overwrite").parquet(
-            f"{self.pts_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative (distinct/union), so reads are unchanged (pinned
-        in tests/test_tail_compaction.py for this fold class)."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold base + deltas with distinct — the reader applies the
-        same fold, so compaction is invisible (pinned in tests)."""
-        return compact_store(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Distinct — the reader applies the same fold, so compaction
+        is invisible (pinned in tests)."""
+        return df.distinct()
 
 
 def streaming_cohorts(
@@ -202,15 +144,7 @@ def streaming_cohorts(
         compact_every=compact_every,
         updates_schema=events_schema,
     )
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -83,15 +83,19 @@ DOCUMENTS_STREAM_SCHEMA = (
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 )
 
-from ..store import (
-    IngestWatermark,
-    compact_epochs,
-    compact_store,
-    read_store,
-)
+from ..store import IngestWatermark, MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 
-class NearDedupPipeline:
+def _fold_bucket_stats(df: DataFrame) -> DataFrame:
+    """Per-bucket stats fold: populations sum, the minimum doc wins."""
+    return df.groupBy("band", "bucket").agg(
+        F.sum("population").alias("population"),
+        F.min("min_doc").alias("min_doc"),
+    )
+
+
+class NearDedupPipeline(MergeableStore):
     """Continuous near-dup curation: each micro-batch of documents is
     admitted or dropped against the parquet-persisted MinHash-LSH store
     (functions/incremental.py), producing an append-only curated corpus.
@@ -154,49 +158,52 @@ class NearDedupPipeline:
         threshold: float = 0.8,
         compact_every: int | None = None,
     ) -> None:
+        from ..functions.incremental import (
+            BAND_STORE_SCHEMA,
+            BUCKET_STATS_SCHEMA,
+            SHINGLE_STORE_SCHEMA,
+        )
+
+        # the pipeline's own directory is its output, the curated corpus
+        super().__init__(
+            f"{base_dir}/curated", DOCUMENTS_STREAM_SCHEMA, compact_every
+        )
         self.base_dir = base_dir
         self.threshold = threshold
-        self.compact_every = compact_every
         self.bands_dir = f"{base_dir}/bands"
         self.shingles_dir = f"{base_dir}/shingles"
         self.stats_dir = f"{base_dir}/bucket_stats"
-        self.curated_dir = f"{base_dir}/curated"
+        self.curated_dir = self.path
         self.watermark_dir = f"{base_dir}/watermark"
+        self.stores = {
+            # band-partitioned base: partition pruning for band-filtered
+            # probes
+            "bands": MergeableStore(
+                self.bands_dir, BAND_STORE_SCHEMA, partition_by="band"
+            ),
+            "shingles": MergeableStore(
+                self.shingles_dir, SHINGLE_STORE_SCHEMA
+            ),
+            "bucket_stats": MergeableStore(
+                self.stats_dir, BUCKET_STATS_SCHEMA, fold=_fold_bucket_stats
+            ),
+        }
         self._wm = IngestWatermark(
             self.watermark_dir, id_name="doc_id", what="near-dedup ingest"
         )
 
     # -- store access -------------------------------------------------
-    def _read_store(self, spark: SparkSession, path: str, empty: DataFrame):
-        # delta+base layout shared with the ANN index — see store.py
-        return read_store(spark, path, empty)
-
-    def _empty_for(self, spark: SparkSession, which: str) -> DataFrame:
-        from ..functions.incremental import (
-            BUCKET_STATS_SCHEMA,
-            empty_stores,
-        )
-
-        band_empty, shingle_empty = empty_stores(spark)
-        return {
-            "bands": band_empty,
-            "shingles": shingle_empty,
-            "bucket_stats": spark.createDataFrame([], BUCKET_STATS_SCHEMA),
-        }[which]
-
     def _read_or_empty(self, spark: SparkSession, path: str, which: str):
-        return self._read_store(spark, path, self._empty_for(spark, which))
+        """The raw (unfolded) rows of store ``which`` (``path`` is its
+        directory)."""
+        return self.stores[which].raw(spark)
 
     def bucket_stats(self, spark: SparkSession) -> DataFrame:
         """Folded per-bucket stats: deltas (and any compacted base) sum
         by bucket. A post-compaction epoch replay can double-count its
         own population — conservative only (a bucket can read hotter
         than it is, never colder), so capping stays sound."""
-        raw = self._read_or_empty(spark, self.stats_dir, "bucket_stats")
-        return raw.groupBy("band", "bucket").agg(
-            F.sum("population").alias("population"),
-            F.min("min_doc").alias("min_doc"),
-        )
+        return self.stores["bucket_stats"].read(spark)
 
     def curated(self, spark: SparkSession) -> DataFrame:
         """The admitted corpus so far (empty-safe). Delta+base reader:
@@ -205,8 +212,7 @@ class NearDedupPipeline:
         small-files pathology compaction exists to kill), and the
         reader ignoring epochs at or under the base's upto is what
         keeps a post-compaction replay from resurrecting rows."""
-        empty = spark.createDataFrame([], DOCUMENTS_STREAM_SCHEMA)
-        return read_store(spark, self.curated_dir, empty)
+        return self.read(spark)
 
     def watermark(self, spark: SparkSession) -> tuple[int, int] | None:
         """(latest epoch, its running max doc_id) or None before the
@@ -214,13 +220,11 @@ class NearDedupPipeline:
         return self._wm.read(spark)
 
     # -- write path (called from foreachBatch) ------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from ..blocks import release_local_checkpoint
         from ..functions.dedup import banded_rows, shingled_docs
         from ..functions.incremental import bucket_stats_delta, near_dedup_batch
 
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         batch = batch_df.localCheckpoint(eager=True)
         bounds = batch.agg(
@@ -243,17 +247,11 @@ class NearDedupPipeline:
             store_bucket_stats=self.bucket_stats(spark),
         )
         # epoch-dir overwrite => replaying an epoch is a no-op rewrite
-        step.survivors.write.mode("overwrite").parquet(
-            f"{self.curated_dir}/epoch={epoch_id}"
-        )
-        step.band_delta.write.mode("overwrite").parquet(
-            f"{self.bands_dir}/epoch={epoch_id}"
-        )
-        step.shingle_delta.write.mode("overwrite").parquet(
-            f"{self.shingles_dir}/epoch={epoch_id}"
-        )
-        bucket_stats_delta(step.band_delta).write.mode("overwrite").parquet(
-            f"{self.stats_dir}/epoch={epoch_id}"
+        self.write(step.survivors, epoch_id)
+        self.stores["bands"].write(step.band_delta, epoch_id)
+        self.stores["shingles"].write(step.shingle_delta, epoch_id)
+        self.stores["bucket_stats"].write(
+            bucket_stats_delta(step.band_delta), epoch_id
         )
         # watermark last: a crash before this point replays the epoch,
         # which the guard exempts (epoch_id not above the recorded max)
@@ -263,11 +261,6 @@ class NearDedupPipeline:
         release_local_checkpoint(batch_bands)
         release_local_checkpoint(sh_batch)
         release_local_checkpoint(batch)
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
     # -- maintenance ---------------------------------------------------
     def compact_tail(
@@ -279,30 +272,12 @@ class NearDedupPipeline:
         unchanged; the base (and its band partitioning) stays
         byte-untouched. Use ``keep_recent`` to shield the replayable
         window (the compact_epochs replay caveat)."""
-        def fold_stats(df: DataFrame) -> DataFrame:
-            return df.groupBy("band", "bucket").agg(
-                F.sum("population").alias("population"),
-                F.min("min_doc").alias("min_doc"),
-            )
-
-        done: dict[str, int] = {}
-        for which, path, fold in (
-            ("bands", self.bands_dir, None),
-            ("shingles", self.shingles_dir, None),
-            ("bucket_stats", self.stats_dir, fold_stats),
-            ("curated", self.curated_dir, None),
-        ):
-            empty = (
-                spark.createDataFrame([], DOCUMENTS_STREAM_SCHEMA)
-                if which == "curated"
-                else self._empty_for(spark, which)
-            )
-            m = compact_epochs(
-                spark, path, empty, fold=fold, keep_recent=keep_recent
-            )
-            if m is not None:
-                done[which] = m
-        return done
+        done = {
+            which: store.compact_tail(spark, keep_recent)
+            for which, store in self.stores.items()
+        }
+        done["curated"] = super().compact_tail(spark, keep_recent)
+        return {k: m for k, m in done.items() if m is not None}
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
         """Fold every store's base + epoch deltas into a fresh
@@ -318,39 +293,14 @@ class NearDedupPipeline:
         counts. Watermark history is pruned to its latest epoch.
         Returns {store: new upto} for the stores that had anything to
         fold."""
-        def fold_stats(df: DataFrame) -> DataFrame:
-            return df.groupBy("band", "bucket").agg(
-                F.sum("population").alias("population"),
-                F.min("min_doc").alias("min_doc"),
-            )
-
-        done: dict[str, int] = {}
-        for which, path, fold, part in (
-            ("bands", self.bands_dir, None, "band"),
-            ("shingles", self.shingles_dir, None, None),
-            ("bucket_stats", self.stats_dir, fold_stats, None),
-            ("curated", self.curated_dir, None, None),
-        ):
-            empty = (
-                spark.createDataFrame([], DOCUMENTS_STREAM_SCHEMA)
-                if which == "curated"
-                else self._empty_for(spark, which)
-            )
-            upto = compact_store(
-                spark,
-                path,
-                empty,
-                fold=fold,
-                partition_by=part,
-            )
-            if upto is not None:
-                done[which] = upto
+        done = {
+            which: store.compact(spark)
+            for which, store in self.stores.items()
+        }
+        done["curated"] = super().compact(spark)
         # watermark: only the latest epoch matters
         self._wm.prune(spark)
-        return done
-
-    def foreach_batch(self):
-        return self.write_batch
+        return {k: upto for k, upto in done.items() if upto is not None}
 
 
 def streaming_near_dedup(
@@ -374,14 +324,7 @@ def streaming_near_dedup(
     loudly on a violation instead of silently mis-surviving.
     ``compact_every`` folds the delta stores on that epoch cadence."""
     pipe = NearDedupPipeline(base_dir, threshold, compact_every=compact_every)
-    stream = (
-        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_docs_dir)
+    stream = read_staged(
+        spark, DOCUMENTS_STREAM_SCHEMA, staged_docs_dir, max_files_per_trigger
     )
-    writer = (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

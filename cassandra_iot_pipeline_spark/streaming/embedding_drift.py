@@ -32,12 +32,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import _centroid_ranked
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore
 
 _SCHEMA = "epoch BIGINT, lst BIGINT, n BIGINT, dist_units BIGINT"
 
 
-class EmbeddingDriftPipeline:
+class EmbeddingDriftPipeline(MergeableStore):
     """foreachBatch-shaped embedding monitor; see module docstring.
     ``write_batch`` per epoch, then :meth:`history` for the per-list
     series or :meth:`drift` for epochs whose occupancy or residual
@@ -49,13 +49,13 @@ class EmbeddingDriftPipeline:
         centroids: DataFrame,
         compact_every: int | None = None,
     ) -> None:
+        super().__init__(f"{base_dir}/reports", _SCHEMA, compact_every)
         self.base_dir = base_dir
         # the codebook is part of the frozen index: materialize once
         # (n_centroids rows) so every epoch broadcasts identical content
         self._cent_rows = centroids.select("vec_id", "embedding").collect()
         self._cent_schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
-        self.compact_every = compact_every
-        self.reports_dir = f"{base_dir}/reports"
+        self.reports_dir = self.path
 
     def _centroids(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(self._cent_rows, self._cent_schema)
@@ -64,12 +64,7 @@ class EmbeddingDriftPipeline:
     def history(self, spark: SparkSession) -> DataFrame:
         """(epoch, lst, n, mean_dist): per-epoch per-list occupancy and
         mean angular distance (1 - cosine) to the owning centroid."""
-        raw = read_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-        ).distinct()
-        return raw.select(
+        return self.read(spark).select(
             "epoch",
             "lst",
             "n",
@@ -167,54 +162,21 @@ class EmbeddingDriftPipeline:
             ).alias("drifted"),
         )
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ranked = _centroid_ranked(batch_df, self._centroids(spark))
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        ranked = _centroid_ranked(
+            batch_df, self._centroids(batch_df.sparkSession)
+        )
         assigned = ranked.filter(F.col("crank") == 1).select(
             F.col("cent_vid").alias("lst"),
             F.round((F.lit(1.0) - F.col("ccos")) * 1e9)
             .cast("long")
             .alias("du"),
         )
-        report = assigned.groupBy("lst").agg(
+        return assigned.groupBy("lst").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("du").alias("dist_units"),
         ).select(F.lit(int(epoch_id)).alias("epoch"), "*")
-        report.write.mode("overwrite").parquet(
-            f"{self.reports_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.distinct()

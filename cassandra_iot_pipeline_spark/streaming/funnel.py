@@ -89,29 +89,17 @@ from ..operators.funnel import (
     step_points,
     user_hits,
 )
-from ..store import Quarantine, compact_store, read_store, store_parts
+from ..store import (
+    MergeableStore,
+    Quarantine,
+    compact_store,
+    declared_types,
+    run_foreach_batch,
+)
+from .staging import read_staged
 
 
-def _pts_schema(key: str, updates_schema: str | StructType | None) -> str:
-    if updates_schema is None:
-        ktype = "BIGINT"
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        if key not in types:
-            raise ValueError(
-                f"funnel: key {key!r} absent from events schema "
-                f"{sorted(types)}"
-            )
-        ktype = types[key]
-    return f"k {ktype}, us BIGINT, s INT"
-
-
-class FunnelPipeline:
+class FunnelPipeline(MergeableStore):
     """foreachBatch-shaped funnel maintainer; see module docstring.
     ``write_batch`` per epoch, then :meth:`funnel` for the live
     drop-off table (bit-identical to the batch operator over the same
@@ -144,13 +132,16 @@ class FunnelPipeline:
             raise ValueError(
                 f"fin_mode must be 'user' or 'additive', got {fin_mode!r}"
             )
+        ktype = declared_types(updates_schema, {key: "BIGINT"}, "funnel")[key]
+        super().__init__(
+            f"{base_dir}/pts", f"k {ktype}, us BIGINT, s INT", compact_every
+        )
         self.base_dir = base_dir
         self.steps = list(steps)
         self.key = key
         self.ts_col = ts_col
         self.type_col = type_col
         self.horizon_seconds = horizon_seconds
-        self.compact_every = compact_every
         self.finalize_every = finalize_every
         self.finalize_lateness_seconds = finalize_lateness_seconds
         self.quarantine_prune_every = quarantine_prune_every
@@ -158,12 +149,10 @@ class FunnelPipeline:
         self.fin_period_seconds = fin_period_seconds
         self.fin_alpha = fin_alpha
         self.fin_max_buckets = fin_max_buckets
-        self.pts_dir = f"{base_dir}/pts"
+        self.pts_dir = self.path
         self.fin_dir = f"{base_dir}/fin"
         self.q_dir = f"{base_dir}/quarantine"
-        self.schema = _pts_schema(key, updates_schema)
         self.quarantine_store = Quarantine(self.q_dir, self.schema)
-        ktype = self.schema.split(",", 1)[0][len("k "):]
         if fin_mode == "user":
             self.fin_schema = f"wm BIGINT, k {ktype}, hits ARRAY<BIGINT>"
         else:
@@ -171,23 +160,17 @@ class FunnelPipeline:
                 "wm BIGINT, pstart BIGINT, step_idx INT, sgn INT,"
                 " idx BIGINT, cnt BIGINT, sum_delta BIGINT"
             )
+        self.fin = MergeableStore(
+            self.fin_dir, self.fin_schema, fold=self._fin_fold
+        )
 
     # -- reads ----------------------------------------------------------
     def points(self, spark: SparkSession) -> DataFrame:
         """The folded distinct (k, us, s) store (empty-safe)."""
-        raw = read_store(
-            spark, self.pts_dir, spark.createDataFrame([], self.schema)
-        )
-        return raw.distinct()
-
-    def _has_fin(self, spark: SparkSession) -> bool:
-        base_path, _, epochs = store_parts(spark, self.fin_dir)
-        return base_path is not None or bool(epochs)
+        return self.read(spark)
 
     def _fin_raw(self, spark: SparkSession) -> DataFrame:
-        return read_store(
-            spark, self.fin_dir, spark.createDataFrame([], self.fin_schema)
-        )
+        return self.fin.raw(spark)
 
     def _fin(self, spark: SparkSession) -> DataFrame:
         """The finalized-user rows (wm, k, hits), folded (empty-safe).
@@ -199,7 +182,7 @@ class FunnelPipeline:
     def fin_watermark(self, spark: SparkSession) -> int | None:
         """The latest finalization cutoff (microseconds), or None
         before the first finalize — the quarantine boundary."""
-        if not self._has_fin(spark):
+        if not self.fin.exists(spark):
             return None
         wm = self._fin_raw(spark).agg(F.max("wm")).first()[0]
         return None if wm is None else int(wm)
@@ -263,7 +246,7 @@ class FunnelPipeline:
                 self.fin_alpha,
                 self.fin_max_buckets,
             )
-        if not self._has_fin(spark):
+        if not self.fin.exists(spark):
             return funnel_from_points(
                 self.points(spark), self.steps, self.horizon_seconds
             )
@@ -294,7 +277,7 @@ class FunnelPipeline:
         ).select("hits")
         hits = (
             live.unionByName(self._fin(spark).select("hits"))
-            if self._has_fin(spark)
+            if self.fin.exists(spark)
             else live
         )
         return funnel_trend_report(hits, self.steps, period_seconds)
@@ -378,18 +361,14 @@ class FunnelPipeline:
             # rows so the fin epoch write is atomic with it); the
             # quarantine boundary stays at the previous finalize
             return {"finalized_users": 0, "watermark": prev}
-        _, upto, epochs = store_parts(spark, self.fin_dir)
-        nxt = max([upto] + [e for e, _ in epochs]) + 1
-        newfin.write.mode("overwrite").parquet(
-            f"{self.fin_dir}/epoch={nxt}"
-        )
+        self.fin.append(newfin)
         # GC: every finalized user's points leave the store (also the
         # post-finalization arrivals of PREVIOUSLY finalized users)
         fin_keys = self._fin(spark).select("k").distinct()
         compact_store(
             spark,
             self.pts_dir,
-            spark.createDataFrame([], self.schema),
+            self.empty(spark),
             fold=lambda df: df.distinct().join(fin_keys, "k", "anti"),
         )
         return {"finalized_users": int(n), "watermark": cutoff}
@@ -464,26 +443,46 @@ class FunnelPipeline:
             "cnt",
             "sum_delta",
         )
-        _, upto, epochs = store_parts(spark, self.fin_dir)
-        nxt = max([upto] + [e for e, _ in epochs]) + 1
-        newfin.write.mode("overwrite").parquet(f"{self.fin_dir}/epoch={nxt}")
+        self.fin.append(newfin)
         # GC: this pass's newly-closed keys (batch-bounded anti-join —
         # never the lifetime key set) + the time floor
         new_keys = closable.select("k").distinct()
         compact_store(
             spark,
             self.pts_dir,
-            spark.createDataFrame([], self.schema),
+            self.empty(spark),
             fold=lambda df: df.distinct()
             .join(new_keys, "k", "anti")
             .filter(F.col("us") >= F.lit(cutoff - h_us)),
         )
         return {"finalized_users": int(n), "watermark": cutoff}
 
+    # -- the store's algebra ----------------------------------------------
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Distinct — same fold as the reader, so compaction is
+        invisible (pinned in tests)."""
+        return df.distinct()
+
+    def _fin_fold(self, df: DataFrame) -> DataFrame:
+        """The fin store's associative fold: user mode is distinct
+        (one row per closed user; replays overwrite); additive mode is
+        the regroup-sum (cnt/sum_delta additive, wm by max — the
+        watermark only ever reads as a max, so folding epochs with
+        different wm stamps is reader-invisible)."""
+        if self.fin_mode == "user":
+            return df.distinct()
+        return df.groupBy(
+            "pstart", "step_idx", "sgn", "idx"
+        ).agg(
+            F.max("wm").alias("wm"),
+            F.sum("cnt").alias("cnt"),
+            F.sum("sum_delta").alias("sum_delta"),
+        ).select(
+            "wm", "pstart", "step_idx", "sgn", "idx", "cnt", "sum_delta"
+        )
+
     # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         pts = step_points(
             batch_df, self.steps, self.key, self.ts_col, self.type_col
         ).distinct()
@@ -503,77 +502,22 @@ class FunnelPipeline:
             late = pts.filter(F.col("us") < wm)
             if not late.isEmpty():
                 self.quarantine_store.write_batch(late, epoch_id, wm)
-        # epoch-dir overwrite + stateless projection => replaying an
-        # epoch rewrites identical content
-        pts.write.mode("overwrite").parquet(
-            f"{self.pts_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
-        if (
-            self.finalize_every is not None
-            and (epoch_id + 1) % self.finalize_every == 0
-        ):
-            self.finalize(
-                batch_df.sparkSession, self.finalize_lateness_seconds
-            )
-        if (
-            self.quarantine_prune_every is not None
-            and (epoch_id + 1) % self.quarantine_prune_every == 0
-        ):
-            # retention cadence for the alarm channel: detail rows
-            # age out, the violation COUNT survives forever
-            # (store.Quarantine.prune's invariant)
-            self.prune_quarantine(batch_df.sparkSession)
+        self.write(pts, epoch_id)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative (distinct/union), so reads are unchanged (pinned
-        in tests/test_tail_compaction.py for this fold class)."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold base + deltas with distinct — same fold as the reader,
-        so compaction is invisible (pinned in tests)."""
-        return compact_store(
-            spark,
-            self.pts_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-        )
-
-    def _fin_fold(self):
-        """The fin store's associative fold: user mode is distinct
-        (one row per closed user; replays overwrite); additive mode is
-        the regroup-sum (cnt/sum_delta additive, wm by max — the
-        watermark only ever reads as a max, so folding epochs with
-        different wm stamps is reader-invisible)."""
-        if self.fin_mode == "user":
-            return lambda df: df.distinct()
-        return lambda df: df.groupBy(
-            "pstart", "step_idx", "sgn", "idx"
-        ).agg(
-            F.max("wm").alias("wm"),
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_delta").alias("sum_delta"),
-        ).select(
-            "wm", "pstart", "step_idx", "sgn", "idx", "cnt", "sum_delta"
-        )
+    def cadence(self):
+        # after compaction: finalize, then the alarm channel's
+        # retention (detail rows age out, the violation COUNT survives
+        # forever — store.Quarantine.prune's invariant)
+        return [
+            *super().cadence(),
+            (
+                self.finalize_every,
+                lambda spark: self.finalize(
+                    spark, self.finalize_lateness_seconds
+                ),
+            ),
+            (self.quarantine_prune_every, self.prune_quarantine),
+        ]
 
     def compact_fin_tail(
         self, spark: SparkSession, keep_recent: int = 0
@@ -585,18 +529,7 @@ class FunnelPipeline:
         additive mode's fold also CONTRACTS the store (bucket rows
         from different finalizes merge), so it doubles as the fin
         store's deep clean."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.fin_dir,
-            spark.createDataFrame([], self.fin_schema),
-            fold=self._fin_fold(),
-            keep_recent=keep_recent,
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+        return self.fin.compact_tail(spark, keep_recent)
 
 
 def streaming_funnel(
@@ -638,14 +571,7 @@ def streaming_funnel(
         fin_period_seconds=fin_period_seconds,
         fin_alpha=fin_alpha,
     )
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

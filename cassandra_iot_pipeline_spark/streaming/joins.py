@@ -21,6 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..store import run_foreach_batch
 from .pipeline import REPLAY_FILES_PER_TRIGGER, read_event_stream
 from .sinks import ParquetUpsertSink
 
@@ -84,12 +85,8 @@ def conversion_join_query(
         .alias("gap_s"),
         "purchase_value",
     )
-    return (
-        joined.writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        joined, sink.write_batch, checkpoint_dir, output_mode="append"
     )
 
 
@@ -129,12 +126,8 @@ def enriched_stream_query(
         "segment",
         "acctbal",
     )
-    return (
-        enriched.writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        enriched, sink.write_batch, checkpoint_dir, output_mode="append"
     )
 
 

@@ -34,13 +34,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore
 
 #: candidate watermark delays to account against, seconds
 DEFAULT_DELAYS = (60, 600, 3600)
 
 
-class LatenessPipeline:
+class LatenessPipeline(MergeableStore):
     """foreachBatch-shaped lateness monitor; see module docstring.
     ``write_batch`` per epoch, then :meth:`history` for the series or
     :meth:`recommendation` for the smallest candidate delay whose
@@ -53,26 +53,23 @@ class LatenessPipeline:
         delays_s: Sequence[int] = DEFAULT_DELAYS,
         compact_every: int | None = None,
     ) -> None:
-        self.base_dir = base_dir
-        self.ts_col = ts_col
         self.delays_s = list(delays_s)
-        self.compact_every = compact_every
-        self.reports_dir = f"{base_dir}/reports"
         drops = ", ".join(
             f"dropped_{d}s BIGINT" for d in self.delays_s
         )
-        self.schema = (
+        super().__init__(
+            f"{base_dir}/reports",
             f"epoch BIGINT, wm_before_us BIGINT, n BIGINT, {drops},"
-            " max_lag_us BIGINT, batch_max_us BIGINT"
+            " max_lag_us BIGINT, batch_max_us BIGINT",
+            compact_every,
         )
+        self.base_dir = base_dir
+        self.ts_col = ts_col
+        self.reports_dir = self.path
 
     # -- reads ----------------------------------------------------------
     def history(self, spark: SparkSession) -> DataFrame:
-        return read_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-        ).distinct()
+        return self.read(spark)
 
     def recommendation(
         self, spark: SparkSession, max_drop_rate: float = 0.001
@@ -100,12 +97,9 @@ class LatenessPipeline:
         row = prior.agg(F.max("batch_max_us").alias("m")).collect()[0]
         return row["m"]
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        wm = self._wm_before(spark, epoch_id)
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        wm = self._wm_before(batch_df.sparkSession, epoch_id)
         us = F.unix_micros(F.col(self.ts_col))
         aggs = [
             F.count(F.lit(1)).alias("n"),
@@ -127,43 +121,11 @@ class LatenessPipeline:
         )
         aggs.append(lag.alias("max_lag_us"))
         aggs.append(F.max(us).alias("batch_max_us"))
-        report = batch_df.agg(*aggs).select(
+        return batch_df.agg(*aggs).select(
             F.lit(int(epoch_id)).alias("epoch"),
             F.lit(wm).cast("long").alias("wm_before_us"),
             "*",
         )
-        report.write.mode("overwrite").parquet(
-            f"{self.reports_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.distinct()

@@ -40,53 +40,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, declared_types, run_foreach_batch
+from .staging import read_staged
 
 HOUR_SECONDS = 3600
 
 
-def _merge_fold(group_cols: Sequence[str]):
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*group_cols).agg(
-            F.min_by("open", "open_ok").alias("open"),
-            F.min("open_ok").alias("open_ok"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.max_by("close", "close_ok").alias("close"),
-            F.max("close_ok").alias("close_ok"),
-            F.sum("n_events").alias("n_events"),
-        )
-
-    return fold
-
-
-def _bars_schema(
-    keys: Sequence[str], updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        types = {c: "BIGINT" for c in keys}
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in keys if c not in types]
-        if missing:
-            raise ValueError(
-                f"ohlc: columns {missing} absent from events schema "
-                f"{sorted(types)}"
-            )
-    fields = ", ".join(f"{c} {types[c]}" for c in keys)
-    return (
-        f"{fields}, bucket_s BIGINT, open DOUBLE, open_ok DECIMAL(38,0),"
-        " high DOUBLE, low DOUBLE, close DOUBLE, close_ok DECIMAL(38,0),"
-        " n_events BIGINT"
-    )
-
-
-class OhlcPipeline:
+class OhlcPipeline(MergeableStore):
     """foreachBatch-shaped candle maintainer; see module docstring.
     ``write_batch`` per epoch, then :meth:`bars` for the live candles
     (bitwise equal to the batch operator over the same events)."""
@@ -102,19 +62,30 @@ class OhlcPipeline:
         compact_every: int | None = None,
         updates_schema: str | StructType | None = None,
     ) -> None:
-        self.base_dir = base_dir
         self.keys = [key] if isinstance(key, str) else list(key)
+        types = declared_types(
+            updates_schema, {c: "BIGINT" for c in self.keys}, "ohlc"
+        )
+        fields = ", ".join(f"{c} {types[c]}" for c in self.keys)
+        super().__init__(
+            f"{base_dir}/bars",
+            f"{fields}, bucket_s BIGINT, open DOUBLE,"
+            " open_ok DECIMAL(38,0), high DOUBLE, low DOUBLE,"
+            " close DOUBLE, close_ok DECIMAL(38,0), n_events BIGINT",
+            compact_every,
+        )
+        self.base_dir = base_dir
         self.ts_col = ts_col
         self.value_col = value_col
         self.id_col = id_col
         self.bucket_seconds = bucket_seconds
-        self.compact_every = compact_every
-        self.bars_dir = f"{base_dir}/bars"
+        self.bars_dir = self.path
         self.group_cols = [*self.keys, "bucket_s"]
-        self.schema = _bars_schema(self.keys, updates_schema)
 
-    # -- writes -----------------------------------------------------------
-    def _partial_bars(self, batch_df: DataFrame) -> DataFrame:
+    # -- the store's algebra ------------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        """The batch's partial bars (a stateless projection, so a
+        replayed epoch rewrites identical content)."""
         p = int(self.bucket_seconds) * 1_000_000
         ts, idc, v = self.ts_col, self.id_col, self.value_col
         ordk = (
@@ -146,60 +117,27 @@ class OhlcPipeline:
             F.count(F.lit(1)).alias("n_events"),
         )
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # epoch-dir overwrite + stateless projection => a replayed
-        # epoch rewrites identical content
-        self._partial_bars(batch_df).write.mode("overwrite").parquet(
-            f"{self.bars_dir}/epoch={epoch_id}"
+    def fold(self, df: DataFrame) -> DataFrame:
+        """The candle merge: the same operations that built the
+        partials, so fold order (and compaction) cannot matter."""
+        return df.groupBy(*self.group_cols).agg(
+            F.min_by("open", "open_ok").alias("open"),
+            F.min("open_ok").alias("open_ok"),
+            F.max("high").alias("high"),
+            F.min("low").alias("low"),
+            F.max_by("close", "close_ok").alias("close"),
+            F.max("close_ok").alias("close_ok"),
+            F.sum("n_events").alias("n_events"),
         )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
     # -- reads ------------------------------------------------------------
     def bars(self, spark: SparkSession) -> DataFrame:
         """The live candles: fold base + deltas with the merge algebra
         and project the batch operator's exact output shape."""
-        raw = read_store(
-            spark, self.bars_dir, spark.createDataFrame([], self.schema)
-        )
-        return _merge_fold(self.group_cols)(raw).select(
+        return self.read(spark).select(
             *self.keys, "bucket_s", "open", "high", "low", "close",
             "n_events",
         )
-
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.bars_dir,
-            spark.createDataFrame([], self.schema),
-            fold=_merge_fold(self.group_cols),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold with the reader's own merge — reader-invisible by
-        associativity (pinned in tests)."""
-        return compact_store(
-            spark,
-            self.bars_dir,
-            spark.createDataFrame([], self.schema),
-            fold=_merge_fold(self.group_cols),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
 
 
 def streaming_ohlc(
@@ -231,14 +169,7 @@ def streaming_ohlc(
         compact_every=compact_every,
         updates_schema=events_schema,
     )
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

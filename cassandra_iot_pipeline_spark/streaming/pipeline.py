@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..schemas import EVENTS_FIXTURE_SCHEMA
+from ..store import run_foreach_batch
 from .sinks import ParquetUpsertSink
+from .staging import read_staged
 
 WATERMARK_DELAY = "1 minute"  # reference: spark_consumer.py:171-172
 WINDOW = "1 hour"  # reference: spark_consumer.py:177
@@ -47,19 +49,32 @@ def read_event_stream(
     parquet schema is declared up front (streaming sources require it —
     same property as the reference's plan-time schema fetch,
     spark_consumer.py:34-57)."""
-    schema = EVENTS_FIXTURE_SCHEMA
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_dir)
+    return read_staged(
+        spark, EVENTS_FIXTURE_SCHEMA, staged_dir, max_files_per_trigger
     )
 
 
-#: default trigger for bounded fixture replays. Production wall-clock
-#: cadence (the reference's 5-second micro-batches,
-#: spark_consumer.py:210) is ``{"processingTime": "5 seconds"}`` —
-#: exercised end-to-end by tests/test_streaming.py (W6).
-DEFAULT_TRIGGER: dict = {"availableNow": True}
+#: The reference's two tables: name -> (primary key, consistency
+#: level). The parquet sink keeps the level as pass-through metadata
+#: (reference: init.cql:25, 48; spark_consumer.py:152, 202).
+INGEST_TABLES = {
+    "sensor_events": (("user_id", "ts", "event_id"), "ONE"),
+    "hourly_aggregates": (("device_id", "hour_bucket"), "QUORUM"),
+}
+
+
+def ingest_sinks(out_dir: str) -> tuple[ParquetUpsertSink, ...]:
+    """(raw, agg): the upsert sinks of :data:`INGEST_TABLES` under
+    ``out_dir``."""
+    return tuple(
+        ParquetUpsertSink(
+            os.path.join(out_dir, name),
+            pk=pk,
+            sink_options={"consistency_level": level},
+        )
+        for name, (pk, level) in INGEST_TABLES.items()
+    )
+
 
 #: files per micro-batch for the bounded bench replays. One knob for all
 #: four driver-facing replay queries. The current sf0.1 fixture stages as
@@ -136,12 +151,8 @@ def raw_passthrough_query(
         "event_type",
         F.col("value").cast("double").alias("value"),
     )
-    return (
-        projected.writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or DEFAULT_TRIGGER))
-        .start()
+    return run_foreach_batch(
+        projected, sink.write_batch, checkpoint_dir, trigger, "append"
     )
 
 
@@ -184,12 +195,8 @@ def hourly_agg_query(
             "event_count",
         )
     )
-    return (
-        agg.writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or DEFAULT_TRIGGER))
-        .start()
+    return run_foreach_batch(
+        agg, sink.write_batch, checkpoint_dir, trigger, output_mode
     )
 
 
@@ -198,7 +205,7 @@ def run_pipeline(
     staged_dir: str,
     out_dir: str | None = None,
     max_files_per_trigger: int = 1,
-    state_partitions: int | None = 8,
+    state_partitions: int = 8,
 ) -> dict[str, ParquetUpsertSink]:
     """W7: both continuous queries concurrently off one source lineage,
     blocking until the bounded replay completes (availableNow). Returns
@@ -206,53 +213,34 @@ def run_pipeline(
 
     ``state_partitions`` sizes the stateful shuffle for the bounded
     replay (state-store commits are per partition per batch — the
-    dominant cost at fixture scale); pass None to keep the session
-    setting (e.g. on a real cluster)."""
+    dominant cost at fixture scale)."""
     out_dir = out_dir or tempfile.mkdtemp(prefix="spark_graft_pipeline_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    raw_sink, agg_sink = ingest_sinks(out_dir)
     # Query 1 is stateless (no watermark — never gets a no-data batch);
     # query 2 is the update-mode aggregation, whose trailing no-data
     # batch only evicts state (every group already emitted in its data
     # batch) — skip it, same as streaming_hourly_rollup below.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    raw_sink = ParquetUpsertSink(
-        os.path.join(out_dir, "sensor_events"),
-        pk=("user_id", "ts", "event_id"),
-        sink_options={"consistency_level": "ONE"},  # reference: spark_consumer.py:152
-    )
-    agg_sink = ParquetUpsertSink(
-        os.path.join(out_dir, "hourly_aggregates"),
-        pk=("device_id", "hour_bucket"),
-        sink_options={"consistency_level": "QUORUM"},  # reference: spark_consumer.py:202
-    )
-    q1 = raw_passthrough_query(
-        read_event_stream(spark, staged_dir, max_files_per_trigger),
-        raw_sink,
-        os.path.join(out_dir, "ckpt_raw"),
-    )
-    # output_mode pinned HERE, next to the no-data-batch conf above: the
-    # skip is only safe because update mode emits every group in its
-    # data batch (append mode finalizes on watermark advance and would
-    # silently drop final rows — ADVICE r12). Keep the two coupled.
-    q2 = hourly_agg_query(
-        read_event_stream(spark, staged_dir, max_files_per_trigger),
-        agg_sink,
-        os.path.join(out_dir, "ckpt_agg"),
-        output_mode="update",
-    )
-    try:
+    with bounded_replay_confs(
+        spark, state_partitions, skip_no_data_batch=True
+    ):
+        q1 = raw_passthrough_query(
+            read_event_stream(spark, staged_dir, max_files_per_trigger),
+            raw_sink,
+            os.path.join(out_dir, "ckpt_raw"),
+        )
+        # output_mode pinned HERE, next to the no-data-batch conf above:
+        # the skip is only safe because update mode emits every group in
+        # its data batch (append mode finalizes on watermark advance and
+        # would silently drop final rows — ADVICE r12). Keep the two
+        # coupled.
+        q2 = hourly_agg_query(
+            read_event_stream(spark, staged_dir, max_files_per_trigger),
+            agg_sink,
+            os.path.join(out_dir, "ckpt_agg"),
+            output_mode="update",
+        )
         q1.awaitTermination()
         q2.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
     return {
         "raw": raw_sink,
         "agg": agg_sink,
@@ -331,12 +319,8 @@ def sliding_agg_query(
             "event_count",
         )
     )
-    return (
-        agg.writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or DEFAULT_TRIGGER))
-        .start()
+    return run_foreach_batch(
+        agg, sink.write_batch, checkpoint_dir, trigger, "update"
     )
 
 

@@ -34,12 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sampling import thresholds_from_counts
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore
 
 DIST_SCHEMA = "s DOUBLE, c BIGINT"
 
 
-class ScoreDistPipeline:
+class ScoreDistPipeline(MergeableStore):
     """foreachBatch-shaped score-distribution maintainer; see module
     docstring. ``write_batch`` per epoch of scored rows, then
     :meth:`threshold` for the live top-fraction cut line."""
@@ -51,20 +51,17 @@ class ScoreDistPipeline:
         quantize_decimals: int = 6,
         compact_every: int | None = None,
     ) -> None:
+        super().__init__(f"{base_dir}/dist", DIST_SCHEMA, compact_every)
         self.base_dir = base_dir
         self.score_col = score_col
         self.quantize_decimals = quantize_decimals
-        self.compact_every = compact_every
-        self.dist_dir = f"{base_dir}/dist"
+        self.dist_dir = self.path
 
     # -- reads ----------------------------------------------------------
     def distribution(self, spark: SparkSession) -> DataFrame:
         """The folded (s, c) distribution so far (empty-safe; at most
         grid-cardinality rows)."""
-        raw = read_store(
-            spark, self.dist_dir, spark.createDataFrame([], DIST_SCHEMA)
-        )
-        return raw.groupBy("s").agg(F.sum("c").alias("c"))
+        return self.read(spark)
 
     def threshold(
         self, spark: SparkSession, keep_frac: float
@@ -77,12 +74,10 @@ class ScoreDistPipeline:
             self.distribution(spark), "s", keep_frac, count_col="c"
         )
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         grid = float(10**self.quantize_decimals)
-        counts = (
+        return (
             batch_df.filter(F.col(self.score_col).isNotNull())
             .select(
                 (F.floor(F.col(self.score_col) * F.lit(grid)) / F.lit(grid))
@@ -91,38 +86,8 @@ class ScoreDistPipeline:
             .groupBy("s")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        counts.write.mode("overwrite").parquet(
-            f"{self.dist_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.dist_dir,
-            spark.createDataFrame([], DIST_SCHEMA),
-            fold=lambda df: df.groupBy("s").agg(F.sum("c").alias("c")),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.dist_dir,
-            spark.createDataFrame([], DIST_SCHEMA),
-            fold=lambda df: df.groupBy("s").agg(F.sum("c").alias("c")),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Per-score sum — associative, so compaction (full or tail)
+        is invisible to every threshold read."""
+        return df.groupBy("s").agg(F.sum("c").alias("c"))

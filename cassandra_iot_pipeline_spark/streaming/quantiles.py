@@ -32,32 +32,11 @@ from ..operators.quantiles import (
     dd_quantiles_from_sketch,
     dd_sketch,
 )
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, declared_types, run_foreach_batch
+from .staging import read_staged
 
 
-def _schema(
-    group_cols: Sequence[str], updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        types = {c: "STRING" for c in group_cols}
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in group_cols if c not in types]
-        if missing:
-            raise ValueError(
-                f"quantiles: columns {missing} absent from events schema "
-                f"{sorted(types)}"
-            )
-    fields = ", ".join(f"{c} {types[c]}" for c in group_cols)
-    return f"{fields}, sgn INT, idx BIGINT, cnt BIGINT"
-
-
-class QuantilePipeline:
+class QuantilePipeline(MergeableStore):
     """foreachBatch-shaped quantile maintainer; see module docstring.
     ``write_batch`` per epoch, then :meth:`quantiles` for live
     estimates (≡ the one-pass batch sketch over the concatenated
@@ -73,33 +52,41 @@ class QuantilePipeline:
         updates_schema: str | StructType | None = None,
         max_buckets: int | None = None,
     ) -> None:
-        self.base_dir = base_dir
         self.group_cols = list(group_cols)
+        types = declared_types(
+            updates_schema, {c: "STRING" for c in self.group_cols}, "quantiles"
+        )
+        fields = ", ".join(f"{c} {types[c]}" for c in self.group_cols)
+        super().__init__(
+            f"{base_dir}/buckets",
+            f"{fields}, sgn INT, idx BIGINT, cnt BIGINT",
+            compact_every,
+        )
+        self.base_dir = base_dir
         self.value_col = value_col
         self.alpha = alpha
-        self.compact_every = compact_every
         self.max_buckets = max_buckets
-        self.buckets_dir = f"{base_dir}/buckets"
-        self.schema = _schema(self.group_cols, updates_schema)
+        self.buckets_dir = self.path
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dd_sketch(
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return dd_sketch(
             batch_df,
             self.group_cols,
             self.value_col,
             self.alpha,
             self.max_buckets,
-        ).write.mode("overwrite").parquet(
-            f"{self.buckets_dir}/epoch={epoch_id}"
         )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
+
+    def fold(self, df: DataFrame) -> DataFrame:
+        """Bucket-count sum (collapsed to ``max_buckets`` when set) —
+        associative, so compaction leaves every estimate bitwise
+        unchanged."""
+        if self.max_buckets is not None:
+            return collapse_sketch(df, self.group_cols, self.max_buckets)
+        return df.groupBy(*self.group_cols, "sgn", "idx").agg(
+            F.sum("cnt").alias("cnt")
+        )
 
     # -- reads ------------------------------------------------------------
     def sketch(self, spark: SparkSession) -> DataFrame:
@@ -107,10 +94,7 @@ class QuantilePipeline:
         ``max_buckets`` set, the read-side fold collapses too —
         merge invariance makes the result identical to collapsing the
         full one-pass sketch (pinned in tests)."""
-        raw = read_store(
-            spark, self.buckets_dir, spark.createDataFrame([], self.schema)
-        )
-        return self._fold(raw)
+        return self.read(spark)
 
     def quantiles(
         self, spark: SparkSession, qs: Sequence[float] = (0.5, 0.95, 0.99)
@@ -123,38 +107,6 @@ class QuantilePipeline:
             self.alpha,
             self.max_buckets,
         )
-
-    # -- maintenance ------------------------------------------------------
-    def _fold(self, df: DataFrame) -> DataFrame:
-        if self.max_buckets is not None:
-            return collapse_sketch(df, self.group_cols, self.max_buckets)
-        return df.groupBy(*self.group_cols, "sgn", "idx").agg(
-            F.sum("cnt").alias("cnt")
-        )
-
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction — the sum fold is associative, so reads are
-        bitwise unchanged (the compact_epochs contract)."""
-        return compact_epochs(
-            spark,
-            self.buckets_dir,
-            spark.createDataFrame([], self.schema),
-            fold=self._fold,
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.buckets_dir,
-            spark.createDataFrame([], self.schema),
-            fold=self._fold,
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
 
 
 def streaming_quantiles(
@@ -184,12 +136,7 @@ def streaming_quantiles(
         updates_schema=events_schema,
         max_buckets=max_buckets,
     )
-    reader = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    writer = reader.writeStream.foreachBatch(pipe.foreach_batch()).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

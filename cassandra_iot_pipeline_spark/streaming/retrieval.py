@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..functions.retrieval import PostingsStore
+from ..store import run_foreach_batch
+from .staging import read_staged
 
 
 def streaming_postings_ingest(
@@ -36,14 +38,9 @@ def streaming_postings_ingest(
         n_groups=n_groups,
         compact_every=compact_every,
     )
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_docs_dir)
+    stream = read_staged(
+        spark, docs_schema, staged_docs_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(store.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return run_foreach_batch(
+        stream, store.write_batch, checkpoint_dir, trigger
     )

@@ -41,37 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.sampling import _uniform53
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, declared_types, run_foreach_batch
+from .staging import read_staged
 
 
-def _sample_schema(
-    key: str,
-    weight: str,
-    groups: Sequence[str],
-    updates_schema: str | StructType | None,
-) -> str:
-    if updates_schema is None:
-        types: dict[str, str] = {key: "BIGINT", weight: "DOUBLE"}
-        types |= {g: "BIGINT" for g in groups}
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in [key, weight, *groups] if c not in types]
-        if missing:
-            raise ValueError(
-                f"sample: columns {missing} absent from events schema "
-                f"{sorted(types)}"
-            )
-    cols = [key, *groups]
-    fields = ", ".join(f"{c} {types[c]}" for c in cols)
-    return f"{fields}, {weight} {types[weight]}, _q DOUBLE"
-
-
-class PrioritySamplePipeline:
+class PrioritySamplePipeline(MergeableStore):
     """foreachBatch-shaped weighted-reservoir maintainer; see module
     docstring. ``write_batch`` per epoch, then :meth:`sample` for the
     live k-row weighted sample per group."""
@@ -87,23 +61,31 @@ class PrioritySamplePipeline:
         compact_every: int | None = None,
         updates_schema: str | StructType | None = None,
     ) -> None:
-        self.base_dir = base_dir
-        self.k = k
-        self.key = key
-        self.weight = weight
         self.groups = (
             [] if group is None
             else [group] if isinstance(group, str) else list(group)
         )
-        self.seed = seed
-        self.compact_every = compact_every
-        self.res_dir = f"{base_dir}/res"
-        self.schema = _sample_schema(
-            key, weight, self.groups, updates_schema
+        types = declared_types(
+            updates_schema,
+            {key: "BIGINT", weight: "DOUBLE"}
+            | {g: "BIGINT" for g in self.groups},
+            "sample",
         )
+        fields = ", ".join(f"{c} {types[c]}" for c in [key, *self.groups])
+        super().__init__(
+            f"{base_dir}/res",
+            f"{fields}, {weight} {types[weight]}, _q DOUBLE",
+            compact_every,
+        )
+        self.base_dir = base_dir
+        self.k = k
+        self.key = key
+        self.weight = weight
+        self.seed = seed
+        self.res_dir = self.path
 
-    # -- the shared fold ---------------------------------------------------
-    def _fold(self, df: DataFrame) -> DataFrame:
+    # -- the store's algebra ------------------------------------------------
+    def fold(self, df: DataFrame) -> DataFrame:
         """Dedup keys (identical priorities collapse; changed weights
         resolve to the larger priority) then keep each group's top
         k+1 priorities — the row beyond k is the threshold carrier."""
@@ -126,12 +108,11 @@ class PrioritySamplePipeline:
             .drop("_rn")
         )
 
-    # -- write path (foreachBatch) ------------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        """The batch's own top k+1 by hash-pure priority (a stateless
+        projection: a replay rewrites identical content)."""
         wcol = F.col(self.weight)
-        partial = self._fold(
+        return self.fold(
             batch_df.filter(wcol.isNotNull() & (wcol > 0)).select(
                 self.key,
                 *self.groups,
@@ -142,25 +123,12 @@ class PrioritySamplePipeline:
                 ).alias("_q"),
             )
         )
-        # epoch-dir overwrite + stateless projection => replay rewrites
-        # identical content
-        partial.write.mode("overwrite").parquet(
-            f"{self.res_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
 
     # -- reads ---------------------------------------------------------------
     def sample(self, spark: SparkSession) -> DataFrame:
         """The live weighted sample: k rows per group with DLT
         estimation weights (empty-safe)."""
-        raw = read_store(
-            spark, self.res_dir, spark.createDataFrame([], self.schema)
-        )
-        folded = self._fold(raw)
+        folded = self.read(spark)
         wr = Window.partitionBy(*self.groups).orderBy(F.desc("_q"))
         wg = Window.partitionBy(*self.groups) if self.groups else (
             Window.partitionBy()
@@ -181,35 +149,6 @@ class PrioritySamplePipeline:
             )
             .drop("_q", "_rn", "_tau")
         )
-
-    # -- maintenance ----------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.res_dir,
-            spark.createDataFrame([], self.schema),
-            fold=self._fold,
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold base + deltas with the reader's own fold — invisible
-        by construction; the compacted base is k+1 rows per group."""
-        return compact_store(
-            spark,
-            self.res_dir,
-            spark.createDataFrame([], self.schema),
-            fold=self._fold,
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
 
 
 def streaming_priority_sample(
@@ -241,14 +180,7 @@ def streaming_priority_sample(
         compact_every=compact_every,
         updates_schema=events_schema,
     )
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

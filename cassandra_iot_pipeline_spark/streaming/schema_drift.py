@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 _SCHEMA = (
     "epoch BIGINT, field STRING, n_present BIGINT, n_rows BIGINT,"
@@ -48,7 +49,7 @@ _SCHEMA = (
 CORRUPT_FIELD = "_corrupt"
 
 
-class SchemaDriftPipeline:
+class SchemaDriftPipeline(MergeableStore):
     """foreachBatch-shaped schema monitor; see module docstring.
     ``write_batch`` per epoch over frames carrying raw JSON lines in
     ``raw_col``; :meth:`history` for the per-field series,
@@ -66,15 +67,15 @@ class SchemaDriftPipeline:
             if isinstance(declared_schema, StructType)
             else StructType.fromDDL(declared_schema)
         )
+        super().__init__(f"{base_dir}/fields", _SCHEMA, compact_every)
         self._struct = st
         self.declared = sorted(f.name for f in st.fields)
         self.base_dir = base_dir
         self.raw_col = raw_col
-        self.compact_every = compact_every
-        self.fields_dir = f"{base_dir}/fields"
+        self.fields_dir = self.path
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def _batch_report(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         keys = batch_df.select(
             F.col(self.raw_col).alias("_raw"),
             F.json_object_keys(F.col(self.raw_col)).alias("ks"),
@@ -135,17 +136,8 @@ class SchemaDriftPipeline:
             F.coalesce("n_coerced", F.lit(0)).alias("n_coerced"),
         )
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        self._batch_report(batch_df, epoch_id).write.mode(
-            "overwrite"
-        ).parquet(f"{self.fields_dir}/epoch={epoch_id}")
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.distinct()
 
     # -- reads ------------------------------------------------------------
     def history(self, spark: SparkSession) -> DataFrame:
@@ -153,12 +145,7 @@ class SchemaDriftPipeline:
         per-epoch presence series (empty-safe). Fields absent from an
         epoch simply have no row — :meth:`drift` fills the zeros
         against the declared set (the embedding-drift grid lesson)."""
-        raw = read_store(
-            spark,
-            self.fields_dir,
-            spark.createDataFrame([], _SCHEMA),
-        ).distinct()
-        return raw.select(
+        return self.read(spark).select(
             "epoch",
             "field",
             "n_present",
@@ -243,33 +230,6 @@ class SchemaDriftPipeline:
         )
         return undeclared.unionByName(vanishing).unionByName(coercion)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.fields_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.fields_dir,
-            spark.createDataFrame([], _SCHEMA),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
-
 
 def streaming_schema_drift(
     spark: SparkSession,
@@ -292,12 +252,11 @@ def streaming_schema_drift(
         raw_col=raw_col,
         compact_every=compact_every,
     )
-    reader = (
-        spark.readStream.schema(f"{raw_col} STRING")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(staged_lines_dir)
+    stream = read_staged(
+        spark,
+        f"{raw_col} STRING",
+        staged_lines_dir,
+        max_files_per_trigger,
+        fmt="text",
     )
-    writer = reader.writeStream.foreachBatch(pipe.foreach_batch()).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -75,3 +75,22 @@ def stage_events_stream(
 
         shutil.rmtree(out, ignore_errors=True)
     return final
+
+
+def read_staged(
+    spark: SparkSession,
+    schema: str,
+    staged_dir: str,
+    max_files_per_trigger: int = 1,
+    fmt: str = "parquet",
+):
+    """A file-source stream over a staged directory: ``schema`` declared
+    up front (streaming sources require it), ``max_files_per_trigger``
+    files per micro-batch, in modification-time order (file order =
+    ingest order)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .format(fmt)
+        .load(staged_dir)
+    )

@@ -62,7 +62,8 @@ from ..functions.substrings import (
     _merge_spans,
     cut_spans,
 )
-from ..store import compact_epochs, compact_store, store_parts
+from ..store import MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 GRAM_COUNTS_SCHEMA = "g BIGINT, cnt BIGINT"
 #: the approx tier's store rows: Count-Min counters (fast xxhash64
@@ -77,7 +78,7 @@ CURATED_SCHEMA = (
 COUNT_MODES = ("exact", "approx")
 
 
-class SubstringDedupPipeline:
+class SubstringDedupPipeline(MergeableStore):
     """Continuous substring dedup over micro-batches of documents —
     see module docstring. ``write_batch`` is foreachBatch-shaped; wire
     it with :func:`streaming_substring_dedup` or call it directly per
@@ -121,17 +122,33 @@ class SubstringDedupPipeline:
             raise ValueError(
                 f"counts must be one of {COUNT_MODES}, got {counts!r}"
             )
+        # the pipeline's own directory is its output, the cut documents
+        super().__init__(f"{base_dir}/curated", CURATED_SCHEMA, compact_every)
         self.base_dir = base_dir
         self.k = k
         self.min_count = min_count
-        self.compact_every = compact_every
         self.counts = counts
         self.cm_width = cm_width
         self.cm_depth = cm_depth
         self.grams_dir = f"{base_dir}/grams"
-        self.curated_dir = f"{base_dir}/curated"
-        self._grams_schema = (
-            GRAM_COUNTS_SCHEMA if counts == "exact" else GRAM_SKETCH_SCHEMA
+        self.curated_dir = self.path
+        # gram counts sum-merge per gram (exact) or per counter (approx)
+        # — both folds associative, so compaction cannot change any
+        # future epoch's marking
+        self.grams = (
+            MergeableStore(
+                self.grams_dir,
+                GRAM_COUNTS_SCHEMA,
+                fold=lambda df: df.groupBy("g").agg(F.sum("cnt").alias("cnt")),
+            )
+            if counts == "exact"
+            else MergeableStore(
+                self.grams_dir,
+                GRAM_SKETCH_SCHEMA,
+                fold=lambda df: df.groupBy("j", "bucket").agg(
+                    F.sum("c").alias("c")
+                ),
+            )
         )
 
     # -- reads ----------------------------------------------------------
@@ -141,21 +158,7 @@ class SubstringDedupPipeline:
         delta STRICTLY below it — a replayed epoch must not see its
         own first-attempt delta (that would double-count every gram
         and could flip min_count decisions between attempts)."""
-        empty = spark.createDataFrame([], self._grams_schema)
-        base_path, _, epochs = store_parts(spark, self.grams_dir)
-        parts = []
-        if base_path is not None:
-            parts.append(spark.read.parquet(base_path))
-        older = [p for e, p in epochs if e < epoch_id]
-        if older:
-            parts.append(spark.read.parquet(*older))
-        if not parts:
-            return empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        cols = [F.col(f.name).cast(f.dataType) for f in empty.schema]
-        return out.select(*cols)
+        return self.grams.raw(spark, before=epoch_id)
 
     def gram_counts(self, spark: SparkSession) -> DataFrame:
         """The folded corpus-wide counts so far (audit surface;
@@ -165,31 +168,24 @@ class SubstringDedupPipeline:
                 "gram_counts: the approx store keeps CM counters, not "
                 "per-gram rows — use gram_sketch()"
             )
-        raw = self._counts_before(spark, 2**62)
-        return raw.groupBy("g").agg(F.sum("cnt").alias("cnt"))
+        return self.grams.read(spark)
 
     def gram_sketch(self, spark: SparkSession) -> DataFrame:
         """The folded (j, bucket, c) Count-Min counters so far
         (approx-mode audit surface; at most depth x width rows)."""
         if self.counts != "approx":
             raise ValueError("gram_sketch: exact store — use gram_counts()")
-        raw = self._counts_before(spark, 2**62)
-        return raw.groupBy("j", "bucket").agg(F.sum("c").alias("c"))
+        return self.grams.read(spark)
 
     def curated(self, spark: SparkSession) -> DataFrame:
         """Every epoch's cut documents (empty-safe, delta+base reader
         shared with the other stores)."""
-        from ..store import read_store
-
-        empty = spark.createDataFrame([], CURATED_SCHEMA)
-        return read_store(spark, self.curated_dir, empty)
+        return self.read(spark)
 
     # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from ..blocks import release_local_checkpoint
 
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         canon = (
             batch_df.select(
@@ -287,18 +283,9 @@ class SubstringDedupPipeline:
             )
         )
         # epoch-dir overwrite => replaying an epoch is a no-op rewrite
-        curated.write.mode("overwrite").parquet(
-            f"{self.curated_dir}/epoch={epoch_id}"
-        )
-        store_delta.write.mode("overwrite").parquet(
-            f"{self.grams_dir}/epoch={epoch_id}"
-        )
+        self.write(curated, epoch_id)
+        self.grams.write(store_delta, epoch_id)
         release_local_checkpoint(canon)
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
     # -- maintenance ------------------------------------------------------
     def compact_tail(
@@ -307,56 +294,22 @@ class SubstringDedupPipeline:
         """Tail compaction (store.compact_epochs): gram counts re-sum,
         curated output plain-union — associative, reads unchanged,
         base byte-untouched."""
-        if self.counts == "exact":
-            def fold_counts(df: DataFrame) -> DataFrame:
-                return df.groupBy("g").agg(F.sum("cnt").alias("cnt"))
-        else:
-            def fold_counts(df: DataFrame) -> DataFrame:
-                return df.groupBy("j", "bucket").agg(F.sum("c").alias("c"))
-
-        done: dict[str, int] = {}
-        for which, path, fold, schema in (
-            ("grams", self.grams_dir, fold_counts, self._grams_schema),
-            ("curated", self.curated_dir, None, CURATED_SCHEMA),
-        ):
-            m = compact_epochs(
-                spark,
-                path,
-                spark.createDataFrame([], schema),
-                fold=fold,
-                keep_recent=keep_recent,
-            )
-            if m is not None:
-                done[which] = m
-        return done
+        done = {
+            "grams": self.grams.compact_tail(spark, keep_recent),
+            "curated": super().compact_tail(spark, keep_recent),
+        }
+        return {k: m for k, m in done.items() if m is not None}
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
         """Fold the gram counts (sum-merge — associative, so future
         markings are unchanged) and the curated output (plain union)
         into fresh bases; store.py's rename-commit keeps every crash
         window readable."""
-
-        if self.counts == "exact":
-            def fold_counts(df: DataFrame) -> DataFrame:
-                return df.groupBy("g").agg(F.sum("cnt").alias("cnt"))
-        else:
-            def fold_counts(df: DataFrame) -> DataFrame:
-                return df.groupBy("j", "bucket").agg(F.sum("c").alias("c"))
-
-        done: dict[str, int] = {}
-        for which, path, fold, schema in (
-            ("grams", self.grams_dir, fold_counts, self._grams_schema),
-            ("curated", self.curated_dir, None, CURATED_SCHEMA),
-        ):
-            upto = compact_store(
-                spark, path, spark.createDataFrame([], schema), fold=fold
-            )
-            if upto is not None:
-                done[which] = upto
-        return done
-
-    def foreach_batch(self):
-        return self.write_batch
+        done = {
+            "grams": self.grams.compact(spark),
+            "curated": super().compact(spark),
+        }
+        return {k: upto for k, upto in done.items() if upto is not None}
 
 
 def streaming_substring_dedup(
@@ -383,14 +336,7 @@ def streaming_substring_dedup(
         base_dir, k=k, min_count=min_count, compact_every=compact_every,
         counts=counts, cm_width=cm_width, cm_depth=cm_depth,
     )
-    stream = (
-        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_docs_dir)
+    stream = read_staged(
+        spark, DOCUMENTS_STREAM_SCHEMA, staged_docs_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -37,10 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bpe import tokenizer_report
-from ..store import compact_epochs, compact_store, read_store
+from ..store import MergeableStore, run_foreach_batch
+from .staging import read_staged
 
 
-class TokenizerDriftPipeline:
+class TokenizerDriftPipeline(MergeableStore):
     """foreachBatch-shaped tokenizer monitor; see module docstring.
     ``write_batch`` per epoch, then :meth:`history` for the series or
     :meth:`drift` for epochs whose fertility / OOV worsened beyond a
@@ -55,6 +56,14 @@ class TokenizerDriftPipeline:
         text_col: str = "text",
         compact_every: int | None = None,
     ) -> None:
+        self.group_cols = list(group_cols)
+        gcols = ", ".join(f"{g} STRING" for g in self.group_cols)
+        super().__init__(
+            f"{base_dir}/reports",
+            f"epoch BIGINT, {gcols}, n_words BIGINT, n_pieces BIGINT,"
+            " fertility DOUBLE, oov_word_rate DOUBLE",
+            compact_every,
+        )
         self.base_dir = base_dir
         self.merges = list(merges)
         # the vocab is part of the frozen tokenizer: materialize it
@@ -62,15 +71,8 @@ class TokenizerDriftPipeline:
         # epoch broadcasts identical content
         self._vocab_rows = vocab.select("token", "id").collect()
         self._vocab_schema = "token STRING, id BIGINT"
-        self.group_cols = list(group_cols)
         self.text_col = text_col
-        self.compact_every = compact_every
-        self.reports_dir = f"{base_dir}/reports"
-        gcols = ", ".join(f"{g} STRING" for g in self.group_cols)
-        self.schema = (
-            f"epoch BIGINT, {gcols}, n_words BIGINT, n_pieces BIGINT,"
-            " fertility DOUBLE, oov_word_rate DOUBLE"
-        )
+        self.reports_dir = self.path
 
     def _vocab(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(self._vocab_rows, self._vocab_schema)
@@ -79,11 +81,7 @@ class TokenizerDriftPipeline:
     def history(self, spark: SparkSession) -> DataFrame:
         """(epoch, group..., n_words, n_pieces, fertility,
         oov_word_rate): the per-epoch series (empty-safe)."""
-        return read_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-        ).distinct()
+        return self.read(spark)
 
     def drift(
         self,
@@ -113,53 +111,18 @@ class TokenizerDriftPipeline:
             )
         )
 
-    # -- write path (foreachBatch) ---------------------------------------
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        report = tokenizer_report(
+    # -- the store's algebra ----------------------------------------------
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return tokenizer_report(
             batch_df,
             self.merges,
-            self._vocab(spark),
+            self._vocab(batch_df.sparkSession),
             self.group_cols,
             self.text_col,
         ).select(F.lit(int(epoch_id)).alias("epoch"), "*")
-        report.write.mode("overwrite").parquet(
-            f"{self.reports_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(spark)
 
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): fold only the delta
-        tail, base byte-untouched — O(tail) maintenance; the fold is
-        associative, so reads are unchanged (the compact_epochs
-        contract; family-pinned in tests/test_tail_compaction.py)."""
-        return compact_epochs(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        return compact_store(
-            spark,
-            self.reports_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: df.distinct(),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
+    def fold(self, df: DataFrame) -> DataFrame:
+        return df.distinct()
 
 
 def streaming_tokenizer_drift(
@@ -188,14 +151,7 @@ def streaming_tokenizer_drift(
         text_col,
         compact_every=compact_every,
     )
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_docs_dir)
+    stream = read_staged(
+        spark, docs_schema, staged_docs_dir, max_files_per_trigger
     )
-    return (
-        stream.writeStream.foreachBatch(pipe.foreach_batch())
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

@@ -55,29 +55,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..store import compact_store, read_store
-
-
-def _mg_schema(
-    group_cols: Sequence[str], updates_schema: str | StructType | None
-) -> str:
-    if updates_schema is None:
-        types = {c: "STRING" for c in group_cols}
-    else:
-        st = (
-            updates_schema
-            if isinstance(updates_schema, StructType)
-            else StructType.fromDDL(updates_schema)
-        )
-        types = {f.name: f.dataType.simpleString() for f in st.fields}
-        missing = [c for c in group_cols if c not in types]
-        if missing:
-            raise ValueError(
-                f"topk: columns {missing} absent from events schema "
-                f"{sorted(types)}"
-            )
-    fields = ", ".join(f"{c} {types[c]}" for c in group_cols)
-    return f"{fields}, token STRING, c BIGINT, err BIGINT"
+from ..store import MergeableStore, declared_types, run_foreach_batch
+from .staging import read_staged
 
 
 def mg_trim(
@@ -134,7 +113,7 @@ def mg_trim(
     return kept.unionByName(sentinels)
 
 
-class TopKPipeline:
+class TopKPipeline(MergeableStore):
     """foreachBatch-shaped heavy-hitters maintainer; see module
     docstring. ``write_batch`` per epoch, then :meth:`topk` for the
     live (group..., token, n_lo, n_hi) ranking or :meth:`summary`
@@ -151,15 +130,22 @@ class TopKPipeline:
     ) -> None:
         if m < 1:
             raise ValueError(f"m must be >= 1, got {m}")
-        self.base_dir = base_dir
         self.group_cols = list(group_cols)
+        types = declared_types(
+            updates_schema, {c: "STRING" for c in self.group_cols}, "topk"
+        )
+        fields = ", ".join(f"{c} {types[c]}" for c in self.group_cols)
+        super().__init__(
+            f"{base_dir}/mg",
+            f"{fields}, token STRING, c BIGINT, err BIGINT",
+            compact_every,
+        )
+        self.base_dir = base_dir
         self.token_col = token_col
         self.m = m
-        self.compact_every = compact_every
-        self.mg_dir = f"{base_dir}/mg"
-        self.schema = _mg_schema(self.group_cols, updates_schema)
+        self.mg_dir = self.path
 
-    # -- write path (foreachBatch) ---------------------------------------
+    # -- the store's algebra ----------------------------------------------
     def _batch_summary(self, batch_df: DataFrame) -> DataFrame:
         counts = (
             batch_df.filter(F.col(self.token_col).isNotNull())
@@ -173,19 +159,14 @@ class TopKPipeline:
         )
         return mg_trim(counts, self.group_cols, self.m)
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # epoch-dir overwrite + stateless projection => a replayed epoch
-        # rewrites identical content
-        self._batch_summary(batch_df).write.mode("overwrite").parquet(
-            f"{self.mg_dir}/epoch={epoch_id}"
-        )
-        if (
-            self.compact_every is not None
-            and (epoch_id + 1) % self.compact_every == 0
-        ):
-            self.compact(batch_df.sparkSession)
+    def project(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return self._batch_summary(batch_df)
+
+    def fold(self, df: DataFrame) -> DataFrame:
+        """One more MG merge — bounds every compacted part at m + 1
+        rows per group; CONTRACT-invisible, not bit-invisible (see
+        module docstring)."""
+        return mg_trim(df, self.group_cols, self.m)
 
     # -- reads ------------------------------------------------------------
     def summary(self, spark: SparkSession) -> DataFrame:
@@ -193,9 +174,7 @@ class TopKPipeline:
         its bracket — ``n_lo <= true count <= n_hi``. The read fold
         sums counters WITHOUT a trim (trimming is for bounding state,
         not for serving — an extra trim would only loosen n_lo)."""
-        raw = read_store(
-            spark, self.mg_dir, spark.createDataFrame([], self.schema)
-        )
+        raw = self.raw(spark)
         groups = self.group_cols
         counts = (
             raw.filter(F.col("token").isNotNull())
@@ -229,41 +208,9 @@ class TopKPipeline:
         """(group..., err): each group's accumulated trim mass — the
         one-sided uncertainty, and the presence threshold (every token
         with true count > err is guaranteed in :meth:`summary`)."""
-        raw = read_store(
-            spark, self.mg_dir, spark.createDataFrame([], self.schema)
+        return self.raw(spark).groupBy(*self.group_cols).agg(
+            F.sum("err").alias("err")
         )
-        return raw.groupBy(*self.group_cols).agg(F.sum("err").alias("err"))
-
-    # -- maintenance ------------------------------------------------------
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Tail compaction (store.compact_epochs): one more MG merge
-        over only the delta tail, base byte-untouched — O(tail)
-        maintenance, same CONTRACT-invisibility as :meth:`compact`."""
-        from ..store import compact_epochs
-
-        return compact_epochs(
-            spark,
-            self.mg_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: mg_trim(df, self.group_cols, self.m),
-            keep_recent=keep_recent,
-        )
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Fold base + deltas with one more MG merge — bounds the base
-        at m + 1 rows per group; contract-invisible (see module
-        docstring)."""
-        return compact_store(
-            spark,
-            self.mg_dir,
-            spark.createDataFrame([], self.schema),
-            fold=lambda df: mg_trim(df, self.group_cols, self.m),
-        )
-
-    def foreach_batch(self):
-        return self.write_batch
 
 
 def streaming_topk(
@@ -291,15 +238,7 @@ def streaming_topk(
         compact_every=compact_every,
         updates_schema=events_schema,
     )
-    reader = (
-        spark.readStream.schema(events_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(staged_events_dir)
+    stream = read_staged(
+        spark, events_schema, staged_events_dir, max_files_per_trigger
     )
-    writer = reader.writeStream.foreachBatch(pipe.foreach_batch()).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    # drain-and-stop by default — the family convention (the sibling
-    # wrappers all default to availableNow; a caller relying on it
-    # must not get a never-terminating continuous query here)
-    return writer.trigger(**(trigger or {"availableNow": True})).start()
+    return run_foreach_batch(stream, pipe.write_batch, checkpoint_dir, trigger)

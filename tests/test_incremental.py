@@ -181,3 +181,22 @@ def test_registry_fast_path_equals_store_replay(spark, documents):
         ).collect()
     }
     assert fallback == store
+
+
+def test_driver_form_runs_without_pinned_threads(spark, documents, monkeypatch):
+    """Under ``PYSPARK_PIN_THREAD=false`` ``inheritable_thread_target``
+    returns its argument unchanged — handed the session, it returns
+    the session, which is not callable. The driver form must fall
+    back to the bare callable and return the same survivors."""
+    import pyspark.util
+
+    want = sorted(
+        map(tuple, incremental.incremental_near_dedup(documents).collect())
+    )
+    monkeypatch.setattr(
+        pyspark.util, "inheritable_thread_target", lambda f=None: f
+    )
+    got = sorted(
+        map(tuple, incremental.incremental_near_dedup(documents).collect())
+    )
+    assert got == want and got

@@ -148,7 +148,11 @@ def test_single_epoch_unique_read_skips_reconcile_window(spark, tmp_path):
     sink2 = ParquetUpsertSink(str(tmp_path / "t2"), pk=("k",))
     sink2.write_batch(spark.createDataFrame([], "k long, v string"), epoch_id=0)
     sink2.write_batch(b1, epoch_id=1)
-    assert len(sink2.epochs_written) == 1
+    plan3 = (
+        sink2.read(spark, unique_within_epoch=True)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Window" not in plan3, plan3
     # a reader that wrote nothing (fresh instance over an existing log)
     # must keep the full reconcile regardless of the flag
     reader = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
@@ -157,6 +161,35 @@ def test_single_epoch_unique_read_skips_reconcile_window(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Window" in rplan, rplan
+
+
+def test_fresh_sink_over_existing_log_reconciles(spark, tmp_path):
+    """A new sink instance that lands ONE epoch over a log an earlier
+    instance wrote must still reconcile: the skip guard reads the log
+    on disk, not the instance's own bookkeeping."""
+    path = str(tmp_path / "t")
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    b2 = spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string")
+    ParquetUpsertSink(path, pk=("k",)).write_batch(b1, epoch_id=0)
+    sink = ParquetUpsertSink(path, pk=("k",))
+    sink.write_batch(b2, epoch_id=1)
+    got = sink.read(spark, unique_within_epoch=True)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan, plan
+    assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b2"), (3, "c")]
+
+
+def test_redelivered_epoch_reconciles(spark, tmp_path):
+    """The same epoch_id written twice (an at-least-once re-delivery)
+    appends a second copy of every row; the unique-within-epoch read
+    must still return one row per PK."""
+    sink = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
+    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    sink.write_batch(b1, epoch_id=0)
+    sink.write_batch(b1, epoch_id=0)
+    assert sink.read_log(spark).count() == 4
+    got = sink.read(spark, unique_within_epoch=True)
+    assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
 
 
 def test_empty_batch_guard(spark, tmp_path):
