@@ -82,11 +82,16 @@ class IoTEngine:
 
     def hourly_aggregates(self, device_id: int) -> DataFrame:
         """Dashboard read: all hourly buckets for a device, newest first
-        (the hourly_aggregates clustering order, init.cql:48-49)."""
+        (the hourly_aggregates clustering order, init.cql:48-49). One
+        device's buckets are a few dozen rows, so they are sorted in one
+        partition rather than by a global range-partitioned sort (and
+        its sampling job); ``hour_bucket`` is unique per device after
+        the reconcile, so the order is total."""
         return (
             self.hourly()
             .filter(F.col("device_id") == F.lit(device_id))
-            .orderBy(F.col("hour_bucket").desc())
+            .coalesce(1)
+            .sortWithinPartitions(F.col("hour_bucket").desc())
         )
 
     def device_hourly_range(

@@ -7,12 +7,14 @@ rows silently overwrite, which is what makes the reference's
 at-least-once ``foreachBatch`` sink effectively idempotent.
 
 A columnar store has no in-place upsert, so the engine provides the same
-semantics two ways:
+semantics LSM-style: writes append, reads reconcile.
 
 - **dedup-on-read** (here): keep the latest version per PK with a
   ranking window — one shuffle on the PK, no driver involvement;
-- **merge-on-write** (streaming/sinks.py): each micro-batch rewrites
-  only the PK-partitions it touches (partition-overwrite merge).
+- **append + dedup-on-read** (streaming/sinks.py): each micro-batch
+  appends its rows stamped with its epoch, every read keeps the
+  max-epoch row per PK through :func:`latest_by_pk`, and compaction
+  folds the log back to one row per PK.
 """
 
 from __future__ import annotations

@@ -33,6 +33,7 @@ def build_session(
     existing active session is returned as-is (Spark semantics).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    bloom_bits = os.environ.get("SPARK_GRAFT_BLOOM_MAX_BITS", "1073741824")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -84,10 +85,16 @@ def build_session(
         )
         # default 64 Mbit (8 MB) saturates against >~10 M keys; 1 Gbit
         # (128 MB broadcast) holds ~1 % fpp at the 100 M expected items
-        # above — the guide's ~9.6 bits/item costing.
+        # above — the guide's ~9.6 bits/item costing. numBits is the
+        # size an injected filter actually gets when the creation side
+        # has no row count (file scans without CBO stats), and its
+        # 8 Mbit default is far under 1 bit/item, so it takes the same
+        # value; maxNumBits only caps it.
         .config(
-            "spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-            os.environ.get("SPARK_GRAFT_BLOOM_MAX_BITS", "1073741824"),
+            "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bloom_bits
+        )
+        .config(
+            "spark.sql.optimizer.runtime.bloomFilter.numBits", bloom_bits
         )
         # The driver-generated fixtures store TIMESTAMP(NANOS), which
         # Spark's parquet reader rejects by default; read as epoch-nanos

@@ -18,6 +18,15 @@ This is scale-correct: streaming writes stay append-only (no
 read-modify-write in the hot path), reconciliation is one shuffle on
 the PK, and compaction is an idempotent maintenance job.
 
+Serving reads reuse the reconciled view while the log on disk is
+unchanged. Each ``read`` lists the log directory once; the snapshot key
+is the session plus every child's name and length. Every write appends
+part files named with its write job's UUID and ``compact`` swaps in
+freshly named files, so any change to the log changes the listing and
+the next read rebuilds the view. Nothing is persisted: a reused view
+still runs the reconcile window on every action, it only skips the
+re-listing, the schema-inference job and the re-analysis.
+
 The production backend for the same interface is the Cassandra Spark
 connector (``org.apache.spark.sql.cassandra``); its per-table
 consistency levels (ONE for raw, QUORUM for aggregates — reference:
@@ -35,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import latest_by_pk
-from ..store import list_children
+from ..store import hadoop_fs
 
 #: a Spark output part file, ``part-NNNNN-<write job uuid>-cNNN...``
 _PART_FILE = re.compile(
@@ -57,6 +66,8 @@ class ParquetUpsertSink:
         # storage-tier metadata (e.g. {"consistency_level": "QUORUM"});
         # pass-through only, like the reference's connector options.
         self.sink_options = dict(sink_options or {})
+        # unique_within_epoch -> (snapshot key, reconciled view)
+        self._views: dict[bool, tuple[tuple, DataFrame]] = {}
 
     # -- write path (called from foreachBatch) --------------------------
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -112,22 +123,39 @@ class ParquetUpsertSink:
         or a re-delivered epoch appended to keeps the full window,
         which produces the identical result the guarantee implies.
         Last-write-wins semantics for re-delivered PKs across epochs
-        are unchanged."""
-        log = spark.read.parquet(self.path)
-        if unique_within_epoch and self._write_jobs(spark) == 1:
-            return log.drop("__epoch")
-        return latest_by_pk(log, pk=self.pk, version_col="__epoch").drop("__epoch")
+        are unchanged.
 
-    def _write_jobs(self, spark: SparkSession) -> int:
-        """Distinct Spark write jobs whose part files make up the log
-        (each ``write.parquet`` call stamps one job UUID into every
-        file name it produces)."""
-        return len(
-            {
-                m.group(1)
-                for m in map(_PART_FILE.match, list_children(spark, self.path))
-                if m is not None
-            }
+        The view is rebuilt only when the log changes: the same listing
+        keys a snapshot (session, then each child's name and length),
+        and while the key is unchanged this returns the DataFrame the
+        last read built. New epochs from any writer add part files and
+        ``compact`` swaps in new ones, so either changes the key; the
+        view is not persisted, so the reconcile still runs on every
+        action against exactly the files it was built over."""
+        # listed before Spark lists: a write landing in between leaves
+        # a key older than the view, which only costs a rebuild later
+        listing = self._listing(spark)
+        key = (spark, listing)
+        cached = self._views.get(unique_within_epoch)
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        log = spark.read.parquet(self.path)
+        if unique_within_epoch and _write_jobs(listing) == 1:
+            view = log.drop("__epoch")
+        else:
+            view = latest_by_pk(log, pk=self.pk, version_col="__epoch").drop("__epoch")
+        self._views[unique_within_epoch] = (key, view)
+        return view
+
+    def _listing(self, spark: SparkSession) -> tuple[tuple[str, int], ...]:
+        """(name, length) of every child of the log directory, in one
+        Hadoop listing (no Spark job)."""
+        fs, Path = hadoop_fs(spark, self.path)
+        path = Path(self.path)
+        if not fs.exists(path):
+            return ()
+        return tuple(
+            (st.getPath().getName(), st.getLen()) for st in fs.listStatus(path)
         )
 
     def read_log(self, spark: SparkSession) -> DataFrame:
@@ -151,3 +179,12 @@ class ParquetUpsertSink:
         )
         reconciled.write.mode("overwrite").parquet(tmp)
         commit_swap(self.path)
+
+
+def _write_jobs(listing: tuple[tuple[str, int], ...]) -> int:
+    """Distinct Spark write jobs whose part files make up the log
+    (each ``write.parquet`` call stamps one job UUID into every file
+    name it produces)."""
+    return len(
+        {m.group(1) for m in (_PART_FILE.match(name) for name, _ in listing) if m}
+    )

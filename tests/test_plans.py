@@ -7,6 +7,11 @@ query fails CI."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
+from cassandra_iot_pipeline_spark.api import IoTEngine
 from cassandra_iot_pipeline_spark.catalog import load_table
 from cassandra_iot_pipeline_spark.operators.joins import enrich_customers
 from cassandra_iot_pipeline_spark.operators.serving import (
@@ -19,6 +24,47 @@ from cassandra_iot_pipeline_spark.plans import (
     formatted_plan,
 )
 from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module")
+def two_epoch_engine(spark, tmp_path_factory):
+    """An IoTEngine whose tables hold two epochs, so every read plans
+    the last-write-wins reconcile window."""
+    engine = IoTEngine(spark, str(tmp_path_factory.mktemp("warehouse")))
+    events = load_table(spark, SF_DIR, "events")
+    engine.ingest_batch(events, epoch_id=0)
+    engine.ingest_batch(events, epoch_id=1)
+    return engine
+
+
+@pytest.mark.parametrize(
+    "read, pushed",
+    [
+        (lambda e: e.latest_events(13, 10), "EqualTo(user_id,13)"),
+        (lambda e: e.hourly_aggregates(13), "EqualTo(device_id,13)"),
+        (lambda e: e.device_hourly_range(13, 0, 1 << 40), "EqualTo(device_id,13)"),
+    ],
+    ids=["latest_events", "hourly_aggregates", "device_hourly_range"],
+)
+def test_engine_read_pk_filter_reaches_scan(two_epoch_engine, read, pushed):
+    """The device equality is pushed through the reconcile Window into
+    the one parquet scan beneath it."""
+    plan = formatted_plan(read(two_epoch_engine))
+    assert "Window" in plan and len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert pushed in plan.split("PushedFilters:")[1].splitlines()[0], plan
+
+
+def test_engine_latest_events_is_take_ordered(two_epoch_engine):
+    plan = formatted_plan(two_epoch_engine.latest_events(13, 10))
+    assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_engine_hourly_aggregates_has_no_range_exchange(two_epoch_engine):
+    """One device's buckets sort in one partition: no global sort's
+    range exchange (and its sampling job)."""
+    plan = formatted_plan(two_epoch_engine.hourly_aggregates(13))
+    assert "rangepartitioning" not in plan, plan
+    assert "Coalesce" in plan, plan
 
 
 def test_point_lookup_filter_pushed(spark):

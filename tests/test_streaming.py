@@ -192,6 +192,77 @@ def test_redelivered_epoch_reconciles(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
 
 
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action`` starts, counted through its job group. The
+    status store learns of jobs asynchronously, in start order, so a
+    sentinel job in a second group is awaited before counting."""
+    sc = spark.sparkContext
+    groups = [f"snapshot-probe-{time.monotonic_ns()}-{i}" for i in range(2)]
+    try:
+        sc.setJobGroup(groups[0], "probe")
+        action()
+        sc.setJobGroup(groups[1], "sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(groups[1]):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(groups[0]))
+
+
+def test_unchanged_log_read_reuses_view_without_jobs(spark, tmp_path):
+    """A second read over an unchanged log returns the view the first
+    one built, so constructing it lists the directory but runs no Spark
+    job (no re-listing by Spark, no schema inference)."""
+    sink = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
+    sink.write_batch(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
+    sink.write_batch(spark.createDataFrame([(2, "b2")], "k long, v string"), 1)
+    views = []
+    assert _jobs_run(spark, lambda: views.append(sink.read(spark))) >= 1
+    assert _jobs_run(spark, lambda: views.append(sink.read(spark))) == 0
+    assert views[1] is views[0]
+    assert sorted(map(tuple, views[1].collect())) == [(1, "a"), (2, "b2")]
+    # one slot per unique_within_epoch value, and a session of its own
+    assert sink.read(spark, unique_within_epoch=True) is not views[0]
+    assert sink.read(spark) is views[0]
+    assert sink.read(spark.newSession()) is not views[0]
+
+
+def test_snapshot_follows_writes_from_any_instance(spark, tmp_path):
+    """The reused view is keyed on the log on disk: an epoch written
+    through the same instance or through a second instance on the same
+    path makes the next read return the new last-write-wins rows."""
+    path = str(tmp_path / "t")
+    sink = ParquetUpsertSink(path, pk=("k",))
+    sink.write_batch(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
+    assert _rows_sorted(sink.read(spark)) == [(1, "a"), (2, "b")]
+    sink.write_batch(spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string"), 1)
+    assert _rows_sorted(sink.read(spark)) == [(1, "a"), (2, "b2"), (3, "c")]
+    other = ParquetUpsertSink(path, pk=("k",))
+    other.write_batch(spark.createDataFrame([(1, "a3")], "k long, v string"), 2)
+    assert _rows_sorted(sink.read(spark)) == [(1, "a3"), (2, "b2"), (3, "c")]
+
+
+def test_snapshot_follows_compaction(spark, tmp_path):
+    """compact() swaps in freshly named files: the reused view is
+    dropped, the rows stay the same, and the unique-within-epoch read
+    of the one-write log now skips the reconcile window."""
+    sink = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
+    sink.write_batch(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
+    sink.write_batch(spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string"), 1)
+    before = sink.read(spark, unique_within_epoch=True)
+    assert "Window" in before._jdf.queryExecution().executedPlan().toString()
+    want = _rows_sorted(before)
+    sink.compact(spark)
+    after = sink.read(spark, unique_within_epoch=True)
+    plan = after._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert _rows_sorted(after) == want == _rows_sorted(sink.read(spark))
+
+
 def test_empty_batch_guard(spark, tmp_path):
     sink = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
     empty = spark.createDataFrame([], "k long, v string")

@@ -16,7 +16,10 @@ from session.py. It then, per query:
      queries where a selective creation side exists) and that the ON
      plan adds no Exchange over the OFF plan,
   3. collects both results and asserts they are identical (false
-     positives cost shuffle bytes, never rows).
+     positives cost shuffle bytes, never rows),
+  4. asserts every injected filter gets at least 8 bits per expected
+     item (its numBits, capped at maxNumBits, over expectedNumItems):
+     fewer saturate the filter at the 100 M items it is sized for.
 
 Queries:
   - shipping_priority: creation side = date-filtered orders joined to
@@ -31,6 +34,7 @@ Queries:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -48,6 +52,9 @@ from cassandra_iot_pipeline_spark.plans import formatted_plan  # noqa: E402
 from cassandra_iot_pipeline_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+MIN_BITS_PER_ITEM = 8
+#: bloom_filter_agg(xxhash64(key, seed), expectedNumItems, numBits, ...)
+_BLOOM_AGG = re.compile(r"bloom_filter_agg\(xxhash64\([^)]*\), (\d+), (\d+)")
 OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
 )
@@ -107,6 +114,14 @@ def main() -> None:
         injected = "might_contain" in plans["on"]
         agg = "bloom_filter_agg" in plans["on"]
         same_rows = rows["on"] == rows["off"]
+        max_bits = int(
+            spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+        )
+        bits_per_item = min(
+            (min(int(bits), max_bits) / int(items)
+             for items, bits in _BLOOM_AGG.findall(plans["on"])),
+            default=None,
+        )
 
         # the injected filter must not add a MAIN-PATH Exchange: the
         # creation side runs as a scalar subquery (its own small job,
@@ -123,11 +138,13 @@ def main() -> None:
             and (agg == expect_injected)
             and same_rows
             and (exch_delta <= 0 if expect_injected else exch_delta == 0)
+            and (bits_per_item is None or bits_per_item >= MIN_BITS_PER_ITEM)
         )
+        sizing = "" if bits_per_item is None else f" bits_per_item={bits_per_item:.2f}"
         print(
             f"{'OK  ' if ok else 'FAIL'} {name}: injected={injected} "
             f"(expect {expect_injected}) bloom_agg={agg} rows_equal={same_rows} "
-            f"exchange_delta={exch_delta} n_rows={len(rows['on'])}"
+            f"exchange_delta={exch_delta}{sizing} n_rows={len(rows['on'])}"
         )
         if not ok:
             failures.append(name)
