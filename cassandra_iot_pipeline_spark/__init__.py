@@ -14,11 +14,19 @@ Layout:
     session    -- SparkSession factory (AQE, UTC, Arrow, nanos handling)
     catalog    -- fixture-table catalog over /root/testdata parquet dirs
     schemas    -- typed StructType contracts mirroring the .avsc schemas
-    operators/ -- batch operator library (agg, serving reads, joins, dedup)
-    sources/   -- decode paths (Avro wire format, JSON) + event generator
+    api        -- IoTEngine: ingest + serving reads over the two tables
+    store      -- the delta+base MergeableStore and foreachBatch runner
+    forget     -- key-deletion propagation across tables and stores
+    operators/ -- batch operator library (agg, serving reads, joins,
+                  funnel, series)
+    sources/   -- decode paths (Avro wire format, JSON, JSONL) + event
+                  generator + Kafka/registry connectors
     functions/ -- text analysis, dedup, similarity, multimodal (extensions)
     streaming/ -- Structured Streaming pipeline (watermark, windows, sinks)
     plans/     -- plan-introspection helpers (pushdown/broadcast asserts)
+
+Modules no entry point imports stay only under a keep rule; the ledger
+is ``tests/test_layout.py::KEPT`` (DESIGN.md §18).
 """
 
 __version__ = "0.1.0"

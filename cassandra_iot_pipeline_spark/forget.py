@@ -23,11 +23,10 @@ lists dirs). Two honest caveats, stated rather than papered over:
   (streaming/cardinality.py) or a folded count row is an aggregate
   that a single key cannot be subtracted from.
   :func:`forget_keys_in_store` targets row-grained stores (cohort
-  points, SCD2 dims, ANN codes, postings), where each stored row
-  carries the key; sketch-grained stores make the limit EXECUTABLE
-  instead: ``CardinalityPipeline.rebuild_from_source`` /
-  ``BaselinePipeline.rebuild_from_source`` re-derive the whole store
-  from the retained source in one pass over
+  points, SCD2 dims, ANN codes), where each stored row carries the
+  key; sketch-grained stores make the limit EXECUTABLE instead:
+  ``CardinalityPipeline.rebuild_from_source`` re-derives the whole
+  store from the retained source in one pass over
   :func:`replace_store_dir`'s atomic whole-store swap (estimates
   afterwards equal a from-scratch build on the retained corpus —
   pinned in tests).

@@ -21,8 +21,6 @@ pipeline runs over document/embedding tables.
                   topk; streaming ingestion in streaming/ann)
     substrings -- exact substring-level dedup (duplicated k-gram spans,
                   merged + removable; hashed 100 TB shuffle tier)
-    retrieval  -- BM25 inverted index + top-k scoring (single query and
-                  query-batch) and retrieval-based decontamination
     bpe        -- BPE tokenizer training over the word table, encoding,
                   vocabulary ids, fertility/OOV reporting
     expectations -- declarative data-quality checks compiled to one

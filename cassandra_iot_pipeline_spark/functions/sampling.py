@@ -361,10 +361,9 @@ def thresholds_from_counts(
     """The cut-line computation over an already-collapsed
     (group..., score, count) frame — the stage :func:`score_thresholds`
     delegates to, exposed for callers that MAINTAIN the distribution
-    (the streaming score store, streaming/quality.py: per-score counts
-    are sum-mergeable across batches, so the whole corpus-lifetime
-    distribution folds into one bounded frame and thresholds come from
-    it without revisiting any document)."""
+    (per-score counts are sum-mergeable across batches, so a whole
+    corpus-lifetime distribution folds into one bounded frame and
+    thresholds come from it without revisiting any document)."""
     if not 0.0 < keep_frac <= 1.0:
         raise ValueError(f"keep_frac must be in (0, 1], got {keep_frac}")
     groups = list(group_cols)

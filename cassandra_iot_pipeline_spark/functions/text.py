@@ -32,7 +32,7 @@ STOPWORDS_ALL = tuple(sorted({w for ws in LANG_STOPWORDS.values() for w in ws}))
 #: the POSITIVE form of TOKEN_SPLIT_RE — same tokens as splitting on
 #: the negated class and dropping empties (maximal [a-z0-9']+ runs
 #: are exactly the split complement; token-level equality pinned in
-#: tests/test_retrieval.py). The positive class is the one the JVM
+#: tests/test_extensions.py). The positive class is the one the JVM
 #: executes fast: JDK 17 compiles a small positive class to a bitmap
 #: test but wraps a NEGATED class in a per-char lambda predicate —
 #: measured 10.1 s vs 1.0 s tokenizing a 100k-doc corpus (r8).

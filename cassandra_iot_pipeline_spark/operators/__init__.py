@@ -22,12 +22,14 @@ path):
                   horizon-capped, conversion + step-through rates)
     paths      -- first-order event-transition matrix (the funnel's
                   exploratory complement)
-    attribution -- first/last/linear-touch conversion attribution
-                  within a lookback (bucketed range join, exact
-                  micro-credit sums)
-    quantiles  -- DDSketch relative-error quantiles (mergeable
-                  log-gamma buckets; the approx tier beside the
-                  exact value-count grid)
     downsample -- LTTB visual-fidelity decimation for serving long
                   series at dashboard resolution
+    changepoints -- CUSUM change-point detection over metric series
+    skew       -- salted two-phase aggregation for hot keys + skew report
+    asof       -- as-of (point-in-time) join
+    rangejoin  -- range (interval) join by window-length bucketing
+    windows    -- running aggregates, lag/lead, sessionization (§2.F)
+    stats      -- exact quantiles, sketches, grouping sets, outliers
+    subqueries -- scalar/correlated subqueries, pattern-match filters
+    profiles   -- device behavior profiles + series similarity search
 """

@@ -1,8 +1,7 @@
 """CUSUM change-point detection over metric time series — the
 analysis layer above the engine's monitor stores (quality audit,
-tokenizer drift, embedding drift, cardinality estimates): given a
-(group, order, metric) series, find the points where the level
-SHIFTED, not just wobbled.
+cardinality estimates): given a (group, order, metric) series, find
+the points where the level SHIFTED, not just wobbled.
 
 Why CUSUM (Page 1954): a threshold-on-value alert fires on every
 noisy excursion; CUSUM accumulates evidence — the one-sided statistic

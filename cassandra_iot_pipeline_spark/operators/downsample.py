@@ -20,7 +20,7 @@ Why not pure Catalyst: the kept point of bucket i depends on the kept
 point of bucket i-1 — a sequential dependence along each series, the
 applyInPandas case by this repo's own rule (operators are built-in
 DataFrame ops unless the semantics genuinely can't be expressed; the
-sibling precedent is the stateful rate fold, streaming/rates.py).
+sibling precedent is the stateful sessionizer, streaming/stateful.py).
 Keys are independent, so the parallelism story is ONE exchange by key
 and a per-series numpy loop over n_out buckets (each bucket's area
 computation fully vectorized).

@@ -36,7 +36,7 @@ events by user; the fold state is k BIGINTs per user.  HOT-KEY BOUND
 materializes each user's full step-typed event list in ONE aggregation
 buffer, so a bot key owning a large corpus fraction concentrates that
 fraction of step events into a single task — measured in
-tools/scale_probe.py ``--funnel-retrieval`` (the
+tools/scale_probe.py ``--funnel`` (the
 ``funnel_4step_skewed_hotkey_20pct`` row: one key absorbing 1-in-5 of
 20M events; SCALE.md records the uniform-vs-skewed delta).  The slice
 is step-TYPED (bounded in sane corpora); for corpora with bot devices
@@ -94,10 +94,10 @@ def step_points(
     ts_col: str = "ts",
     type_col: str = "event_type",
 ) -> DataFrame:
-    """(k, us, s): the stateless step-event projection both the batch
-    funnel and the streaming maintainer (streaming/funnel.py) build
-    on — key, integer-microsecond timestamp, 0-based step index. Only
-    funnel-typed events survive (the IN filter pushes to the scan)."""
+    """(k, us, s): the stateless step-event projection the funnel
+    builds on — key, integer-microsecond timestamp, 0-based step
+    index. Only funnel-typed events survive (the IN filter pushes to
+    the scan)."""
     _validate_steps(steps)
     s = F.lit(None).cast("int")
     for i in reversed(range(len(steps))):
@@ -141,9 +141,7 @@ def user_hits(
 ) -> DataFrame:
     """(k, hits): each user's greedy-chain slot array — the per-user
     FOLD RESULT, which is also the user's complete contribution to the
-    report (:func:`funnel_report` needs nothing else). Split out (r10)
-    so the streaming maintainer's horizon finalization can persist a
-    closed user as this ONE row instead of their whole point list."""
+    report (:func:`funnel_report` needs nothing else)."""
     _validate_steps(steps)
     k = len(steps)
     horizon_us = None if horizon_seconds is None else horizon_seconds * 1_000_000
@@ -234,8 +232,7 @@ def funnel_from_points(
     each slot once; a duplicate of a filled slot's event can never
     beat the strict ``>``), so callers can feed raw projections or a
     pre-distincted store. Composition of :func:`user_hits` and
-    :func:`funnel_report` (split in r10 for the streaming maintainer's
-    horizon finalization)."""
+    :func:`funnel_report`."""
     return funnel_report(
         user_hits(pts, steps, horizon_seconds).select("hits"), steps
     )
@@ -355,9 +352,7 @@ def funnel_trend_report(
     period_seconds: int = 86_400,
 ) -> DataFrame:
     """The trend aggregation over per-user ``hits`` arrays — the
-    :func:`funnel_report` split applied to :func:`funnel_trend`, so
-    the streaming maintainer can serve the trend from live + finalized
-    hits rows alike."""
+    :func:`funnel_report` split applied to :func:`funnel_trend`."""
     _validate_steps(steps)
     p_us = period_seconds * 1_000_000
     t0 = F.element_at("hits", 1)
@@ -621,205 +616,3 @@ def funnel_segmented_oracle(
                END AS step_rate
         FROM counts c JOIN steps st USING (step_idx)
     """
-
-
-# --- additive (population-scale) report tier ----------------------------------
-#
-# The per-user ``hits`` row is the funnel's minimal EXACT statistic —
-# and therefore linear in the ever-closed user population when the
-# streaming maintainer persists one per finalized user. The additive
-# tier trades the exact medians for DDSketch alpha-bounded ones so a
-# closed user folds into per-(anchor-period, step, latency-bucket)
-# COUNTS instead: reads become O(periods x steps + buckets), flat in
-# the population. Every column is additive (cnt/sum_delta sums, wm by
-# max), so the rows merge across any partition of the user set — the
-# streaming fin store's requirement.
-
-
-def hits_to_additive_rows(
-    hits_df: DataFrame,
-    steps: list[str],
-    period_seconds: int = 86_400,
-    alpha: float = 0.01,
-) -> DataFrame:
-    """(pstart, step_idx, sgn, idx, cnt, sum_delta): the additive
-    projection of per-user ``hits`` arrays — per anchor period (the
-    user's step-0 time floored to ``period_seconds``) and step, the
-    DDSketch bucket histogram (operators/quantiles.py projection,
-    verbatim) of the step's micros-from-first deltas plus their EXACT
-    BIGINT sum. ``cnt`` summed over buckets is the step's user count;
-    deltas are >= 0 so ``sgn`` is 0 (the exact-zero lane — every
-    step-0 delta) or 1."""
-    import math
-
-    from .quantiles import _gamma
-
-    _validate_steps(steps)
-    g = _gamma(alpha)
-    lg = math.log(g)
-    p_us = period_seconds * 1_000_000
-    t0 = F.element_at("hits", 1)
-    delta = (F.col("us") - F.col("t0")).alias("d")
-    exploded = (
-        hits_df.filter(t0.isNotNull())
-        .select(
-            (t0 - F.pmod(t0, F.lit(p_us))).alias("pstart"),
-            t0.alias("t0"),
-            F.posexplode("hits").alias("step_idx", "us"),
-        )
-        .filter(F.col("us").isNotNull())
-        .select("pstart", "step_idx", delta)
-    )
-    v = F.col("d").cast("double")
-    sgn = F.when(v > 0, 1).otherwise(0)
-    idx = F.when(v == 0, F.lit(0)).otherwise(
-        F.ceil(F.log(v) / F.lit(lg))
-    )
-    return (
-        exploded.select(
-            "pstart",
-            "step_idx",
-            sgn.cast("int").alias("sgn"),
-            idx.cast("long").alias("idx"),
-            "d",
-        )
-        .groupBy("pstart", "step_idx", "sgn", "idx")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("d").alias("sum_delta"),
-        )
-    )
-
-
-def funnel_report_additive(
-    rows: DataFrame,
-    steps: list[str],
-    alpha: float = 0.01,
-    max_buckets: int | None = None,
-) -> DataFrame:
-    """:func:`funnel_report`'s schema served from additive rows
-    (:func:`hits_to_additive_rows`): counts, conversion/step rates and
-    the mean are BITWISE the exact tier's (exact BIGINT sums, the same
-    single IEEE divisions); ``median_micros_from_first`` is the
-    DDSketch estimate — within ``alpha`` relative error of the exact
-    rank-median (the ``max(1, ceil(n/2))``-th smallest delta; the
-    exact tier's interpolated median can sit between two values, so
-    the contract is stated against the rank convention). Steps nobody
-    reaches report n_users = 0 with NULL stats, as in the exact
-    tier."""
-    from .quantiles import dd_quantiles_from_sketch
-
-    _validate_steps(steps)
-    per_step = rows.groupBy("step_idx").agg(
-        F.sum("cnt").alias("n_users"),
-        F.sum("sum_delta").alias("sum_delta"),
-    )
-    med = dd_quantiles_from_sketch(
-        rows.select("step_idx", "sgn", "idx", "cnt"),
-        ["step_idx"],
-        [0.5],
-        alpha,
-        max_buckets,
-    ).select("step_idx", F.col("est").alias("med_delta"))
-
-    spark = rows.sparkSession
-    step_frame = literal_frame(
-        spark,
-        [(i, name) for i, name in enumerate(steps)],
-        "step_idx INT, step STRING",
-    )
-    joined = (
-        step_frame.join(F.broadcast(per_step), "step_idx", "left")
-        .join(F.broadcast(med), "step_idx", "left")
-        .select(
-            "step_idx",
-            "step",
-            F.coalesce("n_users", F.lit(0)).alias("n_users"),
-            "sum_delta",
-            "med_delta",
-        )
-    )
-    w_all = Window.partitionBy()
-    w_ord = Window.partitionBy().orderBy("step_idx")
-    n0 = F.max(F.when(F.col("step_idx") == 0, F.col("n_users"))).over(w_all)
-    n_prev = F.lag("n_users").over(w_ord)
-    return joined.select(
-        "step_idx",
-        "step",
-        "n_users",
-        F.when(
-            n0 > 0, F.col("n_users").cast("double") / n0
-        ).alias("conversion"),
-        F.when(
-            n_prev > 0, F.col("n_users").cast("double") / n_prev
-        ).alias("step_rate"),
-        F.when(
-            F.col("n_users") > 0,
-            F.col("sum_delta").cast("double") / F.col("n_users"),
-        ).alias("avg_micros_from_first"),
-        F.when(F.col("n_users") > 0, F.col("med_delta")).alias(
-            "median_micros_from_first"
-        ),
-    )
-
-
-def funnel_trend_report_additive(
-    rows: DataFrame,
-    steps: list[str],
-    period_seconds: int,
-    base_period_seconds: int,
-) -> DataFrame:
-    """:func:`funnel_trend_report`'s schema from additive rows. The
-    rows were bucketed at ``base_period_seconds`` (the tier's baked
-    granularity); any requested period that is a MULTIPLE re-floors
-    exactly (integer period starts re-align), anything else raises —
-    the exact tier serves arbitrary periods because it keeps per-user
-    anchors, this tier traded them away (stated contract)."""
-    _validate_steps(steps)
-    if period_seconds % base_period_seconds != 0:
-        raise ValueError(
-            f"additive funnel tier was finalized at "
-            f"{base_period_seconds}s periods; trend periods must be "
-            f"multiples of that (got {period_seconds}s). Re-finalize "
-            "with a finer fin_period_seconds or request a multiple."
-        )
-    p_us = period_seconds * 1_000_000
-    re_floored = (
-        rows.select(
-            (
-                F.col("pstart") - F.pmod(F.col("pstart"), F.lit(p_us))
-            ).alias("pstart"),
-            "step_idx",
-            "cnt",
-        )
-        .groupBy("pstart", "step_idx")
-        .agg(F.sum("cnt").alias("n_users"))
-    )
-    spark = rows.sparkSession
-    step_frame = literal_frame(
-        spark,
-        [(i, name) for i, name in enumerate(steps)],
-        "step_idx INT, step STRING",
-    )
-    grid = (
-        re_floored.select("pstart")
-        .distinct()
-        .crossJoin(F.broadcast(step_frame))
-    )
-    joined = grid.join(re_floored, ["pstart", "step_idx"], "left").select(
-        "pstart",
-        "step_idx",
-        "step",
-        F.coalesce("n_users", F.lit(0)).alias("n_users"),
-    )
-    w_p = Window.partitionBy("pstart")
-    n0 = F.max(F.when(F.col("step_idx") == 0, F.col("n_users"))).over(w_p)
-    return joined.select(
-        F.timestamp_micros(F.col("pstart")).alias("period_start"),
-        "step_idx",
-        "step",
-        "n_users",
-        F.when(
-            n0 > 0, F.col("n_users").cast("double") / n0
-        ).alias("conversion"),
-    )

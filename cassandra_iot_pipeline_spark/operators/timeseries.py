@@ -201,11 +201,11 @@ def counter_rate(
     timestamps, which report rate 0.0 rather than an infinity that
     would poison downstream sums — the delta is still carried. Sample
     order is (t_us, u) — pure event-time order, with the units as the
-    deterministic tiebreak for identical microseconds, so the
-    streaming form (streaming/rates.py) can be bit-identical, not
-    just content-identical. ``secs`` is one exact int→double cast and
-    one correctly-rounded division by 1e6; the rate divides through
-    that same value (three IEEE ops total, mirrored by the oracle)."""
+    deterministic tiebreak for identical microseconds, so the output
+    is bit-identical across runs, not just content-identical. ``secs``
+    is one exact int→double cast and one correctly-rounded division by
+    1e6; the rate divides through that same value (three IEEE ops
+    total, mirrored by the oracle)."""
     keys = _keys(key)
     vcol = F.col(value) if isinstance(value, str) else value
     units = exactmath.units(vcol, scale)

@@ -34,7 +34,7 @@ copy+delete — quiesce writers for the compaction there.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -475,11 +475,11 @@ def compact_epochs(
     full :func:`compact_store` remains the deep-clean.
 
     ONLY for stores whose reads are order-free folds of the whole
-    visible part set (the associative fold families: distinct, sum
-    re-group, HLL union, MG trim, top-k) — relabeling epochs under the
-    max folded number M is invisible to such readers (pinned in
-    tests). Stores whose WRITE path reads "strictly older epoch dirs"
-    by directory number (the SCD2 pipeline's ``_raw_before``) must NOT
+    visible part set (the associative fold families: union, distinct,
+    sum re-group, HLL union) — relabeling epochs under the max folded
+    number M is invisible to such readers (pinned in tests). Stores
+    whose WRITE path reads "strictly older epoch dirs" by directory
+    number (the SCD2 pipeline's ``_raw_before``) must NOT
     tail-fold mid-stream: relabeling changes what a replayed old epoch
     would see. Crash-recoverable via :func:`recover_tail_fold` (the
     staged dir carries every folded epoch's content; the commit is
@@ -525,8 +525,7 @@ class MergeableStore:
       batch's :meth:`project` OVERWRITING ``epoch=N``, so a replayed
       epoch rewrites its own directory instead of appending twice (the
       idempotent half of exactly-once under a replayable source) —
-      then runs every :meth:`cadence` task due at this epoch
-      (``compact_every`` epochs: :meth:`compact`);
+      then runs :meth:`compact` every ``compact_every`` epochs;
     - **read**: :meth:`raw` (base + visible deltas, cast to ``schema``;
       ``before=N`` keeps only deltas strictly below epoch N — what a
       replay of epoch N must see) and :meth:`read` (``raw`` folded);
@@ -602,20 +601,13 @@ class MergeableStore:
     def write_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.write(self.project(batch_df, epoch_id), epoch_id)
 
-    def cadence(
-        self,
-    ) -> Iterable[tuple[int | None, Callable[[SparkSession], object]]]:
-        """(every, task) pairs run after epoch N lands when
-        ``(N + 1) % every == 0``, in order."""
-        return [(self.compact_every, self.compact)]
-
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         self.write_epoch(batch_df, epoch_id)
-        for every, task in self.cadence():
-            if every is not None and (epoch_id + 1) % every == 0:
-                task(batch_df.sparkSession)
+        every = self.compact_every
+        if every is not None and (epoch_id + 1) % every == 0:
+            self.compact(batch_df.sparkSession)
 
     def foreach_batch(self):
         return self.write_batch
@@ -699,171 +691,6 @@ def run_foreach_batch(
         .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
-
-
-# --- quarantine side-store ----------------------------------------------------
-
-
-#: schema of one quarantine-total row: epochs <= upto hold n pruned rows
-QUARANTINE_TOTAL_SCHEMA = "upto BIGINT, n BIGINT"
-
-
-class Quarantine:
-    """The horizon-violation side-store shared by the finalizing
-    pipelines (streaming/funnel.py, streaming/attribution.py):
-    arrivals whose event time fell under the finalization watermark
-    are COPIED here per epoch — loud, never silently dropped.
-
-    r11 hardening (the r10 verdict's retention gap): a persistently
-    late source (a misconfigured producer clock — the exact failure
-    this store exists to surface) appends one epoch per micro-batch
-    forever, so the alarm channel itself becomes a small-files store
-    at 100 TB. Three bounded-growth levers, loudness preserved:
-
-    - every row is STAMPED with the watermark that judged it
-      (``qwm``), so a replayed epoch whose rewrite differs (the
-      watermark advanced between the original run and the replay —
-      the epoch legitimately gains rows) remains diagnosable: each
-      row records which boundary it violated. The COUNT can drift
-      upward across such replays; the stamp is what keeps the
-      diagnostics reproducible (documented contract).
-    - :meth:`compact_tail`: the rows are a distinct-fold family, so
-      the epoch tail folds exactly like any associative store.
-    - :meth:`prune`: age out detailed rows ONLY after their count is
-      folded into the persistent total store (``<q_dir>_total``), so
-      :meth:`count` is invariant across pruning (pinned in tests).
-      The total row is written BEFORE the detailed epochs are
-      deleted and carries the covered epoch bound (``upto``);
-      readers ignore epochs at or under the covered bound, which
-      makes a crash between the total write and the deletes
-      harmless (the leftover epochs are invisible and swept by the
-      next prune) and the prune re-runnable.
-    """
-
-    def __init__(self, q_dir: str, row_schema: str) -> None:
-        self.q_dir = q_dir
-        self.total_dir = f"{q_dir}_total"
-        self.schema = f"qwm BIGINT, {row_schema}"
-        self.detail = MergeableStore(
-            q_dir, self.schema, fold=lambda df: df.distinct()
-        )
-        self.total = MergeableStore(self.total_dir, QUARANTINE_TOTAL_SCHEMA)
-
-    # -- write path -------------------------------------------------------
-    def write_batch(self, late: DataFrame, epoch_id: int, wm: int) -> None:
-        """Persist one epoch of violations, stamped with the watermark
-        that judged them (epoch-dir overwrite: replay-idempotent up to
-        a legitimately advanced watermark, see class docstring)."""
-        from pyspark.sql import functions as F
-
-        self.detail.write(
-            late.select(F.lit(int(wm)).cast("long").alias("qwm"), "*"),
-            epoch_id,
-        )
-
-    # -- reads ------------------------------------------------------------
-    def _covered(self, spark: SparkSession) -> int:
-        """Highest epoch whose rows were folded into the total store
-        (-1 before the first prune)."""
-        row = self.total.raw(spark).agg({"upto": "max"}).first()[0]
-        return -1 if row is None else int(row)
-
-    def pruned_total(self, spark: SparkSession) -> int:
-        row = self.total.raw(spark).agg({"n": "sum"}).first()[0]
-        return 0 if row is None else int(row)
-
-    def rows(self, spark: SparkSession) -> DataFrame:
-        """The detailed violation rows still on disk (epochs above the
-        pruned bound; pruned epochs live on only as counts)."""
-        covered = self._covered(spark)
-        _, _, epochs = store_parts(spark, self.q_dir)
-        return _read_parts(
-            spark,
-            None,
-            [p for e, p in epochs if e > covered],
-            self.detail.empty(spark),
-        )
-
-    def count(self, spark: SparkSession) -> int:
-        """Total violations ever quarantined: pruned counts + live
-        rows — invariant across :meth:`prune` (pinned in tests)."""
-        return self.pruned_total(spark) + self.rows(spark).count()
-
-    # -- maintenance ------------------------------------------------------
-    def _sweep_covered(self, spark: SparkSession, covered: int) -> None:
-        if covered >= 0:
-            delete_children_upto(spark, self.q_dir, "epoch=", covered)
-
-    def compact_tail(
-        self, spark: SparkSession, keep_recent: int = 0
-    ) -> int | None:
-        """Fold the detailed-row epoch tail (distinct fold — the rows
-        carry their judging watermark, so the fold is associative and
-        reader-invisible)."""
-        self._sweep_covered(spark, self._covered(spark))
-        return self.detail.compact_tail(spark, keep_recent)
-
-    def prune(self, spark: SparkSession, keep_recent: int = 4) -> dict:
-        """Retention: fold the count of every detailed epoch but the
-        ``keep_recent`` newest into the total store, then delete their
-        rows. Loudness preserved — :meth:`count` is unchanged (the
-        violations stay counted forever); only the per-row detail ages
-        out. Returns ``{"pruned_epochs": n, "pruned_rows": n,
-        "covered_upto": e | None}``."""
-        if keep_recent < 0:
-            raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
-        covered = self._covered(spark)
-        self._sweep_covered(spark, covered)
-        _, _, epochs = store_parts(spark, self.q_dir)
-        epochs = [(e, p) for e, p in epochs if e > covered]
-        prunable = epochs[: max(0, len(epochs) - keep_recent)]
-        if not prunable:
-            return {
-                "pruned_epochs": 0,
-                "pruned_rows": 0,
-                "covered_upto": covered if covered >= 0 else None,
-            }
-        n = spark.read.parquet(*[p for _, p in prunable]).count()
-        upto = prunable[-1][0]
-        self.total.append(
-            spark.createDataFrame(
-                [(int(upto), int(n))], QUARANTINE_TOTAL_SCHEMA
-            )
-        )
-        # total committed — the detailed rows are now invisible to
-        # readers whatever happens below
-        self._sweep_covered(spark, upto)
-        return {
-            "pruned_epochs": len(prunable),
-            "pruned_rows": int(n),
-            "covered_upto": int(upto),
-        }
-
-    def stats(self, spark: SparkSession) -> dict:
-        """Doctor view: the underlying store report plus the GROWING
-        finding — a quarantine accumulating epochs means the source is
-        persistently violating its declared horizon (the misconfigured
-        producer clock case); the staged recommendation routes to
-        prune/compact and to fixing the producer."""
-        covered = self._covered(spark)
-        _, _, epochs = store_parts(spark, self.q_dir)
-        live = [e for e, _ in epochs if e > covered]
-        growing = len(live) >= 4
-        report = store_stats(spark, self.q_dir)
-        if growing:
-            report["recommendation"] = (
-                f"quarantine growing ({len(live)} violation epochs): the "
-                "source is persistently under the declared horizon — fix "
-                "the producer clock/lateness config; compact_tail folds "
-                "the detail rows, prune() ages them out count-preserving"
-            )
-        return {
-            "covered_upto": covered if covered >= 0 else None,
-            "live_epochs": live,
-            "pruned_total": self.pruned_total(spark),
-            "growing": growing,
-            "store": report,
-        }
 
 
 # --- store doctor ------------------------------------------------------------

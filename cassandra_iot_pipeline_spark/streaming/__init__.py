@@ -8,17 +8,11 @@
                 a file source can replay them as micro-batches
     joins    -- watermarked stream-stream funnel join
     stateful -- applyInPandasWithState sessionization
-    anomaly  -- per-device jump detector (transformWithStateInPandas
-                when the runtime has protobuf; applyInPandasWithState
-                fallback otherwise)
     dedup    -- exactly-once ingest landing via
                 dropDuplicatesWithinWatermark + the near-dup curation
                 pipeline (foreachBatch over the persisted LSH store)
     ann      -- continuous ANN-index ingestion (foreachBatch over the
                 persisted IVFADC store)
-    rates    -- continuous counter-rate + time-weighted average
-                (bit-identical to the batch operators on day-ordered
-                replays; state TTL on both stateful runtimes)
     substrings -- continuous substring-level boilerplate removal over
                 the persisted gram-count store (prefix-consistent
                 Lee-et-al marking)
@@ -29,34 +23,14 @@
                 (key, period) point store; matrix on read)
     audit    -- continuous data-quality expectations (per-epoch
                 metric series; drift + failure views)
-    funnel   -- continuously-maintained funnel (distinct step-point
-                store; greedy chain on read — late re-anchor safe)
-    quality  -- continuous score-distribution store (live percentile
-                thresholds bit-identical to batch)
-    retrieval -- continuous postings-store ingestion
     cardinality -- mergeable per-group HLL distinct-count store
                 (estimates fold-on-read; batch-reader accessible)
     ohlc     -- continuous OHLC candles (associative order-statistic
                 fold; bitwise equal to the batch bars)
     sample   -- continuous weighted reservoir (priority sampling;
                 hash-pure priorities collapse cross-epoch redelivery)
-    tokenizer_drift -- per-epoch fertility/OOV series vs a frozen
-                tokenizer (baseline alert view)
-    embedding_drift -- per-list occupancy/residual series vs a frozen
-                IVF codebook (share + distance drift view)
-    baselines -- seasonal (key, hour) value-count store: exact
-                median/MAD on read, prior-only online flagging
     lateness -- watermark-lateness accounting (per-epoch drop counts
                 for candidate delays; tuning recommendation)
-    topk     -- mergeable Misra-Gries heavy-hitters store (bounded
-                m+1 rows/group forever; one-sided undercount bounds,
-                exact-regime DuckDB parity)
-    schema_drift -- per-epoch observed-field series over raw JSONL vs
-                the declared contract (undeclared/vanishing alerts)
-    attribution -- continuously-maintained conversion attribution
-                (distinct point store; first/last/linear on read —
-                late-touch re-open safe)
-    quantiles -- mergeable DDSketch quantile store (alpha relative
-                error, range-ratio-bounded buckets, sum fold)
+    metrics  -- streaming throughput listener
     cassandra -- connector sink options (prod backend; no cluster here)
 """

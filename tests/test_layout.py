@@ -1,0 +1,139 @@
+"""The keep/cut ledger for package modules, made executable.
+
+A module stays in the package only if an entry point reaches it or
+``KEPT`` names it with a reason (DESIGN.md §18). The walk follows
+``import`` and ``from ... import`` statements at any depth (module
+level and inside functions), resolves relative imports, and is
+transitive. Entry points: the query registry (``__spark_entry__.py``),
+the bench (``bench.py``), the benchmark runner (top-level
+``perfbench/*.py``) and the oracle check (``tools/oracle_check.py``).
+
+A module that no entry point reaches and ``KEPT`` does not name fails
+this test: delete it with its tests, or wire it into an entry point,
+or add it to ``KEPT`` with the keep rule it meets. A ``KEPT`` module
+that an entry point now reaches fails too, so the ledger never holds
+stale rows.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO_ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "cassandra_iot_pipeline_spark"
+
+KEPT = {
+    "sources.kafka": "reference connector (Kafka source); no broker here",
+    "sources.registry": "reference connector (schema registry); no registry here",
+    "streaming.cassandra": "reference connector (Cassandra sink); no cluster here",
+    "sources.generator": "the reference's event producer",
+    "streaming.lateness": "the reference's watermark trade-off (spark_consumer.py:171-172)",
+    "functions.substrings": "LLM-data dedup family: exact substring dedup",
+    "functions.bloom": "LLM-data dedup family: incremental landing dedup sketch",
+    "streaming.substrings": "LLM-data dedup family: continuous substring dedup",
+    "functions.ann_store": "LLM-data similarity family: persisted IVFADC index",
+    "streaming.ann": "LLM-data similarity family: continuous ANN ingestion",
+    "functions.cleaning": "LLM-data text family: PII redaction, contamination, packing",
+    "functions.curation": "LLM-data text family: end-to-end corpus curation",
+    "functions.sampling": "LLM-data text family: deterministic splits and samples",
+    "sources.jsonl": "LLM-data text family: JSONL corpus landing",
+    "plans": "plan-pin helpers used by tests/test_plans.py and tools/dump_plans.py",
+    "streaming.metrics": "pending the ROADMAP observability item: wire into ingest_stream or delete",
+    # deferred cuts (ROADMAP item 4): no keep rule holds; each goes in a
+    # later prune together with the tests that exercise it
+    "forget": "deferred cut: key-deletion propagation across tables and stores",
+    "functions.bpe": "deferred cut: BPE tokenizer training and encoding",
+    "functions.lm": "deferred cut: n-gram language-model perplexity scoring",
+    "functions.expectations": "deferred cut: declarative data-quality checks",
+    "operators.changepoints": "deferred cut: CUSUM change-point detection",
+    "operators.cohorts": "deferred cut: cohort retention and growth accounting",
+    "operators.downsample": "deferred cut: LTTB series downsampling",
+    "operators.paths": "deferred cut: user path and next-step analysis",
+    "operators.skew": "deferred cut: salted aggregates and the skew report",
+    "streaming.audit": "deferred cut: continuous expectations audit",
+    "streaming.cardinality": "deferred cut: continuous HLL distinct counts",
+    "streaming.cohorts": "deferred cut: continuous cohort store",
+    "streaming.ohlc": "deferred cut: continuous OHLC bars",
+    "streaming.sample": "deferred cut: continuous priority sample",
+    "streaming.scd2": "deferred cut: continuous SCD2 history",
+}
+
+ENTRY_POINTS = [
+    REPO_ROOT / "__spark_entry__.py",
+    REPO_ROOT / "bench.py",
+    REPO_ROOT / "tools" / "oracle_check.py",
+    *sorted((REPO_ROOT / "perfbench").glob("*.py")),
+]
+
+
+def _package_modules() -> dict[str, Path]:
+    modules = {}
+    for path in (REPO_ROOT / PACKAGE).rglob("*.py"):
+        parts = list(path.relative_to(REPO_ROOT).with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts.pop()
+        modules[".".join(parts)] = path
+    return modules
+
+
+def _imported_names(path: Path, module: str | None) -> set[str]:
+    """Dotted names an ``import`` anywhere in ``path`` may load: each
+    imported module, plus ``module.name`` for every ``from module
+    import name`` (the name may be a submodule)."""
+    package = None
+    if module is not None:
+        package = module if path.name == "__init__.py" else module.rpartition(".")[0]
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package.split(".")[: len(package.split(".")) - node.level + 1]
+                target = ".".join(base + ([node.module] if node.module else []))
+            else:
+                target = node.module
+            names.add(target)
+            names.update(f"{target}.{alias.name}" for alias in node.names)
+    return names
+
+
+def _reached(modules: dict[str, Path]) -> set[str]:
+    def loaded(name: str) -> set[str]:
+        # importing a.b.c runs a, a.b and a.b.c
+        parts = name.split(".")
+        return {
+            ".".join(parts[:i])
+            for i in range(1, len(parts) + 1)
+            if ".".join(parts[:i]) in modules
+        }
+
+    todo = set()
+    for entry in ENTRY_POINTS:
+        for name in _imported_names(entry, None):
+            todo |= loaded(name)
+    seen: set[str] = set()
+    while todo:
+        module = todo.pop()
+        seen.add(module)
+        for name in _imported_names(modules[module], module):
+            todo |= loaded(name) - seen
+    return seen
+
+
+def test_unreached_modules_are_exactly_the_kept_ledger():
+    assert all(reason.strip() for reason in KEPT.values())
+    modules = _package_modules()
+    unreached = {
+        name.removeprefix(f"{PACKAGE}.")
+        for name in set(modules) - _reached(modules)
+    }
+    assert not unreached - set(KEPT), (
+        "modules no entry point reaches and KEPT does not name: delete "
+        f"them or record why they stay: {sorted(unreached - set(KEPT))}"
+    )
+    assert not set(KEPT) - unreached, (
+        "KEPT names modules an entry point reaches (or that no longer "
+        f"exist): drop their rows: {sorted(set(KEPT) - unreached)}"
+    )

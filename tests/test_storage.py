@@ -289,12 +289,26 @@ def test_zorder_pruning_measured(spark, tmp_path):
     onecol = str(tmp_path / "onecol")
     zed = str(tmp_path / "zed")
     df.repartition(16).write.parquet(naive)
-    # range partitioning: a HASH repartition would spread the whole
-    # user_id domain across every file and no row group could prune
-    df.repartitionByRange(16, "user_id").sortWithinPartitions(
-        "user_id"
-    ).write.parquet(onecol)
-    write_zordered(df, zed, "user_id", "hour", bits=10, n_files=16)
+    # Both range-partitioned layouts take their file boundaries from a
+    # sample whose seed is the RDD id, i.e. from how many jobs the
+    # session ran before. Sampling every row makes the boundaries the
+    # exact quantiles, so the layouts compared below do not depend on
+    # test order.
+    sample_key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old_sample = spark.conf.get(sample_key, None)
+    spark.conf.set(sample_key, str(n))
+    try:
+        # range partitioning: a HASH repartition would spread the whole
+        # user_id domain across every file and no row group could prune
+        df.repartitionByRange(16, "user_id").sortWithinPartitions(
+            "user_id"
+        ).write.parquet(onecol)
+        write_zordered(df, zed, "user_id", "hour", bits=10, n_files=16)
+    finally:
+        if old_sample is None:
+            spark.conf.unset(sample_key)
+        else:
+            spark.conf.set(sample_key, old_sample)
 
     box = {"user_id": (100, 150), "hour": (100, 150)}
     r_naive = rowgroup_pruning_report(naive, box)
@@ -305,8 +319,8 @@ def test_zorder_pruning_measured(spark, tmp_path):
     # one-col sort prunes on user_id only
     assert r_onecol["skip_fraction"] > 0.5
     # the curve prunes the 2-D box at least as hard (at 16 files the
-    # two can tie — repartitionByRange samples its boundaries, so the
-    # strict ordering on the SHARED dimension is granularity noise)
+    # two can tie — the strict ordering on the SHARED dimension is
+    # file-granularity noise)
     assert r_zed["skip_fraction"] >= r_onecol["skip_fraction"]
     # the STRUCTURAL discrimination is the second dimension: a
     # single-column sort cannot prune an hour-only predicate AT ALL

@@ -309,13 +309,12 @@ def test_pipeline_folds_cohort_distinct_and_hll_estimates(spark, tmp_path):
 
 def test_pipeline_compact_tail_methods(spark, tmp_path):
     """The convenience methods wire the pipelines' own folds through
-    compact_epochs: distinct stores bitwise-unchanged, the MG store
-    contract-unchanged, the HLL store estimate-unchanged."""
+    compact_epochs: the distinct store bitwise-unchanged, the HLL store
+    estimate-unchanged."""
     from cassandra_iot_pipeline_spark.streaming.cardinality import (
         CardinalityPipeline,
     )
     from cassandra_iot_pipeline_spark.streaming.cohorts import CohortPipeline
-    from cassandra_iot_pipeline_spark.streaming.topk import TopKPipeline
 
     def day(n):
         return dt.datetime(2024, 1, 1 + n, 12)
@@ -328,22 +327,16 @@ def test_pipeline_compact_tail_methods(spark, tmp_path):
     sch = "user_id BIGINT, event_type STRING, ts TIMESTAMP"
     co = CohortPipeline(str(tmp_path / "co"), period_seconds=86_400)
     ca = CardinalityPipeline(str(tmp_path / "ca"))
-    tk = TopKPipeline(str(tmp_path / "tk"), ["event_type"], "user_id", m=8)
     for i, b in enumerate(rows):
         frame = spark.createDataFrame(b, sch)
         co.write_batch(frame, epoch_id=i)
         ca.write_batch(frame, epoch_id=i)
-        tk.write_batch(frame, epoch_id=i)
     co_b = sorted(tuple(r) for r in co.matrix(spark).collect())
     ca_b = sorted(tuple(r) for r in ca.estimates(spark).collect())
-    tk_b = sorted(tuple(r) for r in tk.summary(spark).collect())
     assert co.compact_tail(spark) == 2
     assert ca.compact_tail(spark, keep_recent=1) == 1
-    assert tk.compact_tail(spark) == 2
     assert sorted(tuple(r) for r in co.matrix(spark).collect()) == co_b
     assert sorted(tuple(r) for r in ca.estimates(spark).collect()) == ca_b
-    # the MG store never trimmed here (under m distinct) -> bitwise too
-    assert sorted(tuple(r) for r in tk.summary(spark).collect()) == tk_b
 
 
 def test_store_stats_doctor(spark, tmp_path):
@@ -383,19 +376,12 @@ def test_store_stats_doctor(spark, tmp_path):
 
 def test_every_associative_family_compact_tails(spark, tmp_path):
     """r9 verdict #7: every associative-fold store family exposes a
-    working compact_tail. Exercise the r10-wired ones end-to-end:
-    write epochs, tail-fold, assert the read is unchanged and the
-    epoch tail shrank. (funnel/cohorts/topk/quantiles/attribution/
-    cardinality were wired in r9 and are pinned above; SCD2 is the
-    documented exclusion — its write path reads strictly-older epoch
-    dirs by number.)"""
-    from cassandra_iot_pipeline_spark.streaming.baselines import (
-        BaselinePipeline,
-    )
+    working compact_tail. Exercise the r10-wired order-statistic
+    families end-to-end: write epochs, tail-fold, assert the read is
+    unchanged and the epoch tail shrank. (cohorts/cardinality are
+    pinned above; SCD2 is the documented exclusion — its write path
+    reads strictly-older epoch dirs by number.)"""
     from cassandra_iot_pipeline_spark.streaming.ohlc import OhlcPipeline
-    from cassandra_iot_pipeline_spark.streaming.quality import (
-        ScoreDistPipeline,
-    )
     from cassandra_iot_pipeline_spark.streaming.sample import (
         PrioritySamplePipeline,
     )
@@ -409,39 +395,28 @@ def test_every_associative_family_compact_tails(spark, tmp_path):
         [ev(4, 9, 6), ev(5, 11, 2)],
         [ev(6, 10, 9), ev(7, 11, 3), ev(8, 9, 4)],
     ]
-    bl = BaselinePipeline(str(tmp_path / "bl"))
     oh = OhlcPipeline(str(tmp_path / "oh"))
     sa = PrioritySamplePipeline(str(tmp_path / "sa"), k=3)
-    qd = ScoreDistPipeline(str(tmp_path / "qd"), score_col="value")
     for i, rows in enumerate(batches):
         frame = spark.createDataFrame(rows, sch)
-        for pipe in (bl, oh, sa, qd):
+        for pipe in (oh, sa):
             pipe.write_batch(frame, epoch_id=i)
 
     reads = {
-        "bl": lambda: sorted(map(tuple, bl.baselines(spark).collect())),
         "oh": lambda: sorted(map(tuple, oh.bars(spark).collect())),
         "sa": lambda: sorted(map(tuple, sa.sample(spark).collect())),
-        "qd": lambda: sorted(
-            map(tuple, qd.threshold(spark, 0.5).collect())
-        ),
     }
     before = {name: read() for name, read in reads.items()}
-    for pipe, d in ((bl, bl.counts_dir), (oh, oh.bars_dir),
-                    (sa, sa.res_dir), (qd, qd.dist_dir)):
+    for pipe, d in ((oh, oh.bars_dir), (sa, sa.res_dir)):
         assert pipe.compact_tail(spark) == 2
         _, _, epochs = store_parts(spark, d)
         assert [e for e, _ in epochs] == [2]
     assert {name: read() for name, read in reads.items()} == before
 
 
-def test_substring_and_postings_stores_compact_tail(spark, tmp_path):
-    """The multi-store families: substring gram counts (sum fold) and
-    the BM25 postings store (distinct fold, grp-partitioned base) —
-    tail folds leave marks/scores unchanged."""
-    from cassandra_iot_pipeline_spark.functions.retrieval import (
-        PostingsStore,
-    )
+def test_substring_store_compact_tail(spark, tmp_path):
+    """The multi-store substring family: a tail fold of its gram
+    counts (sum fold) leaves the marks unchanged."""
     from cassandra_iot_pipeline_spark.streaming.substrings import (
         SubstringDedupPipeline,
     )
@@ -452,23 +427,13 @@ def test_substring_and_postings_stores_compact_tail(spark, tmp_path):
         [(3, "an entirely different document with fresh words here")],
     ]
     sub = SubstringDedupPipeline(str(tmp_path / "sub"), k=8)
-    ps = PostingsStore(str(tmp_path / "ps"))
     for i, rows in enumerate(docs):
         frame = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
         sub.write_batch(frame, epoch_id=i)
-        ps.write_batch(frame, epoch_id=i)
 
     sub_before = sorted(map(tuple, sub.curated(spark).collect()))
-    ps_before = sorted(
-        map(tuple, ps.bm25_topk(spark, "quick brown fox", k=2).collect())
-    )
     assert sub.compact_tail(spark)["grams"] == 2
-    assert ps.compact_tail(spark) == 2
     assert sorted(map(tuple, sub.curated(spark).collect())) == sub_before
-    assert sorted(
-        map(tuple, ps.bm25_topk(spark, "quick brown fox", k=2).collect())
-    ) == ps_before
-
 
 def test_multiple_complete_stages_max_wins_lower_discarded(spark, tmp_path):
     """Out-of-contract but defended: TWO complete stages (a lower one

@@ -73,15 +73,6 @@ def _extras(spark, sf_dir):
             "aggregate, with map-side partial distinct).",
             cleaning.contamination_overlap(docs, bench),
         ),
-        "time_decay_attribution": (
-            "Half-life time-decay attribution (r11): K+1 marker rows "
-            "per conversion ride ONE user-keyed sort (forward + "
-            "reversed running fills — no unbounded-FOLLOWING frame, "
-            "the linted O(rows^2) class); bucket counts are "
-            "running-count differences, weights exact BIGINT "
-            "bit-shifts. No Join anywhere.",
-            _time_decay(spark, sf_dir),
-        ),
         "pack_concat": (
             "Concat-and-chunk packing layout: the running-offset "
             "window partitions by shard — hashpartitioning Exchange, "
@@ -206,26 +197,6 @@ def _extras(spark, sf_dir):
             "HashAggregate. Shuffle carries aggregate rows only.",
             _hourly_rollup(spark, sf_dir),
         ),
-        "bm25_topk": (
-            "BM25 ranked retrieval (r8): the query's term IN filter "
-            "sits under the posting aggregation, so the wide work is "
-            "proportional to the query terms' posting lists; the idf "
-            "map enters as driver-computed literals (q bounded "
-            "values, keeps the JVM's 1-ulp-different Math.log out of "
-            "the plan); per-doc scores fold deterministically in "
-            "sorted term order; the ranked read compiles to "
-            "TakeOrderedAndProject (heap top-k, no global sort).",
-            _bm25(spark, sf_dir),
-        ),
-        "bm25_batch_decontaminate": (
-            "Batch BM25 decontamination (r8): query terms and the "
-            "query-vocabulary idf frame both BroadcastHashJoin onto "
-            "the postings — the posting side never reshuffles for "
-            "routing however many eval questions probe it; ranking "
-            "is a row_number window per query over that query's own "
-            "candidates.",
-            _bm25_batch(spark, sf_dir),
-        ),
         "event_transitions": (
             "First-order path matrix (r8): one events-wide Exchange "
             "for the per-key (ts, id)-ordered lag window, then a "
@@ -306,25 +277,6 @@ def _extras(spark, sf_dir):
             "events-sized side.",
             _retention_matrix(spark, sf_dir),
         ),
-        "attribution": (
-            "Conversion attribution (r9): conversions explode into "
-            "exactly TWO lookback-bucket probes and equi-join the "
-            "touches on (user, bucket) — no unbounded range join; "
-            "ONE window over conv_id carries n and the first/last "
-            "composite-key picks; everything after is conversions x "
-            "channels bounded.",
-            _attribution(spark, sf_dir),
-        ),
-        "asof_attribution": (
-            "Pair-free FULL attribution (r10): NO join anywhere — one "
-            "user-keyed sort carries the per-channel running counts, "
-            "the forward last-touch fill, and the REVERSED-order "
-            "running fill standing in for first-touch (an unbounded-"
-            "FOLLOWING frame would re-scan to partition end per row); "
-            "then one conv-keyed aggregation over two marker rows per "
-            "conversion and a channel-bounded explode.",
-            _asof_attribution(spark, sf_dir),
-        ),
         "funnel_trend": (
             "Per-anchor-period funnel (r10): the SAME one user-keyed "
             "exchange as the plain funnel (user_hits), then a "
@@ -350,14 +302,6 @@ def _extras(spark, sf_dir):
             "rebuild is one per-doc aggregation.",
             _dedup_lines(spark, sf_dir),
         ),
-        "topk_batch_summary": (
-            "Heavy-hitters store write path (r9): one exact "
-            "map-side-combined count, the group-keyed MG-trim "
-            "windows, and the group-bounded sentinel full-outer — "
-            "join-free of any store read (the store is never read on "
-            "write).",
-            _topk_summary(spark, sf_dir),
-        ),
         "bpe_pair_counts": (
             "BPE training, the per-merge stage (r8 third arc): pair "
             "structs materialize BEFORE the explode (one tokenizer "
@@ -368,21 +312,6 @@ def _extras(spark, sf_dir):
             _bpe_pairs(spark, sf_dir),
         ),
     }
-
-
-def _time_decay(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.attribution import (
-        time_decay_attribution,
-    )
-
-    return time_decay_attribution(
-        load_table(spark, sf_dir, "events"),
-        "purchase",
-        ("view", "click"),
-        lookback_seconds=86_400,
-        half_life_seconds=3_600,
-    )
 
 
 def _ohlc(spark, sf_dir):
@@ -455,34 +384,6 @@ def _retention_matrix(spark, sf_dir):
     )
 
 
-def _attribution(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.attribution import (
-        attribution,
-    )
-
-    return attribution(
-        load_table(spark, sf_dir, "events"),
-        "purchase",
-        ("view", "click", "signup"),
-        86_400,
-    )
-
-
-def _asof_attribution(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.attribution import (
-        asof_attribution,
-    )
-
-    return asof_attribution(
-        load_table(spark, sf_dir, "events"),
-        "purchase",
-        ("view", "click", "signup"),
-        86_400,
-    )
-
-
 def _funnel_trend(spark, sf_dir):
     from cassandra_iot_pipeline_spark.catalog import load_table
     from cassandra_iot_pipeline_spark.operators.funnel import funnel_trend
@@ -513,16 +414,6 @@ def _dedup_lines(spark, sf_dir):
     return dedup_lines(
         load_table(spark, sf_dir, "documents"), min_line_chars=1
     )
-
-
-def _topk_summary(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.streaming.topk import TopKPipeline
-
-    pipe = TopKPipeline(
-        "/tmp/plans_topk_unused", ["event_type"], "user_id", m=64
-    )
-    return pipe._batch_summary(load_table(spark, sf_dir, "events"))
 
 
 def _bpe_pairs(spark, sf_dir):
@@ -558,28 +449,6 @@ def _hourly_rollup(spark, sf_dir):
     from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup
 
     return hourly_rollup(load_table(spark, sf_dir, "events"))
-
-
-def _bm25(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.functions.retrieval import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, "spark join merge window", k=10)
-
-
-def _bm25_batch(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.functions.retrieval import (
-        retrieval_decontaminate,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        [(1, "spark join merge window"), (2, "data pipeline quality")],
-        "query_id BIGINT, query_text STRING",
-    )
-    return retrieval_decontaminate(docs, queries, k=10, min_score=0.5)
 
 
 def _transitions(spark, sf_dir):

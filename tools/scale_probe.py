@@ -1108,18 +1108,12 @@ def main() -> None:
             file=sys.stderr, flush=True,
         )
 
-    if "--funnel-retrieval" in sys.argv:
-        # r8: the engagement-analytics and retrieval families at probe
-        # scale. Funnel/transitions run over the full synthetic event
-        # stream (the wide work is the one user-keyed exchange);
-        # retrieval runs over the shared-vocabulary corpus with a
-        # 200-question batch (the decontamination shape).
+    if "--funnel" in sys.argv:
+        # r8: the engagement-analytics family at probe scale.
+        # Funnel/transitions run over the full synthetic event stream
+        # (the wide work is the one user-keyed exchange).
         from cassandra_iot_pipeline_spark.functions.expectations import (
             events_expectations,
-        )
-        from cassandra_iot_pipeline_spark.functions.retrieval import (
-            bm25_batch,
-            bm25_topk,
         )
         from cassandra_iot_pipeline_spark.operators.downsample import lttb
         from cassandra_iot_pipeline_spark.operators.funnel import funnel
@@ -1245,53 +1239,6 @@ def main() -> None:
         )
         timed("expectations_audit", events_expectations(events), results)
         timed("lttb_500", lttb(events, 500, key="user_id"), results)
-
-        # Stage the synthetic corpus to parquet first (the established
-        # probe pattern): feeding the hash-generator expression tree
-        # straight into the posting explode re-evaluates the 2000-way
-        # vocab array per token — the transform()-lambda pathology
-        # SCALE.md documents for shingling. Real corpora are parquet.
-        import tempfile
-
-        rdocs_dir = tempfile.mkdtemp(prefix="probe_bm25_")
-        probe_documents(spark, 100_000).write.mode("overwrite").parquet(
-            rdocs_dir
-        )
-        rdocs = spark.read.parquet(rdocs_dir)
-        t0 = time.perf_counter()
-        bm25_topk(rdocs, "word0001 word0042 word1999 word0500", k=10).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        results["bm25_topk_100k_docs"] = round(time.perf_counter() - t0, 2)
-        print(
-            f"[probe] bm25_topk_100k_docs: {results['bm25_topk_100k_docs']}s",
-            file=sys.stderr, flush=True,
-        )
-        queries = spark.createDataFrame(
-            [
-                (
-                    q,
-                    " ".join(
-                        f"word{(q * 37 + j * 101) % 2000:04d}"
-                        for j in range(6)
-                    ),
-                )
-                for q in range(200)
-            ],
-            "query_id BIGINT, query_text STRING",
-        )
-        t0 = time.perf_counter()
-        bm25_batch(rdocs, queries, k=10).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        results["bm25_batch_200q_100k_docs"] = round(
-            time.perf_counter() - t0, 2
-        )
-        print(
-            f"[probe] bm25_batch_200q_100k_docs: "
-            f"{results['bm25_batch_200q_100k_docs']}s",
-            file=sys.stderr, flush=True,
-        )
 
     if "--bpe-stores" in sys.argv:
         # r8 third arc: BPE training cost per merge over a vocab-sized
@@ -1451,442 +1398,15 @@ def main() -> None:
         )
         timed("mad_outliers_20m", mad_outliers(events), results)
 
-    if "--funnel-stream" in sys.argv:
-        # r9 (r8 verdict #7): the streaming funnel's READ path folds
-        # the full point store — the one read in the engagement arcs
-        # whose cost grows with corpus lifetime rather than
-        # base+recent-deltas (inherent: the point set is the minimal
-        # sufficient statistic for the non-monotone chain). Measure the
-        # serving read against a store growing 10x, compacted before
-        # each measured read so fold shape is constant.
-        import tempfile
-
-        from cassandra_iot_pipeline_spark.streaming.funnel import (
-            FunnelPipeline,
-        )
-
-        steps = ["signup", "view", "click", "purchase"]
-        fpipe = FunnelPipeline(
-            tempfile.mkdtemp(prefix="probe_fstream_"),
-            steps,
-            horizon_seconds=7 * 86_400,
-        )
-        per_epoch = max(200_000, n_events // 10)
-        measure_after = {0, 2, 9}
-        for e in range(10):
-            fpipe.write_batch(
-                probe_events(spark, per_epoch, n_devices, start=e * per_epoch),
-                epoch_id=e,
-            )
-            if e in measure_after:
-                fpipe.compact(spark)
-                t0 = time.perf_counter()
-                fpipe.funnel(spark).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                sec = round(time.perf_counter() - t0, 2)
-                results[f"funnel_stream_read_{e + 1}x"] = sec
-                print(
-                    f"[probe] funnel_stream read after {e + 1} epochs "
-                    f"({(e + 1) * per_epoch} events landed): {sec}s",
-                    file=sys.stderr, flush=True,
-                )
-
-    if "--ddsketch-collapse" in sys.argv:
-        # r10 (r9 verdict #5): the collapsing tier under an
-        # adversarial long-tail group. One poisoned group spans the
-        # FULL positive double range (~600 decades, 1e-300 .. 1e300 —
-        # a broken sensor emitting garbage bit patterns) — the plain
-        # sketch's range-ratio bound balloons to ~115 buckets/decade
-        # at alpha=1%; the collapse pins it at max_buckets with the
-        # alpha contract intact above the reported collapsed fraction.
-        from cassandra_iot_pipeline_spark.operators.quantiles import (
-            dd_quantiles,
-            dd_sketch,
-        )
-
-        poisoned = spark.range(0, n_events).select(
-            F.lit("sensor").alias("g"),
-            # log-uniform across 600 decades: 10^(-300 + 600 * u)
-            F.pow(
-                F.lit(10.0),
-                F.lit(-300.0)
-                + F.lit(600.0)
-                * (
-                    F.pmod(
-                        F.xxhash64(F.lit("v"), F.col("id")),
-                        F.lit(1_000_000),
-                    )
-                    / F.lit(1_000_000.0)
-                ),
-            ).alias("value"),
-        )
-        for mb, label in ((None, "plain"), (512, "collapse512")):
-            t0 = time.perf_counter()
-            n_buckets = dd_sketch(
-                poisoned, ["g"], "value", 0.01, max_buckets=mb
-            ).count()
-            results[f"ddsketch_{label}_buckets"] = n_buckets
-            results[f"ddsketch_{label}_sketch_sec"] = round(
-                time.perf_counter() - t0, 2
-            )
-            print(
-                f"[probe] ddsketch_{label}: {n_buckets} buckets, "
-                f"{results[f'ddsketch_{label}_sketch_sec']}s",
-                file=sys.stderr, flush=True,
-            )
-        timed(
-            "ddsketch_collapse512_read_p99",
-            dd_quantiles(
-                poisoned, ["g"], "value", (0.5, 0.99), 0.01,
-                max_buckets=512,
-            ),
-            results,
-        )
-
-    if "--finalize-stream" in sys.argv:
-        # r10 (r9 verdict #3 + #6): the lifetime-growing point stores'
-        # declared-horizon tier. An ADVANCING stream (each epoch's
-        # events shifted one 30-day month on) feeds two funnel stores
-        # and two attribution stores; the *_fin_on pipelines finalize
-        # (lateness = 1 day) before each measured read. Claims under
-        # test: the unfinalized read grows with stored points (the r8
-        # --funnel-stream law), the finalized read stays ~FLAT, and
-        # the attribution store (which previously had no growth row at
-        # all) gets both curves.
-        import tempfile
-
-        from cassandra_iot_pipeline_spark.streaming.attribution import (
-            AttributionPipeline,
-        )
-        from cassandra_iot_pipeline_spark.streaming.funnel import (
-            FunnelPipeline,
-        )
-
-        steps = ["signup", "view", "click", "purchase"]
-        fp_off = FunnelPipeline(
-            tempfile.mkdtemp(prefix="probe_ffin0_"), steps,
-            horizon_seconds=7 * 86_400,
-        )
-        fp_on = FunnelPipeline(
-            tempfile.mkdtemp(prefix="probe_ffin1_"), steps,
-            horizon_seconds=7 * 86_400,
-        )
-        ap_off = AttributionPipeline(
-            tempfile.mkdtemp(prefix="probe_afin0_"), "purchase",
-            ("view", "click", "signup"), 86_400,
-        )
-        ap_on = AttributionPipeline(
-            tempfile.mkdtemp(prefix="probe_afin1_"), "purchase",
-            ("view", "click", "signup"), 86_400,
-        )
-        per_epoch = max(200_000, n_events // 10)
-        month_us = 30 * 86_400 * 1_000_000
-        measure_after = {0, 2, 9}
-        for e in range(10):
-            batch = probe_events(
-                spark, per_epoch, n_devices, start=e * per_epoch
-            ).withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.unix_micros(F.col("ts")) + F.lit(e * month_us)
-                ),
-            )
-            for pipe in (fp_off, fp_on, ap_off, ap_on):
-                pipe.write_batch(batch, epoch_id=e)
-            if e in measure_after:
-                fp_off.compact(spark)
-                ap_off.compact(spark)
-                fp_on.finalize(spark, lateness_seconds=86_400)
-                ap_on.finalize(spark, lateness_seconds=86_400)
-                for name, reader in (
-                    (f"funnel_fin_off_read_{e + 1}x",
-                     lambda: fp_off.funnel(spark)),
-                    (f"funnel_fin_on_read_{e + 1}x",
-                     lambda: fp_on.funnel(spark)),
-                    (f"attr_fin_off_read_{e + 1}x",
-                     lambda: ap_off.report(spark)),
-                    (f"attr_fin_on_read_{e + 1}x",
-                     lambda: ap_on.report(spark)),
-                ):
-                    t0 = time.perf_counter()
-                    reader().write.format("noop").mode("overwrite").save()
-                    results[name] = round(time.perf_counter() - t0, 2)
-                    print(
-                        f"[probe] {name}: {results[name]}s",
-                        file=sys.stderr, flush=True,
-                    )
-
-    if "--finalize-pass" in sys.argv:
-        # r11 (r10 verdict #3 + #1): (A) the finalize() MAINTENANCE
-        # pass itself — first-finalize cost over a 1x/3x/10x
-        # accumulated store, steady-state per-call cost at
-        # finalize_every in {4, 16}, and the GC compact_store share —
-        # for both point-store pipelines; (B) the additive funnel
-        # tier's population law: a GROWING ever-closed user population
-        # (10k -> 100k -> 1M) with exact-tier reads expected to grow
-        # and additive-tier reads expected ~flat.
-        import tempfile
-
-        import cassandra_iot_pipeline_spark.streaming.attribution as samod
-        import cassandra_iot_pipeline_spark.streaming.funnel as sfmod
-        from cassandra_iot_pipeline_spark.streaming.attribution import (
-            AttributionPipeline,
-        )
-        from cassandra_iot_pipeline_spark.streaming.funnel import (
-            FunnelPipeline,
-        )
-
-        steps = ["signup", "view", "click", "purchase"]
-        month_us = 30 * 86_400 * 1_000_000
-        per_epoch = max(200_000, n_events // 100)
-
-        def adv_batch(e):
-            return probe_events(
-                spark, per_epoch, n_devices, start=e * per_epoch
-            ).withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.unix_micros(F.col("ts")) + F.lit(e * month_us)
-                ),
-            )
-
-        def mk_funnel(tag, **kw):
-            return FunnelPipeline(
-                tempfile.mkdtemp(prefix=f"probe_fp_{tag}_"), steps,
-                horizon_seconds=7 * 86_400, **kw,
-            )
-
-        def mk_attr(tag):
-            return AttributionPipeline(
-                tempfile.mkdtemp(prefix=f"probe_ap_{tag}_"), "purchase",
-                ("view", "click", "signup"), 86_400,
-            )
-
-        # -- (A1) first-finalize cost over an accumulated store -------
-        gc_secs = {"v": 0.0}
-        real_cs = {"funnel": sfmod.compact_store, "attr": samod.compact_store}
-
-        def timing_cs(mod, key):
-            def wrapped(*a, **k):
-                t0 = time.perf_counter()
-                out = real_cs[key](*a, **k)
-                gc_secs["v"] += time.perf_counter() - t0
-                return out
-            return wrapped
-
-        sfmod.compact_store = timing_cs(sfmod, "funnel")
-        samod.compact_store = timing_cs(samod, "attr")
-        try:
-            for acc in (1, 3, 10):
-                fp, ap = mk_funnel(f"first{acc}"), mk_attr(f"first{acc}")
-                for e in range(acc):
-                    b = adv_batch(e)
-                    fp.write_batch(b, epoch_id=e)
-                    ap.write_batch(b, epoch_id=e)
-                for key, pipe in (("funnel", fp), ("attr", ap)):
-                    gc_secs["v"] = 0.0
-                    t0 = time.perf_counter()
-                    pipe.finalize(spark, lateness_seconds=86_400)
-                    total = round(time.perf_counter() - t0, 2)
-                    results[f"{key}_first_finalize_{acc}x"] = total
-                    results[f"{key}_first_finalize_{acc}x_gc"] = round(
-                        gc_secs["v"], 2
-                    )
-                    print(
-                        f"[probe] {key}_first_finalize_{acc}x: {total}s "
-                        f"(gc {results[f'{key}_first_finalize_{acc}x_gc']}s)",
-                        file=sys.stderr, flush=True,
-                    )
-
-            # -- (A2) steady-state per-call cost at two cadences -------
-            for every in (4, 16):
-                fp, ap = mk_funnel(f"cad{every}"), mk_attr(f"cad{every}")
-                calls: dict[str, list[float]] = {"funnel": [], "attr": []}
-                gcs: dict[str, list[float]] = {"funnel": [], "attr": []}
-                for e in range(16):
-                    b = adv_batch(e)
-                    fp.write_batch(b, epoch_id=e)
-                    ap.write_batch(b, epoch_id=e)
-                    if (e + 1) % every == 0:
-                        for key, pipe in (("funnel", fp), ("attr", ap)):
-                            gc_secs["v"] = 0.0
-                            t0 = time.perf_counter()
-                            pipe.finalize(spark, lateness_seconds=86_400)
-                            calls[key].append(time.perf_counter() - t0)
-                            gcs[key].append(gc_secs["v"])
-                for key in ("funnel", "attr"):
-                    cs = calls[key]
-                    steady = cs[1:] if len(cs) > 1 else cs
-                    results[f"{key}_finalize_every{every}_percall"] = round(
-                        sum(steady) / len(steady), 2
-                    )
-                    results[f"{key}_finalize_every{every}_gc_share"] = round(
-                        sum(gcs[key]) / max(sum(cs), 1e-9), 2
-                    )
-                    print(
-                        f"[probe] {key}_finalize_every{every}: "
-                        f"per-call {results[f'{key}_finalize_every{every}_percall']}s, "
-                        f"gc share {results[f'{key}_finalize_every{every}_gc_share']}",
-                        file=sys.stderr, flush=True,
-                    )
-        finally:
-            sfmod.compact_store = real_cs["funnel"]
-            samod.compact_store = real_cs["attr"]
-
-        # -- (B) growing ever-closed population: exact vs additive ----
-        fsteps = ["signup", "view", "purchase"]
-        ex = FunnelPipeline(
-            tempfile.mkdtemp(prefix="probe_pop_ex_"), fsteps,
-            horizon_seconds=3_600,
-        )
-        ad = FunnelPipeline(
-            tempfile.mkdtemp(prefix="probe_pop_ad_"), fsteps,
-            horizon_seconds=3_600, fin_mode="additive",
-        )
-
-        def pop_cohort(n_users, start_user, base_us):
-            # 3 funnel events per user, per-user jittered latencies so
-            # the additive sketch sees a realistic bucket spread
-            u = spark.range(n_users).select(
-                (F.col("id") + start_user).alias("user_id")
-            )
-            evs = u.select(
-                "user_id",
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("signup").alias("event_type"),
-                            F.lit(0).cast("long").alias("off"),
-                        ),
-                        F.struct(
-                            F.lit("view").alias("event_type"),
-                            F.lit(60_000_000).cast("long").alias("off"),
-                        ),
-                        F.struct(
-                            F.lit("purchase").alias("event_type"),
-                            F.lit(120_000_000).cast("long").alias("off"),
-                        ),
-                    )
-                ).alias("e"),
-            )
-            return evs.select(
-                "user_id",
-                F.col("e.event_type").alias("event_type"),
-                F.timestamp_micros(
-                    F.lit(base_us)
-                    + F.col("e.off")
-                    + F.pmod(F.col("user_id"), F.lit(997)) * F.lit(13_001)
-                ).alias("ts"),
-            )
-
-        # the LAW rows are the CONSTANT-WORK probes at each population
-        # level: a tiny (1k-user) cohort finalize and a read — any
-        # growth left in them is population-dependent cost (the exact
-        # tier's fin-key anti-join + fin-row fold), not batch cost
-        # (each stage's own bulk fold is batch-proportional in BOTH
-        # tiers and would mask the law)
-        epoch_no = 0
-        start_user = 0
-        cum = 0
-        for si, n_users in enumerate((10_000, 90_000, 900_000)):
-            base_us = (si + 1) * 3 * month_us
-            for chunk0 in range(0, n_users, 300_000):
-                n_chunk = min(300_000, n_users - chunk0)
-                b = pop_cohort(n_chunk, start_user + chunk0, base_us)
-                ex.write_batch(b, epoch_id=epoch_no)
-                ad.write_batch(b, epoch_id=epoch_no)
-                epoch_no += 1
-            start_user += n_users
-            cum += n_users
-            # a pin epoch a month on closes the whole stage (far-away
-            # user ids so pins never merge into a real stage's chains)
-            pin = pop_cohort(
-                10, 10_000_000 + 100 * si, base_us + month_us
-            )
-            ex.write_batch(pin, epoch_id=epoch_no)
-            ad.write_batch(pin, epoch_id=epoch_no)
-            epoch_no += 1
-            for key, pipe in (("exact", ex), ("additive", ad)):
-                t0 = time.perf_counter()
-                out = pipe.finalize(spark, lateness_seconds=86_400)
-                fsec = round(time.perf_counter() - t0, 2)
-                results[f"pop_{key}_bulkfinalize_{cum}u"] = fsec
-                print(
-                    f"[probe] pop {key} bulk at {cum} users: "
-                    f"finalize {fsec}s (closed {out['finalized_users']})",
-                    file=sys.stderr, flush=True,
-                )
-            # constant-work probes at this population level
-            tiny = pop_cohort(
-                1_000, 20_000_000 + 10_000 * si, base_us + month_us + 86_400_000_000
-            )
-            pin2 = pop_cohort(
-                10, 30_000_000 + 100 * si, base_us + 2 * month_us
-            )
-            ex.write_batch(tiny, epoch_id=epoch_no)
-            ad.write_batch(tiny, epoch_id=epoch_no)
-            epoch_no += 1
-            ex.write_batch(pin2, epoch_id=epoch_no)
-            ad.write_batch(pin2, epoch_id=epoch_no)
-            epoch_no += 1
-            for key, pipe in (("exact", ex), ("additive", ad)):
-                t0 = time.perf_counter()
-                out = pipe.finalize(spark, lateness_seconds=86_400)
-                fsec = round(time.perf_counter() - t0, 2)
-                results[f"pop_{key}_tinyfinalize_{cum}u"] = fsec
-                t0 = time.perf_counter()
-                pipe.funnel(spark).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                rsec = round(time.perf_counter() - t0, 2)
-                results[f"pop_{key}_read_{cum}u"] = rsec
-                print(
-                    f"[probe] pop {key} at {cum} users: CONSTANT-WORK "
-                    f"finalize {fsec}s (closed {out['finalized_users']}),"
-                    f" read {rsec}s",
-                    file=sys.stderr, flush=True,
-                )
-
-    if "--quantiles-lines" in sys.argv:
-        # r9: DDSketch store write flatness + read cost, and the C4
-        # line-dedup rule over a multi-line corpus (probe_documents is
-        # single-line; break ~25% of word gaps into newlines and plant
-        # a boilerplate footer on 10% of docs).
+    if "--lines" in sys.argv:
+        # r9: the C4 line-dedup rule over a multi-line corpus
+        # (probe_documents is single-line; break ~25% of word gaps into
+        # newlines and plant a boilerplate footer on 10% of docs).
         import tempfile
 
         from cassandra_iot_pipeline_spark.functions.cleaning import (
             dedup_lines,
         )
-        from cassandra_iot_pipeline_spark.streaming.quantiles import (
-            QuantilePipeline,
-        )
-
-        qp = QuantilePipeline(
-            tempfile.mkdtemp(prefix="probe_dd_"),
-            ["event_type"],
-            "value",
-            alpha=0.01,
-            compact_every=4,
-        )
-        per_epoch = max(200_000, n_events // 10)
-        secs = []
-        for e in range(10):
-            b = probe_events(spark, per_epoch, n_devices, start=e * per_epoch)
-            t0 = time.perf_counter()
-            qp.write_batch(b, epoch_id=e)
-            secs.append(round(time.perf_counter() - t0, 2))
-        results["ddsketch_epoch_first"] = secs[0]
-        results["ddsketch_epoch_last"] = secs[-1]
-        print(f"[probe] ddsketch 10x{per_epoch} epochs: {secs}",
-              file=sys.stderr, flush=True)
-        t0 = time.perf_counter()
-        qp.quantiles(spark, (0.5, 0.95, 0.99)).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        results["ddsketch_read"] = round(time.perf_counter() - t0, 2)
-        print(f"[probe] ddsketch read: {results['ddsketch_read']}s",
-              file=sys.stderr, flush=True)
 
         ldocs_dir = tempfile.mkdtemp(prefix="probe_lines_")
         boiler = (
@@ -1917,133 +1437,6 @@ def main() -> None:
                 dedup_lines(ldocs, min_line_chars=10, hash_shuffle=hs),
                 results,
             )
-
-    if "--attribution" in sys.argv:
-        # r9: attribution cost is driven by the conversion x
-        # in-window-touch PAIR count — inherent to the model (linear
-        # credit needs each conversion's n), not to the join strategy
-        # (the two-bucket probe bounds candidates). The synthetic
-        # corpus is ~70x denser per user than a real event stream
-        # (2000 events/user/month), so lookbacks sweep the pair count.
-        from cassandra_iot_pipeline_spark.operators.attribution import (
-            asof_attribution,
-            attribution,
-            first_last_attribution,
-        )
-
-        for lb, label in ((3600, "1h"), (86_400, "24h")):
-            timed(
-                f"attribution_{label}_lookback",
-                attribution(
-                    events,
-                    "purchase",
-                    ("view", "click", "signup"),
-                    lb,
-                ),
-                results,
-            )
-            # the pair-free positional fast path: cost must be flat
-            # across lookbacks (two union-tag windows, no pairs)
-            timed(
-                f"first_last_attribution_{label}_lookback",
-                first_last_attribution(
-                    events,
-                    "purchase",
-                    ("view", "click", "signup"),
-                    lb,
-                ),
-                results,
-            )
-            # r10: the pair-free FULL report (linear included) — one
-            # user-keyed sort carrying per-channel running counts;
-            # the claim under test is lookback-independence of the
-            # COMPLETE model set (24h within ~1.5x of 1h)
-            timed(
-                f"asof_attribution_{label}_lookback",
-                asof_attribution(
-                    events,
-                    "purchase",
-                    ("view", "click", "signup"),
-                    lb,
-                ),
-                results,
-            )
-            # r11: time-decay on the same machinery with K+1 markers
-            # per conversion (K = lookback/half_life) vs its pair
-            # twin — the claim is that the marker fan-out (25 rows per
-            # conversion at 24h/1h) still beats pairs-per-conversion,
-            # and the form inherits the lookback-flatness law
-            hl = 360 if lb == 3600 else 3600
-            from cassandra_iot_pipeline_spark.operators.attribution import (
-                time_decay_attribution,
-                time_decay_attribution_pairs,
-            )
-
-            timed(
-                f"time_decay_{label}_lookback_k{lb // hl}",
-                time_decay_attribution(
-                    events,
-                    "purchase",
-                    ("view", "click", "signup"),
-                    lb,
-                    hl,
-                ),
-                results,
-            )
-            timed(
-                f"time_decay_pairs_{label}_lookback_k{lb // hl}",
-                time_decay_attribution_pairs(
-                    events,
-                    "purchase",
-                    ("view", "click", "signup"),
-                    lb,
-                    hl,
-                ),
-                results,
-            )
-
-    if "--topk" in sys.argv:
-        # r9: the Misra-Gries heavy-hitters store. Claims under test:
-        # per-epoch write work is batch-local (flat against store
-        # growth), the compacted base is m+1 rows per group however
-        # long the stream, and the read folds bounded rows.
-        import tempfile
-
-        from cassandra_iot_pipeline_spark.streaming.topk import TopKPipeline
-
-        tp = TopKPipeline(
-            tempfile.mkdtemp(prefix="probe_topk_"),
-            group_cols=["event_type"],
-            token_col="user_id",
-            m=256,
-            compact_every=4,
-        )
-        per_epoch = max(200_000, n_events // 10)
-        epoch_secs = []
-        for e in range(10):
-            b = probe_events(spark, per_epoch, n_devices, start=e * per_epoch)
-            t0 = time.perf_counter()
-            tp.write_batch(b, epoch_id=e)
-            epoch_secs.append(round(time.perf_counter() - t0, 2))
-        results["topk_epoch_first"] = epoch_secs[0]
-        results["topk_epoch_last"] = epoch_secs[-1]
-        print(
-            f"[probe] topk 10x{per_epoch} epochs: {epoch_secs}",
-            file=sys.stderr, flush=True,
-        )
-        t0 = time.perf_counter()
-        tp.topk(spark, k=10).write.format("noop").mode("overwrite").save()
-        results["topk_read"] = round(time.perf_counter() - t0, 2)
-        base = spark.read.parquet(f"{tp.mg_dir}/base_upto=7")
-        rows_per_group = (
-            base.groupBy("event_type").count().agg(F.max("count")).first()[0]
-        )
-        results["topk_base_max_rows_per_group"] = int(rows_per_group)
-        print(
-            f"[probe] topk read: {results['topk_read']}s; base max "
-            f"rows/group: {rows_per_group} (m+1 = 257)",
-            file=sys.stderr, flush=True,
-        )
 
     if "--bpe-multi" in sys.argv:
         # r9 (r8 verdict #2): the merges_per_iter tier's realistic-vocab
@@ -2088,7 +1481,8 @@ def main() -> None:
         )
 
     if "--monitors" in sys.argv:
-        # r8 third arc: the drift-monitoring family at probe scale.
+        # r8 third arc: the drift-monitoring family at probe scale
+        # (tokenizer report, CUSUM over a wide series corpus).
         import tempfile
 
         from cassandra_iot_pipeline_spark.functions.bpe import (
@@ -2099,9 +1493,6 @@ def main() -> None:
         )
         from cassandra_iot_pipeline_spark.operators.changepoints import (
             cusum_changepoints,
-        )
-        from cassandra_iot_pipeline_spark.streaming.embedding_drift import (
-            EmbeddingDriftPipeline,
         )
 
         mdocs_dir = tempfile.mkdtemp(prefix="probe_mon_")
@@ -2116,41 +1507,6 @@ def main() -> None:
             "tokenizer_report_100k_docs",
             tokenizer_report(mdocs, model.merges, vocab),
             results,
-        )
-
-        # embedding drift: 5 epochs x 200k 32-dim vectors against a
-        # frozen 64-list codebook; per-epoch write must stay flat
-        dims, n_vec = 32, 200_000
-        def _vecs(start):
-            return spark.range(start, start + n_vec).select(
-                F.col("id").alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(dims - 1)),
-                    lambda d: (
-                        F.pmod(F.xxhash64("id", d), F.lit(1000)) / 500.0
-                        - 1.0
-                    ),
-                ).alias("embedding"),
-            )
-        cents = _vecs(10**9).limit(64)
-        ed_dir = tempfile.mkdtemp(prefix="probe_ed_")
-        epipe = EmbeddingDriftPipeline(ed_dir, cents)
-        e_times = []
-        for i in range(5):
-            batch = _vecs(i * n_vec)
-            t0 = time.perf_counter()
-            epipe.write_batch(batch, epoch_id=i)
-            e_times.append(round(time.perf_counter() - t0, 2))
-        results["embedding_drift_epoch_secs"] = e_times
-        t0 = time.perf_counter()
-        epipe.drift(spark).write.format("noop").mode("overwrite").save()
-        results["embedding_drift_read_sec"] = round(
-            time.perf_counter() - t0, 2
-        )
-        print(
-            f"[probe] embedding_drift epochs {e_times}, drift read "
-            f"{results['embedding_drift_read_sec']}s",
-            file=sys.stderr, flush=True,
         )
 
         # CUSUM over a wide series corpus: 100k groups x 50 epochs
