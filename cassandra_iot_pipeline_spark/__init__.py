@@ -16,7 +16,6 @@ Layout:
     schemas    -- typed StructType contracts mirroring the .avsc schemas
     api        -- IoTEngine: ingest + serving reads over the two tables
     store      -- the delta+base MergeableStore and foreachBatch runner
-    forget     -- key-deletion propagation across tables and stores
     operators/ -- batch operator library (agg, serving reads, joins,
                   funnel, series)
     sources/   -- decode paths (Avro wire format, JSON, JSONL) + event

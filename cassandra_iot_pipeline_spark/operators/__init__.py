@@ -16,16 +16,12 @@ path):
     scd2       -- SCD type-2 dimension history: versioned snapshot,
                   touched-keys incremental merge, point-in-time
                   enrichment
-    cohorts    -- cohort retention matrix (first-period cohorts,
-                  distinct activity per offset, retained fraction)
     funnel     -- ordered k-step funnel (greedy-earliest chain,
                   horizon-capped, conversion + step-through rates)
     paths      -- first-order event-transition matrix (the funnel's
                   exploratory complement)
     downsample -- LTTB visual-fidelity decimation for serving long
                   series at dashboard resolution
-    changepoints -- CUSUM change-point detection over metric series
-    skew       -- salted two-phase aggregation for hot keys + skew report
     asof       -- as-of (point-in-time) join
     rangejoin  -- range (interval) join by window-length bucketing
     windows    -- running aggregates, lag/lead, sessionization (§2.F)

@@ -21,6 +21,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """48g, or half the host's physical memory when that is less: one
+    local-mode JVM holds the whole engine, and a heap sized past the
+    host lets it grow until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
+
+
 def build_session(
     app_name: str = "cassandra-iot-pipeline-spark",
     master: str | None = None,
@@ -119,7 +127,10 @@ def build_session(
             "true",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

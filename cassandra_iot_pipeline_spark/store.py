@@ -37,7 +37,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -476,15 +475,14 @@ def compact_epochs(
 
     ONLY for stores whose reads are order-free folds of the whole
     visible part set (the associative fold families: union, distinct,
-    sum re-group, HLL union) — relabeling epochs under the max folded
-    number M is invisible to such readers (pinned in tests). Stores
-    whose WRITE path reads "strictly older epoch dirs" by directory
-    number (the SCD2 pipeline's ``_raw_before``) must NOT
-    tail-fold mid-stream: relabeling changes what a replayed old epoch
-    would see. Crash-recoverable via :func:`recover_tail_fold` (the
-    staged dir carries every folded epoch's content; the commit is
-    re-runnable). Returns M, or None when fewer than two epochs are
-    foldable."""
+    sum re-group) — relabeling epochs under the max folded number M is
+    invisible to such readers (pinned in tests). Stores whose WRITE
+    path reads "strictly older epoch dirs" by directory number must
+    NOT tail-fold mid-stream: relabeling changes what a replayed old
+    epoch would see. Crash-recoverable via :func:`recover_tail_fold`
+    (the staged dir carries every folded epoch's content; the commit
+    is re-runnable). Returns M, or None when fewer than two epochs
+    are foldable."""
     if keep_recent < 0:
         raise ValueError(f"keep_recent must be >= 0, got {keep_recent}")
     recover_tail_fold(spark, path)
@@ -536,12 +534,7 @@ class MergeableStore:
 
     A family supplies ``schema``, :meth:`project` and :meth:`fold` by
     subclassing; a sub-store of a multi-directory family passes
-    ``fold`` to the constructor instead. Families whose write path
-    reads strictly-older epochs by number set ``tail_foldable = False``
-    (a tail fold relabels epochs under its max, which would change
-    what a replayed old epoch sees)."""
-
-    tail_foldable = True
+    ``fold`` to the constructor instead."""
 
     def __init__(
         self,
@@ -625,12 +618,6 @@ class MergeableStore:
     def compact_tail(
         self, spark: SparkSession, keep_recent: int = 0
     ) -> int | None:
-        if not self.tail_foldable:
-            raise ValueError(
-                f"{type(self).__name__} reads strictly-older epochs by "
-                "number in its write path: a tail fold would change what "
-                "a replayed epoch sees — use compact()"
-            )
         return compact_epochs(
             spark,
             self.path,
@@ -638,33 +625,6 @@ class MergeableStore:
             fold=self.fold,
             keep_recent=keep_recent,
         )
-
-
-def declared_types(
-    updates_schema: str | StructType | None,
-    defaults: dict[str, str],
-    what: str,
-    source: str = "events",
-) -> dict[str, str]:
-    """SQL type of each column named in ``defaults``: read from
-    ``updates_schema`` (the DDL the stream reader uses) when given,
-    else the defaults. A column absent from a given schema raises —
-    a store's column types are part of its on-disk contract."""
-    if updates_schema is None:
-        return dict(defaults)
-    st = (
-        updates_schema
-        if isinstance(updates_schema, StructType)
-        else StructType.fromDDL(updates_schema)
-    )
-    types = {f.name: f.dataType.simpleString() for f in st.fields}
-    missing = [c for c in defaults if c not in types]
-    if missing:
-        raise ValueError(
-            f"{what}: columns {missing} absent from {source} schema "
-            f"{sorted(types)}"
-        )
-    return {c: types[c] for c in defaults}
 
 
 def run_foreach_batch(

@@ -7,9 +7,9 @@ many that is. This monitor answers "what would each candidate delay
 have dropped?" from the stream itself, per epoch.
 
 Per epoch: the watermark the engine would hold BEFORE this batch is
-the max event time over STRICTLY earlier epochs (the SCD2
-``_dim_before`` discipline — a replayed epoch must not see its own
-first attempt, which also makes the report idempotent under replay);
+the max event time over STRICTLY earlier epochs (a replayed epoch
+must not see its own first attempt, which also makes the report
+idempotent under replay);
 the batch's events are then counted against ``wm_before - delay`` for
 each candidate delay. A row lands per epoch:
 (epoch, wm_before_us, n, dropped@delay..., max_lag_us, batch_max_us).

@@ -67,25 +67,3 @@ def test_hourly_rollup_single_row(spark):
     src = events.head()
     assert row.event_count == 1
     assert row.avg_value == row.max_value == row.min_value == src.value
-
-
-def test_salted_rollup_bit_identical(spark):
-    from cassandra_iot_pipeline_spark.operators.skew import (
-        salted_count_distinct,
-        salted_hourly_rollup,
-    )
-
-    events = load_table(spark, SF_DIR, "events")
-    plain = sorted(map(tuple, hourly_rollup(events).collect()))
-    salted = sorted(map(tuple, salted_hourly_rollup(events, n_salts=8).collect()))
-    assert plain == salted
-    # salted distinct count equals exact distinct count
-    exact = (
-        events.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n_distinct"))
-        .collect()
-    )
-    got = salted_count_distinct(events, ["event_type"], "user_id", 8).collect()
-    assert {(r.event_type, r.n_distinct) for r in exact} == {
-        (r.event_type, r.n_distinct) for r in got
-    }

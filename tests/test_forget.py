@@ -1,286 +1,33 @@
-"""Key-deletion propagation (forget.py): table rewrite equals the
-anti-join, no-hit calls never rewrite, store deletion is hit-directed
-(untouched parts keep their files), downstream reads see the forgotten
-key gone (cohort matrix, SCD2 dimension), idempotent re-run, and the
-full-part-erasure edge."""
+"""Store-directory hygiene for in-place store rewrites: a swap or an
+interrupted rewrite of a store directory can leave siblings such as
+``epoch=1.old`` or ``base_upto=0.compacting`` next to the real parts,
+and store.py::store_parts must skip them instead of parsing their
+suffix as a part number."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
-from pyspark.sql import functions as F
-
-from cassandra_iot_pipeline_spark.catalog import load_table
-from cassandra_iot_pipeline_spark.forget import (
-    forget_keys_in_store,
-    forget_keys_in_table,
-)
-from cassandra_iot_pipeline_spark.operators.cohorts import retention_matrix
-from cassandra_iot_pipeline_spark.streaming.cohorts import CohortPipeline
-from tests.conftest import SF_DIR
-
-DAY = 86_400
-
-
-def _day(n: int, hour: int = 12) -> dt.datetime:
-    return dt.datetime(1970, 1, 1) + dt.timedelta(days=n, hours=hour)
-
-
-def _keys(spark, ids, name="user_id"):
-    return spark.createDataFrame([(i,) for i in ids], f"{name} BIGINT")
-
-
-# -- tables ---------------------------------------------------------------
-
-
-def test_table_forget_equals_anti_join(spark, tmp_path, duck):
-    path = str(tmp_path / "events")
-    events = load_table(spark, SF_DIR, "events")
-    events.write.parquet(path)
-    victims = [1, 2, 3]
-    rep = forget_keys_in_table(spark, path, _keys(spark, victims), ["user_id"])
-    expect_removed = events.filter(F.col("user_id").isin(victims)).count()
-    assert rep == {"rows_removed": expect_removed, "rewritten": True}
-    assert expect_removed > 0
-    after = spark.read.parquet(path)
-    assert after.filter(F.col("user_id").isin(victims)).count() == 0
-    assert after.count() == events.count() - expect_removed
-
-
-def test_table_no_hit_skips_rewrite(spark, tmp_path):
-    path = str(tmp_path / "events")
-    load_table(spark, SF_DIR, "events").limit(100).write.parquet(path)
-    before = sorted(os.listdir(path))
-    mtimes = {f: os.path.getmtime(os.path.join(path, f)) for f in before}
-    rep = forget_keys_in_table(
-        spark, path, _keys(spark, [10**12]), ["user_id"]
-    )
-    assert rep == {"rows_removed": 0, "rewritten": False}
-    assert sorted(os.listdir(path)) == before
-    assert all(
-        os.path.getmtime(os.path.join(path, f)) == mtimes[f] for f in before
-    )
-
-
-def test_table_partitioned_layout_preserved(spark, tmp_path):
-    path = str(tmp_path / "pe")
-    df = spark.createDataFrame(
-        [(i, i % 3, f"v{i}") for i in range(30)],
-        "user_id BIGINT, part BIGINT, v STRING",
-    )
-    df.repartition("part").write.partitionBy("part").parquet(path)
-    rep = forget_keys_in_table(
-        spark, path, _keys(spark, [0, 1]), ["user_id"], partition_by="part"
-    )
-    assert rep["rows_removed"] == 2
-    names = os.listdir(path)
-    assert any(n.startswith("part=") for n in names)
-    after = spark.read.parquet(path)
-    assert after.count() == 28
-    assert set(after.columns) == {"user_id", "part", "v"}
-
-
-# -- stores ---------------------------------------------------------------
+SCHEMA = "user_id BIGINT, cnt BIGINT"
 
 BATCHES = [
-    [(1, _day(0)), (2, _day(0)), (1, _day(0, hour=20))],
-    [(1, _day(1)), (3, _day(1))],
-    [(3, _day(2)), (1, _day(3)), (2, _day(2))],
+    [(1, 2), (2, 1)],
+    [(1, 1), (3, 5)],
+    [(3, 1), (2, 4)],
 ]
-
-SCHEMA = "user_id BIGINT, ts TIMESTAMP"
-
-
-def _cohort_store(spark, tmp_path, compact: bool):
-    pipe = CohortPipeline(str(tmp_path / "store"), period_seconds=DAY)
-    for i, rows in enumerate(BATCHES):
-        pipe.write_batch(spark.createDataFrame(rows, SCHEMA), epoch_id=i)
-    if compact:
-        pipe.compact(spark)
-    return pipe
-
-
-def test_store_forget_is_hit_directed(spark, tmp_path):
-    pipe = _cohort_store(spark, tmp_path, compact=False)
-    # user 3 appears in epochs 1 and 2 only — epoch 0 must not rewrite
-    e0 = f"{pipe.pts_dir}/epoch=0"
-    mtimes = {
-        f: os.path.getmtime(os.path.join(e0, f)) for f in os.listdir(e0)
-    }
-    report = forget_keys_in_store(
-        spark, pipe.pts_dir, _keys(spark, [3], "k"), ["k"]
-    )
-    by_part = {r["part"]: r for r in report}
-    assert by_part["epoch=0"] == {
-        "part": "epoch=0", "rows_removed": 0, "rewritten": False
-    }
-    assert by_part["epoch=1"]["rows_removed"] == 1
-    assert by_part["epoch=2"]["rows_removed"] == 1
-    assert all(
-        os.path.getmtime(os.path.join(e0, f)) == mtimes[f] for f in mtimes
-    )
-
-
-def test_store_forget_matches_source_deletion(spark, tmp_path):
-    pipe = _cohort_store(spark, tmp_path, compact=True)
-    forget_keys_in_store(spark, pipe.pts_dir, _keys(spark, [2], "k"), ["k"])
-    survivors = [
-        r for b in BATCHES for r in b if r[0] != 2
-    ]
-    want = retention_matrix(
-        spark.createDataFrame(survivors, SCHEMA), period_seconds=DAY
-    )
-    got = sorted(tuple(r) for r in pipe.matrix(spark).collect())
-    assert got == sorted(tuple(r) for r in want.collect())
-
-
-def test_store_forget_rerun_is_idempotent(spark, tmp_path):
-    pipe = _cohort_store(spark, tmp_path, compact=False)
-    forget_keys_in_store(spark, pipe.pts_dir, _keys(spark, [1], "k"), ["k"])
-    again = forget_keys_in_store(
-        spark, pipe.pts_dir, _keys(spark, [1], "k"), ["k"]
-    )
-    assert all(not r["rewritten"] for r in again)
-    assert pipe.points(spark).filter(F.col("k") == 1).count() == 0
-
-
-def test_store_forget_scd2_dimension(spark, tmp_path):
-    from cassandra_iot_pipeline_spark.streaming.scd2 import Scd2Pipeline
-
-    sch = "user_id BIGINT, event_type STRING, ts TIMESTAMP"
-    pipe = Scd2Pipeline(str(tmp_path / "scd2"), updates_schema=sch)
-    pipe.write_batch(
-        spark.createDataFrame(
-            [(1, "a", _day(0)), (2, "b", _day(0))], sch
-        ),
-        epoch_id=0,
-    )
-    pipe.write_batch(
-        spark.createDataFrame([(1, "c", _day(1))], sch), epoch_id=1
-    )
-    assert (
-        pipe.dimension(spark).filter(F.col("user_id") == 1).count() == 2
-    )
-    report = forget_keys_in_store(
-        spark, pipe.dim_dir, _keys(spark, [1]), ["user_id"]
-    )
-    assert sum(r["rows_removed"] for r in report) >= 2
-    dim = pipe.dimension(spark)
-    assert dim.filter(F.col("user_id") == 1).count() == 0
-    assert dim.filter(F.col("user_id") == 2).count() == 1
-
-
-def test_store_full_part_erasure(spark, tmp_path):
-    pipe = _cohort_store(spark, tmp_path, compact=False)
-    # epoch 1 contains only users 1 and 3 — forgetting both empties it
-    report = forget_keys_in_store(
-        spark, pipe.pts_dir, _keys(spark, [1, 3], "k"), ["k"]
-    )
-    by_part = {r["part"]: r for r in report}
-    assert by_part["epoch=1"]["rows_removed"] == 2
-    # the emptied epoch stays readable and the store serves user 2 only
-    pts = pipe.points(spark)
-    assert sorted(r["k"] for r in pts.select("k").distinct().collect()) == [2]
-
-
-def test_store_forget_preserves_partitioned_base(spark, tmp_path):
-    """A store compacted into a partitioned base (the ANN/postings
-    layout) keeps its partition directories through a deletion
-    rewrite, and readers keep pruning on them."""
-    from cassandra_iot_pipeline_spark.store import (
-        compact_store,
-        read_store,
-    )
-
-    store = str(tmp_path / "s")
-    schema = "user_id BIGINT, grp BIGINT, v STRING"
-    for e in range(3):
-        spark.createDataFrame(
-            [(10 * e + i, i % 4, f"v{e}{i}") for i in range(8)], schema
-        ).write.mode("overwrite").parquet(f"{store}/epoch={e}")
-    empty = spark.createDataFrame([], schema)
-    assert compact_store(spark, store, empty, partition_by="grp") == 2
-    victims = _keys(spark, [0, 11, 22])
-    report = forget_keys_in_store(
-        spark, store, victims, ["user_id"], base_partition_by="grp"
-    )
-    assert sum(r["rows_removed"] for r in report) == 3
-    base = os.path.join(store, "base_upto=2")
-    assert any(n.startswith("grp=") for n in os.listdir(base))
-    after = read_store(spark, store, empty)
-    assert after.count() == 21
-    assert after.filter(F.col("user_id").isin([0, 11, 22])).count() == 0
-    # partition column survives with usable values
-    assert after.filter(F.col("grp") == 2).count() > 0
-
-
-def test_store_forget_crash_mid_swap_is_recoverable(spark, tmp_path):
-    """A crash between commit_swap's two renames leaves the part
-    missing with its only copies in the hidden dot-siblings; a re-run
-    of forget_keys_in_store must recover the part BEFORE listing and
-    then complete the deletion (ADVICE r8: the old sibling naming made
-    store_parts crash on the leftovers, so recovery was unreachable)."""
-    import shutil
-
-    pipe = _cohort_store(spark, tmp_path, compact=False)
-    e1 = f"{pipe.pts_dir}/epoch=1"
-    # Simulate the crash window: original moved aside, new copy staged.
-    shutil.copytree(e1, f"{pipe.pts_dir}/.epoch=1.compacting")
-    os.rename(e1, f"{pipe.pts_dir}/.epoch=1.old")
-    assert not os.path.exists(e1)
-    report = forget_keys_in_store(
-        spark, pipe.pts_dir, _keys(spark, [3], "k"), ["k"]
-    )
-    by_part = {r["part"]: r for r in report}
-    assert by_part["epoch=1"]["rows_removed"] == 1
-    # swap leftovers are gone and the store reads whole
-    assert not any(
-        n.endswith((".compacting", ".old")) for n in os.listdir(pipe.pts_dir)
-    )
-    assert pipe.points(spark).filter(F.col("k") == 3).count() == 0
 
 
 def test_store_parts_skip_stray_siblings(spark, tmp_path):
     """store_parts must ignore directory names whose suffix is not a
-    pure integer (swap leftovers under the pre-r9 naming, editor
+    pure integer (swap or rewrite leftovers, editor
     droppings) instead of raising ValueError."""
     from cassandra_iot_pipeline_spark.store import store_parts
 
-    pipe = _cohort_store(spark, tmp_path, compact=False)
-    os.makedirs(f"{pipe.pts_dir}/epoch=1.old")
-    os.makedirs(f"{pipe.pts_dir}/base_upto=0.compacting")
-    base_path, upto, epochs = store_parts(spark, pipe.pts_dir)
+    store = str(tmp_path / "store")
+    for i, rows in enumerate(BATCHES):
+        spark.createDataFrame(rows, SCHEMA).write.parquet(f"{store}/epoch={i}")
+    os.makedirs(f"{store}/epoch=1.old")
+    os.makedirs(f"{store}/base_upto=0.compacting")
+    base_path, upto, epochs = store_parts(spark, store)
     assert base_path is None and upto == -1
     assert [e for e, _ in epochs] == [0, 1, 2]
-
-
-def test_replace_store_dir_renames_custom_epoch_col(spark, tmp_path):
-    """The store layout contract is literal 'epoch=N' dir names; a
-    frame whose epoch column is named differently must be renamed
-    before the partitioned write — otherwise store_parts sees zero
-    parts and the rebuilt store reads back silently empty."""
-    import pytest
-
-    from cassandra_iot_pipeline_spark.forget import replace_store_dir
-    from cassandra_iot_pipeline_spark.store import read_store, store_parts
-
-    store = str(tmp_path / "s")
-    frame = spark.createDataFrame(
-        [(0, 1, 5), (0, 2, 7), (1, 1, 3)], "batch BIGINT, k BIGINT, v BIGINT"
-    )
-    replace_store_dir(spark, store, frame, epoch_col="batch")
-    _, _, epochs = store_parts(spark, store)
-    assert [e for e, _ in epochs] == [0, 1]
-    got = sorted(
-        tuple(r)
-        for r in read_store(
-            spark, store, spark.createDataFrame([], "k BIGINT, v BIGINT")
-        ).collect()
-    )
-    assert got == [(1, 3), (1, 5), (2, 7)]
-
-    # a frame carrying BOTH names is ambiguous -> loud error
-    both = frame.withColumn("epoch", F.lit(0))
-    with pytest.raises(ValueError, match="ambiguous"):
-        replace_store_dir(spark, str(tmp_path / "s2"), both, epoch_col="batch")

@@ -39,24 +39,14 @@ KEPT = {
     "functions.sampling": "LLM-data text family: deterministic splits and samples",
     "sources.jsonl": "LLM-data text family: JSONL corpus landing",
     "plans": "plan-pin helpers used by tests/test_plans.py and tools/dump_plans.py",
-    "streaming.metrics": "pending the ROADMAP observability item: wire into ingest_stream or delete",
     # deferred cuts (ROADMAP item 4): no keep rule holds; each goes in a
     # later prune together with the tests that exercise it
-    "forget": "deferred cut: key-deletion propagation across tables and stores",
     "functions.bpe": "deferred cut: BPE tokenizer training and encoding",
     "functions.lm": "deferred cut: n-gram language-model perplexity scoring",
     "functions.expectations": "deferred cut: declarative data-quality checks",
-    "operators.changepoints": "deferred cut: CUSUM change-point detection",
-    "operators.cohorts": "deferred cut: cohort retention and growth accounting",
     "operators.downsample": "deferred cut: LTTB series downsampling",
     "operators.paths": "deferred cut: user path and next-step analysis",
-    "operators.skew": "deferred cut: salted aggregates and the skew report",
     "streaming.audit": "deferred cut: continuous expectations audit",
-    "streaming.cardinality": "deferred cut: continuous HLL distinct counts",
-    "streaming.cohorts": "deferred cut: continuous cohort store",
-    "streaming.ohlc": "deferred cut: continuous OHLC bars",
-    "streaming.sample": "deferred cut: continuous priority sample",
-    "streaming.scd2": "deferred cut: continuous SCD2 history",
 }
 
 ENTRY_POINTS = [

@@ -1,13 +1,12 @@
 """Tail compaction (store.py::compact_epochs): folds the delta tail
 into one epoch dir WITHOUT touching the base — reader-invisible for
-the associative fold families (bitwise for distinct/sum folds,
-estimate-level for HLL), byte-untouched base, keep_recent semantics,
-and crash recovery in both directions (complete stage re-commits,
-incomplete stage is discarded losslessly)."""
+an associative fold (bitwise for the sum fold), byte-untouched base,
+keep_recent semantics, and crash recovery in both directions
+(complete stage re-commits, incomplete stage is discarded
+losslessly)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
 
 from pyspark.sql import functions as F
@@ -259,86 +258,6 @@ def test_recovery_discards_an_incomplete_stage(spark, tmp_path):
     assert [e for e, _ in epochs] == [0, 1, 2, 3]
 
 
-def test_pipeline_folds_cohort_distinct_and_hll_estimates(spark, tmp_path):
-    """The associative store families tail-fold invisibly: the cohort
-    point store bitwise (distinct fold), the cardinality store at the
-    estimate level (HLL union)."""
-    from cassandra_iot_pipeline_spark.streaming.cardinality import (
-        CardinalityPipeline,
-    )
-    from cassandra_iot_pipeline_spark.streaming.cohorts import CohortPipeline
-
-    def day(n):
-        return dt.datetime(2024, 1, 1 + n, 12)
-
-    rows = [
-        [(1, "a", day(0)), (2, "a", day(0))],
-        [(1, "b", day(1)), (3, "a", day(1))],
-        [(2, "a", day(2)), (3, "b", day(2))],
-    ]
-    sch = "user_id BIGINT, event_type STRING, ts TIMESTAMP"
-
-    co = CohortPipeline(str(tmp_path / "co"), period_seconds=86_400)
-    ca = CardinalityPipeline(str(tmp_path / "ca"))
-    for i, b in enumerate(rows):
-        frame = spark.createDataFrame(b, sch)
-        co.write_batch(frame, epoch_id=i)
-        ca.write_batch(frame, epoch_id=i)
-
-    co_before = sorted(tuple(r) for r in co.matrix(spark).collect())
-    ca_before = sorted(tuple(r) for r in ca.estimates(spark).collect())
-    assert compact_epochs(
-        spark,
-        co.pts_dir,
-        spark.createDataFrame([], co.schema),
-        fold=lambda df: df.distinct(),
-    ) == 2
-    assert compact_epochs(
-        spark,
-        ca.sk_dir,
-        spark.createDataFrame([], ca.schema),
-        fold=lambda df: df.groupBy(*ca.out_cols).agg(
-            F.hll_union_agg("sk").alias("sk")
-        ),
-    ) == 2
-    assert sorted(tuple(r) for r in co.matrix(spark).collect()) == co_before
-    assert (
-        sorted(tuple(r) for r in ca.estimates(spark).collect()) == ca_before
-    )
-
-
-def test_pipeline_compact_tail_methods(spark, tmp_path):
-    """The convenience methods wire the pipelines' own folds through
-    compact_epochs: the distinct store bitwise-unchanged, the HLL store
-    estimate-unchanged."""
-    from cassandra_iot_pipeline_spark.streaming.cardinality import (
-        CardinalityPipeline,
-    )
-    from cassandra_iot_pipeline_spark.streaming.cohorts import CohortPipeline
-
-    def day(n):
-        return dt.datetime(2024, 1, 1 + n, 12)
-
-    rows = [
-        [(1, "a", day(0)), (2, "a", day(0))],
-        [(1, "b", day(1)), (3, "a", day(1))],
-        [(2, "a", day(2)), (3, "b", day(2))],
-    ]
-    sch = "user_id BIGINT, event_type STRING, ts TIMESTAMP"
-    co = CohortPipeline(str(tmp_path / "co"), period_seconds=86_400)
-    ca = CardinalityPipeline(str(tmp_path / "ca"))
-    for i, b in enumerate(rows):
-        frame = spark.createDataFrame(b, sch)
-        co.write_batch(frame, epoch_id=i)
-        ca.write_batch(frame, epoch_id=i)
-    co_b = sorted(tuple(r) for r in co.matrix(spark).collect())
-    ca_b = sorted(tuple(r) for r in ca.estimates(spark).collect())
-    assert co.compact_tail(spark) == 2
-    assert ca.compact_tail(spark, keep_recent=1) == 1
-    assert sorted(tuple(r) for r in co.matrix(spark).collect()) == co_b
-    assert sorted(tuple(r) for r in ca.estimates(spark).collect()) == ca_b
-
-
 def test_store_stats_doctor(spark, tmp_path):
     """store_stats reports the visible part set, per-part files/bytes,
     per-part rows (one job), hygiene findings (shadowed epochs, stale
@@ -372,46 +291,6 @@ def test_store_stats_doctor(spark, tmp_path):
     assert st["stray"] == ["garbage"]
     assert st["swap_leftovers"] == [".epoch=9.old"]
     assert "recover first" in st["recommendation"]
-
-
-def test_every_associative_family_compact_tails(spark, tmp_path):
-    """r9 verdict #7: every associative-fold store family exposes a
-    working compact_tail. Exercise the r10-wired order-statistic
-    families end-to-end: write epochs, tail-fold, assert the read is
-    unchanged and the epoch tail shrank. (cohorts/cardinality are
-    pinned above; SCD2 is the documented exclusion — its write path
-    reads strictly-older epoch dirs by number.)"""
-    from cassandra_iot_pipeline_spark.streaming.ohlc import OhlcPipeline
-    from cassandra_iot_pipeline_spark.streaming.sample import (
-        PrioritySamplePipeline,
-    )
-
-    def ev(i, h, v):
-        return (i, dt.datetime(2024, 1, 1, h, i % 60), 1 + i % 3, float(v))
-
-    sch = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
-    batches = [
-        [ev(1, 9, 5), ev(2, 9, 7), ev(3, 10, 1)],
-        [ev(4, 9, 6), ev(5, 11, 2)],
-        [ev(6, 10, 9), ev(7, 11, 3), ev(8, 9, 4)],
-    ]
-    oh = OhlcPipeline(str(tmp_path / "oh"))
-    sa = PrioritySamplePipeline(str(tmp_path / "sa"), k=3)
-    for i, rows in enumerate(batches):
-        frame = spark.createDataFrame(rows, sch)
-        for pipe in (oh, sa):
-            pipe.write_batch(frame, epoch_id=i)
-
-    reads = {
-        "oh": lambda: sorted(map(tuple, oh.bars(spark).collect())),
-        "sa": lambda: sorted(map(tuple, sa.sample(spark).collect())),
-    }
-    before = {name: read() for name, read in reads.items()}
-    for pipe, d in ((oh, oh.bars_dir), (sa, sa.res_dir)):
-        assert pipe.compact_tail(spark) == 2
-        _, _, epochs = store_parts(spark, d)
-        assert [e for e, _ in epochs] == [2]
-    assert {name: read() for name, read in reads.items()} == before
 
 
 def test_substring_store_compact_tail(spark, tmp_path):

@@ -255,28 +255,6 @@ def _extras(spark, sf_dir):
             "the snapshot's own.",
             _scd2_diff(spark, sf_dir),
         ),
-        "scd2_stream_write": (
-            "Streaming SCD2 write path (r8, the lifted r7 weak flag): "
-            "the store side is semi-joined to the batch's broadcast "
-            "touched-key set BELOW the winner-rule window, so the "
-            "window's key Exchange carries batch-proportional rows — "
-            "the accumulated dimension never reshuffles per epoch "
-            "(per-epoch seconds measured flat against 10x dimension "
-            "growth, SCALE.md --scd2-stream; structural test at "
-            "tests/test_streaming_scd2.py).",
-            _scd2_stream_write(spark, sf_dir),
-        ),
-        "retention_matrix": (
-            "Cohort retention (r8 single-pass rebuild, r7 verdict "
-            "#2): ONE user-keyed hash aggregation (min for the cohort, "
-            "collect_set for the distinct active periods) followed by "
-            "an explode and a cohort-keyed count — no join anywhere "
-            "and at most three Exchanges end to end (pinned in "
-            "tests/test_cohorts.py); the pre-r8 form joined the "
-            "cohort frame back onto events and re-exchanged the "
-            "events-sized side.",
-            _retention_matrix(spark, sf_dir),
-        ),
         "funnel_trend": (
             "Per-anchor-period funnel (r10): the SAME one user-keyed "
             "exchange as the plain funnel (user_hits), then a "
@@ -352,36 +330,6 @@ def _scd2_diff(spark, sf_dir):
         "unix_micros(min(ts))", "unix_micros(max(ts))"
     ).first()
     return scd2_diff(dim, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3)
-
-
-def _scd2_stream_write(spark, sf_dir):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.streaming.scd2 import Scd2Pipeline
-
-    events = load_table(spark, sf_dir, "events")
-    pipe = Scd2Pipeline(tempfile.mkdtemp(prefix="plans_scd2_"))
-    pipe.write_batch(events.filter(F.col("event_id") % 3 == 0), epoch_id=0)
-    pipe.write_batch(events.filter(F.col("event_id") % 3 == 1), epoch_id=1)
-    batch = events.filter(F.col("event_id") % 3 == 2)
-    touched = F.broadcast(batch.select(*pipe.keys).distinct())
-    return pipe._winner_rows(
-        pipe._raw_before(spark, 2).join(touched, pipe.keys, "semi")
-    ).drop("epoch")
-
-
-def _retention_matrix(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.cohorts import (
-        retention_matrix,
-    )
-
-    return retention_matrix(
-        load_table(spark, sf_dir, "events"), period_seconds=86_400
-    )
 
 
 def _funnel_trend(spark, sf_dir):

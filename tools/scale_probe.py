@@ -20,9 +20,6 @@ from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup  # noqa: E4
 from cassandra_iot_pipeline_spark.operators.serving import (  # noqa: E402
     latest_n_per_device,
 )
-from cassandra_iot_pipeline_spark.operators.skew import (  # noqa: E402
-    salted_hourly_rollup,
-)
 from cassandra_iot_pipeline_spark.operators.upsert import latest_by_pk  # noqa: E402
 from cassandra_iot_pipeline_spark.functions.dedup import (  # noqa: E402
     minhash_lsh_pairs,
@@ -105,7 +102,6 @@ def main() -> None:
     # requested flag sections (saves ~20 min per targeted probe run)
     if "--only" not in sys.argv:
         timed("hourly_rollup", hourly_rollup(events), results)
-        timed("salted_hourly_rollup", salted_hourly_rollup(events), results)
         timed("latest_n_per_device", latest_n_per_device(events, 3), results)
         timed(
             "upsert_dedup",
@@ -953,74 +949,6 @@ def main() -> None:
         finally:
             _sh3.rmtree(sa_dir, ignore_errors=True)
 
-    if "--scd2-stream" in sys.argv:
-        # r8 (r7 verdict #1): the streaming SCD2 maintainer's
-        # per-epoch cost must track the BATCH, not the accumulated
-        # dimension — the write path semi-prunes the raw store to the
-        # batch's touched keys BELOW the winner-rule window, so the
-        # per-epoch window exchange carries batch-proportional rows.
-        # 10 equal-sized epochs, each touching a DISJOINT key range:
-        # the dimension grows 10x while every batch stays the same
-        # size — flat-ish per-epoch times = the prune works (the old
-        # plan re-shuffled the whole dimension every epoch).
-        import shutil as _sh2
-
-        from cassandra_iot_pipeline_spark.streaming.scd2 import (
-            Scd2Pipeline,
-        )
-
-        def scd2_updates(n_keys: int, start: int, epoch: int):
-            # 2 updates per key (real version history), hash attrs,
-            # collision-free (key, ts) — partition-invariant, no
-            # driver data
-            df = spark.range(2 * n_keys)
-            key = F.lit(start) + F.pmod(F.col("id"), F.lit(n_keys))
-            ts = F.timestamp_millis(
-                F.lit(1704067200000)
-                + (F.lit(epoch) * 400_000 + F.col("id")) * 1000
-            )
-            seg = F.conv(
-                F.pmod(F.xxhash64(F.lit("s"), F.col("id")), F.lit(16)),
-                10, 16,
-            )
-            return df.select(
-                key.alias("user_id"), ts.alias("ts"), seg.alias("seg")
-            )
-
-        sc_dir = _tempfile.mkdtemp(prefix="scale_probe_scd2_")
-        try:
-            warm = Scd2Pipeline(
-                f"{sc_dir}/warm", "user_id", ("seg",), "ts"
-            )
-            warm.write_batch(
-                scd2_updates(1_000, 0, 0).localCheckpoint(eager=True), 0
-            )
-            pipe = Scd2Pipeline(
-                f"{sc_dir}/store", "user_id", ("seg",), "ts",
-                compact_every=4,
-            )
-            n_keys = 50_000
-            sc_times = []
-            for e in range(10):
-                batch = scd2_updates(
-                    n_keys, e * n_keys, e
-                ).localCheckpoint(eager=True)
-                t0 = time.perf_counter()
-                pipe.write_batch(batch, epoch_id=e)
-                sc_times.append(round(time.perf_counter() - t0, 2))
-            results["scd2_stream_epoch_secs"] = sc_times  # type: ignore[assignment]
-            results["scd2_stream_dim_rows"] = pipe.dimension(
-                spark
-            ).count()
-            print(
-                f"[probe] scd2_stream 10x{n_keys}-key epochs: "
-                f"{sc_times} ({results['scd2_stream_dim_rows']} "
-                "dimension rows)",
-                file=sys.stderr, flush=True,
-            )
-        finally:
-            _sh2.rmtree(sc_dir, ignore_errors=True)
-
     if "--dedup-batch" in sys.argv:
         # r6 verdict item #5: the r6 ADC-payload fix removed what r5
         # called "the binding constraint on raising dedup batch
@@ -1222,45 +1150,20 @@ def main() -> None:
             ),
             results,
         )
-        from cassandra_iot_pipeline_spark.operators.cohorts import (
-            growth_accounting,
-            rolling_active,
-        )
-
-        timed(
-            "rolling_active_wau",
-            rolling_active(events, 7, period_seconds=86_400),
-            results,
-        )
-        timed(
-            "growth_accounting_daily",
-            growth_accounting(events, period_seconds=86_400),
-            results,
-        )
         timed("expectations_audit", events_expectations(events), results)
         timed("lttb_500", lttb(events, 500, key="user_id"), results)
 
     if "--bpe-stores" in sys.argv:
         # r8 third arc: BPE training cost per merge over a vocab-sized
-        # word table, the HLL cardinality store's per-epoch write
-        # flatness, hit-directed deletion, and the OHLC aggregation.
+        # word table, and the OHLC aggregation.
         import tempfile
 
-        from cassandra_iot_pipeline_spark.forget import forget_keys_in_store
         from cassandra_iot_pipeline_spark.functions.bpe import (
             bpe_piece_counts,
             bpe_train,
         )
         from cassandra_iot_pipeline_spark.operators.timeseries import (
             ohlc_bars,
-        )
-        from cassandra_iot_pipeline_spark.streaming.cardinality import (
-            CardinalityPipeline,
-            distinct_counts,
-            period_index,
-        )
-        from cassandra_iot_pipeline_spark.streaming.cohorts import (
-            CohortPipeline,
         )
 
         # BPE: the claim under test is that per-merge cost is bounded
@@ -1316,63 +1219,10 @@ def main() -> None:
             results,
         )
 
-        # cardinality store: 5 epochs of 4M events each; per-epoch
-        # write must stay flat (the store is never read on write)
-        card_dir = tempfile.mkdtemp(prefix="probe_card_")
-        card = CardinalityPipeline(card_dir, period_seconds=86_400)
-        per_epoch = []
-        for i in range(5):
-            batch = probe_events(spark, 4_000_000, n_devices)
-            t0 = time.perf_counter()
-            card.write_batch(batch, epoch_id=i)
-            per_epoch.append(round(time.perf_counter() - t0, 2))
-        results["cardinality_epoch_secs"] = per_epoch
-        t0 = time.perf_counter()
-        card.estimates(spark).write.format("noop").mode("overwrite").save()
-        results["cardinality_read_sec"] = round(time.perf_counter() - t0, 2)
-        print(
-            f"[probe] cardinality epochs {per_epoch}, read "
-            f"{results['cardinality_read_sec']}s",
-            file=sys.stderr, flush=True,
-        )
-        timed(
-            "distinct_counts_exactish_20m",
-            distinct_counts(
-                events.withColumn("pi", period_index("ts", 86_400)),
-                ["event_type", "pi"],
-                "user_id",
-            ),
-            results,
-        )
-
-        # deletion: 8-epoch cohort point store, forget 100 of n_devices
-        # keys — the labeled hit scan + only-hit-parts rewrite
-        fdir = tempfile.mkdtemp(prefix="probe_forget_")
-        cpipe = CohortPipeline(f"{fdir}/s", period_seconds=86_400)
-        for i in range(8):
-            cpipe.write_batch(
-                probe_events(spark, 1_000_000, n_devices), epoch_id=i
-            )
-        victims = spark.range(100).select(
-            F.pmod(F.xxhash64(F.lit("vic"), F.col("id")), F.lit(n_devices)).alias("k")
-        )
-        t0 = time.perf_counter()
-        rep = forget_keys_in_store(spark, cpipe.pts_dir, victims, ["k"])
-        results["forget_8epoch_store_sec"] = round(time.perf_counter() - t0, 2)
-        results["forget_parts_rewritten"] = sum(r["rewritten"] for r in rep)
-        print(
-            f"[probe] forget store: {results['forget_8epoch_store_sec']}s, "
-            f"{results['forget_parts_rewritten']}/{len(rep)} parts rewritten",
-            file=sys.stderr, flush=True,
-        )
-
         timed("ohlc_bars_hourly", ohlc_bars(events), results)
 
         from cassandra_iot_pipeline_spark.functions.sampling import (
             priority_sample,
-        )
-        from cassandra_iot_pipeline_spark.operators.cohorts import (
-            retention_matrix_segmented,
         )
         from cassandra_iot_pipeline_spark.operators.stats import (
             mad_outliers,
@@ -1381,19 +1231,6 @@ def main() -> None:
         timed(
             "priority_sample_k1000_20m",
             priority_sample(events, "event_id", "value", 1000),
-            results,
-        )
-        seg_dim = spark.range(n_devices).select(
-            F.col("id").alias("user_id"),
-            F.concat(
-                F.lit("seg"), F.pmod(F.xxhash64("id"), F.lit(5))
-            ).alias("segment"),
-        )
-        timed(
-            "retention_matrix_segmented_daily",
-            retention_matrix_segmented(
-                events, seg_dim, period_seconds=86_400
-            ),
             results,
         )
         timed("mad_outliers_20m", mad_outliers(events), results)
@@ -1482,7 +1319,7 @@ def main() -> None:
 
     if "--monitors" in sys.argv:
         # r8 third arc: the drift-monitoring family at probe scale
-        # (tokenizer report, CUSUM over a wide series corpus).
+        # (tokenizer report).
         import tempfile
 
         from cassandra_iot_pipeline_spark.functions.bpe import (
@@ -1490,9 +1327,6 @@ def main() -> None:
             bpe_vocab,
             bpe_word_counts,
             tokenizer_report,
-        )
-        from cassandra_iot_pipeline_spark.operators.changepoints import (
-            cusum_changepoints,
         )
 
         mdocs_dir = tempfile.mkdtemp(prefix="probe_mon_")
@@ -1506,25 +1340,6 @@ def main() -> None:
         timed(
             "tokenizer_report_100k_docs",
             tokenizer_report(mdocs, model.merges, vocab),
-            results,
-        )
-
-        # CUSUM over a wide series corpus: 100k groups x 50 epochs
-        series = spark.range(100_000 * 50).select(
-            (F.col("id") % 100_000).alias("g"),
-            F.expr("id div 100000").alias("epoch"),
-            (
-                F.pmod(F.xxhash64("id"), F.lit(100)) / 100.0
-                + F.when(
-                    (F.col("id") % 100_000 < 1000)
-                    & (F.expr("id div 100000") >= 25),
-                    F.lit(3.0),
-                ).otherwise(F.lit(0.0))
-            ).alias("m"),
-        )
-        timed(
-            "cusum_100k_groups_50_epochs",
-            cusum_changepoints(series, ["g"], "m", k=0.2, h=2.0),
             results,
         )
 
