@@ -18,18 +18,27 @@ tables:
     engine.compact()                       # maintenance (compaction)
 
 Every read runs against the PK-reconciled view (Cassandra last-write-
-wins semantics); re-ingesting the same data is idempotent.
+wins semantics); re-ingesting the same data is idempotent. The three
+single-device reads are served on the driver from the sink's part files
+with pyarrow, with no Spark job, unless the device's matching row groups
+exceed the sink's row bound; then they run as Spark plans.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
+from .litframe import literal_frame
 from .operators.agg import hourly_rollup
 from .streaming.pipeline import ingest_sinks, run_pipeline
+from .streaming.sinks import ParquetUpsertSink
 
 
 class IoTEngine:
@@ -73,35 +82,75 @@ class IoTEngine:
     def latest_events(self, device_id: int, limit: int = 100) -> DataFrame:
         """The latency-probe read: WHERE device_id = ? ORDER BY ts DESC
         LIMIT n (reference: cassandra_latency_check.py:13)."""
-        return (
-            self.sensor_events()
+        return self._device_read(
+            self.raw_sink,
+            "user_id",
+            device_id,
+            lambda rows: rows.sort_by(
+                [("ts", "descending"), ("event_id", "descending")]
+            ).slice(0, limit),
+            lambda: self.sensor_events()
             .filter(F.col("user_id") == F.lit(device_id))
             .orderBy(F.col("ts").desc(), F.col("event_id").desc())
-            .limit(limit)
+            .limit(limit),
         )
 
     def hourly_aggregates(self, device_id: int) -> DataFrame:
         """Dashboard read: all hourly buckets for a device, newest first
-        (the hourly_aggregates clustering order, init.cql:48-49). One
-        device's buckets are a few dozen rows, so they are sorted in one
-        partition rather than by a global range-partitioned sort (and
-        its sampling job); ``hour_bucket`` is unique per device after
-        the reconcile, so the order is total."""
-        return (
-            self.hourly()
+        (the hourly_aggregates clustering order, init.cql:48-49). On
+        Spark, one device's buckets are a few dozen rows, so they are
+        sorted in one partition rather than by a global range-
+        partitioned sort (and its sampling job); ``hour_bucket`` is
+        unique per device after the reconcile, so the order is total."""
+        return self._device_read(
+            self.agg_sink,
+            "device_id",
+            device_id,
+            lambda rows: rows.sort_by([("hour_bucket", "descending")]),
+            lambda: self.hourly()
             .filter(F.col("device_id") == F.lit(device_id))
             .coalesce(1)
-            .sortWithinPartitions(F.col("hour_bucket").desc())
+            .sortWithinPartitions(F.col("hour_bucket").desc()),
         )
 
     def device_hourly_range(
         self, device_id: int, start_bucket: int, end_bucket: int
     ) -> DataFrame:
-        """Clustering-key range read on the rollup table."""
-        return self.hourly().filter(
-            (F.col("device_id") == F.lit(device_id))
-            & F.col("hour_bucket").between(start_bucket, end_bucket)
+        """Clustering-key range read on the rollup table (no row order
+        is promised; the driver path returns the clustering order)."""
+        return self._device_read(
+            self.agg_sink,
+            "device_id",
+            device_id,
+            lambda rows: rows.filter(
+                (pc.field("hour_bucket") >= start_bucket)
+                & (pc.field("hour_bucket") <= end_bucket)
+            ).sort_by([("hour_bucket", "descending")]),
+            lambda: self.hourly().filter(
+                (F.col("device_id") == F.lit(device_id))
+                & F.col("hour_bucket").between(start_bucket, end_bucket)
+            ),
         )
+
+    def _device_read(
+        self,
+        sink: ParquetUpsertSink,
+        column: str,
+        device_id: int,
+        finish: Callable[[pa.Table], pa.Table],
+        plan: Callable[[], DataFrame],
+    ) -> DataFrame:
+        """One device's serving read. When ``sink.lookup`` serves the
+        device's last-write-wins rows, ``finish`` sorts / limits /
+        filters them on the driver and the result is a LocalRelation
+        (collecting it runs no Spark job) with the schema the Spark read
+        has; otherwise (no part files, or more matching rows than the
+        sink's driver bound) the Spark ``plan`` runs."""
+        rows = sink.lookup(self.spark, column, device_id)
+        if rows is None:
+            return plan()
+        rows = finish(rows)
+        return self.spark.createDataFrame(rows, from_arrow_schema(rows.schema))
 
     # --- monitoring ------------------------------------------------------
     def table_counts(self) -> dict[str, int]:
@@ -128,8 +177,10 @@ class IoTEngine:
                     sink.sink_options.get("consistency_level", ""),
                 )
             )
-        return self.spark.createDataFrame(
-            rows, "table string, n_files long, n_bytes long, n_rows long, consistency string"
+        return literal_frame(
+            self.spark,
+            rows,
+            "table string, n_files long, n_bytes long, n_rows long, consistency string",
         )
 
     def latency_probe(self, device_ids: list[int], limit: int = 100) -> DataFrame:
@@ -145,8 +196,8 @@ class IoTEngine:
             t0 = time.perf_counter()
             n = len(self.latest_events(device_id, limit).collect())
             rows.append((device_id, n, (time.perf_counter() - t0) * 1000.0))
-        return self.spark.createDataFrame(
-            rows, "device_id long, n_rows long, latency_ms double"
+        return literal_frame(
+            self.spark, rows, "device_id long, n_rows long, latency_ms double"
         )
 
     # --- maintenance -----------------------------------------------------

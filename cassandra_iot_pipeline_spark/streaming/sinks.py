@@ -27,6 +27,15 @@ the next read rebuilds the view. Nothing is persisted: a reused view
 still runs the reconcile window on every action, it only skips the
 re-listing, the schema-inference job and the re-analysis.
 
+Single-key serving reads can skip Spark altogether: ``lookup`` reads the
+listed part files with ``pyarrow.dataset`` on the driver, keeps the row
+groups whose footer statistics can hold the key, and reconciles them in
+Arrow. It declines (returns ``None``, and the caller plans the Spark
+read) when those row groups hold more than :data:`DRIVER_READ_MAX_ROWS`
+rows. ``compact`` sorts each output file by the PK, so on a compacted
+log one key's rows sit in a few row groups (the Cassandra clustering
+order as an in-file sort, like ``storage.write_events_table``).
+
 The production backend for the same interface is the Cassandra Spark
 connector (``org.apache.spark.sql.cassandra``); its per-table
 consistency levels (ONE for raw, QUORUM for aggregates — reference:
@@ -40,16 +49,23 @@ import os
 import re
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import latest_by_pk
-from ..store import hadoop_fs
 
 #: a Spark output part file, ``part-NNNNN-<write job uuid>-cNNN...``
 _PART_FILE = re.compile(
     r"part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})-c\d+"
 )
+
+#: most rows ``lookup`` reads on the driver: the rows of the row groups
+#: whose footer statistics can match. Above it the Spark plan is faster
+#: (the crossover measured on 4 cores, DESIGN.md §17).
+DRIVER_READ_MAX_ROWS = 200_000
 
 
 class ParquetUpsertSink:
@@ -68,6 +84,8 @@ class ParquetUpsertSink:
         self.sink_options = dict(sink_options or {})
         # unique_within_epoch -> (snapshot key, reconciled view)
         self._views: dict[bool, tuple[tuple, DataFrame]] = {}
+        # (snapshot key, dataset over the listed part files, or None)
+        self._dataset: tuple[tuple, ds.Dataset | None] | None = None
 
     # -- write path (called from foreachBatch) --------------------------
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -134,7 +152,7 @@ class ParquetUpsertSink:
         action against exactly the files it was built over."""
         # listed before Spark lists: a write landing in between leaves
         # a key older than the view, which only costs a rebuild later
-        listing = self._listing(spark)
+        listing = self._listing()
         key = (spark, listing)
         cached = self._views.get(unique_within_epoch)
         if cached is not None and cached[0] == key:
@@ -147,16 +165,62 @@ class ParquetUpsertSink:
         self._views[unique_within_epoch] = (key, view)
         return view
 
-    def _listing(self, spark: SparkSession) -> tuple[tuple[str, int], ...]:
-        """(name, length) of every child of the log directory, in one
-        Hadoop listing (no Spark job)."""
-        fs, Path = hadoop_fs(spark, self.path)
-        path = Path(self.path)
-        if not fs.exists(path):
-            return ()
-        return tuple(
-            (st.getPath().getName(), st.getLen()) for st in fs.listStatus(path)
+    def lookup(self, spark: SparkSession, column: str, value) -> pa.Table | None:
+        """Last-write-wins rows where ``column == value``, read on the
+        driver with no Spark job; ``None`` when the read should run on
+        Spark: the log has no part files, or the row groups whose
+        footer statistics can match hold more than
+        :data:`DRIVER_READ_MAX_ROWS` rows.
+
+        The log is listed once and exactly the listed part files are
+        read, so a write landing mid-read cannot change the snapshot;
+        the dataset (and the footers it has read) is reused under the
+        same (session, listing) key as :meth:`read`. Spark writes
+        timestamps as INT96, which pyarrow returns as naive
+        ``timestamp[ns]`` holding UTC instants; they come back marked
+        UTC, and every field nullable, as Spark's parquet read types
+        them."""
+        listing = self._listing()
+        key = (spark, listing)
+        if self._dataset is None or self._dataset[0] != key:
+            parts = [
+                os.path.join(self.path, name)
+                for name, _ in listing
+                if name.endswith(".parquet") and not name.startswith((".", "_"))
+            ]
+            self._dataset = (key, ds.dataset(parts, format="parquet") if parts else None)
+        dataset = self._dataset[1]
+        if dataset is None:
+            return None
+        match = ds.field(column) == value
+        groups = matching_row_groups(dataset, match)
+        if sum(g.num_rows for f in groups for g in f.row_groups) > DRIVER_READ_MAX_ROWS:
+            return None
+        rows = ds.FileSystemDataset(groups, dataset.schema, dataset.format).to_table(
+            filter=match
         )
+        return _spark_typed(self._reconcile(rows))
+
+    def _reconcile(self, rows: pa.Table) -> pa.Table:
+        """The max-``__epoch`` row per PK, without ``__epoch``: the
+        Arrow form of :func:`latest_by_pk`."""
+        by_epoch = rows.take(pc.sort_indices(rows, [("__epoch", "descending")]))
+        ranked = by_epoch.append_column("__rn", pa.array(range(len(by_epoch)), pa.int64()))
+        first = ranked.group_by(list(self.pk), use_threads=False).aggregate(
+            [("__rn", "first")]
+        )
+        return by_epoch.take(first["__rn_first"]).drop_columns(["__epoch"])
+
+    def _listing(self) -> tuple[tuple[str, int], ...]:
+        """(name, length) of every child of the log directory, sorted,
+        from one directory scan: no Spark job, and no py4j round trip
+        per file (a Hadoop listing through py4j costs ~0.3 ms a file).
+        The log is a local directory, as :meth:`exists` assumes."""
+        try:
+            with os.scandir(self.path) as children:
+                return tuple(sorted((c.name, c.stat().st_size) for c in children))
+        except FileNotFoundError:
+            return ()
 
     def read_log(self, spark: SparkSession) -> DataFrame:
         """The raw append log, all versions (debug / audit surface)."""
@@ -169,7 +233,8 @@ class ParquetUpsertSink:
         Writes to a temp dir then swaps; recover_swap first RESTORES the
         table if a prior compaction crashed between its two renames
         (never deletes the only remaining copy), then clears redundant
-        leftovers."""
+        leftovers. Each output file is sorted by the PK, so footer
+        statistics narrow a ``lookup`` to a few row groups."""
         from ..storage import _swap_paths, commit_swap, recover_swap
 
         recover_swap(self.path)
@@ -177,7 +242,7 @@ class ParquetUpsertSink:
         reconciled = latest_by_pk(
             spark.read.parquet(self.path), pk=self.pk, version_col="__epoch"
         )
-        reconciled.write.mode("overwrite").parquet(tmp)
+        reconciled.sortWithinPartitions(*self.pk).write.mode("overwrite").parquet(tmp)
         commit_swap(self.path)
 
 
@@ -187,4 +252,27 @@ def _write_jobs(listing: tuple[tuple[str, int], ...]) -> int:
     name it produces)."""
     return len(
         {m.group(1) for m in (_PART_FILE.match(name) for name, _ in listing) if m}
+    )
+
+
+def matching_row_groups(dataset: ds.Dataset, match: ds.Expression) -> list:
+    """Each part file of ``dataset`` narrowed to the row groups whose
+    footer statistics can satisfy ``match`` (files with none dropped)."""
+    groups = (f.subset(filter=match) for f in dataset.get_fragments())
+    return [f for f in groups if f.row_groups]
+
+
+def _spark_typed(table: pa.Table) -> pa.Table:
+    """``table`` with naive timestamps marked UTC and every field
+    nullable, the types Spark's parquet read gives the same columns."""
+    return table.cast(
+        pa.schema(
+            pa.field(
+                f.name,
+                pa.timestamp(f.type.unit, "UTC")
+                if pa.types.is_timestamp(f.type) and f.type.tz is None
+                else f.type,
+            )
+            for f in table.schema
+        )
     )

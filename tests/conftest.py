@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -54,3 +55,24 @@ def duck():
             f"CREATE VIEW {name} AS SELECT * FROM '{table_path(SF_DIR, name)}'"
         )
     return con
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action`` starts, counted through its job group. The
+    status store learns of jobs asynchronously, in start order, so a
+    sentinel job in a second group is awaited before counting."""
+    sc = spark.sparkContext
+    groups = [f"snapshot-probe-{time.monotonic_ns()}-{i}" for i in range(2)]
+    try:
+        sc.setJobGroup(groups[0], "probe")
+        action()
+        sc.setJobGroup(groups[1], "sentinel")
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(groups[1]):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(groups[0]))

@@ -2,13 +2,22 @@
 
 from __future__ import annotations
 
+import os
+import time
+
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from cassandra_iot_pipeline_spark.api import IoTEngine
 from cassandra_iot_pipeline_spark.catalog import load_table
 from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup
+from cassandra_iot_pipeline_spark.plans import formatted_plan
+from cassandra_iot_pipeline_spark.streaming import sinks
 from cassandra_iot_pipeline_spark.streaming.staging import stage_events_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _jobs_run
 
 
 def test_full_reference_workflow(spark, tmp_path):
@@ -72,7 +81,11 @@ def test_latency_probe(spark, tmp_path):
 
     engine = IoTEngine(spark, str(tmp_path / "wh3"))
     engine.ingest_batch(_lt(spark, SF_DIR, "events"))
-    probe = engine.latency_probe([12, 13], limit=5).collect()
+    probe_df = engine.latency_probe([12, 13], limit=5)
+    assert probe_df.schema.simpleString() == (
+        "struct<device_id:bigint,n_rows:bigint,latency_ms:double>"
+    )
+    probe = probe_df.collect()
     assert len(probe) == 2
     assert all(r.latency_ms > 0 and r.n_rows <= 5 for r in probe)
 
@@ -87,3 +100,166 @@ def test_cassandra_sink_options():
     assert opts["keyspace"] == "iot_analytics"
     assert opts["table"] == "sensor_events"
     assert opts["spark.cassandra.output.consistency.level"] == "ONE"
+
+
+# --- driver-side serving reads -------------------------------------------
+
+DEVICES = (7, 12, 13)
+
+
+def _three_epoch_engine(spark, path):
+    """Three epochs that re-deliver PKs with changed values: epoch 1
+    rewrites every event's value, epoch 2 rewrites the even devices'
+    values again, so last-write-wins picks different epochs per row."""
+    engine = IoTEngine(spark, path)
+    events = load_table(spark, SF_DIR, "events")
+    engine.ingest_batch(events, epoch_id=0)
+    engine.ingest_batch(events.withColumn("value", F.col("value") + 1), epoch_id=1)
+    engine.ingest_batch(
+        events.filter(F.col("user_id") % 2 == 0).withColumn("value", F.col("value") * 3),
+        epoch_id=2,
+    )
+    return engine
+
+
+@pytest.fixture(scope="module")
+def epochs_engine(spark, tmp_path_factory):
+    return _three_epoch_engine(spark, str(tmp_path_factory.mktemp("epochs")))
+
+
+def _reads(device, start=0, end=1 << 40):
+    return {
+        "latest_events": lambda e: e.latest_events(device, 10),
+        "hourly_aggregates": lambda e: e.hourly_aggregates(device),
+        "device_hourly_range": lambda e: e.device_hourly_range(device, start, end),
+    }
+
+
+def _on_spark(monkeypatch, read):
+    """``read`` with the driver path declined for every device (even
+    one with no rows): the Spark plan."""
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "DRIVER_READ_MAX_ROWS", -1)
+        return read()
+
+
+def _assert_same_as_spark(monkeypatch, engine, device, start=0, end=1 << 40):
+    """Each driver-path read equals the Spark read: equal schema, and
+    row for row in order. The range read promises no order on Spark,
+    so its rows are compared in the driver path's clustering order."""
+    for name, read in _reads(device, start, end).items():
+        driver = read(engine)
+        assert "Scan parquet" not in formatted_plan(driver), name
+        spark_df = _on_spark(monkeypatch, lambda: read(engine))
+        assert driver.schema == spark_df.schema, name
+        got, want = driver.collect(), spark_df.collect()
+        if name == "device_hourly_range":
+            want = sorted(want, key=lambda r: r.hour_bucket, reverse=True)
+        assert got == want, name
+
+
+def test_driver_reads_equal_spark_reads_across_epochs(epochs_engine, monkeypatch):
+    for device in DEVICES:
+        _assert_same_as_spark(monkeypatch, epochs_engine, device)
+    # device 12 is even: its rows carry the values epoch 2 wrote
+    epoch2 = dict(
+        load_table(epochs_engine.spark, SF_DIR, "events")
+        .filter(F.col("user_id") == 12)
+        .select("event_id", (F.col("value") * 3).cast("double"))
+        .collect()
+    )
+    latest = epochs_engine.latest_events(12, 10).collect()
+    assert latest and all(r.value == epoch2[r.event_id] for r in latest)
+
+
+def test_driver_reads_equal_spark_reads_after_compact(spark, tmp_path, monkeypatch):
+    engine = _three_epoch_engine(spark, str(tmp_path / "wh"))
+    engine.compact()
+    for device in DEVICES:
+        _assert_same_as_spark(monkeypatch, engine, device)
+
+
+def test_driver_reads_empty_results(epochs_engine, monkeypatch):
+    """An empty bucket range and a device with no rows: empty frames
+    with the Spark read's schema."""
+    _assert_same_as_spark(monkeypatch, epochs_engine, 13, start=1, end=2)
+    _assert_same_as_spark(monkeypatch, epochs_engine, -5)
+    assert epochs_engine.latest_events(-5).collect() == []
+
+
+def test_table_without_part_files_takes_spark_plan(spark, tmp_path):
+    """No part files, whether the table directories are missing or hold
+    only a ``_SUCCESS`` marker: ``lookup`` declines and the read plans
+    on Spark, which fails as before (there is no table to read)."""
+    engine = IoTEngine(spark, str(tmp_path / "empty"))
+    for with_markers in (False, True):
+        if with_markers:
+            for sink in (engine.raw_sink, engine.agg_sink):
+                os.makedirs(sink.path)
+                open(os.path.join(sink.path, "_SUCCESS"), "w").close()
+        assert engine.raw_sink.lookup(spark, "user_id", 13) is None
+        assert engine.agg_sink.lookup(spark, "device_id", 13) is None
+        for name, read in _reads(13).items():
+            with pytest.raises(AnalysisException):
+                read(engine)
+
+
+@pytest.fixture
+def non_utc_process_tz(monkeypatch):
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_driver_reads_under_non_utc_process_tz(epochs_engine, monkeypatch, non_utc_process_tz):
+    """The INT96 timestamps pyarrow returns naive are UTC instants: a
+    local-time reading would shift every ts by the zone's offset."""
+    assert time.timezone != 0
+    for device in DEVICES:
+        _assert_same_as_spark(monkeypatch, epochs_engine, device)
+
+
+def test_driver_reads_run_no_spark_job(spark, epochs_engine):
+    """On a warm sink, building and collecting each driver-path read
+    starts no Spark job."""
+    for name, read in _reads(13).items():
+        read(epochs_engine).collect()
+        assert _jobs_run(spark, lambda: read(epochs_engine).collect()) == 0, name
+
+
+def test_over_bound_lookup_declines_to_reconcile_window(epochs_engine, monkeypatch):
+    spark = epochs_engine.spark
+    rows = epochs_engine.raw_sink.lookup(spark, "user_id", 13)
+    assert rows is not None and rows.num_rows > 0
+    monkeypatch.setattr(sinks, "DRIVER_READ_MAX_ROWS", rows.num_rows - 1)
+    assert epochs_engine.raw_sink.lookup(spark, "user_id", 13) is None
+    for name, read in _reads(13).items():
+        assert "Window" in formatted_plan(read(epochs_engine)), name
+
+
+def test_compacted_lookup_reads_few_row_groups(spark, tmp_path, monkeypatch):
+    """``compact`` sorts each file by the PK, so with small row groups
+    one device's rows sit in a few of them and the footer statistics
+    prune the rest."""
+    engine = _three_epoch_engine(spark, str(tmp_path / "wh"))
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.setInt("parquet.block.size", 4096)
+    try:
+        engine.compact()
+    finally:
+        hconf.unset("parquet.block.size")
+    sink = engine.raw_sink
+    parts = [
+        os.path.join(sink.path, n) for n in os.listdir(sink.path) if n.endswith(".parquet")
+    ]
+    total = sum(pq.ParquetFile(p).metadata.num_row_groups for p in parts)
+    touched = sum(
+        len(f.row_groups)
+        for f in sinks.matching_row_groups(
+            ds.dataset(parts, format="parquet"), ds.field("user_id") == 13
+        )
+    )
+    assert total >= 8 and 0 < touched <= total // 4, (touched, total)
+    _assert_same_as_spark(monkeypatch, engine, 13)

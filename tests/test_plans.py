@@ -23,6 +23,7 @@ from cassandra_iot_pipeline_spark.plans import (
     assert_broadcast_join,
     formatted_plan,
 )
+from cassandra_iot_pipeline_spark.streaming import sinks
 from tests.conftest import SF_DIR
 
 
@@ -37,16 +38,39 @@ def two_epoch_engine(spark, tmp_path_factory):
     return engine
 
 
+@pytest.fixture
+def spark_reads(monkeypatch):
+    """Every serving read over the driver row bound: the reads plan on
+    Spark, the fallback the pins below hold to."""
+    monkeypatch.setattr(sinks, "DRIVER_READ_MAX_ROWS", 0)
+
+
+ENGINE_READS = {
+    "latest_events": lambda e: e.latest_events(13, 10),
+    "hourly_aggregates": lambda e: e.hourly_aggregates(13),
+    "device_hourly_range": lambda e: e.device_hourly_range(13, 0, 1 << 40),
+}
+
+
+@pytest.mark.parametrize("name", ENGINE_READS)
+def test_engine_read_below_bound_is_local_table_scan(two_epoch_engine, name):
+    """Under the driver row bound a serving read is a LocalRelation built
+    from the sink's part files: no parquet scan, nothing for Spark to
+    run."""
+    plan = formatted_plan(ENGINE_READS[name](two_epoch_engine))
+    assert "LocalTableScan" in plan and "Scan parquet" not in plan, plan
+
+
 @pytest.mark.parametrize(
     "read, pushed",
     [
-        (lambda e: e.latest_events(13, 10), "EqualTo(user_id,13)"),
-        (lambda e: e.hourly_aggregates(13), "EqualTo(device_id,13)"),
-        (lambda e: e.device_hourly_range(13, 0, 1 << 40), "EqualTo(device_id,13)"),
+        (ENGINE_READS["latest_events"], "EqualTo(user_id,13)"),
+        (ENGINE_READS["hourly_aggregates"], "EqualTo(device_id,13)"),
+        (ENGINE_READS["device_hourly_range"], "EqualTo(device_id,13)"),
     ],
     ids=["latest_events", "hourly_aggregates", "device_hourly_range"],
 )
-def test_engine_read_pk_filter_reaches_scan(two_epoch_engine, read, pushed):
+def test_engine_read_pk_filter_reaches_scan(two_epoch_engine, spark_reads, read, pushed):
     """The device equality is pushed through the reconcile Window into
     the one parquet scan beneath it."""
     plan = formatted_plan(read(two_epoch_engine))
@@ -54,12 +78,12 @@ def test_engine_read_pk_filter_reaches_scan(two_epoch_engine, read, pushed):
     assert pushed in plan.split("PushedFilters:")[1].splitlines()[0], plan
 
 
-def test_engine_latest_events_is_take_ordered(two_epoch_engine):
+def test_engine_latest_events_is_take_ordered(two_epoch_engine, spark_reads):
     plan = formatted_plan(two_epoch_engine.latest_events(13, 10))
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_engine_hourly_aggregates_has_no_range_exchange(two_epoch_engine):
+def test_engine_hourly_aggregates_has_no_range_exchange(two_epoch_engine, spark_reads):
     """One device's buckets sort in one partition: no global sort's
     range exchange (and its sampling job)."""
     plan = formatted_plan(two_epoch_engine.hourly_aggregates(13))

@@ -22,7 +22,7 @@ from cassandra_iot_pipeline_spark.streaming.pipeline import (
 )
 from cassandra_iot_pipeline_spark.streaming.sinks import ParquetUpsertSink
 from cassandra_iot_pipeline_spark.streaming.staging import stage_events_stream
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _jobs_run
 
 
 def _rows_sorted(df):
@@ -190,27 +190,6 @@ def test_redelivered_epoch_reconciles(spark, tmp_path):
     assert sink.read_log(spark).count() == 4
     got = sink.read(spark, unique_within_epoch=True)
     assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
-
-
-def _jobs_run(spark, action) -> int:
-    """Spark jobs ``action`` starts, counted through its job group. The
-    status store learns of jobs asynchronously, in start order, so a
-    sentinel job in a second group is awaited before counting."""
-    sc = spark.sparkContext
-    groups = [f"snapshot-probe-{time.monotonic_ns()}-{i}" for i in range(2)]
-    try:
-        sc.setJobGroup(groups[0], "probe")
-        action()
-        sc.setJobGroup(groups[1], "sentinel")
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(groups[1]):
-        assert time.monotonic() < deadline, "sentinel job never reported"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(groups[0]))
 
 
 def test_unchanged_log_read_reuses_view_without_jobs(spark, tmp_path):
