@@ -124,10 +124,10 @@ def host_calibration(spark) -> dict[str, float]:
 def io_calibration(spark) -> dict[str, float]:
     """I/O-bound calibration probes (r5 verdict item #1): the CPU
     probes above cannot attribute deltas in the PIPELINE number, which
-    is state-store/disk-bound, so two fixed-work disk probes sit next
-    to them — a 5M-row parquet write+read and an 8-micro-batch keyed
-    aggregation whose cost is state-store commits + checkpoint I/O
-    (the pipeline's own bound). Data-independent (spark.range), fixed
+    is disk-bound, so two fixed-work disk probes sit next to them — a
+    5M-row parquet write+read and an 8-micro-batch keyed aggregation
+    whose cost is state-store commits + checkpoint I/O (the bound of
+    the stateful replays). Data-independent (spark.range), fixed
     shuffle width, min-of-2 each (first run pays dir creation / page
     cache cold-start the pipeline numbers don't)."""
     import shutil
@@ -267,8 +267,9 @@ def main() -> None:
     worst_min_pass_steal = max(min_pass_steal.values())
 
     # streaming-pipeline ingest throughput (reference baseline: ~105
-    # events/sec sustained, BASELINE.md) — both continuous queries over
-    # the micro-batch replay, landing in PK-upsert tables.
+    # events/sec sustained, BASELINE.md) — the ingest query over the
+    # micro-batch replay, landing raw rows and hourly partials in
+    # PK-upsert tables.
     import tempfile
 
     from cassandra_iot_pipeline_spark.api import IoTEngine
@@ -276,7 +277,7 @@ def main() -> None:
 
     staged = stage_events_stream(spark, sf_dir)
     # untimed warm-up pass: the first pipeline execution in a session
-    # pays ~5s of codegen/state-store initialization (measured 14.4k
+    # pays ~5s of codegen initialization (measured 14.4k
     # cold vs 58-69k warm events/s on identical data) — the same
     # plan-shape JIT artifact the query warm-up removes, so the
     # recorded number is steady-state throughput, not first-run cost.
@@ -294,11 +295,10 @@ def main() -> None:
             spark, tempfile.mkdtemp(prefix=f"bench_pipeline{i}_")
         )
         t0 = time.perf_counter()
-        # state-store commits (one per state partition per batch)
-        # dominate bounded-replay cost, so bigger batches are strictly
-        # faster with identical results (measured 6.2k -> 42.7k
-        # events/s at sf0.1; the current sf0.1 staging is ~30 day
-        # files, so 32/trigger is already a single availableNow batch).
+        # each micro-batch pays fixed job and commit costs, so bigger
+        # batches are faster with identical results; the current sf0.1
+        # staging is ~30 day files, so 32/trigger is already a single
+        # availableNow batch.
         res = engine.ingest_stream(staged, max_files_per_trigger=32)
         pipe_sec = time.perf_counter() - t0
         n_events = engine.table_counts()["sensor_events"]

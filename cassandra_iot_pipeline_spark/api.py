@@ -9,7 +9,7 @@ monitoring/cassandra_latency_check.py:13, monitoring/monitor.sh:79-88).
 tables:
 
     engine = IoTEngine(spark, warehouse_dir)
-    engine.ingest_stream(staged_dir)       # the two continuous queries
+    engine.ingest_stream(staged_dir)       # the streaming ingest
     engine.ingest_batch(events_df)         # bounded backfill form
     engine.latest_events(device_id, 100)   # the latency-probe read
     engine.hourly_aggregates(device_id)    # the dashboard read
@@ -18,7 +18,8 @@ tables:
     engine.compact()                       # maintenance (compaction)
 
 Every read runs against the PK-reconciled view (Cassandra last-write-
-wins semantics); re-ingesting the same data is idempotent. The three
+wins semantics, with the hourly partials of ``ingest_stream`` folded);
+re-ingesting the same data is idempotent. The three
 single-device reads are served on the driver from the sink's part files
 with pyarrow, with no Spark job, unless the device's matching row groups
 exceed the sink's row bound; then they run as Spark plans.
@@ -37,7 +38,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from .litframe import literal_frame
 from .operators.agg import hourly_rollup
-from .streaming.pipeline import ingest_sinks, run_pipeline
+from .streaming.pipeline import ingest_sinks, raw_rows, run_pipeline
 from .streaming.sinks import ParquetUpsertSink
 
 
@@ -51,10 +52,11 @@ class IoTEngine:
     def ingest_stream(
         self, staged_dir: str, max_files_per_trigger: int = 4
     ) -> dict:
-        """The reference pipeline: both continuous queries (raw
-        passthrough + watermarked hourly rollup) over a replayable
-        source, landing in this engine's tables. Returns run_pipeline's
-        result (sinks + per-micro-batch ``progress`` timings)."""
+        """The reference pipeline over a replayable source, as one
+        streaming query: each micro-batch lands its raw rows and its
+        watermarked hourly partials in this engine's tables. Returns
+        run_pipeline's result (sinks + per-micro-batch ``progress``
+        timings)."""
         return run_pipeline(
             self.spark,
             staged_dir,
@@ -64,12 +66,10 @@ class IoTEngine:
 
     def ingest_batch(self, events: DataFrame, epoch_id: int = 0) -> None:
         """Bounded backfill: same tables, batch plans (used for
-        reprocessing; idempotent by PK upsert)."""
-        projected = events.select(
-            "event_id", "ts", "user_id", "event_type",
-            F.col("value").cast("double").alias("value"),
-        )
-        self.raw_sink.write_batch(projected, epoch_id)
+        reprocessing; idempotent by PK upsert). Its hourly rows are
+        complete rows: they replace every older row of their PK,
+        partials included."""
+        self.raw_sink.write_batch(raw_rows(events), epoch_id)
         self.agg_sink.write_batch(hourly_rollup(events), epoch_id)
 
     # --- serving reads ---------------------------------------------------

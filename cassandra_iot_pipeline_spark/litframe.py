@@ -44,11 +44,20 @@ def _sql_literal(value) -> str:
     raise TypeError(type(value).__name__)
 
 
+def _typed(field: T.StructField) -> str:
+    """``field``'s column cast to its type. A CAST of non-null literals
+    is typed non-nullable; NULLIF(x, NULL) is x, typed nullable, as a
+    nullable field is declared."""
+    cast = f"CAST({field.name} AS {field.dataType.simpleString()})"
+    return f"NULLIF({cast}, NULL) AS {field.name}" if field.nullable else f"{cast} AS {field.name}"
+
+
 def literal_frame(
     spark: SparkSession, rows: Sequence[tuple], schema: str
 ) -> DataFrame:
     """Typed literal rows without a Python-RDD scan. ``schema`` is a DDL
-    string (the same form ``createDataFrame`` takes)."""
+    string (the same form ``createDataFrame`` takes), and the frame's
+    schema is the DDL's, nullability included."""
     struct_type = T._parse_datatype_string(schema)
     if not rows:
         # empty input: createDataFrame([], schema) is already a pure
@@ -63,10 +72,7 @@ def literal_frame(
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), struct_type
         )
-    cols = ", ".join(
-        f"CAST({f.name} AS {f.dataType.simpleString()}) AS {f.name}"
-        for f in struct_type.fields
-    )
+    cols = ", ".join(_typed(f) for f in struct_type.fields)
     names = ", ".join(f.name for f in struct_type.fields)
     return spark.sql(
         f"SELECT {cols} FROM VALUES {values} AS _lit({names})"

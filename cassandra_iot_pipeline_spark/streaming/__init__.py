@@ -1,9 +1,10 @@
 """Structured Streaming layer (SURVEY.md §2.J W1-W8, §2.K sinks).
 
-    pipeline -- the two continuous queries of the reference
-                (raw passthrough + watermarked hourly aggregation)
+    pipeline -- the reference's ingest as one query (raw rows +
+                watermarked hourly partials per micro-batch), and the
+                stateful hourly aggregation it is tested against
     sinks    -- upsert-by-PK parquet sink (Cassandra last-write-wins
-                analogue) + compaction job
+                analogue, folding partial rows) + compaction job
     staging  -- stages fixture tables as time-ordered file sequences so
                 a file source can replay them as micro-batches
     joins    -- watermarked stream-stream funnel join

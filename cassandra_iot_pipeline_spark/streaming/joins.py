@@ -148,7 +148,7 @@ def streaming_conversion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # see pipeline.bounded_replay_confs for measurement + safety.
     from .pipeline import bounded_replay_confs
 
-    with bounded_replay_confs(spark, skip_no_data_batch=True):
+    with bounded_replay_confs(spark):
         q = conversion_join_query(
             read_event_stream(spark, staged, max_files_per_trigger=REPLAY_FILES_PER_TRIGGER),
             read_event_stream(spark, staged, max_files_per_trigger=REPLAY_FILES_PER_TRIGGER),

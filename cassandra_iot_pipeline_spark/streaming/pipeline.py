@@ -1,45 +1,62 @@
-"""The reference's two continuous queries, Spark-first (SURVEY §2.J).
+"""The reference's ingest, Spark-first (SURVEY §2.J).
 
-Query 1 — raw passthrough: stream -> projection -> upsert sink
-(reference: iot-cassandra-pipeline/src/spark_consumer.py:131-160).
-Query 2 — watermarked hourly aggregation: stream -> withWatermark(1 min)
--> window(1 hour) -> avg/max/min/count -> upsert sink
-(reference: spark_consumer.py:164-211).
+The reference runs two continuous queries over one topic: a raw
+passthrough into ``sensor_events`` (reference:
+iot-cassandra-pipeline/src/spark_consumer.py:131-160) and a watermarked
+hourly aggregation into ``hourly_aggregates`` (spark_consumer.py:164-211).
+:func:`run_pipeline` lands both tables from ONE query with no state
+store: each micro-batch's ``foreachBatch`` writes the raw rows and that
+batch's per-(device, hour) partials, concurrently, and the hourly sink
+folds the partials on read and in compaction (streaming/sinks.py). One
+source scan, offset log and WAL per batch instead of two, and no
+state-store load and commit.
 
 Differences from the reference, by design:
-- **update mode + PK-upsert sink** instead of append mode. The reference
-  relies on Cassandra's last-write-wins PK upsert to make re-emitted
-  rows idempotent (init.cql:25,48); with an upsert sink, update mode
-  gives the same end state *and* serves partial aggregates for the
-  current hour instead of holding them until the watermark closes the
-  window. Append mode (the reference's literal choice) is one flag away.
-- **exact aggregation state**: the windowed sum is kept in integer units
-  (see operators/exactmath.py), so streaming and batch rollups agree
-  bit-for-bit — re-running a checkpoint never drifts the aggregates.
-- **isEmpty guard** instead of the reference's double count()
-  (spark_consumer.py:139+154 — two extra full scans per micro-batch).
-
-Both queries share one source lineage and run concurrently under the
-same SparkSession (W7, awaitAnyTermination), each with its own
-checkpoint (W5).
+- **partials instead of state**: the hourly state is kept in integer
+  units (see operators/exactmath.py), so it is associative and the fold
+  of the partials equals the stateful aggregate bit for bit. Epochs plus
+  the idempotent sink keep the result exactly-once: a re-delivered
+  epoch is folded once.
+- **the stateful late-data rule, read from disk**: batch N drops the
+  rows whose hour window ends at or before the watermark of batch N-1,
+  taken from the checkpoint's offset log, as Spark's stateful
+  aggregation does, so a replay recomputes the same partials.
+- **update mode + PK-upsert sink** for :func:`hourly_agg_query`, the
+  stateful form the ``streaming_hourly_rollup`` oracle entry keeps:
+  the reference relies on Cassandra's last-write-wins PK upsert to make
+  re-emitted rows idempotent (init.cql:25,48); with an upsert sink,
+  update mode gives the same end state and serves partial aggregates
+  for the current hour instead of holding them until the watermark
+  closes the window.
+- **no per-batch count**: the reference counts each micro-batch twice
+  (spark_consumer.py:139+154 — two extra full scans per micro-batch);
+  the ingest query writes without an empty check, and the sinks'
+  ``write_batch`` guards with one ``isEmpty``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.exactmath import exact_sum
 from ..schemas import EVENTS_FIXTURE_SCHEMA
 from ..store import run_foreach_batch
-from .sinks import ParquetUpsertSink
+from .sinks import PARTIAL, ParquetUpsertSink
 from .staging import read_staged
 
 WATERMARK_DELAY = "1 minute"  # reference: spark_consumer.py:171-172
 WINDOW = "1 hour"  # reference: spark_consumer.py:177
+
+#: the local property that tags a Spark job with its streaming query
+QUERY_ID = "sql.streaming.queryId"
 
 
 def read_event_stream(
@@ -87,22 +104,15 @@ def ingest_sinks(out_dir: str) -> tuple[ParquetUpsertSink, ...]:
 REPLAY_FILES_PER_TRIGGER = 32
 
 
-from contextlib import contextmanager  # noqa: E402
-
-
 @contextmanager
-def bounded_replay_confs(
-    spark: SparkSession,
-    state_partitions: int = 8,
-    skip_no_data_batch: bool = False,
-):
-    """Session confs for the bounded driver-facing replays, restored on
-    exit.
+def bounded_replay_confs(spark: SparkSession):
+    """Session confs for the bounded driver-facing stateful replays,
+    restored on exit.
 
-    ``state_partitions`` sizes the stateful shuffle (state-store commits
+    8 shuffle partitions size the stateful shuffle (state-store commits
     are per partition per batch — the dominant cost at fixture scale).
 
-    ``skip_no_data_batch`` disables the trailing empty micro-batch
+    The trailing empty micro-batch is disabled
     (``spark.sql.streaming.noDataMicroBatches.enabled=false``) — ONLY
     valid for queries whose final no-data batch provably emits nothing:
     update-mode aggregation (all groups already emitted in their data
@@ -121,11 +131,8 @@ def bounded_replay_confs(
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if skip_no_data_batch:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
         yield
     finally:
@@ -144,15 +151,34 @@ def raw_passthrough_query(
     """Query 1: decode/project and land every event, PK (user_id, ts,
     event_id) — the sensor_events table write
     (reference: spark_consumer.py:137-160)."""
-    projected = stream.select(
+    return run_foreach_batch(
+        raw_rows(stream), sink.write_batch, checkpoint_dir, trigger, "append"
+    )
+
+
+def raw_rows(events: DataFrame) -> DataFrame:
+    """The ``sensor_events`` row of each event."""
+    return events.select(
         "event_id",
         "ts",
         "user_id",
         "event_type",
         F.col("value").cast("double").alias("value"),
     )
-    return run_foreach_batch(
-        projected, sink.write_batch, checkpoint_dir, trigger, "append"
+
+
+def _hourly_state(events: DataFrame) -> DataFrame:
+    """Per (device, ``hour_window``): the hourly rollup's state in
+    integer units, the same columns whether a state store keeps it
+    across micro-batches or one micro-batch lands it as a partial."""
+    return events.groupBy(
+        F.col("user_id").alias("device_id"),
+        F.window("ts", WINDOW).alias("hour_window"),
+    ).agg(
+        exact_sum(F.col("value")).alias("sum_units"),
+        F.max("value").alias("max_value"),
+        F.min("value").alias("min_value"),
+        F.count(F.lit(1)).alias("event_count"),
     )
 
 
@@ -170,34 +196,50 @@ def hourly_agg_query(
     bounded by the watermark (W1). Output rows match the batch
     hourly_rollup contract exactly.
     """
-    agg = (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(
-            F.col("user_id").alias("device_id"),
-            F.window("ts", WINDOW).alias("hour_window"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_units"),
-            F.max("value").alias("max_value"),
-            F.min("value").alias("min_value"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-        .select(
-            "device_id",
-            F.unix_timestamp(F.col("hour_window.start"))
-            .cast("long")
-            .alias("hour_bucket"),
-            (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias(
-                "avg_value"
-            ),
-            "max_value",
-            "min_value",
-            "event_count",
-        )
+    agg = _hourly_state(stream.withWatermark("ts", WATERMARK_DELAY)).select(
+        "device_id",
+        F.unix_timestamp(F.col("hour_window.start")).cast("long").alias("hour_bucket"),
+        (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias("avg_value"),
+        "max_value",
+        "min_value",
+        "event_count",
     )
     return run_foreach_batch(
         agg, sink.write_batch, checkpoint_dir, trigger, output_mode
     )
+
+
+def hourly_partials(batch: DataFrame, late_before_ms: int) -> DataFrame:
+    """One micro-batch's share of the hourly rollup: per (device, hour
+    window), the integer-unit state of :func:`hourly_agg_query`, marked
+    partial. Windows that end at or before ``late_before_ms`` (epoch
+    milliseconds) are dropped, as the stateful query drops them: by
+    their key, so all of a late window's rows go."""
+    return (
+        _hourly_state(batch)
+        .where(F.col("hour_window.end") > F.timestamp_millis(F.lit(late_before_ms)))
+        .select(
+            "device_id",
+            F.unix_timestamp(F.col("hour_window.start")).cast("long").alias("hour_bucket"),
+            "sum_units",
+            "event_count",
+            "max_value",
+            "min_value",
+            F.lit(True).alias(PARTIAL),
+        )
+    )
+
+
+def _late_before_ms(checkpoint_dir: str, batch_id: int) -> int:
+    """The watermark Spark's stateful aggregation drops late windows
+    by in batch ``batch_id``: the ``batchWatermarkMs`` that the
+    checkpoint's offset log holds for the batch before (0 for the
+    first). Read from disk, so a replayed batch drops the same rows."""
+    if batch_id == 0:
+        return 0
+    with open(os.path.join(checkpoint_dir, "offsets", str(batch_id - 1))) as fh:
+        fh.readline()  # the log's format version
+        return int(json.loads(fh.readline())["batchWatermarkMs"])
 
 
 def run_pipeline(
@@ -205,50 +247,79 @@ def run_pipeline(
     staged_dir: str,
     out_dir: str | None = None,
     max_files_per_trigger: int = 1,
-    state_partitions: int = 8,
-) -> dict[str, ParquetUpsertSink]:
-    """W7: both continuous queries concurrently off one source lineage,
-    blocking until the bounded replay completes (availableNow). Returns
-    the two sinks (raw + agg) for reading.
-
-    ``state_partitions`` sizes the stateful shuffle for the bounded
-    replay (state-store commits are per partition per batch — the
-    dominant cost at fixture scale)."""
+) -> dict:
+    """The reference pipeline as one ``availableNow`` query off the
+    watermarked source, blocking until the bounded replay completes.
+    Each micro-batch lands its raw rows and its hourly partials
+    (:func:`hourly_partials`) at the batch's epoch, both writes at once.
+    Returns the two sinks (raw + agg) for reading and the query's
+    per-micro-batch ``progress`` rows."""
     out_dir = out_dir or tempfile.mkdtemp(prefix="spark_graft_pipeline_")
     raw_sink, agg_sink = ingest_sinks(out_dir)
-    # Query 1 is stateless (no watermark — never gets a no-data batch);
-    # query 2 is the update-mode aggregation, whose trailing no-data
-    # batch only evicts state (every group already emitted in its data
-    # batch) — skip it, same as streaming_hourly_rollup below.
-    with bounded_replay_confs(
-        spark, state_partitions, skip_no_data_batch=True
-    ):
-        q1 = raw_passthrough_query(
-            read_event_stream(spark, staged_dir, max_files_per_trigger),
-            raw_sink,
-            os.path.join(out_dir, "ckpt_raw"),
-        )
-        # output_mode pinned HERE, next to the no-data-batch conf above:
-        # the skip is only safe because update mode emits every group in
-        # its data batch (append mode finalizes on watermark advance and
-        # would silently drop final rows — ADVICE r12). Keep the two
-        # coupled.
-        q2 = hourly_agg_query(
-            read_event_stream(spark, staged_dir, max_files_per_trigger),
-            agg_sink,
-            os.path.join(out_dir, "ckpt_agg"),
-            output_mode="update",
-        )
-        q1.awaitTermination()
-        q2.awaitTermination()
+    checkpoint = os.path.join(out_dir, "ckpt_ingest")
+
+    def land(batch: DataFrame, epoch_id: int) -> None:
+        # no empty check: a micro-batch of the file source has rows unless
+        # its files have none, and then each table gets one schema-only
+        # file; the check's job (and the persist it needs) cost every
+        # batch more than that
+        def write_raw():
+            raw_sink.append(raw_rows(batch), epoch_id)
+
+        def write_agg():
+            partials = hourly_partials(batch, _late_before_ms(checkpoint, epoch_id))
+            agg_sink.append(partials, epoch_id)
+
+        with _stream_tagged(batch.sparkSession, checkpoint) as wrap:
+            if wrap is None:
+                write_raw()
+                write_agg()
+                return
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                pending = pool.submit(wrap(write_agg))
+                write_raw()
+            pending.result()
+
+    q = run_foreach_batch(
+        read_event_stream(spark, staged_dir, max_files_per_trigger).withWatermark(
+            "ts", WATERMARK_DELAY
+        ),
+        land,
+        checkpoint,
+    )
+    q.awaitTermination()
     return {
         "raw": raw_sink,
         "agg": agg_sink,
-        "progress": {
-            "raw": query_progress(q1),
-            "agg": query_progress(q2),
-        },
+        "progress": {"ingest": query_progress(q)},
     }
+
+
+@contextmanager
+def _stream_tagged(spark: SparkSession, checkpoint_dir: str):
+    """Keep every Spark job of a ``foreachBatch`` call tagged with the
+    stream's query id. With pinned py4j threads, PySpark's default, the
+    call runs on the stream's JVM thread, and this yields the
+    ``inheritable_thread_target`` wrapper: a thread target it wraps
+    inherits that thread's job properties and session tags. Without
+    them no JVM thread is bound to a Python thread: this yields None,
+    sets the query id (from the checkpoint's metadata) for the block's
+    duration, and the caller keeps its jobs on the calling thread."""
+    from pyspark.util import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    if callable(wrap):
+        yield wrap
+        return
+    sc = spark.sparkContext
+    with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+        query_id = json.load(fh)["id"]
+    before = sc.getLocalProperty(QUERY_ID)
+    sc.setLocalProperty(QUERY_ID, query_id)
+    try:
+        yield None
+    finally:
+        sc.setLocalProperty(QUERY_ID, before)
 
 
 def query_progress(q) -> list[dict]:
@@ -351,7 +422,7 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # update mode: every group is emitted in its data batch, so the
     # trailing no-data batch (state eviction only) is skipped — see
     # bounded_replay_confs for the measurement and the safety argument.
-    with bounded_replay_confs(spark, skip_no_data_batch=True):
+    with bounded_replay_confs(spark):
         q = hourly_agg_query(
             read_event_stream(spark, staged, max_files_per_trigger=REPLAY_FILES_PER_TRIGGER),
             sink,
@@ -390,7 +461,7 @@ def streaming_raw_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state at the session's 32 — 32 RocksDB opens+commits per batch;
     # interleaved A/B at sf0.1: w8 min 2.84 / med 3.57 vs w32 min 5.14
     # / med 10.08).
-    with bounded_replay_confs(spark, skip_no_data_batch=True):
+    with bounded_replay_confs(spark):
         q = raw_passthrough_query(
             dedup_within_watermark(
                 double_delivery(

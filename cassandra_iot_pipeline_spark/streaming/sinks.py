@@ -14,6 +14,14 @@ semantics the way Cassandra itself does — LSM-style:
   the reference's SizeTiered/Leveled compaction strategies,
   reference: init.cql:27-31, 50-53).
 
+A rollup table may also hold **partial** rows: one epoch's share of a
+PK's aggregate, marked by a true ``__partial`` and carrying the hourly
+rollup's integer-unit state (:data:`FOLD`). Every read and ``compact``
+applies one rule to both kinds: per PK, the newest complete row plus the
+partials with a higher ``__epoch``, deduplicated on (PK, ``__epoch``)
+and folded. A log without partial rows reduces to last-write-wins (the
+newest complete row), and is planned as before.
+
 This is scale-correct: streaming writes stay append-only (no
 read-modify-write in the hot path), reconciliation is one shuffle on
 the PK, and compaction is an idempotent maintenance job.
@@ -52,8 +60,9 @@ from collections.abc import Sequence
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.upsert import latest_by_pk
 
@@ -67,9 +76,23 @@ _PART_FILE = re.compile(
 #: (the crossover measured on 4 cores, DESIGN.md §17).
 DRIVER_READ_MAX_ROWS = 200_000
 
+#: the column that marks a partial row (true); complete rows lack it
+PARTIAL = "__partial"
+
+#: how the partial rows of one PK fold: the hourly rollup's state in
+#: integer units (operators/exactmath.py), so every fold is exact and
+#: order-free. A complete row carries ``avg_value`` instead of
+#: ``sum_units``; its units are ``round(avg_value * event_count * 100)``,
+#: exact while the sum stays under 2**50 units.
+FOLD = {"sum_units": "sum", "event_count": "sum", "max_value": "max", "min_value": "min"}
+
+#: the state columns a folding log always reads, present in its files or not
+_FOLD_FIELDS = pa.schema([("avg_value", pa.float64()), ("sum_units", pa.int64())])
+
 
 class ParquetUpsertSink:
-    """Append-only parquet sink with PK last-write-wins read semantics."""
+    """Append-only parquet sink with PK last-write-wins read semantics
+    (partial rows folded)."""
 
     def __init__(
         self,
@@ -84,7 +107,7 @@ class ParquetUpsertSink:
         self.sink_options = dict(sink_options or {})
         # unique_within_epoch -> (snapshot key, reconciled view)
         self._views: dict[bool, tuple[tuple, DataFrame]] = {}
-        # (snapshot key, dataset over the listed part files, or None)
+        # (listing, dataset over the listed part files, or None)
         self._dataset: tuple[tuple, ds.Dataset | None] | None = None
 
     # -- write path (called from foreachBatch) --------------------------
@@ -101,13 +124,17 @@ class ParquetUpsertSink:
         try:
             if batch_df.isEmpty():
                 return
-            (
-                batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("append")
-                .parquet(self.path)
-            )
+            self.append(batch_df, epoch_id)
         finally:
             batch_df.unpersist()
+
+    def append(self, rows: DataFrame, epoch_id: int) -> None:
+        """Land ``rows`` as epoch ``epoch_id``, with no empty check (an
+        empty frame still lands one schema-only file). Rows with a true
+        :data:`PARTIAL` column are partials, the rest complete rows."""
+        rows.withColumn("__epoch", F.lit(int(epoch_id))).write.mode("append").parquet(
+            self.path
+        )
 
     def foreach_batch(self):
         return self.write_batch
@@ -157,39 +184,78 @@ class ParquetUpsertSink:
         cached = self._views.get(unique_within_epoch)
         if cached is not None and cached[0] == key:
             return cached[1]
-        log = spark.read.parquet(self.path)
-        if unique_within_epoch and _write_jobs(listing) == 1:
+        log = self._log(spark, listing)
+        if unique_within_epoch and PARTIAL not in log.columns and _write_jobs(listing) == 1:
             view = log.drop("__epoch")
         else:
-            view = latest_by_pk(log, pk=self.pk, version_col="__epoch").drop("__epoch")
+            view = self._reconciled(log).drop("__epoch")
         self._views[unique_within_epoch] = (key, view)
         return view
 
+    def _log(self, spark: SparkSession, listing: tuple) -> DataFrame:
+        """The append log, all versions. Spark infers its schema, except
+        for a log holding partial rows, whose files differ in columns:
+        that one is read with the union of its footers' schemas."""
+        dataset = self._snapshot(listing)
+        if dataset is not None and PARTIAL in dataset.schema.names:
+            schema = from_arrow_schema(_spark_schema(dataset.schema))
+            return spark.read.schema(schema).parquet(self.path)
+        return spark.read.parquet(self.path)
+
+    def _reconciled(self, log: DataFrame) -> DataFrame:
+        """One row per PK, with its ``__epoch``: the newest complete row
+        plus the partials with a higher ``__epoch``, each epoch counted
+        once, folded by :data:`FOLD`. With no partial rows that is the
+        max-``__epoch`` row, planned as :func:`latest_by_pk`."""
+        if PARTIAL not in log.columns:
+            return latest_by_pk(log, pk=self.pk, version_col="__epoch")
+        pk = list(self.pk)
+        complete = F.coalesce(~F.col(PARTIAL), F.lit(True))
+        base = F.max(F.when(complete, F.col("__epoch"))).over(Window.partitionBy(*pk))
+        kept = (
+            log.withColumn("__base", base)
+            .filter(
+                F.when(complete, F.col("__epoch") == F.col("__base")).otherwise(
+                    F.coalesce(F.col("__epoch") > F.col("__base"), F.lit(True))
+                )
+            )
+            .withColumn(
+                "sum_units",
+                F.coalesce(
+                    F.col("sum_units"),
+                    F.round(F.col("avg_value") * F.col("event_count") * 100).cast("long"),
+                ),
+            )
+            .dropDuplicates([*pk, "__epoch"])
+        )
+        folded = kept.groupBy(*pk).agg(
+            *(getattr(F, how)(c).alias(c) for c, how in FOLD.items()),
+            F.max("__epoch").alias("__epoch"),
+        )
+        return folded.select(
+            *pk,
+            (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias("avg_value"),
+            "max_value",
+            "min_value",
+            "event_count",
+            "__epoch",
+        )
+
     def lookup(self, spark: SparkSession, column: str, value) -> pa.Table | None:
-        """Last-write-wins rows where ``column == value``, read on the
-        driver with no Spark job; ``None`` when the read should run on
-        Spark: the log has no part files, or the row groups whose
+        """Rows of the reconciled view where ``column == value``, read
+        on the driver with no Spark job; ``None`` when the read should
+        run on Spark: the log has no part files, or the row groups whose
         footer statistics can match hold more than
         :data:`DRIVER_READ_MAX_ROWS` rows.
 
         The log is listed once and exactly the listed part files are
         read, so a write landing mid-read cannot change the snapshot;
-        the dataset (and the footers it has read) is reused under the
-        same (session, listing) key as :meth:`read`. Spark writes
-        timestamps as INT96, which pyarrow returns as naive
-        ``timestamp[ns]`` holding UTC instants; they come back marked
-        UTC, and every field nullable, as Spark's parquet read types
-        them."""
-        listing = self._listing()
-        key = (spark, listing)
-        if self._dataset is None or self._dataset[0] != key:
-            parts = [
-                os.path.join(self.path, name)
-                for name, _ in listing
-                if name.endswith(".parquet") and not name.startswith((".", "_"))
-            ]
-            self._dataset = (key, ds.dataset(parts, format="parquet") if parts else None)
-        dataset = self._dataset[1]
+        the dataset (and the footers it has read) is reused while the
+        listing is unchanged. Spark writes timestamps as INT96, which
+        pyarrow returns as naive ``timestamp[ns]`` holding UTC instants;
+        they come back marked UTC, and every field nullable, as Spark's
+        parquet read types them."""
+        dataset = self._snapshot(self._listing())
         if dataset is None:
             return None
         match = ds.field(column) == value
@@ -199,17 +265,75 @@ class ParquetUpsertSink:
         rows = ds.FileSystemDataset(groups, dataset.schema, dataset.format).to_table(
             filter=match
         )
-        return _spark_typed(self._reconcile(rows))
+        return _spark_typed(self._reconcile(rows).drop_columns(["__epoch"]))
 
     def _reconcile(self, rows: pa.Table) -> pa.Table:
-        """The max-``__epoch`` row per PK, without ``__epoch``: the
-        Arrow form of :func:`latest_by_pk`."""
-        by_epoch = rows.take(pc.sort_indices(rows, [("__epoch", "descending")]))
-        ranked = by_epoch.append_column("__rn", pa.array(range(len(by_epoch)), pa.int64()))
-        first = ranked.group_by(list(self.pk), use_threads=False).aggregate(
-            [("__rn", "first")]
+        """The Arrow form of :meth:`_reconciled`."""
+        if PARTIAL not in rows.column_names:
+            by_epoch = rows.take(pc.sort_indices(rows, [("__epoch", "descending")]))
+            return _first_per(by_epoch, self.pk)
+        pk = list(self.pk)
+
+        def complete(t):
+            return pc.invert(pc.fill_null(t[PARTIAL], False))
+
+        if pc.any(complete(rows)).as_py():  # else every row is kept
+            bases = rows.filter(complete(rows)).group_by(pk, use_threads=False)
+            rows = rows.join(bases.aggregate([("__epoch", "max")]), pk)
+            base = rows["__epoch_max"]
+            rows = rows.filter(
+                pc.if_else(
+                    complete(rows),
+                    pc.equal(rows["__epoch"], base),
+                    pc.fill_null(pc.greater(rows["__epoch"], base), True),
+                )
+            )
+        rows = _first_per(rows, pk + ["__epoch"])
+        recovered = pc.round(
+            pc.multiply(pc.multiply(rows["avg_value"], pc.cast(rows["event_count"], pa.float64())), 100.0),
+            round_mode="half_towards_infinity",
         )
-        return by_epoch.take(first["__rn_first"]).drop_columns(["__epoch"])
+        units = pc.coalesce(rows["sum_units"], pc.cast(recovered, pa.int64()))
+        rows = rows.set_column(rows.schema.get_field_index("sum_units"), "sum_units", units)
+        folded = rows.group_by(pk, use_threads=False).aggregate(
+            [(c, how) for c, how in FOLD.items()] + [("__epoch", "max")]
+        )
+        count = folded["event_count_sum"]
+        avg = pc.divide(
+            pc.divide(pc.cast(folded["sum_units_sum"], pa.float64()), 100.0),
+            pc.cast(count, pa.float64()),
+        )
+        return pa.table(
+            {
+                **{c: folded[c] for c in pk},
+                "avg_value": avg,
+                "max_value": folded["max_value_max"],
+                "min_value": folded["min_value_min"],
+                "event_count": count,
+                "__epoch": folded["__epoch_max"],
+            }
+        )
+
+    def _snapshot(self, listing: tuple) -> ds.Dataset | None:
+        """A dataset over exactly the listed part files (``None`` when
+        there are none), typed with the union of their footers' schemas
+        and reused while the listing is unchanged. A log holding partial
+        rows always carries both state columns of :data:`FOLD`."""
+        if self._dataset is None or self._dataset[0] != listing:
+            parts = [
+                os.path.join(self.path, name)
+                for name, _ in listing
+                if name.endswith(".parquet") and not name.startswith((".", "_"))
+            ]
+            dataset = None
+            if parts:
+                files = list(ds.dataset(parts, format="parquet").get_fragments())
+                schema = pa.unify_schemas([f.physical_schema for f in files])
+                if PARTIAL in schema.names:
+                    schema = pa.unify_schemas([schema, _FOLD_FIELDS])
+                dataset = ds.FileSystemDataset(files, schema, ds.ParquetFileFormat())
+            self._dataset = (listing, dataset)
+        return self._dataset[1]
 
     def _listing(self) -> tuple[tuple[str, int], ...]:
         """(name, length) of every child of the log directory, sorted,
@@ -224,7 +348,7 @@ class ParquetUpsertSink:
 
     def read_log(self, spark: SparkSession) -> DataFrame:
         """The raw append log, all versions (debug / audit surface)."""
-        return spark.read.parquet(self.path)
+        return self._log(spark, self._listing())
 
     # -- maintenance -------------------------------------------------------
     def compact(self, spark: SparkSession) -> None:
@@ -234,14 +358,14 @@ class ParquetUpsertSink:
         table if a prior compaction crashed between its two renames
         (never deletes the only remaining copy), then clears redundant
         leftovers. Each output file is sorted by the PK, so footer
-        statistics narrow a ``lookup`` to a few row groups."""
+        statistics narrow a ``lookup`` to a few row groups. Partials fold
+        into complete rows that keep the max ``__epoch`` they folded, so
+        a re-delivered epoch stays counted once."""
         from ..storage import _swap_paths, commit_swap, recover_swap
 
         recover_swap(self.path)
         tmp, _ = _swap_paths(self.path)
-        reconciled = latest_by_pk(
-            spark.read.parquet(self.path), pk=self.pk, version_col="__epoch"
-        )
+        reconciled = self._reconciled(self._log(spark, self._listing()))
         reconciled.sortWithinPartitions(*self.pk).write.mode("overwrite").parquet(tmp)
         commit_swap(self.path)
 
@@ -262,17 +386,26 @@ def matching_row_groups(dataset: ds.Dataset, match: ds.Expression) -> list:
     return [f for f in groups if f.row_groups]
 
 
-def _spark_typed(table: pa.Table) -> pa.Table:
-    """``table`` with naive timestamps marked UTC and every field
+def _first_per(table: pa.Table, keys: Sequence[str]) -> pa.Table:
+    """The first row of ``table`` for each distinct value of ``keys``."""
+    ranked = table.append_column("__rn", pa.array(range(len(table)), pa.int64()))
+    first = ranked.group_by(list(keys), use_threads=False).aggregate([("__rn", "min")])
+    return table.take(first["__rn_min"])
+
+
+def _spark_schema(schema: pa.Schema) -> pa.Schema:
+    """``schema`` with naive timestamps marked UTC and every field
     nullable, the types Spark's parquet read gives the same columns."""
-    return table.cast(
-        pa.schema(
-            pa.field(
-                f.name,
-                pa.timestamp(f.type.unit, "UTC")
-                if pa.types.is_timestamp(f.type) and f.type.tz is None
-                else f.type,
-            )
-            for f in table.schema
+    return pa.schema(
+        pa.field(
+            f.name,
+            pa.timestamp(f.type.unit, "UTC")
+            if pa.types.is_timestamp(f.type) and f.type.tz is None
+            else f.type,
         )
+        for f in schema
     )
+
+
+def _spark_typed(table: pa.Table) -> pa.Table:
+    return table.cast(_spark_schema(table.schema))

@@ -76,3 +76,12 @@ def _jobs_run(spark, action) -> int:
         assert time.monotonic() < deadline, "sentinel job never reported"
         time.sleep(0.05)
     return len(tracker.getJobIdsForGroup(groups[0]))
+
+
+def bitwise_rows(df) -> list[tuple]:
+    """``df``'s rows, sorted, with every float as its exact hex form, so
+    equal lists mean bit-for-bit equal values."""
+    return sorted(
+        (tuple(v.hex() if isinstance(v, float) else v for v in row) for row in df.collect()),
+        key=repr,
+    )

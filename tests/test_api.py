@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from cassandra_iot_pipeline_spark.api import IoTEngine
 from cassandra_iot_pipeline_spark.catalog import load_table
@@ -17,7 +18,7 @@ from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup
 from cassandra_iot_pipeline_spark.plans import formatted_plan
 from cassandra_iot_pipeline_spark.streaming import sinks
 from cassandra_iot_pipeline_spark.streaming.staging import stage_events_stream
-from tests.conftest import SF_DIR, _jobs_run
+from tests.conftest import SF_DIR, _jobs_run, bitwise_rows
 
 
 def test_full_reference_workflow(spark, tmp_path):
@@ -29,6 +30,8 @@ def test_full_reference_workflow(spark, tmp_path):
     counts = engine.table_counts()
     assert counts["sensor_events"] == events.count()
     assert counts["hourly_aggregates"] == hourly_rollup(events).count()
+    rollup = bitwise_rows(hourly_rollup(events))
+    assert bitwise_rows(engine.hourly()) == rollup
 
     # the latency-probe read
     latest = engine.latest_events(device_id=13, limit=10).collect()
@@ -48,16 +51,20 @@ def test_full_reference_workflow(spark, tmp_path):
     full = engine.device_hourly_range(13, lo, hi).count()
     assert full == len(buckets)
 
-    # re-ingesting the same data is idempotent (PK upsert)
+    # re-ingesting the same data is idempotent (PK upsert): its complete
+    # hourly rows replace the streamed partials, nothing is summed twice
     engine.ingest_batch(events, epoch_id=99)
     counts2 = engine.table_counts()
     assert counts2 == counts
+    assert bitwise_rows(engine.hourly()) == rollup
+    assert bitwise_rows(engine.hourly_aggregates(13)) == [r for r in rollup if r[0] == 13]
 
     # compaction preserves the reconciled view and shrinks the log
     stats_before = {r.table: r.n_files for r in engine.table_stats().collect()}
     engine.compact()
     stats_after = {r.table: r.n_files for r in engine.table_stats().collect()}
     assert engine.table_counts() == counts
+    assert bitwise_rows(engine.hourly()) == rollup
     assert stats_after["sensor_events"] <= stats_before["sensor_events"]
 
 
@@ -82,8 +89,11 @@ def test_latency_probe(spark, tmp_path):
     engine = IoTEngine(spark, str(tmp_path / "wh3"))
     engine.ingest_batch(_lt(spark, SF_DIR, "events"))
     probe_df = engine.latency_probe([12, 13], limit=5)
-    assert probe_df.schema.simpleString() == (
-        "struct<device_id:bigint,n_rows:bigint,latency_ms:double>"
+    assert probe_df.schema == _parse_datatype_string(
+        "device_id long, n_rows long, latency_ms double"
+    )
+    assert engine.table_stats().schema == _parse_datatype_string(
+        "table string, n_files long, n_bytes long, n_rows long, consistency string"
     )
     probe = probe_df.collect()
     assert len(probe) == 2

@@ -91,6 +91,33 @@ def test_engine_hourly_aggregates_has_no_range_exchange(two_epoch_engine, spark_
     assert "Coalesce" in plan, plan
 
 
+@pytest.fixture(scope="module")
+def streamed_engine(spark, tmp_path_factory):
+    """An IoTEngine whose hourly table holds the per-epoch partials of a
+    multi-batch ``ingest_stream``."""
+    from cassandra_iot_pipeline_spark.streaming.staging import stage_events_stream
+
+    base = tmp_path_factory.mktemp("streamed")
+    engine = IoTEngine(spark, str(base / "warehouse"))
+    engine.ingest_stream(
+        stage_events_stream(spark, SF_DIR, base_dir=str(base / "staging")),
+        max_files_per_trigger=8,
+    )
+    return engine
+
+
+@pytest.mark.parametrize("name", ["hourly_aggregates", "device_hourly_range"])
+def test_engine_folded_hourly_read_pushes_device_filter(streamed_engine, spark_reads, name):
+    """Over partials the hourly fallback plans the fold: the newest
+    complete epoch per PK (a Window), the (PK, epoch) dedup and the
+    fold (HashAggregates) over one parquet scan, with the device
+    equality pushed into that scan."""
+    plan = formatted_plan(ENGINE_READS[name](streamed_engine))
+    assert "Window" in plan and "HashAggregate" in plan, plan
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    assert "EqualTo(device_id,13)" in plan.split("PushedFilters:")[1].splitlines()[0], plan
+
+
 def test_point_lookup_filter_pushed(spark):
     events = load_table(spark, SF_DIR, "events")
     plan = formatted_plan(point_lookup(events, 13))

@@ -8,8 +8,11 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import random
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,7 +25,7 @@ from cassandra_iot_pipeline_spark.streaming.pipeline import (
 )
 from cassandra_iot_pipeline_spark.streaming.sinks import ParquetUpsertSink
 from cassandra_iot_pipeline_spark.streaming.staging import stage_events_stream
-from tests.conftest import SF_DIR, _jobs_run
+from tests.conftest import SF_DIR, _jobs_run, bitwise_rows
 
 
 def _rows_sorted(df):
@@ -36,8 +39,8 @@ def staged(spark, tmp_path_factory):
 
 
 def test_full_pipeline_parity(spark, staged, tmp_path):
-    """Both continuous queries replayed over the fixture: raw sink holds
-    every event; agg sink equals the batch hourly rollup exactly."""
+    """The ingest query replayed over the fixture: raw sink holds every
+    event; agg sink equals the batch hourly rollup exactly."""
     sinks = run_pipeline(spark, staged, out_dir=str(tmp_path / "out"),
                          max_files_per_trigger=4)
     events = load_table(spark, SF_DIR, "events")
@@ -52,12 +55,10 @@ def test_full_pipeline_parity(spark, staged, tmp_path):
     want = hourly_rollup(events)
     assert _rows_sorted(got) == _rows_sorted(want)
 
-    # r12: the replay skips the trailing no-data micro-batch (update
-    # mode emits every group in its data batch; the extra batch only
-    # evicted state) — every recorded batch must carry input rows, the
-    # session conf must be restored, and the parity asserts above are
-    # the proof the skip changes nothing.
-    assert all(b["input_rows"] > 0 for b in sinks["progress"]["agg"])
+    # the query holds no state, so it never runs a trailing no-data
+    # micro-batch: every recorded batch must carry input rows, and the
+    # session conf must be left as it was
+    assert all(b["input_rows"] > 0 for b in sinks["progress"]["ingest"])
     assert (
         spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
         == "true"
@@ -416,3 +417,333 @@ def test_dedup_within_watermark_drops_redeliveries_in_stream(
         F.col("value").cast("double").alias("value"),
     )
     assert _rows_sorted(got) == _rows_sorted(want)
+
+
+# --- the single ingest query: partials folded on read --------------------
+
+HOURLY_COLS = ("device_id", "hour_bucket", "avg_value", "max_value", "min_value", "event_count")
+T0 = dt.datetime(2024, 1, 1, 10, 0, 0, tzinfo=dt.timezone.utc)
+
+
+def _stage_files(d, batches):
+    """One parquet file per batch of (device, minutes after T0, value)
+    rows, file modification times in batch order (the file source's
+    replay order)."""
+    os.makedirs(d)
+    now = time.time()
+    event_id = 0
+    for i, rows in enumerate(batches):
+        ids = list(range(event_id, event_id + len(rows)))
+        event_id += len(rows)
+        table = pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(
+                    [T0 + dt.timedelta(minutes=m) for _, m, _ in rows], pa.timestamp("us", "UTC")
+                ),
+                "user_id": pa.array([dev for dev, _, _ in rows], pa.int64()),
+                "event_type": pa.array(["reading"] * len(rows)),
+                "value": pa.array([v for _, _, v in rows], pa.float64()),
+            }
+        )
+        path = os.path.join(d, f"b{i:03d}.parquet")
+        pq.write_table(table, path)
+        mtime = now - 1000 + i
+        os.utime(path, (mtime, mtime))
+    return d
+
+
+def _random_late_batches(seed, n_files=5):
+    """Seeded one-file batches whose event time moves forward while
+    some rows arrive up to 2.5 hours late."""
+    rng = random.Random(seed)
+    cursor, batches = 0.0, []
+    for _ in range(n_files):
+        cursor += rng.uniform(0, 45)
+        batches.append(
+            [
+                (rng.randint(1, 3), cursor + rng.uniform(-150, 5), round(rng.uniform(-50, 50), 2))
+                for _ in range(rng.randint(1, 6))
+            ]
+        )
+    return batches
+
+
+LATE_STREAMS = {
+    # 11:00:30 moves the watermark to 10:59:30; the 10:59:45 and
+    # 10:59:50 rows are behind the newest event by less than the delay;
+    # an empty file makes a batch with no rows
+    "late_within_delay": [
+        [(1, 0, 10.0), (1, 30, 20.0), (2, 60.5, 1.5)],
+        [(1, 59.75, 30.25), (2, 70, 2.5)],
+        [],
+        [(1, 59 + 5 / 6, 4.0), (2, 75, 3.5)],
+        [(1, 90, 5.0)],
+    ],
+    # the 10:05 row is 53 minutes late, but the watermark (10:49) has
+    # not passed its window's end
+    "late_into_open_window": [
+        [(1, 0, 1.0), (1, 50, 2.0)],
+        [(1, 58, 3.0), (2, 20, 4.0)],
+        [(1, 5, 5.0), (2, 25, 6.0)],
+        [(1, 150, 7.0)],
+        [(1, 10, 8.0)],
+    ],
+    # the 10:30 rows arrive after the watermark (12:29) closed their
+    # window: the stateful query drops them at input
+    "late_into_evicted_window": [
+        [(1, 0, 10.0), (1, 30, 20.0), (2, 150, 30.0)],
+        [(1, 160, 40.0)],
+        [(1, 30, 99.0), (2, 31, 98.0), (2, 165, 1.25)],
+    ],
+    **{f"random_{seed}": _random_late_batches(seed) for seed in (1, 2, 3)},
+}
+
+
+@pytest.mark.parametrize("name", LATE_STREAMS)
+def test_ingest_hourly_equals_stateful_query_bitwise(spark, tmp_path, name):
+    """``ingest_stream``'s hourly table, folded from per-epoch partials,
+    equals what the stateful ``hourly_agg_query`` lands from the same
+    one-file batches, bit for bit, late and dropped rows included."""
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+
+    src = _stage_files(str(tmp_path / "src"), LATE_STREAMS[name])
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    engine.ingest_stream(src, max_files_per_trigger=1)
+    sink = ParquetUpsertSink(str(tmp_path / "agg"), pk=("device_id", "hour_bucket"))
+    hourly_agg_query(
+        read_event_stream(spark, src, max_files_per_trigger=1), sink, str(tmp_path / "ckpt")
+    ).awaitTermination()
+    want = bitwise_rows(sink.read(spark).select(*HOURLY_COLS))
+    assert bitwise_rows(engine.hourly()) == want
+    assert engine.hourly().columns == list(HOURLY_COLS)
+    # the driver-side read folds the same partials
+    for device in {row[0] for row in want}:
+        got = engine.hourly_aggregates(device)
+        assert bitwise_rows(got) == [r for r in want if r[0] == device]
+
+
+def test_evicted_window_rows_are_dropped_from_partials(spark, tmp_path):
+    """The late-into-evicted-window stream, checked by value: the 10:00
+    window keeps its two on-time rows only."""
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+
+    src = _stage_files(str(tmp_path / "src"), LATE_STREAMS["late_into_evicted_window"])
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    engine.ingest_stream(src, max_files_per_trigger=1)
+    got = {(r.device_id, r.hour_bucket): (r.event_count, r.avg_value) for r in engine.hourly().collect()}
+    h10 = int(T0.timestamp())
+    assert got[(1, h10)] == (2, 15.0)
+    assert got[(2, h10 + 7200)] == (2, 15.625)
+    assert (2, h10) not in got
+    # the raw table still lands every row, late ones included
+    assert engine.table_counts()["sensor_events"] == 7
+
+
+def test_partial_epoch_written_twice_folds_once(spark, tmp_path):
+    """An at-least-once re-delivery of a partial epoch appends a second
+    copy; the read counts that epoch once, on Spark and on the driver."""
+    from cassandra_iot_pipeline_spark.streaming.pipeline import hourly_partials
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(i, T0 + dt.timedelta(minutes=m), d, "r", v) for i, (d, m, v) in enumerate(rows)],
+            "event_id long, ts timestamp, user_id long, event_type string, value double",
+        )
+
+    b0 = batch([(1, 0, 1.25), (1, 10, 2.5), (2, 70, 3.0)])
+    b1 = batch([(1, 20, 4.75), (2, 80, -1.0)])
+    sink = ParquetUpsertSink(str(tmp_path / "agg"), pk=("device_id", "hour_bucket"))
+    sink.append(hourly_partials(b0, 0), 0)
+    sink.append(hourly_partials(b1, 0), 1)
+    sink.append(hourly_partials(b0, 0), 0)
+    assert sink.read_log(spark).count() == 6
+    want = bitwise_rows(hourly_rollup(b0.unionByName(b1)))
+    assert bitwise_rows(sink.read(spark)) == want
+    for device in (1, 2):
+        driver = spark.createDataFrame(sink.lookup(spark, "device_id", device))
+        assert bitwise_rows(driver) == [r for r in want if r[0] == device]
+
+
+def test_redelivered_epoch_after_compact_changes_no_hourly_row(spark, tmp_path):
+    """Re-delivering the last epoch's partials folds once before
+    ``compact()``, and changes nothing after it: compaction keeps the
+    highest epoch each PK folded. The stream's 10:00 window of device 1
+    takes rows in four epochs, the last one included."""
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+    from cassandra_iot_pipeline_spark.streaming.sinks import PARTIAL
+
+    src = _stage_files(str(tmp_path / "src"), LATE_STREAMS["late_into_open_window"])
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    engine.ingest_stream(src, max_files_per_trigger=1)
+    want = bitwise_rows(engine.hourly())
+    h10 = int(T0.timestamp())
+    assert [r[5] for r in want if r[:2] == (1, h10)] == [5]
+    sink = engine.agg_sink
+    log = sink.read_log(spark)
+    last = log.agg(F.max("__epoch")).first()[0]
+    assert last == 4
+    redelivered = log.filter((F.col("__epoch") == last) & F.col(PARTIAL)).drop("__epoch")
+    redelivered = spark.createDataFrame(redelivered.collect(), redelivered.schema)
+    assert redelivered.count() == 1
+    sink.append(redelivered, last)
+    assert bitwise_rows(engine.hourly()) == want
+    engine.compact()
+    assert bitwise_rows(engine.hourly()) == want
+    assert PARTIAL not in sink.read_log(spark).columns
+    sink.append(redelivered, last)
+    assert bitwise_rows(engine.hourly()) == want
+    assert bitwise_rows(engine.hourly_aggregates(1)) == [r for r in want if r[0] == 1]
+
+
+def _job_query_ids(spark, action) -> list:
+    """The ``sql.streaming.queryId`` of every Spark job ``action``
+    starts, read from an event log written for its duration."""
+    import glob
+    import json
+    import tempfile
+
+    sc = spark.sparkContext._jsc.sc()
+    jvm = spark._jvm
+    log_dir = tempfile.mkdtemp(prefix="job_props_")
+    conf = (
+        sc.conf().clone()
+        .set("spark.eventLog.compress", "false")
+        .set("spark.eventLog.rolling.enabled", "false")
+    )
+    listener = jvm.org.apache.spark.scheduler.EventLoggingListener(
+        "job-props", jvm.scala.Option.empty(), jvm.java.net.URI("file://" + log_dir),
+        conf, sc.hadoopConfiguration(),
+    )
+    listener.start()
+    sc.addSparkListener(listener)
+    try:
+        action()
+        sc.listenerBus().waitUntilEmpty()
+    finally:
+        sc.removeSparkListener(listener)
+        listener.stop()
+    ids = []
+    for path in glob.glob(os.path.join(log_dir, "*")):
+        with open(path) as fh:
+            for line in fh:
+                event = json.loads(line)
+                if event["Event"] == "SparkListenerJobStart":
+                    ids.append((event.get("Properties") or {}).get("sql.streaming.queryId"))
+    return ids
+
+
+def _assert_ingest_jobs_tagged(ids, result, warehouse_dir):
+    import json
+
+    with open(os.path.join(warehouse_dir, "ckpt_ingest", "metadata")) as fh:
+        query_id = json.load(fh)["id"]
+    batches = len(result["progress"]["ingest"])
+    # per batch: the raw write and the partials' write
+    assert batches >= 2 and len(ids) >= 2 * batches, ids
+    assert set(ids) == {query_id}, ids
+
+
+def test_ingest_jobs_carry_query_id(spark, staged, tmp_path):
+    """Every Spark job of the ingest batches, both concurrent sink
+    writes included, is tagged with the stream's query id, and the
+    calling thread's properties are left as they were."""
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    result = {}
+    ids = _job_query_ids(
+        spark, lambda: result.update(engine.ingest_stream(staged, max_files_per_trigger=16))
+    )
+    _assert_ingest_jobs_tagged(ids, result, engine.warehouse_dir)
+    assert spark.sparkContext.getLocalProperty("sql.streaming.queryId") is None
+
+
+_NON_PINNED_INGEST = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from cassandra_iot_pipeline_spark.api import IoTEngine
+from cassandra_iot_pipeline_spark.session import build_session
+spark = build_session("non-pinned", extra_conf={
+    "spark.eventLog.enabled": "true", "spark.eventLog.compress": "false",
+    "spark.eventLog.rolling.enabled": "false", "spark.eventLog.dir": sys.argv[4]})
+result = IoTEngine(spark, sys.argv[3]).ingest_stream(sys.argv[2], max_files_per_trigger=16)
+spark.stop()
+print(json.dumps(result["progress"]))
+"""
+
+
+def test_ingest_jobs_carry_query_id_without_pinned_threads(staged, tmp_path):
+    """Under ``PYSPARK_PIN_THREAD=false`` (a process of its own: the
+    gateway mode is fixed at launch) no JVM thread follows a Python
+    thread; the ingest still tags every job with the query id."""
+    import glob
+    import json
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO_ROOT
+
+    log_dir, warehouse = tmp_path / "events", str(tmp_path / "wh")
+    log_dir.mkdir()
+    env = dict(
+        os.environ, PYSPARK_PIN_THREAD="false", SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _NON_PINNED_INGEST, str(REPO_ROOT), staged, warehouse, str(log_dir)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    ids = []
+    for path in glob.glob(str(log_dir / "*")):
+        with open(path) as fh:
+            for line in fh:
+                event = json.loads(line)
+                if event["Event"] == "SparkListenerJobStart":
+                    ids.append((event.get("Properties") or {}).get("sql.streaming.queryId"))
+    progress = json.loads(out.stdout.strip().splitlines()[-1])
+    _assert_ingest_jobs_tagged(ids, {"progress": progress}, warehouse)
+
+
+def test_ingest_runs_one_query_without_state_store(spark, staged, tmp_path):
+    """``ingest_stream`` starts one streaming query, and no batch of it
+    reports a state operator."""
+    import json
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.started, self.progress = [], []
+
+        def onQueryStarted(self, event):
+            self.started.append(str(event.id))
+
+        def onQueryProgress(self, event):
+            self.progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    recorder = Recorder()
+    spark.streams.addListener(recorder)
+    try:
+        result = IoTEngine(spark, str(tmp_path / "wh")).ingest_stream(
+            staged, max_files_per_trigger=8
+        )
+        batches = len(result["progress"]["ingest"])
+        deadline = time.monotonic() + 30
+        while len(recorder.progress) < batches and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(recorder)
+    assert list(result["progress"]) == ["ingest"]
+    assert len(recorder.started) == 1
+    assert len(recorder.progress) == batches > 1
+    assert all(p["id"] == recorder.started[0] and not p["stateOperators"] for p in recorder.progress)
+    assert spark.streams.active == []
