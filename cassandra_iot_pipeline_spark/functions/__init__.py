@@ -21,9 +21,4 @@ pipeline runs over document/embedding tables.
                   topk; streaming ingestion in streaming/ann)
     substrings -- exact substring-level dedup (duplicated k-gram spans,
                   merged + removable; hashed 100 TB shuffle tier)
-    bpe        -- BPE tokenizer training over the word table, encoding,
-                  vocabulary ids, fertility/OOV reporting
-    expectations -- declarative data-quality checks compiled to one
-                  aggregation pass (completeness/uniqueness/range/
-                  set/regex/row-count)
 """

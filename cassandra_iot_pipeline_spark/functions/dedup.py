@@ -524,39 +524,6 @@ def _perm_constants(n_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def minhash_signatures(documents: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """MinHash signatures as n_hashes columns m0..m{n-1}.
-
-    Plan: explode shingles -> ONE xxhash64 per shingle -> the i-th
-    permutation is cheap wrapping arithmetic a_i*h+b_i -> n_hashes MIN
-    aggregates in a single hash aggregation (one shuffle on doc_id).
-    An earlier formulation that re-hashed every shingle n_hashes times
-    inside one expression tree was ~20x slower at sf0.1.
-    """
-    a_const, b_const = _perm_constants(n_hashes)
-    # duplicates don't affect MIN — use the raw shingle rows, no set-
-    # collection shuffle on the signature path
-    exploded = shingle_rows(documents).select(
-        "doc_id",
-        F.xxhash64("s").bitwiseAND(F.lit(0xFFFFFFFF)).alias("h"),
-    )
-    # pmod is essential: an affine map WITHOUT the modulus is monotonic
-    # in h, so every "permutation" would select the same min shingle and
-    # all signatures on a shared-vocabulary corpus would collapse into
-    # one LSH bucket (observed: a 2682-doc bucket at sf0.1).
-    return exploded.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.col("h") * F.lit(a_const[i]) + F.lit(b_const[i]),
-                    F.lit(MERSENNE_P),
-                )
-            ).alias(f"m{i}")
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def pinned_shingle_sets(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, sh) shingle sets behind ONE canonical exchange, for
     operators that consume the sets from several plan branches
@@ -692,9 +659,9 @@ def banded_rows(
     shingle-set frame — the 16-bytes-per-row index form that both the
     in-corpus pair generation (:func:`_candidates_from_sets`) and the
     incremental store (functions/incremental.py) join on. Signatures
-    are identical to :func:`minhash_signatures` (MIN over a set == MIN
-    over the multiset), so band rows computed in different batches /
-    sessions are comparable as long as (n_hashes, bands) match.
+    are a pure function of the shingle set, so band rows computed in
+    different batches / sessions are comparable as long as
+    (n_hashes, bands) match.
 
     ``with_salt`` adds a ``salt`` column: band ``b``'s salt is the
     NEXT band's bucket hash (``bucket`` of band ``(b+1) % bands``) — a

@@ -14,8 +14,9 @@ SLOWER than the RDD scan it replaced: thousands of py4j round trips)
 and casts each column to the declared type, yielding a JVM-only
 LocalRelation with zero Python workers and zero scan tasks. Cells may
 be int / float / bool / str / None or flat lists of those; anything
-else falls back to a ONE-slice pickled RDD, which still replaces the
-32-task worker spin-up with a single reused worker.
+else raises ``TypeError``. Empty input is an empty LocalRelation built
+on the JVM from the parsed schema (``createDataFrame([], schema)``
+would be the Python-RDD scan again).
 """
 
 from __future__ import annotations
@@ -60,18 +61,17 @@ def literal_frame(
     schema is the DDL's, nullability included."""
     struct_type = T._parse_datatype_string(schema)
     if not rows:
-        # empty input: createDataFrame([], schema) is already a pure
-        # LocalRelation (no RDD, no Python) — keep it
-        return spark.createDataFrame([], struct_type)
-    try:
-        values = ", ".join(
-            "(" + ", ".join(_sql_literal(v) for v in row) + ")"
-            for row in rows
+        jsession = spark._jsparkSession
+        return DataFrame(
+            jsession.createDataFrame(
+                spark._jvm.java.util.ArrayList(),
+                jsession.parseDataType(struct_type.json()),
+            ),
+            spark,
         )
-    except TypeError:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), struct_type
-        )
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
+    )
     cols = ", ".join(_typed(f) for f in struct_type.fields)
     names = ", ".join(f.name for f in struct_type.fields)
     return spark.sql(

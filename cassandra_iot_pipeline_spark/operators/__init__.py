@@ -18,10 +18,6 @@ path):
                   enrichment
     funnel     -- ordered k-step funnel (greedy-earliest chain,
                   horizon-capped, conversion + step-through rates)
-    paths      -- first-order event-transition matrix (the funnel's
-                  exploratory complement)
-    downsample -- LTTB visual-fidelity decimation for serving long
-                  series at dashboard resolution
     asof       -- as-of (point-in-time) join
     rangejoin  -- range (interval) join by window-length bucketing
     windows    -- running aggregates, lag/lead, sessionization (§2.F)

@@ -38,20 +38,6 @@ def exact_sum(measure: Column, scale: int = 2) -> Column:
     return F.sum(units(measure, scale))
 
 
-def exact_sum_value(measure: Column, scale: int = 2) -> Column:
-    """Order-independent SUM returned in the measure's own scale
-    (single correctly-rounded division -- deterministic)."""
-    return exact_sum(measure, scale) / F.lit(float(10**scale))
-
-
 def oracle_units(expr: str, scale: int = 2) -> str:
     """ANSI-SQL twin of :func:`units` for the DuckDB oracle."""
     return f"CAST(ROUND(({expr}) * {10 ** scale}) AS BIGINT)"
-
-
-def oracle_sum(expr: str, scale: int = 2) -> str:
-    return f"SUM({oracle_units(expr, scale)})"
-
-
-def oracle_sum_value(expr: str, scale: int = 2) -> str:
-    return f"(SUM({oracle_units(expr, scale)}) / {float(10 ** scale)})"

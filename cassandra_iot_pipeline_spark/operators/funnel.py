@@ -490,11 +490,11 @@ def funnel_segmented(
     :func:`funnel` (segments never change the chain); the user then
     counts toward their segment's rows. Users absent from
     ``segments`` land in segment NULL rather than silently dropping
-    (an outer-joined dimension row is a data-quality signal — pair
-    with a Completeness expectation). Unlike :func:`funnel`, only
-    (segment, step) pairs with at least one step-0 user in the
-    segment appear (an all-segments x all-steps dense frame needs the
-    segment universe, which belongs to the caller).
+    (an outer-joined dimension row is a data-quality signal).
+    Unlike :func:`funnel`, only (segment, step) pairs with at least
+    one step-0 user in the segment appear (an all-segments x
+    all-steps dense frame needs the segment universe, which belongs
+    to the caller).
 
     Plan: the same ONE user-keyed exchange + fold; the segment
     attaches to the per-user fold RESULT via a broadcast join (k-sized

@@ -11,11 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def executed_plan(df: DataFrame) -> str:
-    """String form of the (possibly adaptive) physical plan."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
@@ -35,12 +30,6 @@ def assert_broadcast_join(df: DataFrame) -> None:
     plan = formatted_plan(df)
     if "BroadcastHashJoin" not in plan:
         raise AssertionError(f"expected BroadcastHashJoin; plan:\n{plan}")
-
-
-def assert_no_shuffle(df: DataFrame) -> None:
-    plan = formatted_plan(df)
-    if "Exchange" in plan:
-        raise AssertionError(f"expected shuffle-free plan; plan:\n{plan}")
 
 
 def window_frames(df: DataFrame) -> list[str]:

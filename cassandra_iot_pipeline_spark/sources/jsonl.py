@@ -28,7 +28,7 @@ Gotcha this module pins in tests: Spark's PERMISSIVE corrupt-record
 column is populated only when the line fails to parse as the declared
 schema — a MISSING field is a NULL, not a corrupt line. The report
 therefore takes optional ``required`` columns whose NULLs count as
-defects (the expectations-module posture: declared, not inferred).
+defects (declared, not inferred).
 """
 
 from __future__ import annotations

@@ -213,11 +213,6 @@ def zorder_value_k(cols: list["F.Column"], bits: int = 16) -> "F.Column":
     return z
 
 
-def zorder_value(a: "F.Column", b: "F.Column", bits: int = 16) -> "F.Column":
-    """The 2-dim Morton curve (see :func:`zorder_value_k`)."""
-    return zorder_value_k([a, b], bits)
-
-
 def write_zordered(
     events: DataFrame,
     path: str,

@@ -17,8 +17,6 @@
     substrings -- continuous substring-level boilerplate removal over
                 the persisted gram-count store (prefix-consistent
                 Lee-et-al marking)
-    audit    -- continuous data-quality expectations (per-epoch
-                metric series; drift + failure views)
     lateness -- watermark-lateness accounting (per-epoch drop counts
                 for candidate delays; tuning recommendation)
     cassandra -- connector sink options (prod backend; no cluster here)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.agg import sliding_rollup
 from ..operators.exactmath import exact_sum
 from ..schemas import EVENTS_FIXTURE_SCHEMA
 from ..store import run_foreach_batch
@@ -361,34 +362,14 @@ def sliding_agg_query(
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Hopping-window streaming aggregation — the overlapping-window
-    companion to :func:`hourly_agg_query`, matching the batch
-    ``operators/agg.py::sliding_rollup`` contract exactly (same
-    integer-units arithmetic, same origin-aligned window assignment).
+    companion to :func:`hourly_agg_query`: the batch
+    ``operators/agg.py::sliding_rollup`` expression under the
+    watermark, so both share one arithmetic and window assignment.
     State holds w/s windows per device instead of one; the watermark
     bounds it identically (a window's state is evictable once the
     watermark passes its end)."""
-    agg = (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(
-            F.col("user_id").alias("device_id"),
-            F.window("ts", window, slide).alias("w"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_units"),
-            F.max("value").alias("max_value"),
-            F.min("value").alias("min_value"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-        .select(
-            "device_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("bucket_start"),
-            (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias(
-                "avg_value"
-            ),
-            "max_value",
-            "min_value",
-            "event_count",
-        )
+    agg = sliding_rollup(
+        stream.withWatermark("ts", WATERMARK_DELAY), window=window, slide=slide
     )
     return run_foreach_batch(
         agg, sink.write_batch, checkpoint_dir, trigger, "update"

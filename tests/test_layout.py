@@ -13,6 +13,13 @@ this test: delete it with its tests, or wire it into an entry point,
 or add it to ``KEPT`` with the keep rule it meets. A ``KEPT`` module
 that an entry point now reaches fails too, so the ledger never holds
 stale rows.
+
+The same ledger holds per function: a public top-level function or
+class of the package that no file (package, entry points, ``tools/``,
+``tests/``) references by name must be deleted or listed in
+``UNREFERENCED_KEPT`` with its keep rule. A reference is a name, an
+attribute, an imported name or a string constant equal to the name;
+its own ``def`` and a docstring mention do not count.
 """
 
 from __future__ import annotations
@@ -39,14 +46,16 @@ KEPT = {
     "functions.sampling": "LLM-data text family: deterministic splits and samples",
     "sources.jsonl": "LLM-data text family: JSONL corpus landing",
     "plans": "plan-pin helpers used by tests/test_plans.py and tools/dump_plans.py",
-    # deferred cuts (ROADMAP item 4): no keep rule holds; each goes in a
-    # later prune together with the tests that exercise it
-    "functions.bpe": "deferred cut: BPE tokenizer training and encoding",
+    # deferred cut: no keep rule holds; it goes in the next prune together
+    # with the tests that exercise it
     "functions.lm": "deferred cut: n-gram language-model perplexity scoring",
-    "functions.expectations": "deferred cut: declarative data-quality checks",
-    "operators.downsample": "deferred cut: LTTB series downsampling",
-    "operators.paths": "deferred cut: user path and next-step analysis",
-    "streaming.audit": "deferred cut: continuous expectations audit",
+}
+
+#: Public top-level functions and classes of the package that no file
+#: references, each with the keep rule it meets.
+UNREFERENCED_KEPT = {
+    "sources.kafka.read_kafka_stream": "reference connector (Kafka source)",
+    "sources.kafka.write_kafka_stream": "reference connector (Kafka sink)",
 }
 
 ENTRY_POINTS = [
@@ -54,6 +63,14 @@ ENTRY_POINTS = [
     REPO_ROOT / "bench.py",
     REPO_ROOT / "tools" / "oracle_check.py",
     *sorted((REPO_ROOT / "perfbench").glob("*.py")),
+]
+
+#: The files whose references keep a public function alive.
+REFERRING_FILES = [
+    *sorted((REPO_ROOT / PACKAGE).rglob("*.py")),
+    *ENTRY_POINTS,
+    *sorted((REPO_ROOT / "tools").glob("*.py")),
+    *sorted((REPO_ROOT / "tests").glob("*.py")),
 ]
 
 
@@ -126,4 +143,48 @@ def test_unreached_modules_are_exactly_the_kept_ledger():
     assert not set(KEPT) - unreached, (
         "KEPT names modules an entry point reaches (or that no longer "
         f"exist): drop their rows: {sorted(set(KEPT) - unreached)}"
+    )
+
+
+def _referenced_names(path: Path) -> set[str]:
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rpartition(".")[2])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names.add(node.value)
+    return names
+
+
+def test_unreferenced_public_functions_are_exactly_the_kept_ledger():
+    assert all(reason.strip() for reason in UNREFERENCED_KEPT.values())
+    referenced = set()
+    for path in set(REFERRING_FILES):
+        referenced |= _referenced_names(path)
+    unreferenced = set()
+    for module, path in _package_modules().items():
+        for node in ast.parse(path.read_text()).body:
+            if (
+                isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                and not node.name.startswith("_")
+                and node.name not in referenced
+            ):
+                unreferenced.add(
+                    f"{module.removeprefix(f'{PACKAGE}.')}.{node.name}"
+                )
+    assert not unreferenced - set(UNREFERENCED_KEPT), (
+        "public functions no file references and UNREFERENCED_KEPT does "
+        "not name: delete them or record why they stay: "
+        f"{sorted(unreferenced - set(UNREFERENCED_KEPT))}"
+    )
+    assert not set(UNREFERENCED_KEPT) - unreferenced, (
+        "UNREFERENCED_KEPT names functions that are referenced (or no "
+        "longer exist): drop their rows: "
+        f"{sorted(set(UNREFERENCED_KEPT) - unreferenced)}"
     )

@@ -10,9 +10,11 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 from cassandra_iot_pipeline_spark.api import IoTEngine
 from cassandra_iot_pipeline_spark.catalog import load_table
+from cassandra_iot_pipeline_spark.litframe import literal_frame
 from cassandra_iot_pipeline_spark.operators.joins import enrich_customers
 from cassandra_iot_pipeline_spark.operators.serving import (
     categorical_filter,
@@ -24,7 +26,7 @@ from cassandra_iot_pipeline_spark.plans import (
     formatted_plan,
 )
 from cassandra_iot_pipeline_spark.streaming import sinks
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -116,6 +118,18 @@ def test_engine_folded_hourly_read_pushes_device_filter(streamed_engine, spark_r
     assert "Window" in plan and "HashAggregate" in plan, plan
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
     assert "EqualTo(device_id,13)" in plan.split("PushedFilters:")[1].splitlines()[0], plan
+
+
+def test_empty_literal_frame_is_a_local_relation(spark):
+    """An empty drop list (incremental_near_dedup) must not plan a
+    Python-RDD scan: the frame is an empty LocalRelation, collects
+    with no job, and keeps the DDL's schema, nullability included."""
+    ddl = "doc_id BIGINT NOT NULL, tag STRING, xs ARRAY<DOUBLE>"
+    df = literal_frame(spark, [], ddl)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan and "LocalRelation" in plan, plan
+    assert _jobs_run(spark, df.collect) == 0
+    assert df.schema == T._parse_datatype_string(ddl)
 
 
 def test_point_lookup_filter_pushed(spark):

@@ -197,29 +197,6 @@ def _extras(spark, sf_dir):
             "HashAggregate. Shuffle carries aggregate rows only.",
             _hourly_rollup(spark, sf_dir),
         ),
-        "event_transitions": (
-            "First-order path matrix (r8): one events-wide Exchange "
-            "for the per-key (ts, id)-ordered lag window, then a "
-            "partial-aggregable groupBy whose exchange carries at "
-            "most |types|^2 rows per task; the row-total window runs "
-            "over the matrix, not the events.",
-            _transitions(spark, sf_dir),
-        ),
-        "expectations_report": (
-            "Data-quality audit (r8): every declared check compiles "
-            "into ONE aggregation over ONE scan (count-distinct "
-            "included via the two-phase distinct aggregate); the "
-            "k-row report explodes from the 1-row metrics frame — no "
-            "join, no window, no second pass.",
-            _expectations(spark, sf_dir),
-        ),
-        "lttb_downsample": (
-            "LTTB serving decimation (r8): one Exchange by series "
-            "key into FlatMapGroupsInPandas — the sequential-by-"
-            "design bucket walk runs vectorized per series, series "
-            "in parallel; nothing else in the plan.",
-            _lttb(spark, sf_dir),
-        ),
         "ohlc_bars": (
             "OHLC candles (r8 third arc): ONE map-side-combined hash "
             "aggregation on (key, bucket) — min_by/max_by carry "
@@ -279,15 +256,6 @@ def _extras(spark, sf_dir):
             "back (AQE broadcast-converts when it fits), and the "
             "rebuild is one per-doc aggregation.",
             _dedup_lines(spark, sf_dir),
-        ),
-        "bpe_pair_counts": (
-            "BPE training, the per-merge stage (r8 third arc): pair "
-            "structs materialize BEFORE the explode (one tokenizer "
-            "pass per word, the shingle/postings lesson), then ONE "
-            "map-side-combined hash aggregation over the vocab-sized "
-            "word table — the corpus never appears in the iteration "
-            "plan at all.",
-            _bpe_pairs(spark, sf_dir),
         ),
     }
 
@@ -364,24 +332,6 @@ def _dedup_lines(spark, sf_dir):
     )
 
 
-def _bpe_pairs(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.functions.bpe import (
-        _initial_symbols,
-        _pair_rows,
-        bpe_word_counts,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = bpe_word_counts(docs).select(
-        "w", "c", _initial_symbols().alias("syms")
-    )
-    return (
-        _pair_rows(words).groupBy("a", "b").agg(F.sum("c").alias("cnt"))
-    )
-
 
 def _conversion_pairs(spark, sf_dir):
     from cassandra_iot_pipeline_spark.catalog import load_table
@@ -399,29 +349,7 @@ def _hourly_rollup(spark, sf_dir):
     return hourly_rollup(load_table(spark, sf_dir, "events"))
 
 
-def _transitions(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.paths import (
-        event_transitions,
-    )
 
-    return event_transitions(load_table(spark, sf_dir, "events"))
-
-
-def _expectations(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.functions.expectations import (
-        events_expectations,
-    )
-
-    return events_expectations(load_table(spark, sf_dir, "events"))
-
-
-def _lttb(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.downsample import lttb
-
-    return lttb(load_table(spark, sf_dir, "events"), 500, key="user_id")
 
 
 def _scd2_merge(spark, sf_dir):

@@ -1038,16 +1038,9 @@ def main() -> None:
 
     if "--funnel" in sys.argv:
         # r8: the engagement-analytics family at probe scale.
-        # Funnel/transitions run over the full synthetic event stream
+        # The funnels run over the full synthetic event stream
         # (the wide work is the one user-keyed exchange).
-        from cassandra_iot_pipeline_spark.functions.expectations import (
-            events_expectations,
-        )
-        from cassandra_iot_pipeline_spark.operators.downsample import lttb
         from cassandra_iot_pipeline_spark.operators.funnel import funnel
-        from cassandra_iot_pipeline_spark.operators.paths import (
-            event_transitions,
-        )
 
         timed(
             "funnel_4step_horizon7d",
@@ -1135,7 +1128,6 @@ def main() -> None:
             ),
             results,
         )
-        timed("event_transitions", event_transitions(events), results)
         from cassandra_iot_pipeline_spark.operators.funnel import (
             funnel_trend,
         )
@@ -1150,90 +1142,6 @@ def main() -> None:
             ),
             results,
         )
-        timed("expectations_audit", events_expectations(events), results)
-        timed("lttb_500", lttb(events, 500, key="user_id"), results)
-
-    if "--bpe-stores" in sys.argv:
-        # r8 third arc: BPE training cost per merge over a vocab-sized
-        # word table, and the OHLC aggregation.
-        import tempfile
-
-        from cassandra_iot_pipeline_spark.functions.bpe import (
-            bpe_piece_counts,
-            bpe_train,
-        )
-        from cassandra_iot_pipeline_spark.operators.timeseries import (
-            ohlc_bars,
-        )
-
-        # BPE: the claim under test is that per-merge cost is bounded
-        # by the WORD TABLE, not the corpus — train on a 200k-word
-        # synthetic vocabulary (hex tokens: a realistic 16-char,
-        # 16-symbol alphabet) and report total + per-merge seconds.
-        wc = spark.range(200_000).select(
-            F.format_string("%x", F.xxhash64("id")).alias("w"),
-            (F.pmod(F.xxhash64(F.lit("c"), F.col("id")), F.lit(999)) + 1).alias("c"),
-        )
-        n_m = 20
-        t0 = time.perf_counter()
-        model = bpe_train(wc, n_m, min_count=2)
-        total = round(time.perf_counter() - t0, 2)
-        results["bpe_train_200k_words_20_merges"] = total
-        results["bpe_sec_per_merge"] = round(total / max(1, len(model.merges)), 2)
-        print(
-            f"[probe] bpe_train 200k words x {len(model.merges)} merges: "
-            f"{total}s ({results['bpe_sec_per_merge']}s/merge)",
-            file=sys.stderr, flush=True,
-        )
-        # encode a 100k-doc staged corpus with the learned merges (the
-        # distinct-word confinement: Python touches ~2k words, never
-        # the ~8M token occurrences)
-        bdocs_dir = tempfile.mkdtemp(prefix="probe_bpe_")
-        probe_documents(spark, 100_000).write.mode("overwrite").parquet(
-            bdocs_dir
-        )
-        bdocs = spark.read.parquet(bdocs_dir)
-        wmodel = bpe_train(
-            bdocs.select(F.explode(F.split("text", " ")).alias("w"))
-            .groupBy("w").agg(F.count(F.lit(1)).alias("c")),
-            16,
-        )
-        timed(
-            "bpe_piece_counts_100k_docs",
-            bpe_piece_counts(bdocs, wmodel.merges),
-            results,
-        )
-        from cassandra_iot_pipeline_spark.functions.bpe import (
-            bpe_pack_blocks,
-            bpe_vocab,
-        )
-
-        wvocab = bpe_vocab(
-            bdocs.select(F.explode(F.split("text", " ")).alias("w"))
-            .groupBy("w").agg(F.count(F.lit(1)).alias("c")),
-            wmodel.merges,
-        )
-        timed(
-            "bpe_pack_blocks_100k_docs",
-            bpe_pack_blocks(bdocs, wmodel.merges, wvocab, 2048, 64),
-            results,
-        )
-
-        timed("ohlc_bars_hourly", ohlc_bars(events), results)
-
-        from cassandra_iot_pipeline_spark.functions.sampling import (
-            priority_sample,
-        )
-        from cassandra_iot_pipeline_spark.operators.stats import (
-            mad_outliers,
-        )
-
-        timed(
-            "priority_sample_k1000_20m",
-            priority_sample(events, "event_id", "value", 1000),
-            results,
-        )
-        timed("mad_outliers_20m", mad_outliers(events), results)
 
     if "--lines" in sys.argv:
         # r9: the C4 line-dedup rule over a multi-line corpus
@@ -1274,74 +1182,6 @@ def main() -> None:
                 dedup_lines(ldocs, min_line_chars=10, hash_shuffle=hs),
                 results,
             )
-
-    if "--bpe-multi" in sys.argv:
-        # r9 (r8 verdict #2): the merges_per_iter tier's realistic-vocab
-        # posture. bpe_train is inherently one-driver-round-per-
-        # iteration; N=1 is exact reference BPE at ~1 s/round, which is
-        # ~10 h for a production 30k-merge vocab. N=16 commits up to 16
-        # DISJOINT pairs per round (stale counts stay exact under
-        # disjointness; only merge ORDER can diverge). Train a >=2k-
-        # merge vocab at N=16 on the 200k-word hex table, plus an N=1
-        # run of 128 merges for the per-merge comparison (r8 measured
-        # N=1 FLAT at 1.18 s/merge over the same table, so the short
-        # run is representative).
-        from cassandra_iot_pipeline_spark.functions.bpe import bpe_train
-
-        wc = spark.range(200_000).select(
-            F.format_string("%x", F.xxhash64("id")).alias("w"),
-            (
-                F.pmod(F.xxhash64(F.lit("c"), F.col("id")), F.lit(999)) + 1
-            ).alias("c"),
-        ).localCheckpoint(eager=True)
-        t0 = time.perf_counter()
-        m1 = bpe_train(wc, 128, min_count=2, merges_per_iter=1)
-        sec1 = round(time.perf_counter() - t0, 2)
-        results["bpe_train_n1_128_merges"] = sec1
-        results["bpe_n1_sec_per_merge"] = round(sec1 / max(1, len(m1.merges)), 3)
-        print(
-            f"[probe] bpe_train N=1: {len(m1.merges)} merges in {sec1}s "
-            f"({results['bpe_n1_sec_per_merge']}s/merge)",
-            file=sys.stderr, flush=True,
-        )
-        t0 = time.perf_counter()
-        m16 = bpe_train(wc, 2048, min_count=2, merges_per_iter=16)
-        sec16 = round(time.perf_counter() - t0, 2)
-        results["bpe_train_n16_2048_merges"] = sec16
-        results["bpe_n16_sec_per_merge"] = round(
-            sec16 / max(1, len(m16.merges)), 3
-        )
-        print(
-            f"[probe] bpe_train N=16: {len(m16.merges)} merges in {sec16}s "
-            f"({results['bpe_n16_sec_per_merge']}s/merge)",
-            file=sys.stderr, flush=True,
-        )
-
-    if "--monitors" in sys.argv:
-        # r8 third arc: the drift-monitoring family at probe scale
-        # (tokenizer report).
-        import tempfile
-
-        from cassandra_iot_pipeline_spark.functions.bpe import (
-            bpe_train,
-            bpe_vocab,
-            bpe_word_counts,
-            tokenizer_report,
-        )
-
-        mdocs_dir = tempfile.mkdtemp(prefix="probe_mon_")
-        probe_documents(spark, 100_000).write.mode("overwrite").parquet(
-            mdocs_dir
-        )
-        mdocs = spark.read.parquet(mdocs_dir)
-        wc = bpe_word_counts(mdocs)
-        model = bpe_train(wc, 16)
-        vocab = bpe_vocab(wc, model.merges)
-        timed(
-            "tokenizer_report_100k_docs",
-            tokenizer_report(mdocs, model.merges, vocab),
-            results,
-        )
 
     rollup_rows_per_sec = (
         round(n_events / results["hourly_rollup"])
