@@ -5,16 +5,19 @@ passthrough into ``sensor_events`` (reference:
 iot-cassandra-pipeline/src/spark_consumer.py:131-160) and a watermarked
 hourly aggregation into ``hourly_aggregates`` (spark_consumer.py:164-211).
 :func:`run_pipeline` lands both tables from ONE query with no state
-store: each micro-batch's ``foreachBatch`` writes the raw rows and that
-batch's per-(device, hour) partials, concurrently, and the hourly sink
+store: each micro-batch's ``foreachBatch`` collects the batch's raw rows
+as Arrow (one Spark job, one source scan) and writes, from the driver,
+those rows and the batch's per-(device, hour) partials; the hourly sink
 folds the partials on read and in compaction (streaming/sinks.py). One
-source scan, offset log and WAL per batch instead of two, and no
-state-store load and commit.
+offset log and WAL per batch instead of two, no state-store load and
+commit, and no Spark write job. The batch is held on the driver, so
+``max_files_per_trigger`` bounds its size.
 
 Differences from the reference, by design:
 - **partials instead of state**: the hourly state is kept in integer
   units (see operators/exactmath.py), so it is associative and the fold
-  of the partials equals the stateful aggregate bit for bit. Epochs plus
+  of the partials equals the stateful aggregate bit for bit; the Arrow
+  partials use Spark's window floor and half-up rounding. Epochs plus
   the idempotent sink keep the result exactly-once: a re-delivered
   epoch is folded once.
 - **the stateful late-data rule, read from disk**: batch N drops the
@@ -39,9 +42,10 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -168,21 +172,6 @@ def raw_rows(events: DataFrame) -> DataFrame:
     )
 
 
-def _hourly_state(events: DataFrame) -> DataFrame:
-    """Per (device, ``hour_window``): the hourly rollup's state in
-    integer units, the same columns whether a state store keeps it
-    across micro-batches or one micro-batch lands it as a partial."""
-    return events.groupBy(
-        F.col("user_id").alias("device_id"),
-        F.window("ts", WINDOW).alias("hour_window"),
-    ).agg(
-        exact_sum(F.col("value")).alias("sum_units"),
-        F.max("value").alias("max_value"),
-        F.min("value").alias("min_value"),
-        F.count(F.lit(1)).alias("event_count"),
-    )
-
-
 def hourly_agg_query(
     stream: DataFrame,
     sink: ParquetUpsertSink,
@@ -197,37 +186,68 @@ def hourly_agg_query(
     bounded by the watermark (W1). Output rows match the batch
     hourly_rollup contract exactly.
     """
-    agg = _hourly_state(stream.withWatermark("ts", WATERMARK_DELAY)).select(
-        "device_id",
-        F.unix_timestamp(F.col("hour_window.start")).cast("long").alias("hour_bucket"),
-        (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias("avg_value"),
-        "max_value",
-        "min_value",
-        "event_count",
+    agg = (
+        stream.withWatermark("ts", WATERMARK_DELAY)
+        .groupBy(
+            F.col("user_id").alias("device_id"),
+            F.window("ts", WINDOW).alias("hour_window"),
+        )
+        .agg(
+            exact_sum(F.col("value")).alias("sum_units"),
+            F.max("value").alias("max_value"),
+            F.min("value").alias("min_value"),
+            F.count(F.lit(1)).alias("event_count"),
+        )
+        .select(
+            "device_id",
+            F.unix_timestamp(F.col("hour_window.start")).cast("long").alias("hour_bucket"),
+            (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias("avg_value"),
+            "max_value",
+            "min_value",
+            "event_count",
+        )
     )
     return run_foreach_batch(
         agg, sink.write_batch, checkpoint_dir, trigger, output_mode
     )
 
 
-def hourly_partials(batch: DataFrame, late_before_ms: int) -> DataFrame:
-    """One micro-batch's share of the hourly rollup: per (device, hour
-    window), the integer-unit state of :func:`hourly_agg_query`, marked
-    partial. Windows that end at or before ``late_before_ms`` (epoch
-    milliseconds) are dropped, as the stateful query drops them: by
-    their key, so all of a late window's rows go."""
-    return (
-        _hourly_state(batch)
-        .where(F.col("hour_window.end") > F.timestamp_millis(F.lit(late_before_ms)))
-        .select(
-            "device_id",
-            F.unix_timestamp(F.col("hour_window.start")).cast("long").alias("hour_bucket"),
-            "sum_units",
-            "event_count",
-            "max_value",
-            "min_value",
-            F.lit(True).alias(PARTIAL),
-        )
+def hourly_partials(rows: pa.Table, late_before_ms: int) -> pa.Table:
+    """One micro-batch's share of the hourly rollup, from its
+    :func:`raw_rows` collected as Arrow: per (device, hour window), the
+    integer-unit state of :func:`hourly_agg_query`, marked partial, in
+    the columns and arithmetic of the stateful query's plan. The window
+    floors the epoch-microsecond time to the hour (``F.window``), and a
+    value's units are ``round(value * 100)`` half away from zero
+    (Spark's HALF_UP, ``operators/exactmath.py::units``). Windows that
+    end at or before ``late_before_ms`` (epoch milliseconds) are
+    dropped, as the stateful query drops them: by their key, so all of
+    a late window's rows go."""
+    micros = pc.cast(rows["ts"], pa.int64())
+    hour = pc.floor_temporal(pc.cast(micros, pa.timestamp("us")), unit="hour")
+    hour_bucket = pc.divide(pc.cast(hour, pa.int64()), 1_000_000)
+    units = pc.round(pc.multiply(rows["value"], 100.0), round_mode="half_towards_infinity")
+    state = pa.table(
+        {
+            "device_id": rows["user_id"],
+            "hour_bucket": hour_bucket,
+            "units": pc.cast(units, pa.int64()),
+            "value": rows["value"],
+        }
+    ).filter(pc.greater(pc.multiply(pc.add(hour_bucket, 3600), 1000), late_before_ms))
+    folded = state.group_by(["device_id", "hour_bucket"], use_threads=False).aggregate(
+        [("units", "sum"), ([], "count_all"), ("value", "max"), ("value", "min")]
+    )
+    return pa.table(
+        {
+            "device_id": folded["device_id"],
+            "hour_bucket": folded["hour_bucket"],
+            "sum_units": folded["units_sum"],
+            "event_count": folded["count_all"],
+            "max_value": folded["value_max"],
+            "min_value": folded["value_min"],
+            PARTIAL: pa.repeat(True, folded.num_rows),
+        }
     )
 
 
@@ -251,35 +271,21 @@ def run_pipeline(
 ) -> dict:
     """The reference pipeline as one ``availableNow`` query off the
     watermarked source, blocking until the bounded replay completes.
-    Each micro-batch lands its raw rows and its hourly partials
-    (:func:`hourly_partials`) at the batch's epoch, both writes at once.
-    Returns the two sinks (raw + agg) for reading and the query's
-    per-micro-batch ``progress`` rows."""
+    Each micro-batch is collected once as Arrow, and the driver lands
+    its raw rows and its hourly partials (:func:`hourly_partials`) at
+    the batch's epoch (``ParquetUpsertSink.append_arrow``). Returns the
+    two sinks (raw + agg) for reading and the query's per-micro-batch
+    ``progress`` rows."""
     out_dir = out_dir or tempfile.mkdtemp(prefix="spark_graft_pipeline_")
     raw_sink, agg_sink = ingest_sinks(out_dir)
     checkpoint = os.path.join(out_dir, "ckpt_ingest")
 
     def land(batch: DataFrame, epoch_id: int) -> None:
-        # no empty check: a micro-batch of the file source has rows unless
-        # its files have none, and then each table gets one schema-only
-        # file; the check's job (and the persist it needs) cost every
-        # batch more than that
-        def write_raw():
-            raw_sink.append(raw_rows(batch), epoch_id)
-
-        def write_agg():
-            partials = hourly_partials(batch, _late_before_ms(checkpoint, epoch_id))
-            agg_sink.append(partials, epoch_id)
-
-        with _stream_tagged(batch.sparkSession, checkpoint) as wrap:
-            if wrap is None:
-                write_raw()
-                write_agg()
-                return
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                pending = pool.submit(wrap(write_agg))
-                write_raw()
-            pending.result()
+        with _stream_tagged(batch.sparkSession, checkpoint):
+            rows = raw_rows(batch).toArrow()
+        raw_sink.append_arrow(rows, epoch_id)
+        partials = hourly_partials(rows, _late_before_ms(checkpoint, epoch_id))
+        agg_sink.append_arrow(partials, epoch_id)
 
     q = run_foreach_batch(
         read_event_stream(spark, staged_dir, max_files_per_trigger).withWatermark(
@@ -298,27 +304,18 @@ def run_pipeline(
 
 @contextmanager
 def _stream_tagged(spark: SparkSession, checkpoint_dir: str):
-    """Keep every Spark job of a ``foreachBatch`` call tagged with the
-    stream's query id. With pinned py4j threads, PySpark's default, the
-    call runs on the stream's JVM thread, and this yields the
-    ``inheritable_thread_target`` wrapper: a thread target it wraps
-    inherits that thread's job properties and session tags. Without
-    them no JVM thread is bound to a Python thread: this yields None,
-    sets the query id (from the checkpoint's metadata) for the block's
-    duration, and the caller keeps its jobs on the calling thread."""
-    from pyspark.util import inheritable_thread_target
-
-    wrap = inheritable_thread_target(spark)
-    if callable(wrap):
-        yield wrap
-        return
+    """Tag the Spark jobs of the block with the stream's query id (from
+    the checkpoint's metadata). With pinned py4j threads, PySpark's
+    default, a ``foreachBatch`` call runs on the stream's JVM thread,
+    which carries the tag already; without them no JVM thread is bound
+    to a Python thread, and the block's jobs would go untagged."""
     sc = spark.sparkContext
     with open(os.path.join(checkpoint_dir, "metadata")) as fh:
         query_id = json.load(fh)["id"]
     before = sc.getLocalProperty(QUERY_ID)
     sc.setLocalProperty(QUERY_ID, query_id)
     try:
-        yield None
+        yield
     finally:
         sc.setLocalProperty(QUERY_ID, before)
 

@@ -7,7 +7,9 @@ spark_consumer.py:147-153, 197-203). A parquet sink gets the same
 semantics the way Cassandra itself does — LSM-style:
 
 - **writes append**: each micro-batch lands as new files stamped with a
-  monotonically increasing ``__epoch`` (the foreachBatch epoch_id);
+  monotonically increasing ``__epoch`` (the foreachBatch epoch_id),
+  written by Spark (``append``) or from an Arrow table on the driver
+  (``append_arrow``), the two kinds alike to every reader;
 - **reads reconcile**: the read path keeps the max-``__epoch`` row per
   PK (dedup-on-read == Cassandra's read-path reconciliation);
 - **compaction** folds the log back to one row per PK (the analogue of
@@ -29,8 +31,10 @@ the PK, and compaction is an idempotent maintenance job.
 Serving reads reuse the reconciled view while the log on disk is
 unchanged. Each ``read`` lists the log directory once; the snapshot key
 is the session plus every child's name and length. Every write appends
-part files named with its write job's UUID and ``compact`` swaps in
-freshly named files, so any change to the log changes the listing and
+part files named with its write job's UUID (a driver write names its
+one file with a fresh UUID, and renames it in from a hidden name that
+no reader lists as a part file) and ``compact`` swaps in freshly named
+files, so any change to the log changes the listing and
 the next read rebuilds the view. Nothing is persisted: a reused view
 still runs the reconcile window on every action, it only skips the
 re-listing, the schema-inference job and the re-analysis.
@@ -55,11 +59,13 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 from collections.abc import Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -135,6 +141,31 @@ class ParquetUpsertSink:
         rows.withColumn("__epoch", F.lit(int(epoch_id))).write.mode("append").parquet(
             self.path
         )
+
+    def append_arrow(self, rows: pa.Table, epoch_id: int) -> None:
+        """Land ``rows`` as epoch ``epoch_id`` from the driver, in one
+        file that reads as :meth:`append` writes: a Spark part-file
+        name with a fresh UUID (one write job to :func:`_write_jobs`),
+        INT96 timestamps and ``__epoch`` as the last column, an int32.
+        The file is written under a hidden name and renamed into place,
+        so a listing sees all of it or none. An empty table lands
+        nothing."""
+        if rows.num_rows == 0:
+            return
+        rows = rows.append_column(
+            "__epoch", pa.repeat(pa.scalar(int(epoch_id), pa.int32()), rows.num_rows)
+        )
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        hidden = os.path.join(self.path, f".{name}.inprogress")
+        pq.write_table(
+            rows,
+            hidden,
+            compression="snappy",
+            use_deprecated_int96_timestamps=True,
+            store_schema=False,
+        )
+        os.rename(hidden, os.path.join(self.path, name))
 
     def foreach_batch(self):
         return self.write_batch

@@ -273,3 +273,81 @@ def test_compacted_lookup_reads_few_row_groups(spark, tmp_path, monkeypatch):
     )
     assert total >= 8 and 0 < touched <= total // 4, (touched, total)
     _assert_same_as_spark(monkeypatch, engine, 13)
+
+
+def _plant_interrupted_write(sink, like=None):
+    """The hidden file a driver write leaves when it dies before its
+    rename: half of the part file ``like`` (or a few bytes)."""
+    os.makedirs(sink.path, exist_ok=True)
+    data = b"PAR1"
+    if like is not None:
+        with open(like, "rb") as fh:
+            data = fh.read()
+        data = data[: len(data) // 2]
+    name = ".part-00000-00000000-0000-0000-0000-000000000000-c000.snappy.parquet.inprogress"
+    with open(os.path.join(sink.path, name), "wb") as fh:
+        fh.write(data)
+
+
+def _assert_interrupted_write_ignored(engine):
+    """A hidden leftover in both tables changes no read, lookup,
+    ``exists`` or count."""
+    spark = engine.spark
+    by_key = {"user_id": engine.raw_sink, "device_id": engine.agg_sink}
+
+    def state():
+        return (
+            engine.table_counts(),
+            {c: s.exists() for c, s in by_key.items()},
+            {c: bitwise_rows(s.read(spark)) for c, s in by_key.items()},
+            {c: s.lookup(spark, c, 13) for c, s in by_key.items()},
+        )
+
+    before = state()
+    for sink in by_key.values():
+        parts = [n for n in os.listdir(sink.path) if n.endswith(".parquet")]
+        _plant_interrupted_write(sink, os.path.join(sink.path, parts[0]))
+    assert state() == before
+
+
+def test_mixed_driver_and_spark_written_log(spark, tmp_path, monkeypatch):
+    """The ingest's driver-written files and ``ingest_batch``'s Spark-
+    written ones (INT96 timestamps in both) make one log: after each of
+    ``ingest_stream``, ``ingest_batch`` and ``compact()``, the driver
+    reads equal their Spark plans and the tables hold the expected
+    rows; a single write's log skips the reconcile window; and a hidden
+    leftover of an interrupted driver write is never read."""
+    from cassandra_iot_pipeline_spark.streaming.pipeline import raw_rows
+
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    for sink in (engine.raw_sink, engine.agg_sink):
+        _plant_interrupted_write(sink)
+    assert not engine.raw_sink.exists() and not engine.agg_sink.exists()
+    assert engine.table_counts() == {"sensor_events": 0, "hourly_aggregates": 0}
+
+    events = load_table(spark, SF_DIR, "events")
+    even = F.col("user_id") % 2 == 0
+    rewritten = events.filter(even).withColumn("value", F.col("value") * 3)
+    staged = stage_events_stream(spark, SF_DIR, base_dir=str(tmp_path / "staging"))
+    steps = {
+        "ingest_stream": (
+            lambda: engine.ingest_stream(staged, max_files_per_trigger=64),
+            events,
+        ),
+        "ingest_batch": (
+            lambda: engine.ingest_batch(rewritten, epoch_id=99),
+            events.filter(~even).unionByName(rewritten),
+        ),
+        "compact": (engine.compact, events.filter(~even).unionByName(rewritten)),
+    }
+    for step, (run, want) in steps.items():
+        run()
+        assert bitwise_rows(engine.sensor_events()) == bitwise_rows(raw_rows(want)), step
+        assert bitwise_rows(engine.hourly()) == bitwise_rows(hourly_rollup(want)), step
+        for device in DEVICES:
+            _assert_same_as_spark(monkeypatch, engine, device)
+        single = sinks._write_jobs(engine.raw_sink._listing()) == 1
+        assert single == (step != "ingest_batch"), step
+        plan = formatted_plan(engine.raw_sink.read(spark, unique_within_epoch=True))
+        assert ("Window" not in plan) == single, (step, plan)
+        _assert_interrupted_write_ignored(engine)

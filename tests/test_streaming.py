@@ -496,6 +496,15 @@ LATE_STREAMS = {
         [(1, 160, 40.0)],
         [(1, 30, 99.0), (2, 31, 98.0), (2, 165, 1.25)],
     ],
+    # 0.125 and -0.125 are exact ties (±12.5 units), which Spark rounds
+    # half away from zero to ±13 (rounding half up would give -12, half
+    # to even ±12); device 3's 11:00 window holds a null value in one
+    # epoch, device 4's window holds only a null
+    "half_up_ties_and_nulls": [
+        [(1, 0, 0.125), (2, 5, -0.125), (3, 10, -2.5)],
+        [(1, 20, None), (3, 70, None), (4, 25, None)],
+        [(2, 30, -0.125), (3, 75, 0.125)],
+    ],
     **{f"random_{seed}": _random_late_batches(seed) for seed in (1, 2, 3)},
 }
 
@@ -543,7 +552,7 @@ def test_evicted_window_rows_are_dropped_from_partials(spark, tmp_path):
 def test_partial_epoch_written_twice_folds_once(spark, tmp_path):
     """An at-least-once re-delivery of a partial epoch appends a second
     copy; the read counts that epoch once, on Spark and on the driver."""
-    from cassandra_iot_pipeline_spark.streaming.pipeline import hourly_partials
+    from cassandra_iot_pipeline_spark.streaming.pipeline import hourly_partials, raw_rows
 
     def batch(rows):
         return spark.createDataFrame(
@@ -553,10 +562,12 @@ def test_partial_epoch_written_twice_folds_once(spark, tmp_path):
 
     b0 = batch([(1, 0, 1.25), (1, 10, 2.5), (2, 70, 3.0)])
     b1 = batch([(1, 20, 4.75), (2, 80, -1.0)])
+    p0 = hourly_partials(raw_rows(b0).toArrow(), 0)
+    p1 = hourly_partials(raw_rows(b1).toArrow(), 0)
     sink = ParquetUpsertSink(str(tmp_path / "agg"), pk=("device_id", "hour_bucket"))
-    sink.append(hourly_partials(b0, 0), 0)
-    sink.append(hourly_partials(b1, 0), 1)
-    sink.append(hourly_partials(b0, 0), 0)
+    sink.append_arrow(p0, 0)
+    sink.append_arrow(p1, 1)
+    sink.append_arrow(p0, 0)
     assert sink.read_log(spark).count() == 6
     want = bitwise_rows(hourly_rollup(b0.unionByName(b1)))
     assert bitwise_rows(sink.read(spark)) == want
@@ -633,21 +644,31 @@ def _job_query_ids(spark, action) -> list:
     return ids
 
 
-def _assert_ingest_jobs_tagged(ids, result, warehouse_dir):
+def _staged_events(staged) -> int:
+    """Rows in the staged parquet files, from their footers."""
+    import glob
+
+    return sum(pq.read_metadata(f).num_rows for f in glob.glob(os.path.join(staged, "*.parquet")))
+
+
+def _assert_ingest_jobs_tagged(ids, result, warehouse_dir, n_events):
+    """One Spark job per ingest batch (the Arrow collect), each tagged
+    with the query id, and one source scan: the batches read each
+    staged event once."""
     import json
 
     with open(os.path.join(warehouse_dir, "ckpt_ingest", "metadata")) as fh:
         query_id = json.load(fh)["id"]
-    batches = len(result["progress"]["ingest"])
-    # per batch: the raw write and the partials' write
-    assert batches >= 2 and len(ids) >= 2 * batches, ids
+    progress = result["progress"]["ingest"]
+    assert len(progress) >= 2 and len(ids) == len(progress), ids
     assert set(ids) == {query_id}, ids
+    assert sum(b["input_rows"] for b in progress) == n_events
 
 
 def test_ingest_jobs_carry_query_id(spark, staged, tmp_path):
-    """Every Spark job of the ingest batches, both concurrent sink
-    writes included, is tagged with the stream's query id, and the
-    calling thread's properties are left as they were."""
+    """Every Spark job of the ingest batches is tagged with the
+    stream's query id, and the calling thread's properties are left as
+    they were."""
     from cassandra_iot_pipeline_spark.api import IoTEngine
 
     engine = IoTEngine(spark, str(tmp_path / "wh"))
@@ -655,7 +676,7 @@ def test_ingest_jobs_carry_query_id(spark, staged, tmp_path):
     ids = _job_query_ids(
         spark, lambda: result.update(engine.ingest_stream(staged, max_files_per_trigger=16))
     )
-    _assert_ingest_jobs_tagged(ids, result, engine.warehouse_dir)
+    _assert_ingest_jobs_tagged(ids, result, engine.warehouse_dir, _staged_events(staged))
     assert spark.sparkContext.getLocalProperty("sql.streaming.queryId") is None
 
 
@@ -702,7 +723,7 @@ def test_ingest_jobs_carry_query_id_without_pinned_threads(staged, tmp_path):
                 if event["Event"] == "SparkListenerJobStart":
                     ids.append((event.get("Properties") or {}).get("sql.streaming.queryId"))
     progress = json.loads(out.stdout.strip().splitlines()[-1])
-    _assert_ingest_jobs_tagged(ids, {"progress": progress}, warehouse)
+    _assert_ingest_jobs_tagged(ids, {"progress": progress}, warehouse, _staged_events(staged))
 
 
 def test_ingest_runs_one_query_without_state_store(spark, staged, tmp_path):
