@@ -12,7 +12,6 @@ pipeline runs over document/embedding tables.
     cleaning   -- PII redaction, contamination check, sequence packing
     curation   -- the end-to-end filter->redact->dedup->split->pack chain
     bloom      -- persistable corpus sketch for incremental landing dedup
-    lm         -- n-gram perplexity scoring (CCNet-style quality filter)
     sketches   -- Count-Min frequency sketch (mergeable, cross-engine exact)
                   + CMS-routed EXACT phi-heavy hitters (frequent_tokens)
     incremental-- online near-dup dedup against a persisted MinHash store

@@ -46,9 +46,6 @@ KEPT = {
     "functions.sampling": "LLM-data text family: deterministic splits and samples",
     "sources.jsonl": "LLM-data text family: JSONL corpus landing",
     "plans": "plan-pin helpers used by tests/test_plans.py and tools/dump_plans.py",
-    # deferred cut: no keep rule holds; it goes in the next prune together
-    # with the tests that exercise it
-    "functions.lm": "deferred cut: n-gram language-model perplexity scoring",
 }
 
 #: Public top-level functions and classes of the package that no file

@@ -607,6 +607,81 @@ def test_redelivered_epoch_after_compact_changes_no_hourly_row(spark, tmp_path):
     assert bitwise_rows(engine.hourly_aggregates(1)) == [r for r in want if r[0] == 1]
 
 
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+FILE_SYSTEM_MANAGER = _MANAGERS + "FileSystemBasedCheckpointFileManager"
+FILE_CONTEXT_MANAGER = _MANAGERS + "FileContextBasedCheckpointFileManager"
+
+
+def _checkpoint_manager(spark, path) -> str:
+    """The class of the manager Spark's checkpoint logs would write
+    ``path`` with under the session's current conf."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsparkSession.sessionState().newHadoopConf()
+    ).getClass().getName()
+
+
+def _log_epochs(sink) -> list[int]:
+    """The epoch of every part file in ``sink``'s log, one entry per
+    file (a driver write lands one file per epoch)."""
+    return sorted(
+        pq.read_table(os.path.join(sink.path, name), columns=["__epoch"])["__epoch"][0].as_py()
+        for name, _ in sink._listing()
+        if name.endswith(".parquet")
+    )
+
+
+@pytest.mark.parametrize(
+    "first,second",
+    [(FILE_CONTEXT_MANAGER, FILE_SYSTEM_MANAGER), (FILE_SYSTEM_MANAGER, FILE_CONTEXT_MANAGER)],
+    ids=["file_context_then_file_system", "file_system_then_file_context"],
+)
+def test_ingest_checkpoint_resumes_across_file_managers(spark, tmp_path, first, second):
+    """A checkpoint that one checkpoint file manager wrote resumes under
+    the other: two ``ingest_stream`` calls of two files each, one under
+    each manager, land the same logs as one call over all four files.
+    The third batch drops late rows by the watermark of the second,
+    read from the offset log the first manager wrote."""
+    import shutil
+
+    from cassandra_iot_pipeline_spark.api import IoTEngine
+
+    assert spark.conf.get(CHECKPOINT_MANAGER) == FILE_SYSTEM_MANAGER
+    batches = LATE_STREAMS["late_into_evicted_window"] + [[(1, 170, 5.0), (2, 40, 7.0)]]
+    every = _stage_files(str(tmp_path / "every"), batches)
+    want = IoTEngine(spark, str(tmp_path / "once"))
+    want.ingest_stream(every, max_files_per_trigger=1)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    engine = IoTEngine(spark, str(tmp_path / "wh"))
+    checkpoint = os.path.join(engine.warehouse_dir, "ckpt_ingest")
+    for manager, names in ((first, ["b000", "b001"]), (second, ["b002", "b003"])):
+        for name in names:
+            shutil.copy2(os.path.join(every, f"{name}.parquet"), src)
+        spark.conf.set(CHECKPOINT_MANAGER, manager)
+        try:
+            assert _checkpoint_manager(spark, checkpoint) == manager
+            progress = engine.ingest_stream(str(src), max_files_per_trigger=1)["progress"]["ingest"]
+        finally:
+            spark.conf.set(CHECKPOINT_MANAGER, FILE_SYSTEM_MANAGER)
+        assert [b["input_rows"] for b in progress] == [len(batches[int(n[1:])]) for n in names]
+
+    for log in ("offsets", "commits"):
+        entries = os.listdir(os.path.join(checkpoint, log))
+        assert sorted(e for e in entries if e.isdigit()) == ["0", "1", "2", "3"], entries
+    for got, expected in ((engine.raw_sink, want.raw_sink), (engine.agg_sink, want.agg_sink)):
+        epochs = _log_epochs(got)
+        assert epochs == _log_epochs(expected) and len(set(epochs)) == len(epochs)
+        assert bitwise_rows(got.read_log(spark)) == bitwise_rows(expected.read_log(spark))
+    assert _log_epochs(engine.raw_sink) == [0, 1, 2, 3]
+    assert bitwise_rows(engine.sensor_events()) == bitwise_rows(want.sensor_events())
+    assert bitwise_rows(engine.hourly()) == bitwise_rows(want.hourly())
+    h10 = int(T0.timestamp())
+    assert (2, h10) not in {(r.device_id, r.hour_bucket) for r in engine.hourly().collect()}
+
+
 def _job_query_ids(spark, action) -> list:
     """The ``sql.streaming.queryId`` of every Spark job ``action``
     starts, read from an event log written for its duration."""
@@ -768,3 +843,8 @@ def test_ingest_runs_one_query_without_state_store(spark, staged, tmp_path):
     assert len(recorder.progress) == batches > 1
     assert all(p["id"] == recorder.started[0] and not p["stateOperators"] for p in recorder.progress)
     assert spark.streams.active == []
+    # the returned rows carry each batch's checkpoint phases
+    phases = {"wal_commit_ms": "walCommit", "commit_offsets_ms": "commitOffsets", "latest_offset_ms": "latestOffset"}
+    durations = {p["batchId"]: p["durationMs"] for p in recorder.progress}
+    for row in result["progress"]["ingest"]:
+        assert {k: row[k] for k in phases} == {k: durations[row["batch_id"]][v] for k, v in phases.items()}

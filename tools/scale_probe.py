@@ -193,21 +193,6 @@ def main() -> None:
             results,
         )
 
-        # LM perplexity: train the bigram model on the corpus and score it
-        # (train + score together — the per-batch steady state reuses a
-        # persisted model and only pays the score half)
-        from cassandra_iot_pipeline_spark.functions.lm import (
-            bigram_model,
-            lm_perplexity,
-        )
-
-        t0 = time.perf_counter()
-        bigrams, contexts, vocab = bigram_model(docs)
-        lm_perplexity(docs, bigrams, contexts, vocab).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        results["lm_train_and_score"] = round(time.perf_counter() - t0, 2)
-
         # the full curation chain end-to-end (filter -> redact -> dedup ->
         # resolve -> split); timed around the materialization of the final
         # curated frame, which pulls the whole DAG
