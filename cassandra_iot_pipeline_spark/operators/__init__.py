@@ -11,17 +11,15 @@ path):
     upsert     -- PK last-write-wins semantics (§2.K K3)
     setops     -- union / intersect / except surface (§2.H)
     gapfill    -- hypertable gap-fill (dense grid, LOCF, interpolation)
-    timeseries -- time-weighted averages + counter rates over
-                  irregular samples (exact integer arithmetic)
-    scd2       -- SCD type-2 dimension history: versioned snapshot,
-                  touched-keys incremental merge, point-in-time
-                  enrichment
+    timeseries -- time-weighted average over irregular samples
+                  (exact integer arithmetic)
+    scd2       -- SCD type-2 dimension history: versioned snapshot
     funnel     -- ordered k-step funnel (greedy-earliest chain,
                   horizon-capped, conversion + step-through rates)
     asof       -- as-of (point-in-time) join
     rangejoin  -- range (interval) join by window-length bucketing
     windows    -- running aggregates, lag/lead, sessionization (§2.F)
-    stats      -- exact quantiles, sketches, grouping sets, outliers
+    stats      -- exact quantiles, distinct-count sketches, grouping sets
     subqueries -- scalar/correlated subqueries, pattern-match filters
     profiles   -- device behavior profiles + series similarity search
 """

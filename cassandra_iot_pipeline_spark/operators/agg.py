@@ -244,80 +244,3 @@ def global_count(events: DataFrame) -> DataFrame:
 
 def global_count_oracle() -> str:
     return "SELECT COUNT(*) AS n_rows FROM events"
-
-
-def sliding_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    device_col: str = "user_id",
-    ts_col: str = "ts",
-    measure_col: str = "value",
-) -> DataFrame:
-    """Per-device *hopping*-window aggregate — the overlapping-window
-    companion to :func:`hourly_rollup` (W2's tumbling form).
-
-    ``window(ts, w, s)`` assigns each event to the w/s overlapping
-    windows covering it (Spark aligns window starts to multiples of the
-    slide from the 1970-01-01 UTC origin). Output one row per
-    (device, window_start):
-
-        device_id, bucket_start (epoch secs), avg_value (exact
-        integer-units), max_value, min_value, event_count
-
-    Scale notes: the input is replicated w/s times by the window
-    generator *before* the shuffle — with map-side partial aggregation
-    the exchange still carries only aggregate rows per (device,
-    window) group, so the fan-out cost is CPU-local. The streaming
-    form is the same expression under a watermark.
-    """
-    return (
-        events.groupBy(
-            F.col(device_col).alias("device_id"),
-            F.window(F.col(ts_col), window, slide).alias("w"),
-        )
-        .agg(
-            exact_sum(F.col(measure_col), 2).alias("sum_units"),
-            F.max(measure_col).alias("max_value"),
-            F.min(measure_col).alias("min_value"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-        .select(
-            "device_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("bucket_start"),
-            (F.col("sum_units") / F.lit(100.0) / F.col("event_count")).alias(
-                "avg_value"
-            ),
-            "max_value",
-            "min_value",
-            "event_count",
-        )
-    )
-
-
-def sliding_rollup_oracle(window_s: int = 3600, slide_s: int = 900) -> str:
-    """DuckDB oracle for :func:`sliding_rollup`: each event joins every
-    window start in (epoch - window, epoch] that is a multiple of the
-    slide — identical to Spark's origin-aligned assignment for
-    positive epochs."""
-    return f"""
-        WITH contrib AS (
-            SELECT user_id, value,
-                   UNNEST(range(
-                       (CAST(floor(epoch(ts) - {window_s}) AS BIGINT)
-                        // {slide_s} + 1) * {slide_s},
-                       CAST(floor(epoch(ts)) AS BIGINT) + 1,
-                       {slide_s}
-                   )) AS bucket_start
-            FROM events
-        )
-        SELECT user_id AS device_id,
-               bucket_start,
-               (SUM(CAST(ROUND(value * 100) AS BIGINT)) / 100.0 / COUNT(*))
-                   AS avg_value,
-               MAX(value) AS max_value,
-               MIN(value) AS min_value,
-               COUNT(*) AS event_count
-        FROM contrib
-        GROUP BY 1, 2
-    """

@@ -31,12 +31,12 @@ BIGINTs; each output rate is ONE IEEE division, mirrored by the
 oracle (the repo's exactmath discipline).
 
 100 TB: the only data-wide work is the one exchange of step-typed
-events by user; the fold state is k BIGINTs per user.  HOT-KEY BOUND
-(the mad_outliers class): ``groupBy(k).agg(sort_array(collect_list))``
-materializes each user's full step-typed event list in ONE aggregation
-buffer, so a bot key owning a large corpus fraction concentrates that
-fraction of step events into a single task — measured in
-tools/scale_probe.py ``--funnel`` (the
+events by user; the fold state is k BIGINTs per user.  HOT-KEY BOUND:
+``groupBy(k).agg(sort_array(collect_list))`` materializes each user's
+full step-typed event list in ONE aggregation buffer, so a bot key
+owning a large corpus fraction concentrates that fraction of step
+events into a single task — measured in tools/scale_probe.py
+``--funnel`` (the
 ``funnel_4step_skewed_hotkey_20pct`` row: one key absorbing 1-in-5 of
 20M events; SCALE.md records the uniform-vs-skewed delta).  The slice
 is step-TYPED (bounded in sane corpora); for corpora with bot devices
@@ -311,308 +311,4 @@ def funnel_oracle(
                END AS avg_micros_from_first,
                med_delta AS median_micros_from_first
         FROM joined
-    """
-
-
-def funnel_trend(
-    events: DataFrame,
-    steps: list[str],
-    period_seconds: int = 86_400,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    horizon_seconds: int | None = None,
-) -> DataFrame:
-    """(period_start, step_idx, step, n_users, conversion): the funnel
-    TRENDED by the chain's anchor period — for each period (floor of
-    the user's step-0 time to ``period_seconds``, the exactmath
-    integer-floor alignment), how many users who anchored in it
-    reached each step, and the per-period conversion fraction. The
-    standard "is this week's funnel worse than last week's" view;
-    each user counts in exactly ONE period (their greedy anchor's),
-    so columns sum to the plain :func:`funnel` counts.
-
-    Plan: the same ONE user-keyed exchange as :func:`funnel`
-    (:func:`user_hits`), then a (period x step)-bounded aggregation;
-    the period/step grid is observed-anchor-periods x steps
-    (zero-filled — a period with anchors but no step-i completers
-    still shows its zero), broadcast on the step side. Exact BIGINT
-    counts; the conversion fraction is one IEEE division."""
-    pts = step_points(events, steps, key, ts_col, type_col)
-    return funnel_trend_report(
-        user_hits(pts, steps, horizon_seconds).select("hits"),
-        steps,
-        period_seconds,
-    )
-
-
-def funnel_trend_report(
-    hits_df: DataFrame,
-    steps: list[str],
-    period_seconds: int = 86_400,
-) -> DataFrame:
-    """The trend aggregation over per-user ``hits`` arrays — the
-    :func:`funnel_report` split applied to :func:`funnel_trend`."""
-    _validate_steps(steps)
-    p_us = period_seconds * 1_000_000
-    t0 = F.element_at("hits", 1)
-    anchored = hits_df.filter(t0.isNotNull()).select(
-        (t0 - F.pmod(t0, F.lit(p_us))).alias("pstart"),
-        "hits",
-    )
-    reached = (
-        anchored.select("pstart", F.posexplode("hits").alias("step_idx", "us"))
-        .filter(F.col("us").isNotNull())
-        .groupBy("pstart", "step_idx")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-    spark = hits_df.sparkSession
-    step_frame = literal_frame(
-        spark,
-        [(i, name) for i, name in enumerate(steps)],
-        "step_idx INT, step STRING",
-    )
-    grid = (
-        anchored.select("pstart")
-        .distinct()
-        .crossJoin(F.broadcast(step_frame))
-    )
-    joined = grid.join(reached, ["pstart", "step_idx"], "left").select(
-        "pstart",
-        "step_idx",
-        "step",
-        F.coalesce("n_users", F.lit(0)).alias("n_users"),
-    )
-    w_p = Window.partitionBy("pstart")
-    n0 = F.max(F.when(F.col("step_idx") == 0, F.col("n_users"))).over(w_p)
-    return joined.select(
-        F.timestamp_micros(F.col("pstart")).alias("period_start"),
-        "step_idx",
-        "step",
-        "n_users",
-        F.when(
-            n0 > 0, F.col("n_users").cast("double") / n0
-        ).alias("conversion"),
-    )
-
-
-def funnel_trend_oracle(
-    steps: list[str],
-    period_seconds: int = 86_400,
-    table: str = "events",
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    horizon_seconds: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`funnel_trend` — the :func:`funnel_oracle`
-    CTE ladder grouped by the anchor's floored period (BIGINT ``%``
-    mirrors pmod on the non-negative fixture epochs)."""
-    k = len(steps)
-    p_us = period_seconds * 1_000_000
-    horizon_us = (
-        None if horizon_seconds is None else horizon_seconds * 1_000_000
-    )
-    ctes = [
-        f"""t0 AS (
-            SELECT {key} AS k, MIN(epoch_us({ts_col})) AS t,
-                   MIN(epoch_us({ts_col})) AS first_t
-            FROM {table} WHERE {type_col} = '{steps[0]}' GROUP BY 1
-        )"""
-    ]
-    for i in range(1, k):
-        horizon = (
-            ""
-            if horizon_us is None
-            else f" AND epoch_us(e.{ts_col}) <= p.first_t + {horizon_us}"
-        )
-        ctes.append(
-            f"""t{i} AS (
-                SELECT e.{key} AS k, MIN(epoch_us(e.{ts_col})) AS t,
-                       p.first_t AS first_t
-                FROM {table} e JOIN t{i - 1} p ON e.{key} = p.k
-                WHERE e.{type_col} = '{steps[i]}'
-                  AND epoch_us(e.{ts_col}) > p.t{horizon}
-                GROUP BY 1, 3
-            )"""
-        )
-    step_values = ", ".join(
-        f"({i}, '{name}')" for i, name in enumerate(steps)
-    )
-    count_selects = "\n UNION ALL ".join(
-        f"SELECT first_t - (first_t % {p_us}) AS pstart,"
-        f" {i} AS step_idx, COUNT(*) AS n_users FROM t{i} GROUP BY 1"
-        for i in range(k)
-    )
-    return f"""
-        WITH {",".join(ctes)},
-        counts AS ({count_selects}),
-        steps(step_idx, step) AS (VALUES {step_values}),
-        grid AS (
-            SELECT DISTINCT first_t - (first_t % {p_us}) AS pstart
-            FROM t0
-        ),
-        joined AS (
-            SELECT g.pstart, s.step_idx, s.step,
-                   COALESCE(c.n_users, 0) AS n_users
-            FROM grid g CROSS JOIN steps s
-            LEFT JOIN counts c
-              ON c.pstart = g.pstart AND c.step_idx = s.step_idx
-        )
-        SELECT make_timestamp(pstart) AS period_start, step_idx, step,
-               n_users,
-               CASE WHEN MAX(CASE WHEN step_idx = 0 THEN n_users END)
-                         OVER (PARTITION BY pstart) > 0
-                    THEN CAST(n_users AS DOUBLE)
-                         / MAX(CASE WHEN step_idx = 0 THEN n_users END)
-                           OVER (PARTITION BY pstart)
-               END AS conversion
-        FROM joined
-    """
-
-
-def funnel_segmented(
-    events: DataFrame,
-    steps: list[str],
-    segments: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    segment_col: str = "segment",
-    horizon_seconds: int | None = None,
-) -> DataFrame:
-    """(segment, step_idx, step, n_users, conversion, step_rate): the
-    funnel broken down by a user DIMENSION — ``segments`` maps key ->
-    segment (a customer-dimension projection; one row per key). Where
-    does each cohort of users drop off, comparatively?
-
-    Semantics: each user's chain is computed exactly as in
-    :func:`funnel` (segments never change the chain); the user then
-    counts toward their segment's rows. Users absent from
-    ``segments`` land in segment NULL rather than silently dropping
-    (an outer-joined dimension row is a data-quality signal).
-    Unlike :func:`funnel`, only (segment, step) pairs with at least
-    one step-0 user in the segment appear (an all-segments x
-    all-steps dense frame needs the segment universe, which belongs
-    to the caller).
-
-    Plan: the same ONE user-keyed exchange + fold; the segment
-    attaches to the per-user fold RESULT via a broadcast join (k-sized
-    dimension probe, the J1 enrichment shape), so the events-wide
-    stage is untouched; rates come from windows over the
-    (segments x k)-bounded matrix."""
-    _validate_steps(steps)
-    pts = step_points(events, steps, key, ts_col, type_col)
-    per_user = user_hits(pts, steps, horizon_seconds)
-    seg = segments.select(
-        F.col(key).alias("k"), F.col(segment_col).alias("segment")
-    )
-    reached = (
-        per_user.join(F.broadcast(seg), "k", "left")
-        .select("segment", F.posexplode("hits").alias("step_idx", "us"))
-        .filter(F.col("us").isNotNull())
-        .groupBy("segment", "step_idx")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-    spark = pts.sparkSession
-    step_frame = literal_frame(
-        spark,
-        [(i, name) for i, name in enumerate(steps)],
-        "step_idx INT, step STRING",
-    )
-    w_seg = Window.partitionBy("segment")
-    w_ord = Window.partitionBy("segment").orderBy("step_idx")
-    n0 = F.max(
-        F.when(F.col("step_idx") == 0, F.col("n_users"))
-    ).over(w_seg)
-    n_prev = F.lag("n_users").over(w_ord)
-    return (
-        reached.join(F.broadcast(step_frame), "step_idx")
-        .select(
-            "segment",
-            "step_idx",
-            "step",
-            "n_users",
-            F.when(
-                n0 > 0, F.col("n_users").cast("double") / n0
-            ).alias("conversion"),
-            F.when(
-                n_prev > 0, F.col("n_users").cast("double") / n_prev
-            ).alias("step_rate"),
-        )
-    )
-
-
-def funnel_segmented_oracle(
-    steps: list[str],
-    table: str = "events",
-    segments_table: str = "segments",
-    key: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    segment_col: str = "segment",
-    horizon_seconds: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`funnel_segmented` (``segments_table``
-    must be registered as a view over the same dimension frame)."""
-    k = len(steps)
-    horizon_us = (
-        None if horizon_seconds is None else horizon_seconds * 1_000_000
-    )
-    ctes = [
-        f"""t0 AS (
-            SELECT {key} AS k, MIN(epoch_us({ts_col})) AS t,
-                   MIN(epoch_us({ts_col})) AS first_t
-            FROM {table} WHERE {type_col} = '{steps[0]}' GROUP BY 1
-        )"""
-    ]
-    for i in range(1, k):
-        horizon = (
-            ""
-            if horizon_us is None
-            else f" AND epoch_us(e.{ts_col}) <= p.first_t + {horizon_us}"
-        )
-        ctes.append(
-            f"""t{i} AS (
-                SELECT e.{key} AS k, MIN(epoch_us(e.{ts_col})) AS t,
-                       p.first_t AS first_t
-                FROM {table} e JOIN t{i - 1} p ON e.{key} = p.k
-                WHERE e.{type_col} = '{steps[i]}'
-                  AND epoch_us(e.{ts_col}) > p.t{horizon}
-                GROUP BY 1, 3
-            )"""
-        )
-    step_values = ", ".join(
-        f"({i}, '{name}')" for i, name in enumerate(steps)
-    )
-    count_selects = "\n UNION ALL ".join(
-        f"""SELECT s.{segment_col} AS segment, {i} AS step_idx,
-                   COUNT(*) AS n_users
-            FROM t{i} LEFT JOIN {segments_table} s
-              ON t{i}.k = s.{key}
-            GROUP BY 1"""
-        for i in range(k)
-    )
-    return f"""
-        WITH {",".join(ctes)},
-        counts AS ({count_selects}),
-        steps(step_idx, step) AS (VALUES {step_values})
-        SELECT c.segment, c.step_idx, st.step, c.n_users,
-               CASE WHEN MAX(CASE WHEN c.step_idx = 0 THEN c.n_users
-                             END) OVER (PARTITION BY c.segment) > 0
-                    THEN CAST(c.n_users AS DOUBLE)
-                         / MAX(CASE WHEN c.step_idx = 0
-                                    THEN c.n_users END)
-                           OVER (PARTITION BY c.segment)
-               END AS conversion,
-               CASE WHEN LAG(c.n_users) OVER (
-                        PARTITION BY c.segment ORDER BY c.step_idx
-                    ) > 0
-                    THEN CAST(c.n_users AS DOUBLE)
-                         / LAG(c.n_users) OVER (
-                               PARTITION BY c.segment
-                               ORDER BY c.step_idx
-                           )
-               END AS step_rate
-        FROM counts c JOIN steps st USING (step_idx)
     """

@@ -1,6 +1,6 @@
-"""Slowly-changing-dimension (SCD type 2) maintenance + point-in-time
-enrichment — the dimension-history operators the reference's schema
-implies but never implements.
+"""Slowly-changing-dimension (SCD type 2) history — the
+dimension-history operator the reference's schema implies but never
+implements.
 
 The reference ships a ``devices`` dimension with ``last_updated``
 (reference: iot-cassandra-pipeline/cassandra/init.cql:63-74) and
@@ -10,10 +10,11 @@ That works until an attribute CHANGES: the events stamped before the
 change carry the old value, the dimension row only remembers the
 newest, and any backfill or re-enrichment silently rewrites history.
 The warehouse-standard answer is SCD2 — keep every attribute version
-with a validity interval — plus an as-of lookup that enriches facts
-with the version valid AT the fact's own time.
+with a validity interval; an as-of lookup (operators/asof.py) over
+the versions' ``valid_from`` then finds the version valid AT a fact's
+own time.
 
-Operators (all pure Catalyst, one shuffle on the key each):
+Operator (pure Catalyst, one shuffle on the key):
 
 - :func:`scd2_snapshot` — build the versioned dimension from an
   update/change log: per key, order by time, keep rows whose tracked
@@ -21,24 +22,6 @@ Operators (all pure Catalyst, one shuffle on the key each):
   version with the next version's start. No-op updates collapse, so
   an at-least-once upstream (the reference's Kafka posture) cannot
   inflate history.
-- :func:`scd2_merge` — land a new batch of updates on an existing
-  versioned dimension: only the batch's keys are recomputed (their
-  history replayed as a change log union the new updates — identical
-  collapse semantics make this idempotent and associative); untouched
-  keys pass through by anti-join. At 100 TB the touched-key set is a
-  broadcast semi/anti probe, so the dimension is never reshuffled.
-- :func:`scd2_enrich` — point-in-time fact enrichment: the as-of
-  union-tag plan (operators/asof.py) over the versions' ``valid_from``
-  — contiguous intervals per key make "greatest valid_from <= fact
-  time" exactly interval containment, with no range explosion.
-- :func:`scd2_backfill` — repair facts that were enriched BEFORE a
-  late dimension correction landed (exactly the failure mode the
-  denormalizing reference bakes in): re-derive the as-of attrs from
-  the corrected dimension in one enrich pass — the stale attrs ride
-  along renamed, so the null-safe diff needs no second join — and
-  flag the rewritten rows; :func:`scd2_backfill_report` is the
-  one-row repair accounting (the curation removal-stats convention:
-  a backfill run says what it rewrote and over which interval).
 
 Validity intervals are ``[valid_from_us, valid_to_us)`` epoch-micros
 (exclusive end; NULL end = current). Determinism: updates are ordered
@@ -53,8 +36,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .asof import asof_join
 
 
 def _keys(key: str | Sequence[str]) -> list[str]:
@@ -167,284 +148,4 @@ def scd2_snapshot_oracle(
         FROM versions
         WINDOW wv AS (PARTITION BY {ks}
                       ORDER BY valid_from_us{', ' + seq_col if seq_col else ''})
-    """
-
-
-def scd2_merge(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str | Sequence[str] = "user_id",
-    attrs: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Land a batch of updates on an existing version table (the
-    output shape of :func:`scd2_snapshot`): recompute ONLY the keys
-    the batch touches — their existing versions replay as a change
-    log (each version is an update at its own ``valid_from_us``)
-    unioned with the new updates — and pass every untouched key's
-    rows through an anti-join unmodified.
-
-    Equivalences that make this safe (pinned in tests): merging is
-    bit-identical to one snapshot over the concatenated logs, a
-    replayed (duplicate) batch is a no-op (idempotent — consecutive
-    identical versions collapse), and update order across batches
-    doesn't matter as long as each batch is internally consistent.
-
-    100 TB plan: ``touched`` is ``updates``' distinct key set — batch
-    -sized, so both the semi- and anti-join probes broadcast and the
-    dimension side never shuffles; the per-key window recompute only
-    shuffles the touched keys' rows (batch-proportional, not
-    dimension-proportional)."""
-    keys = _keys(key)
-    untouched = dim.join(
-        F.broadcast(updates.select(*keys).distinct()), keys, "left_anti"
-    )
-    recomputed = scd2_recompute_touched(dim, updates, keys, attrs, ts_col)
-    return untouched.unionByName(recomputed)
-
-
-def scd2_recompute_touched(
-    dim: DataFrame,
-    updates: DataFrame,
-    key: str | Sequence[str] = "user_id",
-    attrs: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Just the recomputed version rows of the keys ``updates``
-    touches — :func:`scd2_merge` minus the untouched passthrough (the
-    streaming pipeline persists exactly this as its per-epoch delta).
-    Exact duplicates collapse BEFORE the snapshot: a replayed batch
-    re-delivers updates that are now also in the dimension's own
-    change log (the at-least-once posture) — identical (key, ts,
-    attrs) rows are one update, and dropping them here is what makes
-    replay a no-op; a genuinely CONFLICTING pair (same key+ts,
-    different attrs) still trips the snapshot's ambiguity guard."""
-    keys = _keys(key)
-    attr_cols = list(attrs)
-    touched = updates.select(*keys).distinct()
-    old_log = dim.join(F.broadcast(touched), keys, "semi").select(
-        *keys,
-        *attr_cols,
-        F.timestamp_micros(F.col("valid_from_us")).alias(ts_col),
-    )
-    new_log = updates.select(*keys, *attr_cols, F.col(ts_col))
-    combined = old_log.unionByName(new_log).dropDuplicates(
-        [*keys, *attr_cols, ts_col]
-    )
-    return scd2_snapshot(combined, keys, attr_cols, ts_col)
-
-
-def scd2_enrich(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    attrs: Sequence[str] = ("event_type",),
-) -> DataFrame:
-    """Facts enriched with the dimension version valid AT each fact's
-    own time (facts before a key's first version get NULL attrs) —
-    the as-of union-tag plan over ``valid_from``: per-key versions
-    are contiguous, so latest-start-at-or-before IS interval
-    membership, with one shuffle and no range explosion. Output is
-    every fact column plus the attrs; rename colliding fact columns
-    first (the attrs win the name)."""
-    versions = dim.select(
-        F.col(key),
-        F.timestamp_micros(F.col("valid_from_us")).alias("__vf"),
-        *[F.col(a) for a in attrs],
-    )
-    return asof_join(
-        facts, versions, key=key, left_time=ts_col,
-        right_time="__vf", payload_cols=list(attrs),
-    )
-
-
-def scd2_backfill(
-    enriched: DataFrame,
-    dim: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    attrs: Sequence[str] = ("event_type",),
-) -> DataFrame:
-    """Re-enrich already-enriched facts against a (corrected)
-    dimension: the output carries every input column with the
-    ``attrs`` REPLACED by the dimension's current as-of values, plus
-    ``was_repaired`` — TRUE where any attr null-safely differs from
-    the stale value the fact carried in. Backfilling is idempotent: a
-    second pass over its own output repairs zero rows.
-
-    Plan: ONE as-of pass (the :func:`scd2_enrich` union-tag plan —
-    the stale attrs ride along as renamed fact columns, so the
-    null-safe struct compare is a free projection; no self-join, no
-    second shuffle beyond the enrich's own)."""
-    attr_cols = list(attrs)
-    missing = [a for a in attr_cols if a not in enriched.columns]
-    if missing:
-        raise ValueError(
-            f"scd2_backfill: stale attr columns {missing} absent from "
-            "the enriched frame"
-        )
-    fact_cols = [c for c in enriched.columns if c not in attr_cols]
-    staged = enriched.select(
-        *fact_cols, *[F.col(a).alias(f"__old_{a}") for a in attr_cols]
-    )
-    fresh = scd2_enrich(staged, dim, key, ts_col, attr_cols)
-    new_s = F.struct(*[F.col(a) for a in attr_cols])
-    old_s = F.struct(
-        *[F.col(f"__old_{a}").alias(a) for a in attr_cols]
-    )
-    return fresh.withColumn(
-        "was_repaired", ~new_s.eqNullSafe(old_s)
-    ).select(*fact_cols, *attr_cols, "was_repaired")
-
-
-def scd2_backfill_report(
-    backfilled: DataFrame, ts_col: str = "ts"
-) -> DataFrame:
-    """One-row repair accounting over a :func:`scd2_backfill` output:
-    (n_facts, n_repaired, repaired_from, repaired_to) — the repaired
-    interval's bounds are the min/max fact time among rewritten rows
-    (NULL when nothing was repaired). One partial-aggregable
-    aggregation; audit surface, not a hot path."""
-    rep = F.col("was_repaired")
-    return backfilled.agg(
-        F.count(F.lit(1)).alias("n_facts"),
-        F.coalesce(F.sum(rep.cast("long")), F.lit(0)).alias("n_repaired"),
-        F.min(F.when(rep, F.col(ts_col))).alias("repaired_from"),
-        F.max(F.when(rep, F.col(ts_col))).alias("repaired_to"),
-    )
-
-
-def scd2_enrich_oracle(
-    facts_table: str,
-    dim_versions_sql: str,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    attrs: Sequence[str] = ("event_type",),
-    fact_cols: Sequence[str] = ("event_id",),
-) -> str:
-    """DuckDB twin of :func:`scd2_enrich` via native ASOF JOIN (the
-    asof.py oracle precedent): greatest valid_from <= fact time."""
-    a_cols = ", ".join(f"v.{a} AS {a}" for a in attrs)
-    f_cols = ", ".join(f"f.{c} AS {c}" for c in fact_cols)
-    return f"""
-        SELECT {f_cols}, {a_cols}
-        FROM {facts_table} f
-        ASOF LEFT JOIN ({dim_versions_sql}) v
-          ON f.{key} = v.{key}
-         AND epoch_us(f.{ts_col}) >= v.valid_from_us
-    """
-
-
-def scd2_diff(
-    dim: DataFrame,
-    t1_us: int,
-    t2_us: int,
-    key: str | Sequence[str] = "user_id",
-    attrs: Sequence[str] = ("event_type",),
-    include_unchanged: bool = False,
-) -> DataFrame:
-    """Change-data-capture read over a version table: what changed
-    between instant ``t1_us`` and instant ``t2_us`` (epoch micros,
-    t1 < t2). Output one row per key that has a version at either
-    instant: (key..., <a>_before..., <a>_after..., change) with
-    ``change`` in ``('new', 'changed', 'unchanged')`` — ``new`` =
-    no version valid at t1, a version valid at t2. (SCD2 has no
-    deletes by construction — a key never leaves the dimension — so
-    no 'deleted' class exists to emit.)
-
-    Plan: ONE dimension scan, one map-side-combined aggregation on the
-    key. Per-key validity intervals are disjoint, so at most one
-    version contains each instant — conditional aggregates
-    (max-when) pull that single row's attrs, and presence flags
-    (max(when(contains, 1))) keep "absent version" distinct from "a
-    version whose attr is NULL". No self-join, no window.
-    """
-    if not t1_us < t2_us:
-        raise ValueError(f"scd2_diff: t1_us {t1_us} must be < t2_us {t2_us}")
-    keys = _keys(key)
-    attr_cols = list(attrs)
-
-    def contains(t: int) -> F.Column:
-        return (F.col("valid_from_us") <= F.lit(t)) & (
-            F.col("valid_to_us").isNull() | (F.col("valid_to_us") > F.lit(t))
-        )
-
-    c1, c2 = contains(t1_us), contains(t2_us)
-    aggs = [F.max(F.when(c1, F.lit(1))).alias("_p1"),
-            F.max(F.when(c2, F.lit(1))).alias("_p2")]
-    for a in attr_cols:
-        aggs.append(F.max(F.when(c1, F.col(a))).alias(f"{a}_before"))
-        aggs.append(F.max(F.when(c2, F.col(a))).alias(f"{a}_after"))
-    picked = dim.groupBy(*keys).agg(*aggs).filter(
-        F.col("_p1").isNotNull() | F.col("_p2").isNotNull()
-    )
-    before_s = F.struct(
-        *[F.col(f"{a}_before").alias(a) for a in attr_cols]
-    )
-    after_s = F.struct(*[F.col(f"{a}_after").alias(a) for a in attr_cols])
-    change = (
-        F.when(F.col("_p1").isNull(), F.lit("new"))
-        .when(~before_s.eqNullSafe(after_s), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    out = picked.select(
-        *keys,
-        *[f"{a}_before" for a in attr_cols],
-        *[f"{a}_after" for a in attr_cols],
-        change.alias("change"),
-    )
-    if not include_unchanged:
-        out = out.filter(F.col("change") != "unchanged")
-    return out
-
-
-def scd2_diff_oracle(
-    dim_versions_sql: str,
-    t1_us: int,
-    t2_us: int,
-    keys: Sequence[str] = ("user_id",),
-    attrs: Sequence[str] = ("event_type",),
-    include_unchanged: bool = False,
-) -> str:
-    """DuckDB twin of :func:`scd2_diff`: identical conditional
-    aggregation (FILTER), presence flags, and null-safe change
-    classification (IS DISTINCT FROM)."""
-    ks = ", ".join(keys)
-    c1 = (
-        f"valid_from_us <= {t1_us} AND "
-        f"(valid_to_us IS NULL OR valid_to_us > {t1_us})"
-    )
-    c2 = (
-        f"valid_from_us <= {t2_us} AND "
-        f"(valid_to_us IS NULL OR valid_to_us > {t2_us})"
-    )
-    picks = ",\n               ".join(
-        f"MAX({a}) FILTER (WHERE {c}) AS {a}_{tag}"
-        for a in attrs
-        for tag, c in (("before", c1), ("after", c2))
-    )
-    diff = " OR ".join(
-        f"{a}_before IS DISTINCT FROM {a}_after" for a in attrs
-    )
-    b_cols = ", ".join(f"{a}_before" for a in attrs)
-    a_cols = ", ".join(f"{a}_after" for a in attrs)
-    where = "" if include_unchanged else "WHERE change <> 'unchanged'"
-    return f"""
-        WITH picked AS (
-            SELECT {ks},
-               MAX(1) FILTER (WHERE {c1}) AS p1,
-               MAX(1) FILTER (WHERE {c2}) AS p2,
-               {picks}
-            FROM ({dim_versions_sql})
-            GROUP BY {ks}
-        )
-        SELECT * FROM (
-            SELECT {ks}, {b_cols}, {a_cols},
-                   CASE WHEN p1 IS NULL THEN 'new'
-                        WHEN {diff} THEN 'changed'
-                        ELSE 'unchanged' END AS change
-            FROM picked
-            WHERE p1 IS NOT NULL OR p2 IS NOT NULL
-        ) {where}
     """

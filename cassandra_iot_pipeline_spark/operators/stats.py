@@ -1,12 +1,13 @@
-"""Statistical aggregates: exact quantiles, approximate sketches,
+"""Statistical aggregates: exact quantiles, distinct-count sketches,
 grouping sets (engine surface beyond the reference's avg/max/min/count).
 
 Exactness: quantiles interpolate over *integer cents* at quarter
 fractions (0.25/0.5/0.75), where linear interpolation is exact binary
-arithmetic — bit-identical across engines. Approximate sketches
-(approx_count_distinct, percentile_approx) are engine-specific by
-nature; they ship as API surface with accuracy pinned in tests, not in
-the oracle contract.
+arithmetic — bit-identical across engines. The HLL sketch
+(approx_count_distinct) is engine-specific by nature; it ships as API
+surface with accuracy pinned in tests, not in the oracle contract. The
+KMV sketch is its portable companion: every step is exact, so DuckDB
+reproduces its estimate bitwise.
 """
 
 from __future__ import annotations
@@ -41,110 +42,6 @@ def value_quantiles_oracle() -> str:
                (quantile_cont(CAST(ROUND(value * 100) AS BIGINT), 0.50) / 100.0) AS p50,
                (quantile_cont(CAST(ROUND(value * 100) AS BIGINT), 0.75) / 100.0) AS p75
         FROM events
-        GROUP BY event_type
-    """
-
-
-def value_quantiles_approx(events: DataFrame, accuracy: int = 10_000) -> DataFrame:
-    """Scale tier of ``value_quantiles``: Greenwald-Khanna
-    ``percentile_approx`` with bounded memory per group. The exact form
-    collects every value of a group into one aggregation buffer — fine
-    at fixture scale, a per-group memory cliff at 100 TB — while the
-    sketch holds O(accuracy) entries regardless of group size. Rank
-    error <= 1/accuracy; engine-specific result (accuracy pinned in
-    tests, not the oracle — that's what ``sampled_quantiles`` is for).
-    Same output schema as the exact form."""
-    cents = F.round(F.col("value") * 100).cast("long")
-    pct = F.percentile_approx(cents, F.lit(list(QUANTILES)), F.lit(accuracy))
-    return (
-        events.groupBy("event_type")
-        .agg(pct.alias("q"))
-        .select(
-            "event_type",
-            (F.col("q").getItem(0) / F.lit(100.0)).alias("p25"),
-            (F.col("q").getItem(1) / F.lit(100.0)).alias("p50"),
-            (F.col("q").getItem(2) / F.lit(100.0)).alias("p75"),
-        )
-    )
-
-
-def sampled_quantiles(
-    events: DataFrame, k: int = 1024, prefilter_rate: float | None = None
-) -> DataFrame:
-    """The portable approximate-quantile tier: exact quantiles of a
-    deterministic uniform sample — per event_type, the ``k`` rows whose
-    sha256(event_id) sorts smallest (the KMV sampling trick again:
-    hash-ordered membership is partition-invariant and reproducible by
-    DuckDB, unlike percentile_approx's engine-specific sketch, and the
-    sample-quantile interpolation is the same exact integer-cents
-    arithmetic as the exact tier). Rank error ~ O(1/sqrt(k)). NULL
-    event_ids are excluded up front (Spark sorts NULLS FIRST, DuckDB
-    NULLS LAST — the same cross-engine divergence kmv_user_count
-    guards).
-
-    Scale dial: without ``prefilter_rate`` the per-group k-min is a
-    window sort over every group row — fine to ~10^7 rows/group, a
-    single-task sort beyond. Set ``prefilter_rate`` to a fraction that
-    still keeps >= k rows per group (from a cardinality floor, the same
-    sizing contract as the KMV prefix filter) and the integer prefix of
-    the hash is thresholded BEFORE the window, so the sort sees
-    ~rate * n rows. The k minima are unchanged as long as the filter
-    keeps >= k hashes — a prune, not an approximation on top."""
-    from pyspark.sql.window import Window
-
-    cents = F.round(F.col("value") * 100).cast("long")
-    h = F.sha2(F.col("event_id").cast("string"), 256)
-    base = events.filter(F.col("event_id").isNotNull()).select(
-        "event_type", cents.alias("c"), h.alias("h"), "event_id"
-    )
-    if prefilter_rate is not None:
-        if not 0.0 < prefilter_rate <= 1.0:
-            raise ValueError(f"prefilter_rate {prefilter_rate} outside (0, 1]")
-        # first 8 hex digits as a 32-bit integer vs rate * 2^32 — an
-        # exact integer comparison both engines evaluate identically
-        bound = int(prefilter_rate * (1 << 32))
-        base = base.filter(
-            F.conv(F.col("h").substr(1, 8), 16, 10).cast("long") < bound
-        )
-    ranked = base.select(
-        "event_type",
-        "c",
-        F.row_number()
-        .over(
-            Window.partitionBy("event_type").orderBy(F.col("h"), F.col("event_id"))
-        )
-        .alias("r"),
-    ).filter(F.col("r") <= k)
-    pct = F.percentile(F.col("c"), F.lit(list(QUANTILES)))
-    return (
-        ranked.groupBy("event_type")
-        .agg(pct.alias("q"))
-        .select(
-            "event_type",
-            (F.col("q").getItem(0) / F.lit(100.0)).alias("p25"),
-            (F.col("q").getItem(1) / F.lit(100.0)).alias("p50"),
-            (F.col("q").getItem(2) / F.lit(100.0)).alias("p75"),
-        )
-    )
-
-
-def sampled_quantiles_oracle(k: int = 1024) -> str:
-    return f"""
-        WITH ranked AS (
-            SELECT event_type,
-                   CAST(ROUND(value * 100) AS BIGINT) AS c,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY event_type
-                       ORDER BY sha256(CAST(event_id AS VARCHAR)), event_id
-                   ) AS r
-            FROM events
-            WHERE event_id IS NOT NULL
-        )
-        SELECT event_type,
-               (quantile_cont(c, 0.25) / 100.0) AS p25,
-               (quantile_cont(c, 0.50) / 100.0) AS p50,
-               (quantile_cont(c, 0.75) / 100.0) AS p75
-        FROM ranked WHERE r <= {k}
         GROUP BY event_type
     """
 
@@ -217,86 +114,6 @@ def approx_user_count(events: DataFrame, rsd: float = 0.05) -> DataFrame:
         F.count_distinct(F.col("user_id")).alias("exact_users"),
         F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
     )
-
-
-def value_moments(events: DataFrame) -> DataFrame:
-    """Exact mean / sample variance / sample stddev of value per
-    event_type, from integer second moments.
-
-    Spark's built-in ``stddev_samp`` runs Welford's streaming update in
-    doubles — merge order changes the low bits, so the result drifts
-    with partition layout and cannot be oracle-compared bitwise. This
-    form aggregates only ``SUM(cents)`` and ``SUM(cents²)`` — exact
-    integers, associative, partition-invariant (cents² ≤ 4e8 per row;
-    2^63 holds ~2e10 such rows per group; pre-aggregate a group beyond
-    that) — then derives
-
-        var = (n·Σx² − (Σx)²) / (n·(n−1)) / 100²
-
-    as a fixed sequence of correctly-rounded IEEE ops both engines
-    evaluate identically (the exactmath argument). The n·Σx² product is
-    formed in DOUBLE: exact while n·Σx² < 2^53 — beyond that both
-    engines still round it identically, so the oracle holds at any
-    scale even when the low bits are no longer exact.
-    """
-    cents = F.round(F.col("value") * 100).cast("long")
-    agg = events.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("s1"),
-        F.sum(cents * cents).alias("s2"),
-    )
-    n = F.col("n").cast("double")
-    raw = (
-        (n * F.col("s2").cast("double") - F.col("s1").cast("double") * F.col("s1").cast("double"))
-        / (n * (n - F.lit(1.0)))
-        / F.lit(10000.0)
-    )
-    # n == 1 has no sample variance: NULL like stddev_samp, never the
-    # 0.0/0.0 NaN the raw formula produces. The greatest(·, 0) clamp
-    # handles the beyond-2^53 regime where rounding of n·Σx² can push a
-    # near-zero variance slightly negative (sqrt would yield NaN) —
-    # clamping to 0 IS the correct answer there, and both engines clamp
-    # the identically-rounded double, so parity is preserved.
-    var = F.when(F.col("n") > 1, F.greatest(raw, F.lit(0.0)))
-    return agg.select(
-        "event_type",
-        "n",
-        (F.col("s1").cast("double") / n / F.lit(100.0)).alias("mean_value"),
-        var.alias("var_value"),
-        F.sqrt(var).alias("stddev_value"),
-    )
-
-
-def value_moments_oracle() -> str:
-    return """
-        WITH g AS (
-            SELECT event_type,
-                   COUNT(*) AS n,
-                   SUM(c) AS s1,
-                   SUM(c * c) AS s2
-            FROM (
-                SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c
-                FROM events
-            )
-            GROUP BY event_type
-        )
-        SELECT event_type,
-               n,
-               (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) / 100.0) AS mean_value,
-               CASE WHEN n > 1 THEN greatest(
-                   (CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
-                    - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))
-                   / 10000.0, 0.0)
-               END AS var_value,
-               sqrt(CASE WHEN n > 1 THEN greatest(
-                   (CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE)
-                    - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))
-                   / 10000.0, 0.0)
-               END) AS stddev_value
-        FROM g
-    """
 
 
 KMV_K = 256  # relative error ~ 1/sqrt(k-2) ≈ 6% — matches the HLL rsd tier
@@ -382,275 +199,3 @@ def kmv_user_count_oracle(k: int = KMV_K) -> str:
                END AS kmv_users
         FROM v
     """
-
-
-def value_histogram(
-    events: DataFrame,
-    n_bins: int = 20,
-    lo: float | None = None,
-    hi: float | None = None,
-    value_col: str = "value",
-) -> DataFrame:
-    """(bin, lo_edge, hi_edge, n): equal-width histogram of the
-    measure — the dashboard distribution view next to the exact
-    quantiles. With lo/hi omitted the domain comes from one min/max
-    pass (a 1-row bounded collect). Values below lo clamp into bin 0,
-    at-or-above hi into the last bin (width_bucket semantics with
-    closed outer bins, so every non-null row is counted exactly once);
-    NULLs are excluded. Empty bins are emitted with n = 0 so the
-    silhouette is positionally complete.
-
-    Exactness: bin index is floor((v - lo) / width) on doubles —
-    subtraction, division, floor are each correctly rounded IEEE ops,
-    so the oracle's identical expression bins identically; counts are
-    exact BIGINTs; edges are lo + bin*width computed the same way in
-    both engines.
-
-    Plan: one scan into a partial-aggregable groupBy(bin) — the
-    exchange carries at most n_bins rows per task; the empty-bin
-    completion joins the n_bins-row literal frame (broadcast)."""
-    if n_bins < 1:
-        raise ValueError("need n_bins >= 1")
-    spark = events.sparkSession
-    if lo is None or hi is None:
-        row = events.agg(
-            F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-        ).collect()[0]
-        lo = float(row["lo"]) if lo is None else lo
-        hi = float(row["hi"]) if hi is None else hi
-    if not hi > lo:
-        raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
-    width = (hi - lo) / n_bins
-    v = F.col(value_col)
-    bin_col = F.least(
-        F.greatest(
-            F.floor((v - F.lit(lo)) / F.lit(width)).cast("int"), F.lit(0)
-        ),
-        F.lit(n_bins - 1),
-    )
-    counts = (
-        events.filter(v.isNotNull())
-        .select(bin_col.alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    bins = spark.createDataFrame(
-        [(i, lo + i * width, lo + (i + 1) * width) for i in range(n_bins)],
-        "bin INT, lo_edge DOUBLE, hi_edge DOUBLE",
-    )
-    return bins.join(F.broadcast(counts), "bin", "left").select(
-        "bin",
-        "lo_edge",
-        "hi_edge",
-        F.coalesce("n", F.lit(0)).alias("n"),
-    )
-
-
-def value_histogram_oracle(
-    n_bins: int = 20,
-    lo: float = 0.0,
-    hi: float = 1.0,
-    table: str = "events",
-    value_col: str = "value",
-) -> str:
-    """DuckDB twin of :func:`value_histogram` (explicit lo/hi — the
-    oracle can't replay the domain collect): identical bin expression,
-    identical clamping, identical edge arithmetic."""
-    width = (hi - lo) / n_bins
-    d = lambda x: f"CAST({x!r} AS DOUBLE)"  # noqa: E731
-    bin_expr = (
-        f"LEAST(GREATEST(CAST(FLOOR(({value_col} - {d(lo)}) / {d(width)})"
-        f" AS INT), 0), {n_bins - 1})"
-    )
-    edges = " UNION ALL ".join(
-        f"SELECT {i} AS bin, {d(lo + i * width)} AS lo_edge,"
-        f" {d(lo + (i + 1) * width)} AS hi_edge"
-        for i in range(n_bins)
-    )
-    return f"""
-        WITH counts AS (
-            SELECT {bin_expr} AS bin, COUNT(*) AS n
-            FROM {table} WHERE {value_col} IS NOT NULL
-            GROUP BY 1
-        ),
-        bins AS ({edges})
-        SELECT bins.bin, lo_edge, hi_edge, COALESCE(n, 0) AS n
-        FROM bins LEFT JOIN counts ON bins.bin = counts.bin
-    """
-
-
-def mad_outliers(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    k_mad: float = 3.5,
-    scale: int = 2,
-    outliers_only: bool = True,
-) -> DataFrame:
-    """Robust seasonal outliers: events whose value deviates more than
-    ``k_mad`` MADs from their (key, hour-of-day) baseline — the batch
-    complement of the streaming jump detector: median/MAD survive the
-    contaminated data that makes mean/stddev baselines circular
-    (an outlier inflates the stddev that is supposed to catch it).
-
-    Exactness: values become integer units (10^scale grid); the two
-    medians are ``percentile(..., 0.5)`` — at fraction 0.5 the
-    interpolation is one exact halving of two integers (the
-    value_quantiles contract), mirrored by DuckDB's quantile_cont.
-    Hour-of-day is the integer-exact pmod floor of the hour index (the
-    gapfill rule, correct pre-1970) — no timezone or calendar
-    dependence on either engine.
-
-    Plan: ONE exchange. Both medians are aggregate-as-window over the
-    SAME (key, hour) partitioning with no ordering — Spark plans two
-    Window passes over one clustering, no join, no second shuffle (a
-    groupBy+join formulation would exchange three times). The MAD
-    window consumes the median window's output column directly.
-
-    Flagging: ``|u - med| > k_mad * mad`` in unit space. A group whose
-    MAD is 0 (over half its samples identical) flags ANY deviating
-    value — the conventional degenerate-MAD behavior; k_mad ~= 3.5
-    MADs corresponds to ~2.3 sigma on clean normal data (1 MAD ~=
-    0.6745 sigma).
-
-    Hot-key bound: an exact median buffers the group's values, so
-    per-task memory is bounded by the largest (key, hour) group — at
-    20M events / 10k keys that is ~83 samples/group (probed 3.8 s);
-    a single key carrying billions of samples needs the approximate
-    tier instead (swap ``percentile`` for ``percentile_approx``,
-    giving up the oracle — the value_quantiles approx precedent).
-    """
-    from pyspark.sql import Window
-
-    from . import exactmath
-
-    u = exactmath.units(F.col(value_col), scale)
-    h = 3600 * 1_000_000
-    # floor-aligned hour index (the gapfill pmod rule — exact for ALL
-    # timestamps incl. pre-1970), then the non-negative mod
-    hod = F.expr(
-        f"pmod((unix_micros({ts_col}) - pmod(unix_micros({ts_col}), {h}))"
-        f" div {h}, 24)"
-    ).cast("int")
-    base = events.filter(F.col(value_col).isNotNull()).select(
-        F.col(key),
-        F.col(ts_col),
-        F.col(value_col),
-        hod.alias("hod"),
-        u.alias("_u"),
-    )
-    w = Window.partitionBy(key, "hod")
-    denom = 10**scale
-    with_med = base.withColumn(
-        "_med", F.expr("percentile(_u, 0.5)").over(w)
-    )
-    with_mad = with_med.withColumn(
-        "_mad", F.expr("percentile(abs(_u - _med), 0.5)").over(w)
-    )
-    out = with_mad.select(
-        key,
-        ts_col,
-        value_col,
-        "hod",
-        (F.col("_med") / denom).alias("season_median"),
-        (F.col("_mad") / denom).alias("season_mad"),
-        (F.abs(F.col("_u") - F.col("_med")) > F.lit(k_mad) * F.col("_mad"))
-        .alias("is_outlier"),
-    )
-    return out.filter(F.col("is_outlier")) if outliers_only else out
-
-
-def mad_outliers_oracle(
-    table: str = "events",
-    key: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    k_mad: float = 3.5,
-    scale: int = 2,
-    outliers_only: bool = True,
-) -> str:
-    """DuckDB twin of :func:`mad_outliers`: identical unit grid,
-    hour-of-day arithmetic, windowed quantile_cont medians, and
-    flagging expression."""
-    denom = 10**scale
-    u = f"CAST(round({value_col} * {denom}) AS BIGINT)"
-    where = "WHERE is_outlier" if outliers_only else ""
-    return f"""
-        WITH base AS (
-            SELECT {key}, {ts_col}, {value_col},
-                   CAST(((((epoch_us({ts_col})
-                       - ((epoch_us({ts_col}) % {3600 * 1_000_000})
-                          + {3600 * 1_000_000}) % {3600 * 1_000_000})
-                       // {3600 * 1_000_000}) % 24) + 24) % 24
-                        AS INTEGER) AS hod,
-                   {u} AS u
-            FROM {table} WHERE {value_col} IS NOT NULL
-        ),
-        med AS (
-            SELECT *, quantile_cont(u, 0.5)
-                          OVER (PARTITION BY {key}, hod) AS m
-            FROM base
-        ),
-        mad AS (
-            SELECT *, quantile_cont(abs(u - m), 0.5)
-                          OVER (PARTITION BY {key}, hod) AS d
-            FROM med
-        )
-        SELECT * FROM (
-            SELECT {key}, {ts_col}, {value_col}, hod,
-                   m / {denom} AS season_median,
-                   d / {denom} AS season_mad,
-                   abs(u - m) > {k_mad} * d AS is_outlier
-            FROM mad
-        ) {where}
-    """
-
-
-def median_from_counts(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str = "u",
-    cnt_col: str = "cnt",
-    out_col: str = "med",
-) -> DataFrame:
-    """Exact per-group median of a multiset given as (value, count)
-    rows — the primitive that lets a COUNT STORE serve the same number
-    ``percentile(x, 0.5)`` would compute over the expanded rows
-    (pinned bitwise-equal in tests): with values sorted, index
-    ``pos = (n-1)/2``; the flanking order statistics come from one
-    cumulative-count window (``v[i]`` = min value whose running count
-    exceeds ``i``), and the interpolation is the same exact halving.
-
-    Plan: ONE exchange on the group key; two window passes over the
-    same clustering (running count, then the conditional mins across
-    the full partition); rows are DISTINCT (group, value) pairs — the
-    whole point: the expanded multiset never materializes."""
-    from pyspark.sql import Window
-
-    groups = list(group_cols)
-    w_ord = (
-        Window.partitionBy(*groups)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy(*groups)
-    cum = F.sum(cnt_col).over(w_ord)
-    n = F.sum(cnt_col).over(w_all)
-    pos = (n.cast("double") - 1) / 2
-    lo_i = F.floor(pos)
-    hi_i = F.ceil(pos)
-    with_cum = df.select(*groups, value_col, cnt_col).withColumn(
-        "_cum", cum
-    ).withColumn("_pos", pos).withColumn("_lo", lo_i).withColumn(
-        "_hi", hi_i
-    )
-    v = F.col(value_col).cast("double")
-    v_lo = F.min(F.when(F.col("_cum") > F.col("_lo"), v)).over(w_all)
-    v_hi = F.min(F.when(F.col("_cum") > F.col("_hi"), v)).over(w_all)
-    med = v_lo + (F.col("_pos") - F.col("_lo")) * (v_hi - v_lo)
-    return (
-        with_cum.withColumn(out_col, med)
-        .groupBy(*groups)
-        .agg(F.max(out_col).alias(out_col))
-    )

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.agg import sliding_rollup
 from ..operators.exactmath import exact_sum
 from ..schemas import EVENTS_FIXTURE_SCHEMA
 from ..store import run_foreach_batch
@@ -355,29 +354,6 @@ def query_progress(q) -> list[dict]:
             }
         )
     return rows
-
-
-def sliding_agg_query(
-    stream: DataFrame,
-    sink: ParquetUpsertSink,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Hopping-window streaming aggregation — the overlapping-window
-    companion to :func:`hourly_agg_query`: the batch
-    ``operators/agg.py::sliding_rollup`` expression under the
-    watermark, so both share one arithmetic and window assignment.
-    State holds w/s windows per device instead of one; the watermark
-    bounds it identically (a window's state is evictable once the
-    watermark passes its end)."""
-    agg = sliding_rollup(
-        stream.withWatermark("ts", WATERMARK_DELAY), window=window, slide=slide
-    )
-    return run_foreach_batch(
-        agg, sink.write_batch, checkpoint_dir, trigger, "update"
-    )
 
 
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -169,133 +169,3 @@ def test_step_filter_pushed_to_scan(spark):
     events = load_table(spark, SF_DIR, "events")
     df = funnel(events, ["view", "purchase"])
     assert_pushed_filter(df, "In(event_type")
-
-
-def test_segmented_funnel(spark, duck):
-    """Per-segment drop-off: hand-computed on a tiny frame, DuckDB
-    parity on the fixture (with some users deliberately unmapped ->
-    segment NULL), and segment independence (a segment's conversion
-    uses only its own users)."""
-    import pandas as pd
-
-    from cassandra_iot_pipeline_spark.operators.funnel import (
-        funnel_segmented,
-        funnel_segmented_oracle,
-    )
-
-    rows = [
-        (1, _t(0), "a"), (1, _t(1), "b"),       # gold converts
-        (2, _t(0), "a"),                        # gold drops
-        (3, _t(0), "a"), (3, _t(1), "b"),       # free converts
-        (4, _t(0), "a"),                        # unmapped -> NULL seg
-    ]
-    segs = spark.createDataFrame(
-        [(1, "gold"), (2, "gold"), (3, "free")],
-        "user_id BIGINT, segment STRING",
-    )
-    got = {
-        (r["segment"], r["step"]): (r["n_users"], r["conversion"])
-        for r in funnel_segmented(
-            spark.createDataFrame(rows, SCHEMA), ["a", "b"], segs
-        ).collect()
-    }
-    assert got == {
-        ("gold", "a"): (2, 1.0),
-        ("gold", "b"): (1, 0.5),
-        ("free", "a"): (1, 1.0),
-        ("free", "b"): (1, 1.0),
-        (None, "a"): (1, 1.0),
-    }
-
-    events = load_table(spark, SF_DIR, "events")
-    uids = [r["user_id"] for r in events.select("user_id").distinct().collect()]
-    seg_rows = [(u, f"seg{u % 3}") for u in uids if u % 5 != 0]
-    seg_df = spark.createDataFrame(seg_rows, "user_id BIGINT, segment STRING")
-    duck.register(
-        "segments", pd.DataFrame(seg_rows, columns=["user_id", "segment"])
-    )
-    for steps, hz in [
-        (["view", "click", "purchase"], None),
-        (["signup", "view", "purchase"], 7 * 86_400),
-    ]:
-        spark_pdf = funnel_segmented(
-            events, steps, seg_df, horizon_seconds=hz
-        ).toPandas()
-        oracle_pdf = duck.sql(
-            funnel_segmented_oracle(steps, horizon_seconds=hz)
-        ).df()
-        assert compare(spark_pdf, oracle_pdf) == [], steps
-
-
-# --- funnel_trend -------------------------------------------------------------
-
-
-def test_funnel_trend_hand_computed(spark):
-    """Users anchor in different days; each counts in exactly ONE
-    period (their greedy anchor's) and per-period columns sum to the
-    plain funnel's counts."""
-    import datetime as dt
-
-    from cassandra_iot_pipeline_spark.operators.funnel import (
-        funnel,
-        funnel_trend,
-    )
-
-    def t(day, minute):
-        return dt.datetime(2024, 1, 1 + day, 0, minute)
-
-    rows = [
-        # day 0: user 1 completes a->b; user 2 only a
-        (1, t(0, 0), "a"), (1, t(0, 10), "b"),
-        (2, t(0, 5), "a"),
-        # day 1: user 3 completes a->b
-        (3, t(1, 0), "a"), (3, t(1, 10), "b"),
-        # user 4 anchors day 0 but completes b on day 1: counts in
-        # day 0's period for BOTH steps (the anchor owns the chain)
-        (4, t(0, 50), "a"), (4, t(1, 30), "b"),
-        # user 5: b only -> no anchor, no period
-        (5, t(0, 20), "b"),
-    ]
-    frame = spark.createDataFrame(
-        rows, "user_id BIGINT, ts TIMESTAMP, event_type STRING"
-    )
-    got = {
-        (r["period_start"].day, r["step"]): (r["n_users"], r["conversion"])
-        for r in funnel_trend(frame, ["a", "b"], 86_400).collect()
-    }
-    assert got == {
-        (1, "a"): (3, 1.0),
-        (1, "b"): (2, 2 / 3),
-        (2, "a"): (1, 1.0),
-        (2, "b"): (1, 1.0),
-    }
-    plain = {
-        r["step"]: r["n_users"]
-        for r in funnel(frame, ["a", "b"]).collect()
-    }
-    for s in ("a", "b"):
-        assert plain[s] == sum(
-            v[0] for (d, st), v in got.items() if st == s
-        )
-
-
-def test_funnel_trend_fixture_duckdb_parity(spark, duck):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.funnel import (
-        funnel_trend,
-        funnel_trend_oracle,
-    )
-    from tests.conftest import SF_DIR
-    from tools.oracle_check import compare
-
-    events = load_table(spark, SF_DIR, "events")
-    steps = ["signup", "view", "click", "purchase"]
-    for period, horizon in ((86_400, None), (7 * 86_400, 3 * 86_400)):
-        got = funnel_trend(
-            events, steps, period, horizon_seconds=horizon
-        ).toPandas()
-        want = duck.sql(
-            funnel_trend_oracle(steps, period, horizon_seconds=horizon)
-        ).df()
-        assert compare(got, want) == [], (period, horizon)
-        assert len(got) >= 8  # several periods x 4 steps

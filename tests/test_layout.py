@@ -20,6 +20,12 @@ class of the package that no file (package, entry points, ``tools/``,
 ``UNREFERENCED_KEPT`` with its keep rule. A reference is a name, an
 attribute, an imported name or a string constant equal to the name;
 its own ``def`` and a docstring mention do not count.
+
+A third ledger holds the functions only tests keep alive: a public
+top-level function or class of a module an entry point reaches that
+no package file and no entry point references must be listed in
+``TEST_ONLY_KEPT`` with its keep rule. References from ``tests/`` and
+from ``tools/`` other than the oracle check do not count.
 """
 
 from __future__ import annotations
@@ -55,6 +61,85 @@ UNREFERENCED_KEPT = {
     "sources.kafka.write_kafka_stream": "reference connector (Kafka sink)",
 }
 
+_LLM_DATA = "LLM-data family (text, similarity, multimodal, sketches, dedup)"
+_SCALE_LEVER = "storage scale lever (DESIGN.md §5)"
+_HEALTH = "engine health surface (ROADMAP item 6)"
+_REFERENCE = (
+    "reference for a kept path: streaming-equals-batch twin or oracle tier"
+)
+_LEGACY = (
+    "deregistered registry form, oracle-pinned in test_legacy_parity.py; "
+    "next prune"
+)
+
+#: Public top-level functions and classes of reached modules that only
+#: tests (and tools other than the oracle check) reference, each with
+#: the keep rule it meets.
+TEST_ONLY_KEPT = {
+    "blocks.cached_rdd_count": _HEALTH,
+    "store.store_stats": _HEALTH,
+    "functions.dedup.minhash_lsh_candidates": _LLM_DATA,
+    "functions.multimodal.media_metadata_oracle": _LLM_DATA,
+    "functions.multimodal.resize_media": _LLM_DATA,
+    "functions.multimodal.extract_features": _LLM_DATA,
+    "functions.similarity.pq_topk": _LLM_DATA,
+    "functions.similarity.ivf_pq_topk": _LLM_DATA,
+    "functions.sketches.cm_estimate": _LLM_DATA,
+    "functions.sketches.frequent_tokens_oracle": _LLM_DATA,
+    "functions.text.text_stats": _LLM_DATA,
+    "functions.text.text_stats_oracle": _LLM_DATA,
+    "functions.text.language_guess": _LLM_DATA,
+    "functions.text.language_guess_oracle": _LLM_DATA,
+    "functions.text.fingerprint": _LLM_DATA,
+    "functions.text.fingerprint_oracle": _LLM_DATA,
+    "functions.text.token_counts": _LLM_DATA,
+    "functions.text.token_counts_oracle": _LLM_DATA,
+    "functions.text.rolling_fingerprint": _LLM_DATA,
+    "functions.text.rolling_fingerprint_reference": _LLM_DATA,
+    "functions.text.word_frequencies_oracle": _LLM_DATA,
+    "functions.text.quality_flags": _LLM_DATA,
+    "functions.text.quality_flags_oracle": _LLM_DATA,
+    "functions.text.repetition_signals_oracle": _LLM_DATA,
+    "functions.text.tfidf_top_terms": _LLM_DATA,
+    "functions.text.tfidf_top_terms_oracle": _LLM_DATA,
+    "streaming.dedup.streaming_near_dedup": _LLM_DATA,
+    "storage.write_events_table": _SCALE_LEVER,
+    "storage.read_events_table": _SCALE_LEVER,
+    "storage.write_bucketed": _SCALE_LEVER,
+    "storage.compact_small_files": _SCALE_LEVER,
+    "storage.write_index_projection": _SCALE_LEVER,
+    "storage.read_by_index": _SCALE_LEVER,
+    "storage.write_zordered": _SCALE_LEVER,
+    "storage.expire_partitions": _SCALE_LEVER,
+    "storage.rowgroup_pruning_report": _SCALE_LEVER,
+    "operators.profiles.similar_devices_allpairs": _REFERENCE,
+    "operators.rangejoin.conversion_pairs": _REFERENCE,
+    "streaming.joins.enriched_stream_query": _REFERENCE,
+    "operators.agg.rollup_by_type": _LEGACY,
+    "operators.agg.rollup_by_type_oracle": _LEGACY,
+    "operators.agg.global_count": _LEGACY,
+    "operators.agg.global_count_oracle": _LEGACY,
+    "operators.joins.forecast_revenue_oracle": _LEGACY,
+    "operators.stats.orders_rollup_hierarchy": _LEGACY,
+    "operators.stats.orders_rollup_hierarchy_oracle": _LEGACY,
+    "operators.subqueries.priority_exists_counts": _LEGACY,
+    "operators.subqueries.priority_exists_counts_oracle": _LEGACY,
+    "operators.subqueries.returnflag_priority_mix": _LEGACY,
+    "operators.subqueries.returnflag_priority_mix_oracle": _LEGACY,
+    "operators.windows.running_user_totals": _LEGACY,
+    "operators.windows.running_user_totals_oracle": _LEGACY,
+    "operators.windows.event_gaps": _LEGACY,
+    "operators.windows.event_gaps_oracle": _LEGACY,
+    "operators.windows.session_stats": _LEGACY,
+    "operators.windows.session_stats_oracle": _LEGACY,
+    "operators.windows.type_unpivot": _LEGACY,
+    "operators.windows.type_unpivot_oracle": _LEGACY,
+    "sources.json_decode.props_bucket_rollup": _LEGACY,
+    "sources.json_decode.props_bucket_rollup_oracle": _LEGACY,
+    "sources.projections.raw_projection": _LEGACY,
+    "sources.projections.raw_projection_oracle": _LEGACY,
+}
+
 ENTRY_POINTS = [
     REPO_ROOT / "__spark_entry__.py",
     REPO_ROOT / "bench.py",
@@ -69,6 +154,11 @@ REFERRING_FILES = [
     *sorted((REPO_ROOT / "tools").glob("*.py")),
     *sorted((REPO_ROOT / "tests").glob("*.py")),
 ]
+
+
+#: The files whose references keep a function of a reached module
+#: alive without a ``TEST_ONLY_KEPT`` row.
+RUNTIME_FILES = [*sorted((REPO_ROOT / PACKAGE).rglob("*.py")), *ENTRY_POINTS]
 
 
 def _package_modules() -> dict[str, Path]:
@@ -157,13 +247,16 @@ def _referenced_names(path: Path) -> set[str]:
     return names
 
 
-def test_unreferenced_public_functions_are_exactly_the_kept_ledger():
-    assert all(reason.strip() for reason in UNREFERENCED_KEPT.values())
+def _unreferenced_public_defs(
+    modules: dict[str, Path], referring: list[Path]
+) -> set[str]:
+    """``module.name`` of every public top-level function or class in
+    ``modules`` that no file in ``referring`` references."""
     referenced = set()
-    for path in set(REFERRING_FILES):
+    for path in set(referring):
         referenced |= _referenced_names(path)
-    unreferenced = set()
-    for module, path in _package_modules().items():
+    found = set()
+    for module, path in modules.items():
         for node in ast.parse(path.read_text()).body:
             if (
                 isinstance(
@@ -172,9 +265,13 @@ def test_unreferenced_public_functions_are_exactly_the_kept_ledger():
                 and not node.name.startswith("_")
                 and node.name not in referenced
             ):
-                unreferenced.add(
-                    f"{module.removeprefix(f'{PACKAGE}.')}.{node.name}"
-                )
+                found.add(f"{module.removeprefix(f'{PACKAGE}.')}.{node.name}")
+    return found
+
+
+def test_unreferenced_public_functions_are_exactly_the_kept_ledger():
+    assert all(reason.strip() for reason in UNREFERENCED_KEPT.values())
+    unreferenced = _unreferenced_public_defs(_package_modules(), REFERRING_FILES)
     assert not unreferenced - set(UNREFERENCED_KEPT), (
         "public functions no file references and UNREFERENCED_KEPT does "
         "not name: delete them or record why they stay: "
@@ -184,4 +281,22 @@ def test_unreferenced_public_functions_are_exactly_the_kept_ledger():
         "UNREFERENCED_KEPT names functions that are referenced (or no "
         "longer exist): drop their rows: "
         f"{sorted(set(UNREFERENCED_KEPT) - unreferenced)}"
+    )
+
+
+def test_test_only_public_functions_are_exactly_the_kept_ledger():
+    assert all(reason.strip() for reason in TEST_ONLY_KEPT.values())
+    modules = _package_modules()
+    reached = {name: modules[name] for name in _reached(modules)}
+    test_only = _unreferenced_public_defs(reached, RUNTIME_FILES)
+    assert not test_only - set(TEST_ONLY_KEPT), (
+        "public functions of reached modules that only tests or tools "
+        "reference and TEST_ONLY_KEPT does not name: delete them with "
+        "their tests or record why they stay: "
+        f"{sorted(test_only - set(TEST_ONLY_KEPT))}"
+    )
+    assert not set(TEST_ONLY_KEPT) - test_only, (
+        "TEST_ONLY_KEPT names functions that the package or an entry "
+        "point references (or that no longer exist): drop their rows: "
+        f"{sorted(set(TEST_ONLY_KEPT) - test_only)}"
     )

@@ -129,11 +129,6 @@ LEGACY = {
         FROM documents
         """,
     ),
-    "sliding_rollup": (
-        "events",
-        agg.sliding_rollup,
-        agg.sliding_rollup_oracle(),
-    ),
     "media_metadata": (
         "documents",
         multimodal.media_metadata,

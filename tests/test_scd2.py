@@ -1,16 +1,13 @@
-"""SCD2 dimension maintenance (operators/scd2.py): hand-computed
-version chains, null-safe change detection, the tie guard,
-fixture-scale DuckDB parity (displaced-registry discipline: full value
-oracles in pytest), merge ≡ snapshot equivalence + idempotence,
-point-in-time enrichment vs DuckDB's native ASOF JOIN, and the plan
-shape (broadcast probes, dimension side never shuffles)."""
+"""SCD2 dimension history (operators/scd2.py): hand-computed version
+chains, null-safe change detection, the tie guard, fixture-scale
+DuckDB parity (displaced-registry discipline: full value oracles in
+pytest), and the plan shape (one exchange, no joins)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from cassandra_iot_pipeline_spark.catalog import load_table
 from cassandra_iot_pipeline_spark.operators import scd2
@@ -121,92 +118,9 @@ def test_fixture_duckdb_parity(spark, duck):
     assert len(spark_pdf) > 0
 
 
-def test_merge_equals_snapshot_and_is_idempotent(spark):
-    """Landing a second batch on a snapshot of the first equals one
-    snapshot of the concatenated log; replaying the same batch is a
-    no-op; a batch touching NO existing key leaves other keys'
-    rows bit-identical."""
-    first = [
-        (1, _ts(0), "a"), (1, _ts(2), "b"),
-        (2, _ts(1), "x"),
-        (3, _ts(1), "q"),
-    ]
-    second = [
-        (1, _ts(4), "b"),   # no-op vs key 1's newest version
-        (1, _ts(6), "c"),   # real change
-        (2, _ts(5), "y"),
-        (4, _ts(5), "new"),  # brand-new key
-    ]
-    key_rows = lambda df: sorted(tuple(r) for r in df.collect())
-    dim1 = scd2.scd2_snapshot(_log(spark, first), "user_id", ("seg",), "ts")
-    merged = scd2.scd2_merge(
-        dim1, _log(spark, second), "user_id", ("seg",), "ts"
-    )
-    want = scd2.scd2_snapshot(
-        _log(spark, first + second), "user_id", ("seg",), "ts"
-    )
-    assert key_rows(merged) == key_rows(want)
-    # idempotence: the same batch again changes nothing
-    again = scd2.scd2_merge(
-        merged, _log(spark, second), "user_id", ("seg",), "ts"
-    )
-    assert key_rows(again) == key_rows(merged)
-    # untouched key 3 passes through the anti-join bit-identically
-    assert [
-        tuple(r)
-        for r in merged.filter(F.col("user_id") == 3).collect()
-    ] == [(3, "q", _us(1), None, True)]
-
-
-def test_enrich_point_in_time(spark, duck):
-    """Each fact gets the version valid AT its own time; facts before
-    a key's first version get NULL; parity vs DuckDB's native ASOF
-    JOIN."""
-    updates = [
-        (1, _ts(2), "a"), (1, _ts(5), "b"),
-        (2, _ts(3), "x"),
-    ]
-    dim = scd2.scd2_snapshot(_log(spark, updates), "user_id", ("seg",), "ts")
-    facts = spark.createDataFrame(
-        [
-            (100, 1, _ts(1)),   # before first version -> NULL
-            (101, 1, _ts(2)),   # exactly at valid_from -> a
-            (102, 1, _ts(4)),   # inside [t2, t5) -> a
-            (103, 1, _ts(7)),   # current version -> b
-            (104, 2, _ts(6)),   # -> x
-            (105, 3, _ts(6)),   # unknown key -> NULL
-        ],
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
-    )
-    got = {
-        r["event_id"]: r["seg"]
-        for r in scd2.scd2_enrich(facts, dim, "user_id", "ts", ("seg",)).collect()
-    }
-    assert got == {100: None, 101: "a", 102: "a", 103: "b", 104: "x", 105: None}
-
-    duck.register("scd2_facts", facts.toPandas())
-    duck.register("scd2_updates", _log(spark, updates).toPandas())
-    dim_sql = scd2.scd2_snapshot_oracle(
-        "scd2_updates", ("user_id",), ("seg",), "ts"
-    )
-    oracle_pdf = duck.sql(
-        scd2.scd2_enrich_oracle(
-            "scd2_facts", dim_sql, "user_id", "ts", ("seg",), ("event_id",)
-        )
-    ).df()
-    spark_pdf = (
-        scd2.scd2_enrich(facts, dim, "user_id", "ts", ("seg",))
-        .select("event_id", "seg")
-        .toPandas()
-    )
-    assert compare(spark_pdf, oracle_pdf) == []
-
-
 def test_plan_shape(spark):
     """Snapshot (with seq): ONE exchange — lag and lead share the
-    per-key clustering; no joins. Merge: both dimension probes are
-    broadcast joins (the dimension side never shuffles for routing);
-    the window recompute exchanges only the touched keys' rows."""
+    per-key clustering; no joins."""
     events = load_table(spark, SF_DIR, "events")
     dim = scd2.scd2_snapshot(
         events, "user_id", ("event_type",), "ts", seq_col="event_id"
@@ -218,243 +132,3 @@ def test_plan_shape(spark):
     assert "Join" not in final
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
-    batch = events.filter(F.col("user_id") % 97 == 0)
-    merged = scd2.scd2_merge(
-        dim.localCheckpoint(eager=True), batch, "user_id", ("event_type",), "ts"
-    )
-    merged.collect()
-    mplan = merged._jdf.queryExecution().executedPlan().toString()
-    mfinal = mplan.split("== Initial Plan ==")[0]
-    assert mfinal.count("BroadcastHashJoin") == 2  # semi + anti probes
-    assert "SortMergeJoin" not in mfinal
-
-
-def test_randomized_merge_split_invariance(spark):
-    """Property: for random update logs (random keys, attr values
-    incl. NULLs, collision-free random times) split into random batch
-    sequences, folding the batches through scd2_merge equals one
-    snapshot of the whole log — regardless of how many batches or
-    where the splits fall. Exercises ties-of-fate cases (no-op heads,
-    re-opens, single-version keys) the hand tests can't enumerate."""
-    import random
-
-    rng = random.Random(2024)
-    for trial in range(4):
-        n = rng.randrange(30, 80)
-        minutes = rng.sample(range(1, 5_000), n)
-        rows = [
-            (
-                rng.randrange(1, 8),
-                dt.datetime(2024, 1, 1) + dt.timedelta(minutes=m),
-                rng.choice(["a", "b", "c", None]),
-            )
-            for m in minutes
-        ]
-        rows.sort(key=lambda r: r[1])
-        log = spark.createDataFrame(
-            rows, "user_id BIGINT, ts TIMESTAMP, seg STRING"
-        )
-        def keyed(frame):
-            return sorted(
-                (
-                    (r["user_id"], r["seg"], r["valid_from_us"],
-                     r["valid_to_us"])
-                    for r in frame.collect()
-                ),
-                key=lambda t: (t[0], t[2]),  # seg can be None: not sortable
-            )
-
-        want = keyed(scd2.scd2_snapshot(log, "user_id", ("seg",), "ts"))
-        # random contiguous batches over the time-ordered log (batches
-        # must be internally consistent; cross-batch order is what the
-        # merge owns)
-        cuts = sorted(rng.sample(range(1, n), rng.randrange(1, 4)))
-        pieces = [
-            rows[a:b] for a, b in zip([0] + cuts, cuts + [n])
-        ]
-        dim = scd2.scd2_snapshot(
-            spark.createDataFrame(
-                pieces[0], "user_id BIGINT, ts TIMESTAMP, seg STRING"
-            ),
-            "user_id", ("seg",), "ts",
-        )
-        for piece in pieces[1:]:
-            dim = scd2.scd2_merge(
-                dim,
-                spark.createDataFrame(
-                    piece, "user_id BIGINT, ts TIMESTAMP, seg STRING"
-                ),
-                "user_id", ("seg",), "ts",
-            )
-        assert keyed(dim) == want, f"trial {trial}"
-
-
-def test_backfill_repairs_late_correction(spark):
-    """The module docstring's failure, planted: facts are enriched
-    against the dimension BEFORE a late correction (key 1 changed to
-    'b' at minute 10, but the update only arrives after enrichment).
-    The naive enrichment is wrong for exactly the facts at/after the
-    correction's valid_from; scd2_backfill repairs exactly those rows
-    — earlier facts, other keys, and facts before the key's first
-    version are untouched — and a second backfill pass repairs zero
-    (idempotent)."""
-    dim_v1 = scd2.scd2_snapshot(
-        spark.createDataFrame(
-            [(1, _ts(0), "a"), (2, _ts(0), "x")],
-            "user_id BIGINT, ts TIMESTAMP, seg STRING",
-        ),
-        "user_id", ("seg",), "ts",
-    )
-    facts = spark.createDataFrame(
-        [
-            (100, 1, _ts(5)),    # before the correction: stays "a"
-            (101, 1, _ts(10)),   # at valid_from: repaired to "b"
-            (102, 1, _ts(20)),   # after: repaired to "b"
-            (103, 2, _ts(15)),   # other key: untouched
-            (104, 3, _ts(15)),   # unknown key: NULL both times
-        ],
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
-    )
-    enriched = scd2.scd2_enrich(facts, dim_v1, "user_id", "ts", ("seg",))
-    # the late correction lands AFTER the facts were enriched
-    dim_v2 = scd2.scd2_merge(
-        dim_v1,
-        spark.createDataFrame(
-            [(1, _ts(10), "b")], "user_id BIGINT, ts TIMESTAMP, seg STRING"
-        ),
-        "user_id", ("seg",), "ts",
-    )
-    fixed = scd2.scd2_backfill(enriched, dim_v2, "user_id", "ts", ("seg",))
-    got = {r["event_id"]: (r["seg"], r["was_repaired"]) for r in fixed.collect()}
-    assert got == {
-        100: ("a", False),
-        101: ("b", True),
-        102: ("b", True),
-        103: ("x", False),
-        104: (None, False),
-    }
-    # repaired interval = exactly the correction's effect window
-    rep = scd2.scd2_backfill_report(fixed).collect()[0]
-    assert rep["n_facts"] == 5 and rep["n_repaired"] == 2
-    assert rep["repaired_from"] == _ts(10) and rep["repaired_to"] == _ts(20)
-    # idempotence: backfilling the backfilled frame repairs nothing
-    again = scd2.scd2_backfill(
-        fixed.drop("was_repaired"), dim_v2, "user_id", "ts", ("seg",)
-    )
-    rep2 = scd2.scd2_backfill_report(again).collect()[0]
-    assert rep2["n_repaired"] == 0
-    assert rep2["repaired_from"] is None and rep2["repaired_to"] is None
-
-
-def test_backfill_matches_fresh_enrichment_on_fixture(spark):
-    """Property at fixture scale: backfilled attrs are bit-identical
-    to enriching the bare facts against the corrected dimension (the
-    stale values only drive the was_repaired flag), and missing stale
-    columns fail loudly."""
-    events = load_table(spark, SF_DIR, "events")
-    dim_v1 = scd2.scd2_snapshot(
-        events.filter(F.col("event_id") % 3 != 0),
-        "user_id", ("event_type",), "ts", seq_col="event_id",
-    )
-    dim_v2 = scd2.scd2_snapshot(
-        events, "user_id", ("event_type",), "ts", seq_col="event_id"
-    )
-    facts = events.select("event_id", "user_id", "ts").limit(500)
-    stale = scd2.scd2_enrich(facts, dim_v1, "user_id", "ts", ("event_type",))
-    fixed = scd2.scd2_backfill(stale, dim_v2, "user_id", "ts", ("event_type",))
-    want = {
-        r["event_id"]: r["event_type"]
-        for r in scd2.scd2_enrich(
-            facts, dim_v2, "user_id", "ts", ("event_type",)
-        ).collect()
-    }
-    got = {r["event_id"]: r["event_type"] for r in fixed.collect()}
-    assert got == want and len(got) == 500
-    n_rep = fixed.filter("was_repaired").count()
-    assert 0 < n_rep < 500  # the planted v1/v2 gap really repaired some
-    with pytest.raises(ValueError, match="absent from"):
-        scd2.scd2_backfill(facts, dim_v2, "user_id", "ts", ("event_type",))
-
-
-# -- scd2_diff (CDC read between two instants) ------------------------------
-
-
-def _diff_dim(spark):
-    rows = [
-        (1, _ts(0), "a"),
-        (1, _ts(10), "b"),   # changes between t=5 and t=15
-        (2, _ts(0), "x"),    # unchanged across the whole range
-        (3, _ts(12), "n"),   # born between the instants -> 'new'
-        (4, _ts(20), "z"),   # born after t2 -> no version at either
-    ]
-    return scd2.scd2_snapshot(_log(spark, rows), attrs=("seg",))
-
-
-def test_diff_hand_computed(spark):
-    dim = _diff_dim(spark)
-    got = {
-        r["user_id"]: (r["seg_before"], r["seg_after"], r["change"])
-        for r in scd2.scd2_diff(
-            dim, _us(5), _us(15), attrs=("seg",)
-        ).collect()
-    }
-    assert got == {
-        1: ("a", "b", "changed"),
-        3: (None, "n", "new"),
-    }
-    with_unchanged = {
-        r["user_id"]: r["change"]
-        for r in scd2.scd2_diff(
-            dim, _us(5), _us(15), attrs=("seg",), include_unchanged=True
-        ).collect()
-    }
-    assert with_unchanged == {1: "changed", 2: "unchanged", 3: "new"}
-
-
-def test_diff_null_attr_and_guard(spark):
-    # a version whose attr is genuinely NULL is present, not absent
-    rows = [(1, _ts(0), None), (1, _ts(10), "b")]
-    dim = scd2.scd2_snapshot(_log(spark, rows), attrs=("seg",))
-    got = scd2.scd2_diff(dim, _us(5), _us(15), attrs=("seg",)).collect()
-    assert [(r["seg_before"], r["change"]) for r in got] == [
-        (None, "changed")
-    ]
-    with pytest.raises(ValueError, match="must be <"):
-        scd2.scd2_diff(dim, _us(15), _us(5))
-
-
-def test_diff_fixture_duckdb_parity(spark, duck):
-    events = load_table(spark, SF_DIR, "events")
-    dim = scd2.scd2_snapshot(events, seq_col="event_id")
-    # two instants straddling the fixture's median timestamp
-    lo, hi = events.selectExpr(
-        "unix_micros(min(ts))", "unix_micros(max(ts))"
-    ).first()
-    t1 = lo + (hi - lo) // 3
-    t2 = lo + 2 * (hi - lo) // 3
-    got = scd2.scd2_diff(
-        dim, t1, t2, include_unchanged=True
-    ).toPandas()
-    dim_sql = scd2.scd2_snapshot_oracle(seq_col="event_id")
-    want = duck.sql(
-        scd2.scd2_diff_oracle(dim_sql, t1, t2, include_unchanged=True)
-    ).df()
-    # sf0.001 has 15 users, all born before t1 — every key appears
-    assert len(got) == 15
-    assert "changed" in set(got["change"])
-    assert compare(got, want) == []
-
-
-def test_diff_single_pass_plan(spark):
-    events = load_table(spark, SF_DIR, "events")
-    dim = scd2.scd2_snapshot(events, seq_col="event_id")
-    plan = (
-        scd2.scd2_diff(dim, _us(0), _us(30))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the diff itself adds ONE aggregation and no join over the
-    # snapshot's own plan
-    assert "partial_max" in plan
-    assert "Join" not in plan

@@ -66,91 +66,6 @@ def test_kmv_partition_invariance(spark):
     assert (a.exact_users, a.kmv_users) == (b.exact_users, b.kmv_users)
 
 
-def test_quantile_tiers(spark, duck):
-    """Three quantile tiers: exact (oracle-checked in the registry),
-    engine sketch (accuracy vs exact), portable sample (bitwise DuckDB
-    parity — approximate yet reproducible)."""
-    from cassandra_iot_pipeline_spark.operators.stats import (
-        sampled_quantiles,
-        sampled_quantiles_oracle,
-        value_quantiles,
-        value_quantiles_approx,
-    )
-    from tools.oracle_check import compare
-
-    events = load_table(spark, SF_DIR, "events")
-    exact = {r.event_type: r for r in value_quantiles(events).collect()}
-
-    approx = {r.event_type: r for r in value_quantiles_approx(events).collect()}
-    for et, e in exact.items():
-        a = approx[et]
-        for q in ("p25", "p50", "p75"):
-            # high-accuracy sketch on a small group: near-exact
-            assert abs(getattr(a, q) - getattr(e, q)) <= max(
-                0.5, 0.02 * abs(getattr(e, q))
-            ), (et, q, a, e)
-
-    got = sampled_quantiles(events).toPandas()
-    want = duck.execute(sampled_quantiles_oracle()).fetchdf()
-    assert not compare(got, want)
-    # sample covers the whole fixture (n < k per type) -> equals exact
-    sampled = {r.event_type: r for r in sampled_quantiles(events).collect()}
-    bigger = {
-        r.event_type: r for r in sampled_quantiles(events, k=10**9).collect()
-    }
-    for et in exact:
-        assert tuple(sampled[et]) == tuple(bigger[et])
-
-
-def test_sampled_quantiles_prefilter_is_a_pure_prune(spark):
-    """prefilter_rate only prunes the window's input: at rate 1.0 the
-    threshold admits every hash, so the result is bit-identical to the
-    unfiltered form (the >= k sizing contract is the caller's dial)."""
-    from cassandra_iot_pipeline_spark.operators.stats import sampled_quantiles
-
-    events = load_table(spark, SF_DIR, "events")
-    a = sorted(map(tuple, sampled_quantiles(events).collect()))
-    b = sorted(
-        map(tuple, sampled_quantiles(events, prefilter_rate=1.0).collect())
-    )
-    assert a == b
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sampled_quantiles(events, prefilter_rate=0.0)
-
-
-def test_value_moments_singleton_group_is_null_not_nan(spark):
-    """One-row groups have no sample variance: NULL like stddev_samp,
-    never the raw formula's 0.0/0.0 NaN."""
-    from cassandra_iot_pipeline_spark.operators.stats import value_moments
-
-    from pyspark.sql import functions as F
-
-    one = spark.createDataFrame([("solo", 3.5)], "event_type string, value double")
-    row = value_moments(one).head()
-    assert row.n == 1 and row.mean_value == 3.5
-    assert row.var_value is None and row.stddev_value is None
-
-
-def test_value_moments_bitwise_parity_and_invariance(spark, duck):
-    """Exact integer second moments: bitwise equal to DuckDB (unlike
-    Welford-based stddev_samp) and invariant under repartitioning."""
-    from cassandra_iot_pipeline_spark.operators.stats import (
-        value_moments,
-        value_moments_oracle,
-    )
-    from tools.oracle_check import compare
-
-    events = load_table(spark, SF_DIR, "events")
-    got = value_moments(events).toPandas()
-    want = duck.execute(value_moments_oracle()).fetchdf()
-    assert not compare(got, want)
-    a = sorted(map(tuple, value_moments(events).collect()))
-    b = sorted(map(tuple, value_moments(events.repartition(11)).collect()))
-    assert a == b
-
-
 def test_registry_fetch_and_fallback():
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):
@@ -205,50 +120,3 @@ def test_kafka_source_options_match_reference():
     assert opts["startingOffsets"] == "earliest"
     assert opts["failOnDataLoss"] == "false"
     assert opts["subscribe"] == "sensor-events"
-
-
-def test_value_histogram_hand_computed(spark):
-    """4 bins over [0, 8): below-lo clamps to bin 0, at-hi clamps to
-    the last bin, NULLs drop, empty bins emit n = 0."""
-    from cassandra_iot_pipeline_spark.operators.stats import value_histogram
-
-    rows = [(-1.0,), (0.0,), (1.9,), (2.0,), (8.0,), (9.5,), (None,)]
-    df = spark.createDataFrame(rows, "value DOUBLE")
-    got = {
-        r["bin"]: (r["n"], r["lo_edge"], r["hi_edge"])
-        for r in value_histogram(df, 4, 0.0, 8.0).collect()
-    }
-    assert got == {
-        0: (3, 0.0, 2.0),   # -1.0 clamped, 0.0, 1.9
-        1: (1, 2.0, 4.0),   # 2.0
-        2: (0, 4.0, 6.0),
-        3: (2, 6.0, 8.0),   # 8.0 and 9.5 clamped
-    }
-
-
-def test_value_histogram_fixture_parity(spark, duck):
-    from cassandra_iot_pipeline_spark.operators.stats import (
-        value_histogram,
-        value_histogram_oracle,
-    )
-    from tools.oracle_check import compare
-
-    events = load_table(spark, SF_DIR, "events")
-    for nb, lo, hi in [(20, 0.0, 100.0), (7, -3.3, 44.2), (1, 0.0, 1.0)]:
-        got = value_histogram(events, nb, lo, hi).toPandas()
-        want = duck.sql(value_histogram_oracle(nb, lo, hi)).df()
-        assert compare(got, want) == [], nb
-        assert got.n.sum() == 1000  # every non-null row exactly once
-
-
-def test_value_histogram_auto_domain(spark):
-    """Domain from the data: total count preserved and edges span
-    exactly [min, max]."""
-    from cassandra_iot_pipeline_spark.operators.stats import value_histogram
-
-    events = load_table(spark, SF_DIR, "events")
-    pdf = value_histogram(events, 10).toPandas().sort_values("bin")
-    raw = events.toPandas()["value"]
-    assert pdf.n.sum() == raw.notna().sum()
-    assert pdf.lo_edge.iloc[0] == raw.min()
-    assert abs(pdf.hi_edge.iloc[-1] - raw.max()) < 1e-9

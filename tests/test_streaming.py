@@ -83,32 +83,6 @@ def test_replay_entries_skip_no_data_batch_with_identical_results(
     assert _rows_sorted(got) == _rows_sorted(want)
 
 
-def test_sliding_streaming_equals_batch_sliding_rollup(spark, staged, tmp_path):
-    """W2 extension: the hopping-window streaming aggregation reaches
-    the batch sliding_rollup bit-for-bit, like the tumbling pair."""
-    from cassandra_iot_pipeline_spark.operators.agg import sliding_rollup
-    from cassandra_iot_pipeline_spark.streaming.pipeline import (
-        read_event_stream,
-        sliding_agg_query,
-    )
-
-    sink = ParquetUpsertSink(
-        str(tmp_path / "sliding"), pk=("device_id", "bucket_start")
-    )
-    q = sliding_agg_query(
-        read_event_stream(spark, staged, max_files_per_trigger=16),
-        sink,
-        str(tmp_path / "ckpt_sliding"),
-    )
-    q.awaitTermination()
-    got = sink.read(spark).select(
-        "device_id", "bucket_start", "avg_value", "max_value", "min_value",
-        "event_count",
-    )
-    want = sliding_rollup(load_table(spark, SF_DIR, "events"))
-    assert _rows_sorted(got) == _rows_sorted(want)
-
-
 def test_upsert_sink_last_write_wins(spark, tmp_path):
     sink = ParquetUpsertSink(str(tmp_path / "t"), pk=("k",))
     b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")

@@ -1,6 +1,5 @@
-"""Hypertable serving primitives over irregular samples
-(operators/timeseries.py): time-weighted averages and counter rates.
-Hand-computed semantics, fixture-scale DuckDB parity (the
+"""Hypertable serving primitive over irregular samples
+(operators/timeseries.py): the time-weighted average. Hand-computed semantics, fixture-scale DuckDB parity (the
 displaced-registry discipline: full value oracles in pytest), and the
 plan shape (one scan, one window exchange, no joins)."""
 
@@ -99,62 +98,11 @@ def test_time_weighted_avg_numerator_beyond_int64(spark, duck):
     assert got[1]["span_us"] > 6e14
 
 
-def test_counter_rate_resets_and_zero_duration(spark):
-    rows = [
-        (1, _ts(0), 100.00),
-        (1, _ts(1), 160.00),   # +60.00 over 60s -> 1.0/s
-        (1, _ts(2), 10.00),    # reset: delta = new reading (10.00)
-        (1, _ts(2), 10.50),    # identical us: delta carried, rate 0.0
-    ]
-    got = timeseries.counter_rate(_frame(spark, rows)).orderBy(
-        "ts_us", "delta_units"
-    ).collect()
-    assert [r["delta_units"] for r in got] == [6000, 1000, 50]
-    assert [r["secs"] for r in got] == [60.0, 60.0, 0.0]
-    # the op's exact division order: delta / (us/1e6) / 10^scale
-    assert [r["rate_per_sec"] for r in got] == [
-        6000.0 / 60.0 / 100,
-        1000.0 / 60.0 / 100,
-        0.0,
-    ]
-    for r in got:
-        assert r["next_ts_us"] - r["ts_us"] == r["secs"] * 1_000_000
-
-
-def test_counter_rate_subsecond_intervals(spark):
-    """r6 ADVICE: the denominator is microsecond-derived — two distinct
-    samples within one second get their true sub-second rate (the old
-    whole-second secs reported 0.0), and an interval straddling a
-    second boundary is not quantized to 1s."""
-    base = dt.datetime(2024, 1, 1)
-
-    def us(micro):
-        return base + dt.timedelta(microseconds=micro)
-
-    rows = [
-        (1, us(0), 1.00),
-        (1, us(250_000), 2.00),        # +1.00 over 0.25s inside one second
-        (1, us(900_000), 3.00),        # +1.00 over 0.65s straddling :01
-        (1, us(1_100_000), 4.00),      # +1.00 over 0.2s across the boundary
-    ]
-    got = timeseries.counter_rate(_frame(spark, rows)).orderBy("ts_us").collect()
-    assert [r["secs"] for r in got] == [0.25, 0.65, 0.2]
-    assert [r["rate_per_sec"] for r in got] == [
-        100.0 / 0.25 / 100,
-        100.0 / 0.65 / 100,
-        100.0 / 0.2 / 100,
-    ]
-
-
 def test_fixture_duckdb_parity(spark, duck):
     events = load_table(spark, SF_DIR, "events")
-    for op, oracle in (
-        (timeseries.time_weighted_avg, timeseries.time_weighted_avg_oracle),
-        (timeseries.counter_rate, timeseries.counter_rate_oracle),
-    ):
-        spark_pdf = op(events).toPandas()
-        oracle_pdf = duck.sql(oracle()).df()
-        assert compare(spark_pdf, oracle_pdf) == [], op.__name__
+    spark_pdf = timeseries.time_weighted_avg(events).toPandas()
+    oracle_pdf = duck.sql(timeseries.time_weighted_avg_oracle()).df()
+    assert compare(spark_pdf, oracle_pdf) == []
 
 
 def test_multi_key_and_device_grain(spark, duck):
@@ -171,204 +119,16 @@ def test_multi_key_and_device_grain(spark, duck):
 
 def test_plan_shape(spark):
     events = load_table(spark, SF_DIR, "events")
-    for op in (timeseries.time_weighted_avg, timeseries.counter_rate):
-        df = op(events)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in plan
-        final = plan.split("== Initial Plan ==")[0]
-        assert final.count("Scan parquet") == 1
-        assert "Join" not in final
-        # one exchange into the per-key window; the tw groupBy reuses
-        # that clustering (partial agg + no second hash exchange on a
-        # superset key is not guaranteed by AQE coalescing, so allow
-        # <= 2 but never a third)
-        assert final.count("Exchange hashpartitioning") <= 2
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_counter_rate_randomized_reference(spark):
-    """Property: random sample streams (sub-second gaps, identical-
-    microsecond ties, counter resets) match a pure-Python reference
-    implementing the documented op sequence — (t_us, u) order, integer
-    delta with reset recovery, us->secs via one /1e6 division, rate as
-    delta/secs/10^scale, 0.0 on zero duration."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(99)
-    rows, t_us = [], 1_700_000_000_000_000
-    for _ in range(300):
-        key = rng.randrange(1, 4)
-        # mix of sub-second, multi-second, and zero gaps
-        t_us += rng.choice([0, 137, 250_000, 999_999, 1_000_000, 7_300_123])
-        value = round(rng.uniform(0, 50), 2) if rng.random() < 0.2 else round(
-            rng.uniform(50, 500), 2
-        )
-        rows.append((key, t_us, value))
-    df = spark.createDataFrame(
-        [(k, u, v) for k, u, v in rows],
-        "user_id BIGINT, t_us BIGINT, value DOUBLE",
-    ).select(
-        "user_id", F.timestamp_micros("t_us").alias("ts"), "value"
-    )
-    got = sorted(
-        tuple(r) for r in timeseries.counter_rate(df).collect()
-    )
-
-    # reference: same units rule as exactmath.units — Spark ROUND on a
-    # double goes through BigDecimal.valueOf(v*100) (half-up on the
-    # SHORTEST decimal repr of the double), which Python mirrors as
-    # Decimal(repr(v*100.0))
-    def units(v):
-        import decimal
-
-        return int(
-            decimal.Decimal(repr(v * 100.0)).quantize(
-                0, rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    per_key = {}
-    for k, u_ts, v in rows:
-        per_key.setdefault(k, []).append((u_ts, units(v)))
-    want = []
-    for k, samples in per_key.items():
-        samples.sort()
-        for (pu_ts, pu), (cu_ts, cu) in zip(samples, samples[1:]):
-            delta = cu - pu if cu >= pu else cu
-            dus = cu_ts - pu_ts
-            secs = float(dus) / 1e6
-            rate = float(delta) / secs / 100.0 if dus > 0 else 0.0
-            want.append((k, pu_ts, cu_ts, delta, secs, rate))
-    assert got == sorted(want)
-    assert any(r[4] == 0.0 for r in got)      # ties exercised
-    assert any(0 < r[4] < 1.0 for r in got)   # sub-second exercised
-
-
-def test_rolling_stats_hand_computed(spark):
-    """Trailing 10-minute window: at minute 15 only the samples from
-    minutes 5..15 are in frame; the minute-0 sample has aged out. The
-    boundary sample exactly window_seconds old is INSIDE (RANGE is
-    inclusive both ends)."""
-    rows = [
-        (1, _ts(0), 10.0),
-        (1, _ts(5), 30.0),
-        (1, _ts(15), 50.0),
-        (1, _ts(25), 70.0),   # minute-15 sample exactly 600 s old
-    ]
-    got = {
-        r["t_us"]: (r["roll_count"], r["roll_avg"], r["roll_min"],
-                    r["roll_max"])
-        for r in timeseries.rolling_stats(
-            _frame(spark, rows), window_seconds=600
-        ).collect()
-    }
-    m = lambda minute: minute * 60 * 1_000_000 + 1_704_067_200_000_000  # noqa: E731
-    assert got[m(0)] == (1, 10.0, 10.0, 10.0)
-    assert got[m(5)] == (2, 20.0, 10.0, 30.0)
-    assert got[m(15)] == (2, 40.0, 30.0, 50.0)      # minute 0 aged out
-    assert got[m(25)] == (2, 60.0, 50.0, 70.0)      # boundary inclusive
-
-
-def test_rolling_stats_ties_share_one_frame(spark):
-    """Two samples at the same microsecond see each other (value-based
-    RANGE frame): both report the same rolling aggregate."""
-    rows = [(1, _ts(0), 10.0), (1, _ts(0), 20.0)]
-    out = timeseries.rolling_stats(
-        _frame(spark, rows), window_seconds=60
-    ).collect()
-    assert [(r["roll_count"], r["roll_avg"]) for r in out] == [
-        (2, 15.0),
-        (2, 15.0),
-    ]
-
-
-def test_rolling_stats_fixture_parity(spark, duck):
-    events = load_table(spark, SF_DIR, "events")
-    for ws in (3600, 86_400):
-        got = timeseries.rolling_stats(events, ws).toPandas()
-        want = duck.sql(timeseries.rolling_stats_oracle(ws)).df()
-        assert compare(got, want) == [], ws
-
-
-def test_rolling_stats_single_window_plan(spark):
-    """All four stats come from ONE window over one exchange — no
-    self-join, no second scan."""
-    import re
-
-    from cassandra_iot_pipeline_spark.plans import formatted_plan
-
-    events = load_table(spark, SF_DIR, "events")
-    plan = formatted_plan(timeseries.rolling_stats(events))
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-    assert len(re.findall(r"\(\d+\) Window", plan)) == 1
-    assert "Join" not in plan
-
-
-# -- ohlc_bars -------------------------------------------------------------
-
-
-def _ohlc_frame(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE"
-    )
-
-
-def test_ohlc_hand_computed(spark):
-    rows = [
-        (1, 7, _ts(5), 10.0),
-        (2, 7, _ts(20), 50.0),
-        (3, 7, _ts(40), 5.0),
-        (4, 7, _ts(59), 30.0),   # hour 0: open 10, high 50, low 5, close 30
-        (5, 7, dt.datetime(2024, 1, 1, 1, 10), 99.0),  # hour 1, single
-        (6, 8, _ts(0), -1.0),    # other key
-        (7, 8, _ts(1), None),    # NULL sample drops
-    ]
-    got = {
-        (r["user_id"], r["bucket_s"]): (
-            r["open"], r["high"], r["low"], r["close"], r["n_events"]
-        )
-        for r in timeseries.ohlc_bars(_ohlc_frame(spark, rows)).collect()
-    }
-    h0 = 1704067200  # 2024-01-01T00:00:00Z in epoch seconds
-    assert got == {
-        (7, h0): (10.0, 50.0, 5.0, 30.0, 4),
-        (7, h0 + 3600): (99.0, 99.0, 99.0, 99.0, 1),
-        (8, h0): (-1.0, -1.0, -1.0, -1.0, 1),
-    }
-
-
-def test_ohlc_same_microsecond_tiebreak(spark):
-    # two samples in the SAME microsecond: the id orders open/close
-    rows = [
-        (20, 1, _ts(0), 3.0),
-        (10, 1, _ts(0), 8.0),   # lower id -> open
-        (30, 1, _ts(0), 5.0),   # highest id -> close
-    ]
-    r = timeseries.ohlc_bars(_ohlc_frame(spark, rows)).collect()[0]
-    assert (r["open"], r["close"]) == (8.0, 5.0)
-    assert (r["high"], r["low"]) == (8.0, 3.0)
-
-
-def test_ohlc_fixture_parity(spark, duck):
-    events = load_table(spark, SF_DIR, "events")
-    for bs in (3600, 86_400):
-        got = timeseries.ohlc_bars(events, bucket_seconds=bs).toPandas()
-        want = duck.sql(timeseries.ohlc_bars_oracle(bucket_seconds=bs)).df()
-        assert compare(got, want) == [], bs
-
-
-def test_ohlc_single_aggregation_plan(spark):
-    events = load_table(spark, SF_DIR, "events")
-    plan = (
-        timeseries.ohlc_bars(events)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "partial_min_by" in plan or "partial_" in plan
-    assert "Window" not in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 1
+    df = timeseries.time_weighted_avg(events)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 1
+    assert "Join" not in final
+    # one exchange into the per-key window; the tw groupBy reuses
+    # that clustering (partial agg + no second hash exchange on a
+    # superset key is not guaranteed by AQE coalescing, so allow
+    # <= 2 but never a third)
+    assert final.count("Exchange hashpartitioning") <= 2
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

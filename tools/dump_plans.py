@@ -123,17 +123,6 @@ def _extras(spark, sf_dir):
             "router below.",
             _capped_candidates(spark, sf_dir),
         ),
-        "scd2_merge": (
-            "SCD2 incremental merge (r7): both dimension probes — the "
-            "semi-join routing touched keys into the recompute and the "
-            "anti-join passing untouched keys through — are "
-            "BroadcastHashJoin on the batch's distinct key set, so the "
-            "dimension side never shuffles for routing however large "
-            "the version table grows; the snapshot recompute's window "
-            "exchange carries only the touched keys' rows "
-            "(batch-proportional).",
-            _scd2_merge(spark, sf_dir),
-        ),
         "time_weighted_avg": (
             "Hypertable serving (r6): LOCF time-weighted average over "
             "irregular samples. One scan, one Exchange into the "
@@ -197,23 +186,6 @@ def _extras(spark, sf_dir):
             "HashAggregate. Shuffle carries aggregate rows only.",
             _hourly_rollup(spark, sf_dir),
         ),
-        "ohlc_bars": (
-            "OHLC candles (r8 third arc): ONE map-side-combined hash "
-            "aggregation on (key, bucket) — min_by/max_by carry "
-            "(value, ordkey) pairs through partial aggregation, so "
-            "there is no Window, no Sort, no Join anywhere; every "
-            "output is a selection of an input double (bitwise "
-            "partition-invariant with raw doubles).",
-            _ohlc(spark, sf_dir),
-        ),
-        "mad_outliers": (
-            "Robust seasonal outliers (r8 third arc): ONE Exchange on "
-            "(key, hour-of-day) feeding TWO Window passes over the "
-            "same clustering — the exact median, then the MAD over "
-            "the median's output column; zero joins (the "
-            "groupBy+join formulation would exchange three times).",
-            _mad(spark, sf_dir),
-        ),
         "priority_sample_global": (
             "Priority sampling (r8 third arc), global form: priority "
             "= w/u computed in the scan projection, then "
@@ -222,23 +194,6 @@ def _extras(spark, sf_dir):
             "corpus; the threshold/estimator window runs over the "
             "k+1 survivors only.",
             _priority(spark, sf_dir),
-        ),
-        "scd2_diff": (
-            "SCD2 change-data-capture read (r8 third arc): one "
-            "dimension scan into one map-side-combined conditional "
-            "aggregation on the key (max-when pulls each instant's "
-            "single containing version; presence flags classify "
-            "new/changed/unchanged) — no self-join, no window beyond "
-            "the snapshot's own.",
-            _scd2_diff(spark, sf_dir),
-        ),
-        "funnel_trend": (
-            "Per-anchor-period funnel (r10): the SAME one user-keyed "
-            "exchange as the plain funnel (user_hits), then a "
-            "(period x step)-bounded aggregation against the "
-            "broadcast step frame — the trend view costs no extra "
-            "data-wide work.",
-            _funnel_trend(spark, sf_dir),
         ),
         "cap_events_per_key": (
             "Hot-key curation cap (r10): the salted two-stage "
@@ -260,20 +215,6 @@ def _extras(spark, sf_dir):
     }
 
 
-def _ohlc(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.timeseries import ohlc_bars
-
-    return ohlc_bars(load_table(spark, sf_dir, "events"))
-
-
-def _mad(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.stats import mad_outliers
-
-    return mad_outliers(load_table(spark, sf_dir, "events"))
-
-
 def _priority(spark, sf_dir):
     from cassandra_iot_pipeline_spark.catalog import load_table
     from cassandra_iot_pipeline_spark.functions.sampling import (
@@ -282,33 +223,6 @@ def _priority(spark, sf_dir):
 
     return priority_sample(
         load_table(spark, sf_dir, "events"), "event_id", "value", 100
-    )
-
-
-def _scd2_diff(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.scd2 import (
-        scd2_diff,
-        scd2_snapshot,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    dim = scd2_snapshot(events, seq_col="event_id")
-    lo, hi = events.selectExpr(
-        "unix_micros(min(ts))", "unix_micros(max(ts))"
-    ).first()
-    return scd2_diff(dim, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3)
-
-
-def _funnel_trend(spark, sf_dir):
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.funnel import funnel_trend
-
-    return funnel_trend(
-        load_table(spark, sf_dir, "events"),
-        ["signup", "view", "click", "purchase"],
-        86_400,
-        horizon_seconds=7 * 86_400,
     )
 
 
@@ -332,7 +246,6 @@ def _dedup_lines(spark, sf_dir):
     )
 
 
-
 def _conversion_pairs(spark, sf_dir):
     from cassandra_iot_pipeline_spark.catalog import load_table
     from cassandra_iot_pipeline_spark.operators.rangejoin import (
@@ -347,26 +260,6 @@ def _hourly_rollup(spark, sf_dir):
     from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup
 
     return hourly_rollup(load_table(spark, sf_dir, "events"))
-
-
-
-
-
-def _scd2_merge(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from cassandra_iot_pipeline_spark.catalog import load_table
-    from cassandra_iot_pipeline_spark.operators.scd2 import (
-        scd2_merge,
-        scd2_snapshot,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    dim = scd2_snapshot(
-        events, "user_id", ("event_type",), "ts", seq_col="event_id"
-    ).localCheckpoint(eager=True)
-    batch = events.filter(F.col("user_id") % 97 == 0)
-    return scd2_merge(dim, batch, "user_id", ("event_type",), "ts")
 
 
 def _time_weighted(spark, sf_dir):

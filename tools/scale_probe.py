@@ -1113,20 +1113,6 @@ def main() -> None:
             ),
             results,
         )
-        from cassandra_iot_pipeline_spark.operators.funnel import (
-            funnel_trend,
-        )
-
-        timed(
-            "funnel_trend_daily",
-            funnel_trend(
-                events,
-                ["signup", "view", "click", "purchase"],
-                86_400,
-                horizon_seconds=7 * 86_400,
-            ),
-            results,
-        )
 
     if "--lines" in sys.argv:
         # r9: the C4 line-dedup rule over a multi-line corpus
