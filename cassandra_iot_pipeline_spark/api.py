@@ -34,9 +34,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 
-from .litframe import literal_frame
+from .litframe import arrow_frame, literal_frame
 from .operators.agg import hourly_rollup
 from .streaming.pipeline import ingest_sinks, raw_rows, run_pipeline
 from .streaming.sinks import ParquetUpsertSink
@@ -142,15 +141,15 @@ class IoTEngine:
     ) -> DataFrame:
         """One device's serving read. When ``sink.lookup`` serves the
         device's last-write-wins rows, ``finish`` sorts / limits /
-        filters them on the driver and the result is a LocalRelation
-        (collecting it runs no Spark job) with the schema the Spark read
-        has; otherwise (no part files, or more matching rows than the
+        filters them on the driver, and ``arrow_frame`` hands the Arrow
+        rows to the JVM as a LocalRelation (collecting it runs no Spark
+        job) with the schema the Spark read has, in three py4j round
+        trips; otherwise (no part files, or more matching rows than the
         sink's driver bound) the Spark ``plan`` runs."""
         rows = sink.lookup(self.spark, column, device_id)
         if rows is None:
             return plan()
-        rows = finish(rows)
-        return self.spark.createDataFrame(rows, from_arrow_schema(rows.schema))
+        return arrow_frame(self.spark, finish(rows))
 
     # --- monitoring ------------------------------------------------------
     def table_counts(self) -> dict[str, int]:

@@ -80,7 +80,7 @@ _PART_FILE = re.compile(
 #: most rows ``lookup`` reads on the driver: the rows of the row groups
 #: whose footer statistics can match. Above it the Spark plan is faster
 #: (the crossover measured on 4 cores, DESIGN.md §17).
-DRIVER_READ_MAX_ROWS = 200_000
+DRIVER_READ_MAX_ROWS = 150_000
 
 #: the column that marks a partial row (true); complete rows lack it
 PARTIAL = "__partial"

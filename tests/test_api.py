@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import threading
 import time
 
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -12,8 +14,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
 
+from cassandra_iot_pipeline_spark import litframe
 from cassandra_iot_pipeline_spark.api import IoTEngine
 from cassandra_iot_pipeline_spark.catalog import load_table
+from cassandra_iot_pipeline_spark.litframe import arrow_frame
 from cassandra_iot_pipeline_spark.operators.agg import hourly_rollup
 from cassandra_iot_pipeline_spark.plans import formatted_plan
 from cassandra_iot_pipeline_spark.streaming import sinks
@@ -239,6 +243,36 @@ def test_driver_reads_run_no_spark_job(spark, epochs_engine):
         assert _jobs_run(spark, lambda: read(epochs_engine).collect()) == 0, name
 
 
+def _gateway_calls(monkeypatch, spark, action):
+    """(py4j commands ``action`` sends from this thread, its result).
+    Object releases go out on py4j's finalizer thread, off the read's
+    path, and are not counted."""
+    client = spark._jvm._gateway_client
+    send, sent, caller = client.send_command, [], threading.get_ident()
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        return sent, action()
+
+
+def test_driver_reads_build_in_three_gateway_calls(epochs_engine, monkeypatch):
+    """Building a warm driver-path read takes at most three py4j round
+    trips (a conf read, the Arrow stream read and ``toDataFrame``;
+    ``createDataFrame`` took 21), and the frame is a LocalRelation over
+    no parquet scan."""
+    for name, read in _reads(13).items():
+        read(epochs_engine)
+        sent, df = _gateway_calls(monkeypatch, epochs_engine.spark, lambda: read(epochs_engine))
+        assert len(sent) <= 3, (name, sent)
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name
+        assert "Scan parquet" not in formatted_plan(df), name
+
+
 def test_over_bound_lookup_declines_to_reconcile_window(epochs_engine, monkeypatch):
     spark = epochs_engine.spark
     rows = epochs_engine.raw_sink.lookup(spark, "user_id", 13)
@@ -351,3 +385,117 @@ def test_mixed_driver_and_spark_written_log(spark, tmp_path, monkeypatch):
         plan = formatted_plan(engine.raw_sink.read(spark, unique_within_epoch=True))
         assert ("Window" not in plan) == single, (step, plan)
         _assert_interrupted_write_ignored(engine)
+
+
+# --- arrow_frame: createDataFrame's schema and rows ------------------------
+
+
+def _assert_as_create_data_frame(spark, table):
+    got, want = arrow_frame(spark, table), spark.createDataFrame(table)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def _int96_round_trip(table, tmp_path):
+    """``table`` as pyarrow reads it back from a file written with
+    INT96 timestamps, as Spark writes them: naive ``timestamp[ns]``."""
+    path = str(tmp_path / "int96.parquet")
+    pq.write_table(table, path, use_deprecated_int96_timestamps=True)
+    return pq.read_table(path)
+
+
+@pytest.fixture
+def session_conf(spark):
+    """Sets session confs for one test and restores them after."""
+    saved = {}
+
+    def set_conf(key, value):
+        saved.setdefault(key, spark.conf.get(key))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        spark.conf.set(key, value)
+
+
+def test_arrow_frame_empty_and_null_tables(spark):
+    empty = pa.table(
+        {
+            "id": pa.array([], pa.int64()),
+            "name": pa.array([], pa.string()),
+            "ts": pa.array([], pa.timestamp("us", "UTC")),
+        }
+    )
+    _assert_as_create_data_frame(spark, empty)
+    assert arrow_frame(spark, empty).collect() == []
+    nulls = pa.table(
+        {
+            "id": pa.array([None, None], pa.int64()),
+            "name": pa.array([None, None], pa.string()),
+            "value": pa.array([None, None], pa.float64()),
+            "ts": pa.array([None, None], pa.timestamp("ns", "UTC")),
+        }
+    )
+    _assert_as_create_data_frame(spark, nulls)
+
+
+def test_arrow_frame_int96_timestamps(spark, tmp_path, session_conf):
+    """INT96 holds nanoseconds: pyarrow returns them as naive
+    ``timestamp[ns]``, truncated to microseconds toward the past (also
+    before 1970), and read in the session time zone when naive, as
+    marked UTC otherwise."""
+    nanos = [1_700_000_000_123_456_789, -1_000_000_001, 0, None]
+    naive = _int96_round_trip(
+        pa.table({"ts": pa.array(nanos, pa.timestamp("ns")), "id": [1, 2, 3, 4]}), tmp_path
+    )
+    assert naive.schema.field("ts").type == pa.timestamp("ns")
+    marked = naive.set_column(0, "ts", naive["ts"].cast(pa.timestamp("ns", "UTC")))
+    for zone in ("UTC", "America/Los_Angeles"):
+        session_conf("spark.sql.session.timeZone", zone)
+        _assert_as_create_data_frame(spark, naive)
+        _assert_as_create_data_frame(spark, marked)
+    micros = arrow_frame(spark, marked).selectExpr("unix_micros(ts)").collect()
+    assert [r[0] for r in micros] == [1_700_000_000_123_456, -1_000_001, 0, None]
+
+
+def test_arrow_frame_non_ascii_and_multi_chunk(spark):
+    words = ["Grüße", "日本語", "emoji 😀", "", None, "a'b\\c"]
+    _assert_as_create_data_frame(spark, pa.table({"word": words, "n": range(len(words))}))
+    parts = [pa.table({"n": [i, i + 1], "word": [f"w{i}", None]}) for i in range(0, 8, 2)]
+    chunked = pa.concat_tables(parts)
+    assert chunked["n"].num_chunks == 4
+    _assert_as_create_data_frame(spark, chunked)
+    assert [r.n for r in arrow_frame(spark, chunked).collect()] == list(range(8))
+
+
+def test_arrow_frame_honours_large_var_types(spark, session_conf):
+    """The JVM reads the stream with the string offset width this conf
+    names: a stream with the other width must never reach it."""
+    table = pa.table({"word": ["Grüße", None, "x" * 100], "data": [b"\x00\x01", b"", None]})
+    for large in ("true", "false"):
+        session_conf("spark.sql.execution.arrow.useLargeVarTypes", large)
+        _assert_as_create_data_frame(spark, table)
+
+
+def test_arrow_frame_leaves_no_temp_file(spark, monkeypatch):
+    """The Arrow stream's temp file is gone after the hand-off, also
+    when the JVM fails to read it."""
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    table = pa.table({"n": [1, 2, 3]})
+    assert arrow_frame(spark, table).collect() and set(os.listdir(temp_dir)) == before
+
+    read_stream, *rest = litframe._sql_utils(spark._jvm)
+    handed = []
+
+    def corrupt_then_read(path):
+        handed.append(path)
+        with open(path, "wb") as fh:
+            fh.write(b"not an arrow stream")
+        return read_stream(path)
+
+    monkeypatch.setattr(litframe, "_sql_utils", lambda jvm: (corrupt_then_read, *rest))
+    with pytest.raises(Exception):
+        arrow_frame(spark, table)
+    assert len(handed) == 1 and not os.path.exists(handed[0])
+    assert set(os.listdir(temp_dir)) == before
